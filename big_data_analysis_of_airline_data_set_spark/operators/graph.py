@@ -15,10 +15,9 @@ Scale notes:
   single final action instead of a per-iteration ``count()`` barrier:
   each cached step is computed (and cached) exactly once as the final
   job walks the chain, but we skip N job-submission round-trips —
-  measured 2× end-to-end at sf0.1. ``barrier_every`` bounds lineage
-  depth and the persisted working set for deep iteration counts by
-  forcing a materialize-and-release cycle every K rounds (default 8;
-  the 5-round catalog query never hits it).
+  measured 2× end-to-end at sf0.1. ``_PR_BARRIER_EVERY`` bounds
+  lineage depth and the persisted working set for deep iteration
+  counts by forcing a materialize-and-release cycle every 4 rounds.
 - Determinism for the DuckDB oracle: per-iteration contributions are
   rounded to ``round_dp`` decimals and summed in DECIMAL(30,dp) —
   exact integer-scaled addition, so float summation order cannot
@@ -43,6 +42,11 @@ from pyspark.sql import functions as F
 # instead of left to static planning against unknown-stats intermediates.
 _BC_NODES_MAX = 200_000  # ≲ a few MB of (node, rank) — safely broadcastable
 _ITER_ROWS_PER_TASK = 50_000  # floor task size for node-sized shuffles
+# pagerank's materialize-and-release cadence: at most 5 node-sized rank
+# tables stay pinned between barriers. 8 (no mid-loop barrier in the
+# 5-round catalog query) measured -3%, inside arm spread
+# (OPTIMIZATION_r13.md §6), so the memory bound wins.
+_PR_BARRIER_EVERY = 4
 
 
 def _node_frame_bc(n: int, bc_nodes_max: int) -> Callable[[DataFrame], DataFrame]:
@@ -100,7 +104,6 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 5,
     round_dp: int = 12,
-    barrier_every: int = 4,
     broadcast_nodes_max: int = _BC_NODES_MAX,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` synchronous PageRank rounds
@@ -119,7 +122,7 @@ def pagerank(
     collecting separately: one fewer walk over the job graph). An
     eager-materialize-inside-a-narrowed-width-scope variant (the
     pagerank_converged width discipline) was measured in round 12 and
-    REJECTED: 9.9 s → 13.1 s median at sf0.1 (tests/ab_loops.py) — the
+    REJECTED: 9.9 s → 13.1 s median at sf0.1 (OPTIMIZATION_r12.md) — the
     lazy chain's single job walk beats per-iteration width narrowing
     here because, unlike pagerank_converged, this loop has no barrier
     actions to amortize the extra walks against, and the narrowed
@@ -129,21 +132,13 @@ def pagerank(
     RELEASE CONTRACT (changed in round 4 — read this): the CALLER owns
     the release. Consume the result, then call
     ``release_pagerank(result)``, which unpersists every handle the
-    loop pinned (edges, the degree table, and up to barrier_every+1
-    rank tables). A bare ``result.unpersist()`` — the pre-round-4
-    contract — releases ONLY the returned projection's own cache; the
-    loop-internal handles it used to release now require
-    ``release_pagerank``. The projection IS persisted precisely so the
+    loop pinned (edges, the degree table, and up to
+    ``_PR_BARRIER_EVERY + 1`` rank tables). A bare
+    ``result.unpersist()`` — the pre-round-4 contract — releases ONLY
+    the returned projection's own cache; the loop-internal handles it
+    used to release now require ``release_pagerank``. The projection IS persisted precisely so the
     old call is not a silent total leak, but it is no longer the full
-    release. See plans/patterns.py:q_graph_pagerank.
-
-    ``barrier_every`` bounds BOTH lineage depth and the persisted
-    working set: between barriers up to barrier_every+1 node-sized
-    rank tables stay pinned alongside edges and the degree table, so
-    deep runs on memory-tight executors should lower it further (the
-    default of 4 keeps ≤5 rank tables resident; the pre-advice default
-    of 8 could evict/spill under pressure and silently lose the
-    single-computation benefit)."""
+    release. See plans/patterns.py:q_graph_pagerank."""
     # ONE exchange at build (round-13, guide §2.4): repartition(src)
     # FIRST, then distinct — hashpartitioning(src) satisfies the
     # distinct aggregate's ClusteredDistribution(src, dst) requirement
@@ -209,7 +204,7 @@ def pagerank(
             .persist()
         )
         pending.append(ranks)
-        if it % barrier_every == 0 and it < iterations:
+        if it % _PR_BARRIER_EVERY == 0 and it < iterations:
             # deep-iteration safety valve: truncate effective lineage
             # and bound the persisted working set
             ranks.count()

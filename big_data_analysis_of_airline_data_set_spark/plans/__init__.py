@@ -62,7 +62,7 @@ _MODULES = [
 # first — the loop family whose edge builds dropped an exchange
 # (repartition-then-distinct, operators/graph.py +
 # dedup/components.py), the two KMV entries that dedup before hashing
-# (sketches/kmv.py pre_distinct), the two exact-percentile entries
+# (sketches/kmv.py batch dedup), the two exact-percentile entries
 # whose partials spread across the session width
 # (stats/winsorize.py:spread_rows_for_heavy_agg), and the two CV
 # entries whose tuner moved to prefix-once fitting

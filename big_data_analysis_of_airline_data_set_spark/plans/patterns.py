@@ -607,14 +607,13 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import read_testdata_table
 
     li = read_testdata_table(spark, sf_dir, "lineitem")
-    # pre_distinct: (flag, orderkey) carries ~1.8x duplicates and every
-    # row pays 2 md5s + a x96 explode — deduping first measured -23%
-    # (tests/ab_r13.py, r13); values identical by construction (min is
-    # duplicate-insensitive). The HLL twin measured +22% (1 md5, no
-    # fan-out) and stays pre_distinct=False.
+    # (flag, orderkey) carries ~1.8x duplicates and every row pays 2
+    # md5s + a x96 explode — the sketch's batch dedup measured -23%
+    # here (OPTIMIZATION_r13.md §2); values identical by construction
+    # (min is duplicate-insensitive). The HLL twin measured +22% (1 md5,
+    # no fan-out) and does not dedup.
     return kmv_distinct_by_group(
-        li, group_col="l_returnflag", value_col="l_orderkey", k=_KMV_K,
-        pre_distinct=True,
+        li, group_col="l_returnflag", value_col="l_orderkey", k=_KMV_K
     )
 
 
@@ -1012,12 +1011,10 @@ def q_kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(
         F.lit("b").alias("g"), F.col("c_custkey").cast("string").alias("v")
     )
-    # pre_distinct measured -47% here (tests/ab_r13.py, r13): the x96
-    # explode fan-out is paid once per distinct key, not once per row
-    sk = kmv_sketch(
-        o.union(c), group_col="g", value_col="v", k=_KMVJ_K,
-        pre_distinct=True,
-    )
+    # the sketch's batch dedup measured -47% here (OPTIMIZATION_r13.md
+    # §2): the x96 explode fan-out is paid once per distinct key, not
+    # once per row
+    sk = kmv_sketch(o.union(c), group_col="g", value_col="v", k=_KMVJ_K)
     union_sk = sk.groupBy("j").agg(F.min("min_h").alias("min_h")).select(
         F.lit("u").alias("group"), "j", "min_h"
     )

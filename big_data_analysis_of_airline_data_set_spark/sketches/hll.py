@@ -65,7 +65,6 @@ def hll_registers(
     value_col: str,
     p: int = 8,
     group_cols: list[str] | None = None,
-    pre_distinct: bool = False,
 ) -> DataFrame:
     """(group..., register, max_rho): the HLL register vector per group
     in long form — one groupBy-max, constant-size shuffle (<= m rows
@@ -79,13 +78,10 @@ def hll_registers(
     names — e.g. ``["event_type", "hour_bucket"]`` for time-bucketed
     sketches) are mutually exclusive.
 
-    ``pre_distinct`` (round-13, guide §2.3): register MAX is duplicate-
-    insensitive, so deduplicating (group..., value) BEFORE the md5
-    yields the bit-identical register vector while hashing each
-    DISTINCT pair once instead of each row — the KMV twin
-    (sketches.kmv.kmv_sketch) documents the trade; opt-in at batch
-    call sites with duplicate-heavy inputs, never under streaming
-    maintenance (the running max IS the streaming dedup)."""
+    No dedup before the md5, unlike the KMV twin
+    (sketches.kmv.kmv_sketch): register MAX is duplicate-insensitive,
+    but the extra exchange measured +22% on sketch_hll_distinct and +7%
+    on sketch_hll_set_ops (OPTIMIZATION_r13.md §2, measured negative)."""
     if (group_col is None) == (group_cols is None):
         raise ValueError("pass exactly one of group_col / group_cols")
     m = _check_p(p)
@@ -104,11 +100,9 @@ def hll_registers(
     else:
         keys = [F.col(c) for c in group_cols]
         key_names = list(group_cols)
-    base = df.select(*keys, F.col(value_col).alias("_v"))
-    if pre_distinct:
-        base = base.distinct()
     return (
-        base.select(*key_names, h.alias("_h"))
+        df.select(*keys, F.col(value_col).alias("_v"))
+        .select(*key_names, h.alias("_h"))
         .select(
             *key_names,
             F.shiftright(F.col("_h"), suffix_bits).alias("register"),
@@ -271,7 +265,6 @@ def hll_set_ops(
     value_col: str,
     p: int = 8,
     round_dp: int = 6,
-    pre_distinct: bool = False,
 ) -> DataFrame:
     """Sketch set algebra over every unordered pair of groups: union
     cardinality by register max-merge, intersection by
@@ -302,8 +295,7 @@ def hll_set_ops(
     # would each rescan it — a lazy localCheckpoint computes it once
     # (the double-referenced-frame discipline, see memory of r5/r6)
     regs = hll_registers(
-        df, group_col=group_col, value_col=value_col, p=p,
-        pre_distinct=pre_distinct,
+        df, group_col=group_col, value_col=value_col, p=p
     ).localCheckpoint(eager=False)
     per = hll_estimate(regs, p=p, round_dp=round_dp)
 
@@ -422,14 +414,10 @@ def hll_distinct_by_group(
     value_col: str,
     p: int = 8,
     with_union: bool = True,
-    pre_distinct: bool = False,
 ) -> DataFrame:
     """Build + estimate in one call (batch convenience twin of the
     streamed register maintenance in streaming.jobs)."""
-    regs = hll_registers(
-        df, group_col=group_col, value_col=value_col, p=p,
-        pre_distinct=pre_distinct,
-    )
+    regs = hll_registers(df, group_col=group_col, value_col=value_col, p=p)
     return hll_report(
         regs, df, group_col=group_col, value_col=value_col, p=p,
         with_union=with_union,

@@ -52,7 +52,6 @@ def kmv_sketch(
     group_col: str,
     value_col: str,
     k: int = 64,
-    pre_distinct: bool = False,
 ) -> DataFrame:
     """(group, j, min_h): the k-minima sketch per group — one groupBy,
     constant-size shuffle. Kept in long form (k rows per group) so
@@ -73,21 +72,20 @@ def kmv_sketch(
     tests/test_sketches.py pins md5-once-per-row, which both shapes
     satisfy.
 
-    ``pre_distinct`` (round-13, guide §2.3 — reduce data before
-    expensive work): per-group MIN is duplicate-insensitive, so
-    deduplicating (group, value) BEFORE the 2 md5s and the ×k explode
-    yields the bit-identical sketch while paying the hash + fan-out
-    cost once per DISTINCT pair instead of once per row. The distinct
-    is itself a partial-aggregable hash agg (map-side dedup), so the
-    added exchange carries only distinct pairs. Opt-in because it only
-    pays where duplicates exist: batch call sites with duplicate-heavy
-    inputs enable it; STREAMING maintenance must not (an unwatermarked
-    streaming distinct would hold every pair in state — the running
-    min per (group, j) IS the streaming dedup)."""
+    Batch inputs are deduplicated on (group, value) BEFORE the 2 md5s
+    and the ×k explode (round-13, guide §2.3 — reduce data before
+    expensive work): per-group MIN is duplicate-insensitive, so the
+    sketch is bit-identical while the hash + fan-out cost is paid once
+    per DISTINCT pair instead of once per row (−23% / −47% on the two
+    batch catalog queries, OPTIMIZATION_r13.md §2). The distinct is
+    itself a partial-aggregable hash agg (map-side dedup), so the added
+    exchange carries only distinct pairs. STREAMING inputs skip it: an
+    unwatermarked streaming distinct would hold every pair in state —
+    the running min per (group, j) IS the streaming dedup."""
     if not 1 <= k <= 127:
         raise ValueError("k must be in [1, 127] to keep k*2^56 inside int64")
     base = df.select(F.col(group_col).alias("group"), F.col(value_col).alias("_v"))
-    if pre_distinct:
+    if not df.isStreaming:
         base = base.distinct()
     h1 = _h56("ka_", F.col("_v").cast("string"))
     h2 = _h56("kb_", F.col("_v").cast("string"))
@@ -162,17 +160,13 @@ def kmv_distinct_by_group(
     value_col: str,
     k: int = 64,
     with_union: bool = True,
-    pre_distinct: bool = False,
 ) -> DataFrame:
     """(group, k_minima, distinct_estimate, exact_distinct) per group,
     plus an 'ALL' row whose sketch is the elementwise MERGE (min) of the
     per-group sketches — the union-cardinality op raw exact counts
     can't provide without a second full scan. ``exact_distinct`` rides
     along as the accuracy reference (itself a plain distinct-agg)."""
-    sk = kmv_sketch(
-        df, group_col=group_col, value_col=value_col, k=k,
-        pre_distinct=pre_distinct,
-    )
+    sk = kmv_sketch(df, group_col=group_col, value_col=value_col, k=k)
     return kmv_report(
         sk, df, group_col=group_col, value_col=value_col, with_union=with_union
     )

@@ -20,7 +20,6 @@ so batch and stream plans are column-for-column identical.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,24 +81,11 @@ LAST_PROGRESS: dict[str, list[dict]] = {}
 # this flag and always drain to memory.
 DRAIN_SINK = "memory"
 
-# Base directory for the per-drain checkpoint tempdirs (None = the
-# system temp dir). Hypothesis tested in round 13: the checkpoint WAL
-# (offsets/commits) fsyncs per micro-batch and the HDFS-backed state
-# store writes per-partition delta files per batch, so a disk-backed
-# temp dir might tax short drains. MEASURED NEUTRAL (tests/ab_stream.py,
-# 3 drains, same-session interleaved, steal 0.93%: /dev/shm 11.28 s vs
-# ext4 11.255 s total — the page cache absorbs the writes) and the
-# RocksDB state-store provider measured +12% on the same drains (native
-# overhead at dimension-sized state), so BOTH stay off; the remaining
-# drain wall is per-micro-batch scheduling, which is the file-granular
-# semantic. The hook stays for ab_stream.py re-measurement on hosts
-# where the filesystem is not page-cache-friendly.
-CKPT_BASE: str | None = None
-
-
-def _mkckpt(prefix: str) -> str:
-    base = CKPT_BASE if CKPT_BASE and os.path.isdir(CKPT_BASE) else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+# Per-drain checkpoints live in the system temp dir. /dev/shm measured
+# neutral (the page cache absorbs the per-batch WAL and state-store
+# delta writes) and the RocksDB state store +12% at dimension-sized
+# state (OPTIMIZATION_r13.md §5): the remaining drain wall is
+# per-micro-batch scheduling, which is the file-granular semantic.
 
 
 def _run_to_memory(
@@ -135,7 +121,7 @@ def _run_to_memory(
         saved = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        checkpoint = _mkckpt(f"ckpt-{query_name}-")
+        checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
         if DRAIN_SINK == "noop":
             q = (
                 result.writeStream.format("noop")
@@ -634,7 +620,7 @@ def run_upsert_sink_stream_available_now(
     stream = events_stream_reader(
         spark, events_dir, max_files_per_trigger=max_files_per_trigger
     )
-    checkpoint = _mkckpt(f"ckpt-{query_name}-")
+    checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
     q = (
         stream.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint)

@@ -6,12 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_analysis_of_airline_data_set_spark.sketches.hll import (
-    hll_distinct_by_group,
-)
-from big_data_analysis_of_airline_data_set_spark.sketches.kmv import (
-    kmv_distinct_by_group,
-)
+from big_data_analysis_of_airline_data_set_spark.sketches.kmv import kmv_sketch
 from big_data_analysis_of_airline_data_set_spark.sources.readers import (
     read_testdata_table,
 )
@@ -25,20 +20,18 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_kmv_pre_distinct_is_value_identical(spark, sf_dir):
-    li = read_testdata_table(spark, sf_dir, "lineitem")
-    kw = dict(group_col="l_returnflag", value_col="l_orderkey", k=16)
-    assert _rows(kmv_distinct_by_group(li, pre_distinct=True, **kw)) == _rows(
-        kmv_distinct_by_group(li, pre_distinct=False, **kw)
-    )
-
-
-def test_hll_pre_distinct_is_value_identical(spark, sf_dir):
-    li = read_testdata_table(spark, sf_dir, "lineitem")
-    kw = dict(group_col="l_returnflag", value_col="l_orderkey", p=6)
-    assert _rows(hll_distinct_by_group(li, pre_distinct=True, **kw)) == _rows(
-        hll_distinct_by_group(li, pre_distinct=False, **kw)
-    )
+def test_kmv_dedups_batch_inputs_only(spark):
+    """Batch sketches dedup (group, value) before hashing; a streaming
+    input must not (an unwatermarked streaming distinct holds every
+    pair in state). Driver-only: analyzed plans, no job runs. Value
+    identity is covered by the sketch_kmv_* oracle parity cases."""
+    stream = spark.readStream.format("rate").load()
+    batch = spark.range(10).select(F.col("id").alias("value"))
+    for df, dedups in ((stream, False), (batch, True)):
+        src = df.select(F.lit("g").alias("grp"), F.col("value").alias("val"))
+        sk = kmv_sketch(src, group_col="grp", value_col="val", k=4)
+        plan = sk._jdf.queryExecution().analyzed().toString()
+        assert ("Deduplicate" in plan) == dedups, plan
 
 
 def test_loop_edge_build_single_exchange_and_identical(spark, sf_dir):
