@@ -500,28 +500,28 @@ FROM solved
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "sketch_hll_set_ops": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "sketch_hll_set_ops", q_sketch_hll_set_ops, _hll_set_ops_oracle(),
         "Pairwise HLL union/intersection/Jaccard set algebra",
     ),
-    "graph_bfs_distances": QuerySpec(
+    QuerySpec(
         "graph_bfs_distances", q_graph_bfs_distances, _bfs_oracle(),
         "Multi-source BFS hop distances over the trading graph",
     ),
-    "stats_welch_ttest": QuerySpec(
+    QuerySpec(
         "stats_welch_ttest", q_stats_welch_ttest, _welch_oracle(),
         "Welch's unequal-variance two-sample t per event type",
     ),
-    "events_rfm_segments": QuerySpec(
+    QuerySpec(
         "events_rfm_segments", q_events_rfm_segments, _RFM_ORACLE,
         "RFM quartile segmentation with engine-identical ntile cuts",
     ),
-    "stats_multi_ols": QuerySpec(
+    QuerySpec(
         "stats_multi_ols", q_stats_multi_ols, _multi_ols_oracle(),
         "Two-feature closed-form OLS via Cramer normal equations",
     ),
-}
+]
 
 
 # --------------------- label-propagation communities ---------------------
@@ -928,33 +928,33 @@ FROM st
 """
 
 
-QUERIES.update(
-    {
-        "graph_label_propagation": QuerySpec(
+QUERIES.extend(
+    [
+        QuerySpec(
             "graph_label_propagation",
             q_graph_label_propagation,
             _lpa_oracle(),
             "Deterministic 3-round label-propagation community sizes",
         ),
-        "events_cusum_changepoint": QuerySpec(
+        QuerySpec(
             "events_cusum_changepoint",
             q_events_cusum_changepoint,
             _CUSUM_ORACLE,
             "Integer-exact CUSUM change-point per event type",
         ),
-        "text_bm25_topk": QuerySpec(
+        QuerySpec(
             "text_bm25_topk",
             q_text_bm25_topk,
             _bm25_oracle(),
             "BM25-style lexical top-k with rational idf",
         ),
-        "stats_mannwhitney_u": QuerySpec(
+        QuerySpec(
             "stats_mannwhitney_u",
             q_stats_mannwhitney_u,
             _mannwhitney_oracle(),
             "Tie-corrected Mann-Whitney U per event type",
         ),
-    }
+    ]
 )
 
 
@@ -1255,33 +1255,33 @@ LIMIT {_BPE_PAIR_TOPK}
 """
 
 
-QUERIES.update(
-    {
-        "basket_frequent_pairs": QuerySpec(
+QUERIES.extend(
+    [
+        QuerySpec(
             "basket_frequent_pairs",
             q_basket_frequent_pairs,
             _BASKET_ORACLE,
             "Apriori-pruned frequent part pairs with confidence/lift",
         ),
-        "stats_gini_by_group": QuerySpec(
+        QuerySpec(
             "stats_gini_by_group",
             q_stats_gini_by_group,
             _GINI_ORACLE,
             "Exact Gini coefficient of order value per priority",
         ),
-        "events_diversity_index": QuerySpec(
+        QuerySpec(
             "events_diversity_index",
             q_events_diversity_index,
             _DIVERSITY_ORACLE,
             "Gini-Simpson diversity and effective users per type",
         ),
-        "text_bpe_merge_pairs": QuerySpec(
+        QuerySpec(
             "text_bpe_merge_pairs",
             q_text_bpe_merge_pairs,
             _BPE_PAIRS_ORACLE,
             "Adjacent token-pair counts (one BPE merge step)",
         ),
-    }
+    ]
 )
 
 
@@ -1750,31 +1750,31 @@ FROM agg
 """
 
 
-QUERIES.update(
-    {
-        "stats_cuped_adjustment": QuerySpec(
+QUERIES.extend(
+    [
+        QuerySpec(
             "stats_cuped_adjustment",
             q_stats_cuped_adjustment,
             _cuped_oracle(),
             "CUPED-adjusted A/B delta with pooled theta and rho^2",
         ),
-        "stats_pareto_coverage": QuerySpec(
+        QuerySpec(
             "stats_pareto_coverage",
             q_stats_pareto_coverage,
             _PARETO_ORACLE,
             "Exact-threshold revenue concentration (50/90/top-decile)",
         ),
-        "events_seasonality_profile": QuerySpec(
+        QuerySpec(
             "events_seasonality_profile",
             q_events_seasonality_profile,
             _SEASONALITY_ORACLE,
             "Integer dow x hour peak/trough calendar profile",
         ),
-        "events_forecast_eval": QuerySpec(
+        QuerySpec(
             "events_forecast_eval",
             q_events_forecast_eval,
             _FORECAST_ORACLE,
             "Seasonal-naive vs random-walk MAE/MASE scoreboard",
         ),
-    }
+    ]
 )

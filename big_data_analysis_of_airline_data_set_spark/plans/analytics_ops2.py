@@ -9,10 +9,8 @@ plans with a DuckDB oracle replaying identical arithmetic — decimal
 accumulation for order-independent sums, IEEE-identical float
 division, round(6) on statistics.
 
-All six entries are 3-sf builder-verified and head the r7 correctness
-rotation together with the wave-3/4 analytics entries (the round-6
-window was already full and justified when this wave landed; see
-``plans/__init__._CORRECTNESS_WINDOW``).
+All six entries enter the correctness window by ledger age
+(see ``plans/__init__.correctness_window``).
 """
 
 from __future__ import annotations
@@ -730,65 +728,65 @@ ORDER BY l_returnflag
 """
 
 
-QUERIES = {
-    "tpch_q3_style": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "tpch_q3_style",
         q_tpch_q3_style,
         _Q3_ORACLE,
         "Segment/date-filtered 3-way star join, top-10 by revenue",
     ),
-    "tpch_q5_style": QuerySpec(
+    QuerySpec(
         "tpch_q5_style",
         q_tpch_q5_style,
         _Q5_ORACLE,
         "6-way local-supplier revenue join with broadcast dims",
     ),
-    "skyline_dominance": QuerySpec(
+    QuerySpec(
         "skyline_dominance",
         q_skyline_dominance,
         _SKYLINE_ORACLE,
         "Exact 2-D Pareto skyline via range-bucketed prefix minima",
     ),
-    "stats_pca_2d": QuerySpec(
+    QuerySpec(
         "stats_pca_2d",
         q_stats_pca_2d,
         _PCA_ORACLE,
         "Closed-form 2x2 covariance eigendecomposition per group",
     ),
-    "events_stickiness": QuerySpec(
+    QuerySpec(
         "events_stickiness",
         q_events_stickiness,
         _STICKINESS_ORACLE,
         "Weekly DAU/WAU stickiness per event type",
     ),
-    "events_linear_interpolation": QuerySpec(
+    QuerySpec(
         "events_linear_interpolation",
         q_events_linear_interpolation,
         _INTERP_ORACLE,
         "Per-user calendar gap-fill with linear interpolation",
     ),
-    "events_clamped_balance": QuerySpec(
+    QuerySpec(
         "events_clamped_balance",
         q_events_clamped_balance,
         _CLAMPED_ORACLE,
         "Zero-clamped wallet recurrence via codegen array fold",
     ),
-    "events_holt_smoothing": QuerySpec(
+    QuerySpec(
         "events_holt_smoothing",
         q_events_holt_smoothing,
         _HOLT_ORACLE,
         "Holt double-exponential smoothing as a struct-state fold",
     ),
-    "events_max_drawdown": QuerySpec(
+    QuerySpec(
         "events_max_drawdown",
         q_events_max_drawdown,
         _DRAWDOWN_ORACLE,
         "Running-peak drawdown from decimal-exact prefix windows",
     ),
-    "stats_weighted_median": QuerySpec(
+    QuerySpec(
         "stats_weighted_median",
         q_stats_weighted_median,
         _WMEDIAN_ORACLE,
         "Weighted median via range-bucketed prefix weights",
     ),
-}
+]

@@ -13,10 +13,8 @@ accumulation for order-independent sums, integer-exact moment sums
 where the data is integral, IEEE-identical float division, round(6)
 on statistics.
 
-All eleven entries are 3-sf builder-verified
-(tests/test_analytics_ops3.py) and queue at the head of the r7
-correctness rotation together with the wave-3..6 analytics entries
-(see ``plans/__init__._CORRECTNESS_WINDOW``).
+All eleven entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``).
 """
 
 from __future__ import annotations
@@ -704,71 +702,71 @@ ORDER BY label
 """
 
 
-QUERIES = {
-    "tpch_q2_style": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "tpch_q2_style",
         q_tpch_q2_style,
         _Q2_ORACLE,
         "Correlated-min lookup re-joined with broadcast minima",
     ),
-    "tpch_q4_style": QuerySpec(
+    QuerySpec(
         "tpch_q4_style",
         q_tpch_q4_style,
         _Q4_ORACLE,
         "EXISTS late-shipment semi-join, counts by priority",
     ),
-    "tpch_q8_style": QuerySpec(
+    QuerySpec(
         "tpch_q8_style",
         q_tpch_q8_style,
         _Q8_ORACLE,
         "Per-year supplier-nation market share inside one region",
     ),
-    "tpch_q12_style": QuerySpec(
+    QuerySpec(
         "tpch_q12_style",
         q_tpch_q12_style,
         _Q12_ORACLE,
         "Priority split by shipping-speed bucket (Q12 shape)",
     ),
-    "tpch_q14_style": QuerySpec(
+    QuerySpec(
         "tpch_q14_style",
         q_tpch_q14_style,
         _Q14_ORACLE,
         "Monthly PROMO revenue share via one conditional agg pass",
     ),
-    "tpch_q18_style": QuerySpec(
+    QuerySpec(
         "tpch_q18_style",
         q_tpch_q18_style,
         _Q18_ORACLE,
         "Large-volume orders: HAVING prereduction then dim joins",
     ),
-    "tpch_q19_style": QuerySpec(
+    QuerySpec(
         "tpch_q19_style",
         q_tpch_q19_style,
         _Q19_ORACLE,
         "Disjunctive brand/size/qty channels with pushed prefilters",
     ),
-    "tpch_q22_style": QuerySpec(
+    QuerySpec(
         "tpch_q22_style",
         q_tpch_q22_style,
         _Q22_ORACLE,
         "Scalar-average filter + anti-join for dormant customers",
     ),
-    "stats_autocorr_daily": QuerySpec(
+    QuerySpec(
         "stats_autocorr_daily",
         q_stats_autocorr_daily,
         _AUTOCORR_ORACLE,
         "Integer-exact lag-1 autocorrelation of daily counts",
     ),
-    "customer_decile_lift": QuerySpec(
+    QuerySpec(
         "customer_decile_lift",
         q_customer_decile_lift,
         _DECILE_ORACLE,
         "Gains table from bucketed global rank (no global window)",
     ),
-    "embedding_label_centroids": QuerySpec(
+    QuerySpec(
         "embedding_label_centroids",
         q_embedding_label_centroids,
         _CENTROID_ORACLE,
         "Per-label centroid norms via decimal-exact dimension sums",
     ),
-}
+]

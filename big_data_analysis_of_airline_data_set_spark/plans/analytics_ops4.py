@@ -13,9 +13,8 @@ accumulation for order-independent money sums, integer-scaled
 arithmetic where a float formula would be engine-divergent,
 IEEE-identical float division, round(6) on statistics.
 
-All ten entries are 3-sf builder-verified
-(tests/test_analytics_ops4.py) and queue at the head of the r7
-correctness rotation with the earlier round-6 waves."""
+All ten entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``)."""
 
 from __future__ import annotations
 
@@ -623,65 +622,65 @@ WINDOW w AS (PARTITION BY user_id ORDER BY day),
 """
 
 
-QUERIES = {
-    "tpch_q7_style": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "tpch_q7_style",
         q_tpch_q7_style,
         _Q7_ORACLE,
         "Two-nation trade volume with twice-aliased nation broadcast",
     ),
-    "tpch_q9_style": QuerySpec(
+    QuerySpec(
         "tpch_q9_style",
         q_tpch_q9_style,
         _Q9_ORACLE,
         "Widget profit by nation/year, synthetic 10% unit cost",
     ),
-    "tpch_q10_style": QuerySpec(
+    QuerySpec(
         "tpch_q10_style",
         q_tpch_q10_style,
         _Q10_ORACLE,
         "Top-20 customers by returned revenue with nation dim",
     ),
-    "tpch_q13_style": QuerySpec(
+    QuerySpec(
         "tpch_q13_style",
         q_tpch_q13_style,
         _Q13_ORACLE,
         "Order-count distribution incl. zero via LEFT + count(col)",
     ),
-    "tpch_q15_style": QuerySpec(
+    QuerySpec(
         "tpch_q15_style",
         q_tpch_q15_style,
         _Q15_ORACLE,
         "Top supplier via exact decimal scalar-max re-join",
     ),
-    "tpch_q16_style": QuerySpec(
+    QuerySpec(
         "tpch_q16_style",
         q_tpch_q16_style,
         _Q16_ORACLE,
         "Supplier variety per (brand,size) with exact distinct",
     ),
-    "tpch_q17_style": QuerySpec(
+    QuerySpec(
         "tpch_q17_style",
         q_tpch_q17_style,
         _Q17_ORACLE,
         "Small-quantity revenue loss vs per-part average threshold",
     ),
-    "tpch_q21_style": QuerySpec(
+    QuerySpec(
         "tpch_q21_style",
         q_tpch_q21_style,
         _Q21_ORACLE,
         "Lone-late-supplier attribution as one aggregate pass",
     ),
-    "embedding_kmeans_assign": QuerySpec(
+    QuerySpec(
         "embedding_kmeans_assign",
         q_embedding_kmeans_assign,
         _KMEANS_ORACLE,
         "Integer-exact nearest-centroid assignment, 8 fixed seeds",
     ),
-    "events_lag_features": QuerySpec(
+    QuerySpec(
         "events_lag_features",
         q_events_lag_features,
         _LAG_ORACLE,
         "Calendar lag-1 and trailing-7-day RANGE-window features",
     ),
-}
+]

@@ -10,9 +10,8 @@ No reference analogue (mosama1994 Scripts/1-2 are single-table).
 Catalog contract as everywhere: decimal/integer-exact accumulation,
 IEEE-identical float division, round(6) statistics.
 
-All five entries are 3-sf builder-verified
-(tests/test_analytics_ops5.py) and queue at the head of the r7
-correctness rotation with the earlier round-6 waves."""
+All five entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``)."""
 
 from __future__ import annotations
 
@@ -369,35 +368,35 @@ ORDER BY event_type
 """
 
 
-QUERIES = {
-    "tpch_q6_style": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "tpch_q6_style",
         q_tpch_q6_style,
         _Q6_ORACLE,
         "Scan-only forecast revenue band, all predicates pushed",
     ),
-    "tpch_q11_style": QuerySpec(
+    QuerySpec(
         "tpch_q11_style",
         q_tpch_q11_style,
         _Q11_ORACLE,
         "Fraction-of-total revenue threshold via broadcast scalar",
     ),
-    "tpch_q20_style": QuerySpec(
+    QuerySpec(
         "tpch_q20_style",
         q_tpch_q20_style,
         _Q20_ORACLE,
         "Excess-volume suppliers: HAVING prereduction then dims",
     ),
-    "embedding_pq_codebook": QuerySpec(
+    QuerySpec(
         "embedding_pq_codebook",
         q_embedding_pq_codebook,
         _PQ_ORACLE,
         "Product-quantization assignment, integer-exact argmin",
     ),
-    "events_gap_stats": QuerySpec(
+    QuerySpec(
         "events_gap_stats",
         q_events_gap_stats,
         _GAP_ORACLE,
         "Exact inter-arrival gap statistics per event type",
     ),
-}
+]

@@ -7,9 +7,8 @@ No reference analogue (mosama1994 Scripts/1-2 are single-table).
 Catalog contract as everywhere: decimal/integer-exact accumulation,
 IEEE-identical float division, round(6) statistics.
 
-All three entries are 3-sf builder-verified
-(tests/test_analytics_ops6.py) and queue at the head of the r7
-correctness rotation with the earlier round-6 waves."""
+All three entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``)."""
 
 from __future__ import annotations
 
@@ -655,53 +654,53 @@ ORDER BY 1
 """
 
 
-QUERIES = {
-    "events_funnel_ttc": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "events_funnel_ttc",
         q_events_funnel_ttc,
         _TTC_ORACLE,
         "Funnel step time-to-convert: mean + bucketed exact median",
     ),
-    "stats_power_analysis": QuerySpec(
+    QuerySpec(
         "stats_power_analysis",
         q_stats_power_analysis,
         _POWER_ORACLE,
         "A/B users-per-arm from exact variance, libm-free constants",
     ),
-    "events_cohort_ltv": QuerySpec(
+    QuerySpec(
         "events_cohort_ltv",
         q_events_cohort_ltv,
         _LTV_ORACLE,
         "Weekly cohort LTV triangle with decimal cumulative revenue",
     ),
-    "events_funnel_windowed": QuerySpec(
+    QuerySpec(
         "events_funnel_windowed",
         q_events_funnel_windowed,
         _FUNNEL_WINDOWED_ORACLE,
         "Funnel with a 7-day conversion window per step",
     ),
-    "curation_temperature_mixture": QuerySpec(
+    QuerySpec(
         "curation_temperature_mixture",
         q_curation_temperature_mixture,
         _TEMPERATURE_ORACLE,
         "Sqrt-temperature source mixture with sampling factors",
     ),
-    "graph_degree_histogram": QuerySpec(
+    QuerySpec(
         "graph_degree_histogram",
         q_graph_degree_histogram,
         _DEGREE_ORACLE,
         "Bit-length-binned degree distribution (skew diagnostic)",
     ),
-    "stats_srm_check": QuerySpec(
+    QuerySpec(
         "stats_srm_check",
         q_stats_srm_check,
         _SRM_ORACLE,
         "Sample-ratio-mismatch chi2 on an md5 50/50 hash split",
     ),
-    "stats_ratio_metric_ci": QuerySpec(
+    QuerySpec(
         "stats_ratio_metric_ci",
         q_stats_ratio_metric_ci,
         _RATIO_ORACLE,
         "Delta-method CI for a per-user ratio metric",
     ),
-}
+]

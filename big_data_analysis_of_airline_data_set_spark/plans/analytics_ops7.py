@@ -7,8 +7,8 @@ No reference analogue (mosama1994 Scripts/1-2 are single-table).
 Catalog contract as everywhere: decimal/integer-exact accumulation,
 IEEE-identical float division, round(6) statistics.
 
-Both entries are 3-sf builder-verified (tests/test_analytics_ops7.py)
-and queue at the head of the r7 correctness rotation."""
+Both entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``)."""
 
 from __future__ import annotations
 
@@ -163,17 +163,17 @@ ORDER BY bucket
 """
 
 
-QUERIES = {
-    "rollup_share_of_parent": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "rollup_share_of_parent",
         q_rollup_share_of_parent,
         _SHARE_ORACLE,
         "Nation-of-region and region-of-total revenue shares",
     ),
-    "feature_hashing_audit": QuerySpec(
+    QuerySpec(
         "feature_hashing_audit",
         q_feature_hashing_audit,
         _HASHING_ORACLE,
         "Hashing-trick bucket occupancy and collision rate",
     ),
-}
+]

@@ -6,8 +6,8 @@ No reference analogue (mosama1994 Scripts/1-2 are single-table).
 Catalog contract as everywhere: integer/decimal-exact accumulation,
 IEEE-identical float division, round(6) statistics.
 
-Both entries are 3-sf builder-verified (tests/test_analytics_ops8.py)
-and queue at the head of the r7 correctness rotation."""
+Both entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``)."""
 
 from __future__ import annotations
 
@@ -217,17 +217,17 @@ ORDER BY p.o_orderpriority
 """
 
 
-QUERIES = {
-    "events_disorder_audit": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "events_disorder_audit",
         q_events_disorder_audit,
         _DISORDER_ORACLE,
         "Event-time lateness audit behind the watermark choice",
     ),
-    "stats_anova_oneway": QuerySpec(
+    QuerySpec(
         "stats_anova_oneway",
         q_stats_anova_oneway,
         _ANOVA_ORACLE,
         "One-way ANOVA F from one exact power-sum pass",
     ),
-}
+]

@@ -7,8 +7,8 @@ No reference analogue (mosama1994 Scripts/1-2 are single-table).
 Catalog contract as everywhere: integer/decimal-exact accumulation,
 IEEE-identical float division, round(6) statistics.
 
-Both entries are 3-sf builder-verified (tests/test_analytics_ops9.py)
-and queue at the head of the r7 correctness rotation."""
+Both entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``)."""
 
 from __future__ import annotations
 
@@ -237,17 +237,17 @@ ORDER BY abc_class
 """
 
 
-QUERIES = {
-    "events_uplift_by_segment": QuerySpec(
+QUERIES = [
+    QuerySpec(
         "events_uplift_by_segment",
         q_events_uplift_by_segment,
         _UPLIFT_ORACLE,
         "Per-segment A/B uplift with pooled SE on the md5 split",
     ),
-    "orders_abc_classification": QuerySpec(
+    QuerySpec(
         "orders_abc_classification",
         q_orders_abc_classification,
         _ABC_ORACLE,
         "ABC 80/15/5 revenue classes, bucketed-prefix cumulative",
     ),
-}
+]

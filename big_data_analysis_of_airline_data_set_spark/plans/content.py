@@ -1738,110 +1738,110 @@ FROM documents d LEFT JOIN per USING (doc_id)
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "text_quality_classifier": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "text_quality_classifier", q_text_quality_classifier,
         _quality_classifier_oracle(),
         "fastText-shaped hashed-ngram linear quality scorer, shuffle-free",
     ),
-    "text_bigram_perplexity": QuerySpec(
+    QuerySpec(
         "text_bigram_perplexity", q_text_bigram_perplexity, _PPL_ORACLE,
         "CCNet-style bigram-LM perplexity quality scoring (add-one, log2 bits)",
     ),
-    "text_trigram_backoff": QuerySpec(
+    QuerySpec(
         "text_trigram_backoff", q_text_trigram_backoff, _SB_ORACLE,
         "trigram stupid-backoff quality scoring (Brants 2007; alpha=0.4,"
         " add-one floor)",
     ),
-    "text_token_rarity": QuerySpec(
+    QuerySpec(
         "text_token_rarity", q_text_token_rarity, _TOKEN_RARITY_ORACLE,
         "perplexity-proxy mean inverse token frequency (integer-exact)",
     ),
-    "text_tfidf": QuerySpec(
+    QuerySpec(
         "text_tfidf", q_text_tfidf, _TFIDF_ORACLE,
         "TF-IDF top-5 terms per doc (broadcast df + corpus scalar)",
     ),
-    "trimmed_mean_udaf": QuerySpec(
+    QuerySpec(
         "trimmed_mean_udaf", q_trimmed_mean_udaf, _TRIMMED_MEAN_ORACLE,
         "grouped-map Pandas UDAF trimmed mean vs quantile SQL",
     ),
-    "text_stats": QuerySpec(
+    QuerySpec(
         "text_stats", q_text_stats, _TEXT_STATS_ORACLE,
         "token/char counts, mean token length, stopword ratio",
     ),
-    "text_lang_id": QuerySpec(
+    QuerySpec(
         "text_lang_id", q_text_lang_id, _lang_id_oracle(),
         "stopword-argmax language ID",
     ),
-    "text_fingerprint": QuerySpec(
+    QuerySpec(
         "text_fingerprint", q_text_fingerprint, _FINGERPRINT_ORACLE,
         "md5 content fingerprint of normalized text",
     ),
-    "text_repetition": QuerySpec(
+    QuerySpec(
         "text_repetition", q_text_repetition, _TEXT_REPETITION_ORACLE,
         "repeated-3-gram ratio quality gate (boilerplate/spam signal)",
     ),
-    "dedup_fuzzy_pairs": QuerySpec(
+    QuerySpec(
         "dedup_fuzzy_pairs", q_dedup_fuzzy_pairs, _FUZZY_ORACLE,
         "approximate string join: q-gram blocking + Levenshtein verify"
         " on candidates only",
     ),
-    "dedup_span_scrub": QuerySpec(
+    QuerySpec(
         "dedup_span_scrub", q_dedup_span_scrub, _SPAN_SCRUB_ORACLE,
         "exact substring dedup with document rewrite: first-occurrence"
         " span keep + reassembly, rewrite proven via md5",
     ),
-    "dedup_attribution": QuerySpec(
+    QuerySpec(
         "dedup_attribution", q_dedup_attribution, _dedup_attribution_oracle(),
         "per-source token accounting for the span scrub (who lost what"
         " to dedup)",
     ),
-    "curation_length_buckets": QuerySpec(
+    QuerySpec(
         "curation_length_buckets", q_length_buckets, _length_buckets_oracle(),
         "length-bucketed batch planning: per-bucket docs/tokens/padding"
         " waste, integer-exact",
     ),
-    "dedup_spans_crossdoc": QuerySpec(
+    QuerySpec(
         "dedup_spans_crossdoc", q_dedup_spans_crossdoc, _SPANS_CROSSDOC_ORACLE,
         "cross-document span-dedup signal: per-doc duplicated 8-token-span counts",
     ),
-    "text_oov_rate": QuerySpec(
+    QuerySpec(
         "text_oov_rate", q_text_oov_rate, _OOV_ORACLE,
         "per-doc out-of-vocabulary rate vs the corpus top-100 token vocabulary",
     ),
-    "dedup_exact": QuerySpec(
+    QuerySpec(
         "dedup_exact", q_dedup_exact, _DEDUP_EXACT_ORACLE,
         "exact dedup groups via fingerprint hash-groupBy",
     ),
-    "dedup_ngram_jaccard": QuerySpec(
+    QuerySpec(
         "dedup_ngram_jaccard", q_dedup_ngram_jaccard, _NGRAM_JACCARD_ORACLE,
         "exact 3-gram Jaccard near-dup pairs (length-banded)",
     ),
-    "dedup_minhash_lsh": QuerySpec(
+    QuerySpec(
         "dedup_minhash_lsh", q_dedup_minhash, _MINHASH_ORACLE,
         "MinHash-LSH near-dup pairs, md5 families — oracle replays the candidate set",
     ),
-    "dedup_simhash": QuerySpec(
+    QuerySpec(
         "dedup_simhash", q_dedup_simhash, _simhash_oracle(),
         "SimHash banded near-dup pairs, md5 digests — oracle replays bit-for-bit",
     ),
-    "dedup_connected_components": QuerySpec(
+    QuerySpec(
         "dedup_connected_components",
         q_dedup_connected_components,
         _connected_components_oracle(),
         "near-dup clusters: iterative min-label propagation vs recursive-CTE oracle",
     ),
-    "dedup_embedding_cosine": QuerySpec(
+    QuerySpec(
         "dedup_embedding_cosine", q_dedup_embedding_cosine, _EMBEDDING_COSINE_ORACLE,
         "embedding-cosine near-dup pairs (exact, JVM-side math)",
     ),
-    "ann_bruteforce_topk": QuerySpec(
+    QuerySpec(
         "ann_bruteforce_topk", q_ann_bruteforce, _ANN_BRUTE_ORACLE,
         "brute-force cosine top-k (exact ANN baseline)",
     ),
     # Same contract as ann_ivf_topk: LSH proposes 2k candidates, exact
     # cosine reranks; with recall 1.0 the output equals the exact top-k.
-    "ann_lsh_topk": QuerySpec(
+    QuerySpec(
         "ann_lsh_topk", q_ann_lsh, _ANN_BRUTE_ORACLE,
         "LSH candidates + exact-cosine rerank, oracled as exact top-k",
     ),
@@ -1850,79 +1850,79 @@ QUERIES: dict[str, QuerySpec] = {
     # probed cells (recall 1.0 — held at every test scale, floor-tested),
     # the IVF output IS the exact top-k: the brute-force oracle doubles
     # as a hard recall contract.
-    "ann_ivf_topk": QuerySpec(
+    QuerySpec(
         "ann_ivf_topk", q_ann_ivf, _ANN_BRUTE_ORACLE,
         "IVF (KMeans coarse-quantizer) top-k, oracled as exact top-k (recall-1.0 contract)",
     ),
-    "ann_bruteforce_pandas": QuerySpec(
+    QuerySpec(
         "ann_bruteforce_pandas", q_ann_bruteforce_pandas, _ANN_BRUTE_ORACLE,
         "vectorized pandas-UDF cosine top-k (same oracle as the JVM path)",
     ),
-    "coreset_kcenter": QuerySpec(
+    QuerySpec(
         "coreset_kcenter", q_coreset_kcenter, _coreset_oracle(),
         "greedy k-center coreset selection in int8 space — full greedy"
         " trajectory replayed by unrolled-CTE oracle",
     ),
-    "ann_quantized_rerank": QuerySpec(
+    QuerySpec(
         "ann_quantized_rerank", q_ann_quantized_rerank,
         _ANN_QUANT_RERANK_ORACLE,
         "int8 dot-product first pass + exact-cosine rerank; oracle"
         " replays the quantized pipeline itself",
     ),
-    "dedup_entity_resolution": QuerySpec(
+    QuerySpec(
         "dedup_entity_resolution", q_dedup_entity_resolution,
         _ENTITY_RESOLUTION_ORACLE,
         "entity mastering: fuzzy string join -> transitive closure ->"
         " canonical surface form (recursive-CTE oracle)",
     ),
-    "ann_ivf_quantized_rerank": QuerySpec(
+    QuerySpec(
         "ann_ivf_quantized_rerank", q_ann_ivf_quantized_rerank,
         _ANN_BRUTE_ORACLE,
         "stacked IVF partition pruning -> int8 first pass -> exact rerank;"
         " brute-force oracle == recall@10 = 1.0 for the full stack",
     ),
-    "ann_hard_negatives": QuerySpec(
+    QuerySpec(
         "ann_hard_negatives", q_ann_hard_negatives, _HARD_NEG_ORACLE,
         "contrastive hard-negative mining: top-k different-label neighbors per anchor",
     ),
-    "embedding_class_profile": QuerySpec(
+    QuerySpec(
         "embedding_class_profile", q_embedding_class_profile, _CLASS_PROFILE_ORACLE,
         "per-label class sizes + integer-exact coordinate checksums (balance/drift QA)",
     ),
-    "text_inverted_index": QuerySpec(
+    QuerySpec(
         "text_inverted_index", q_text_inverted_index, _INVIDX_ORACLE,
         "positional inverted-index segment for top-df tokens; ordered"
         " posting lists pinned via md5",
     ),
-    "text_gopher_rules": QuerySpec(
+    QuerySpec(
         "text_gopher_rules", q_text_gopher_rules, _GOPHER_ORACLE,
         "published Gopher quality heuristics as per-doc booleans +"
         " keep decision, one shuffle-free projection",
     ),
-    "text_bpe_tokens": QuerySpec(
+    QuerySpec(
         "text_bpe_tokens", q_text_bpe_tokens, _BPE_ORACLE,
         "BPE-style pre-tokenizer token counts",
     ),
-    "text_winnowing": QuerySpec(
+    QuerySpec(
         "text_winnowing", q_winnowing_fingerprints, _WINNOW_ORACLE,
         "winnowing (rolling-hash window-min) document fingerprints",
     ),
-    "dedup_embedding_lsh": QuerySpec(
+    QuerySpec(
         "dedup_embedding_lsh", q_dedup_embedding_lsh,
         _embedding_banded_oracle(_LSH_BANDS, _LSH_BITS),
         "recall-boosted banded sign-LSH near-dup pairs (16 bands x 4 bits; "
         "oracle replays the exact candidate set; MLlib BRP-LSH is the tests-only twin)",
     ),
-    "curation_pipeline": QuerySpec(
+    QuerySpec(
         "curation_pipeline", q_curation_pipeline, _curation_oracle(),
         "composite corpus-curation gates: length+stopword+lang+exact-dedup",
     ),
-    "multimodal_asset_stats": QuerySpec(
+    QuerySpec(
         "multimodal_asset_stats", q_multimodal_asset_stats, _ASSET_STATS_ORACLE,
         "binary-payload stats via Arrow-batched mapInPandas",
     ),
-    "multimodal_frame_sample": QuerySpec(
+    QuerySpec(
         "multimodal_frame_sample", q_multimodal_frame_sample, _FRAME_SAMPLE_ORACLE,
         "uniform frame sampling over binary payloads (1 row -> k rows, mapInPandas)",
     ),
-}
+]

@@ -627,66 +627,66 @@ FROM k
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "curation_chunking": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "curation_chunking", q_chunking, _CHUNKING_ORACLE,
         "sliding-window doc chunking (32-tok windows, stride 24),"
         " md5-pinned chunk content, map-only",
     ),
-    "curation_group_split": QuerySpec(
+    QuerySpec(
         "curation_group_split", q_group_split, _group_split_oracle(),
         "leakage-free group-aware split: whole groups per partition,"
         " zero-shuffle assignment expression",
     ),
-    "curation_dsir_resample": QuerySpec(
+    QuerySpec(
         "curation_dsir_resample", q_dsir_resample, _DSIR_ORACLE,
         "DSIR-style hashed-unigram importance resampling, integer-exact"
         " ratio arithmetic, deterministic top-k selection",
     ),
-    "curation_stratified_split": QuerySpec(
+    QuerySpec(
         "curation_stratified_split", q_stratified_split, _STRATIFIED_ORACLE,
         "stratified md5-ranked 80/10/10 split audit per source domain",
     ),
-    "curation_quota_sample": QuerySpec(
+    QuerySpec(
         "curation_quota_sample", q_quota_sample, _QUOTA_ORACLE,
         "per-domain quota sampling, deterministic md5 order",
     ),
-    "curation_domain_mixture": QuerySpec(
+    QuerySpec(
         "curation_domain_mixture", q_domain_mixture, _MIXTURE_ORACLE,
         "domain token shares + uniform-target down-sampling weights",
     ),
-    "curation_sequence_packing": QuerySpec(
+    QuerySpec(
         "curation_sequence_packing", q_sequence_packing, _PACKING_ORACLE,
         "concat-and-chunk sequence packing (window cumsum, per domain)",
     ),
-    "curation_contamination": QuerySpec(
+    QuerySpec(
         "curation_contamination", q_contamination_check, _CONTAM_ORACLE,
         "benchmark n-gram decontamination via broadcast shingle semi-join",
     ),
-    "embedding_quantize_int8": QuerySpec(
+    QuerySpec(
         "embedding_quantize_int8", q_embedding_quantize, _QUANTIZE_ORACLE,
         "int8 absmax quantization, integer checksums (Arrow-batched)",
     ),
-    "curation_weighted_sample": QuerySpec(
+    QuerySpec(
         "curation_weighted_sample", q_weighted_sample, _WEIGHTED_SAMPLE_ORACLE,
         "mixture weights applied as deterministic md5-threshold Bernoulli",
     ),
-    "curation_weighted_reservoir": QuerySpec(
+    QuerySpec(
         "curation_weighted_reservoir", q_weighted_reservoir,
         _WEIGHTED_RESERVOIR_ORACLE,
         "A-ES weighted reservoir via integer max-of-uniforms keys",
     ),
-    "dedup_canonical_keeper": QuerySpec(
+    QuerySpec(
         "dedup_canonical_keeper", q_dedup_canonical_keeper,
         _canonical_keeper_oracle(),
         "quality-ranked keeper per near-dup cluster (vs min-id canonical)",
     ),
-    "text_vocab_stats": QuerySpec(
+    QuerySpec(
         "text_vocab_stats", q_text_vocab_stats, _VOCAB_ORACLE,
         "per-source vocabulary size and type-token ratio",
     ),
-    "data_quality_report": QuerySpec(
+    QuerySpec(
         "data_quality_report", q_data_quality_report, _DQ_ORACLE,
         "expectation suite: N rules in one scan, per-rule violation report",
     ),
-}
+]

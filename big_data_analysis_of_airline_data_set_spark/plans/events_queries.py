@@ -26,12 +26,8 @@ from ..streaming.windows import (
 from .spec import QuerySpec
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_testdata_table(spark, sf_dir, "events")
-
-
 def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_counts(_events(spark, sf_dir), width="1 hour")
+    return tumbling_counts(read_testdata_table(spark, sf_dir, "events"), width="1 hour")
 
 
 _TUMBLING_ORACLE = """
@@ -230,7 +226,10 @@ def q_kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the merge/estimate/exact assembly is SHARED with the batch query
     # (sketches.kmv.kmv_report) — only the sketch's provenance differs
     return kmv_report(
-        sk, _events(spark, sf_dir), group_col="event_type", value_col="user_id"
+        sk,
+        read_testdata_table(spark, sf_dir, "events"),
+        group_col="event_type",
+        value_col="user_id",
     )
 
 
@@ -269,7 +268,7 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return hll_report(
         regs,
-        _events(spark, sf_dir),
+        read_testdata_table(spark, sf_dir, "events"),
         group_col="event_type",
         value_col="user_id",
         p=_HLL_STREAM_P,
@@ -314,7 +313,7 @@ def q_hdr_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return hdr_quantile_report(
         sk,
-        _events(spark, sf_dir),
+        read_testdata_table(spark, sf_dir, "events"),
         group_col="event_type",
         value_col="value",
         sub_bits=_HDR_STREAM_SUB_BITS,
@@ -353,7 +352,7 @@ def q_hll_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sketches.hll import hll_estimate, hll_registers, hll_trailing_merge
 
-    base = _events(spark, sf_dir).select(
+    base = read_testdata_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr("unix_micros(ts) div 3600000000").alias("hour_bucket"),
         F.col("user_id").cast("string").alias("val"),
@@ -491,7 +490,7 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_files_per_trigger=None,
         stream_shuffle_partitions=8,
     )
-    occ = _events(spark, sf_dir).select(
+    occ = read_testdata_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("term")
     )
     return heavy_hitters_report(
@@ -555,7 +554,7 @@ def q_spacesaving_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_shuffle_partitions=2,
     )
     exact = (
-        _events(spark, sf_dir)
+        read_testdata_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isNotNull())
         .select("event_type", F.expr(ITEM_SQL).alias("item"))
         .groupBy("event_type", "item")
@@ -611,7 +610,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     pairs = (
         ev.select("user_id", "ts", "event_id", "event_type")
@@ -653,7 +652,9 @@ FROM pairs
 
 
 def q_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding_counts(_events(spark, sf_dir), width="1 hour", slide="30 minutes")
+    return sliding_counts(
+        read_testdata_table(spark, sf_dir, "events"), width="1 hour", slide="30 minutes"
+    )
 
 
 def q_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,7 +788,7 @@ FROM placed GROUP BY 1, 2
 
 
 def q_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_counts(_events(spark, sf_dir), gap="5 minutes")
+    return session_counts(read_testdata_table(spark, sf_dir, "events"), gap="5 minutes")
 
 
 # Gaps-and-islands: a new session starts when the gap from the previous
@@ -828,7 +829,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     because (c_ts, click_id) ordering is total."""
     from pyspark.sql import functions as F
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
     )
@@ -879,7 +880,7 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join over raw events, no unbounded window frame."""
     from pyspark.sql import functions as F
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     user_days = ev.select(
         F.to_date("ts").alias("day"), "user_id"
     ).distinct()
@@ -918,7 +919,7 @@ GROUP BY 1
 
 
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return json_extract_k(_events(spark, sf_dir))
+    return json_extract_k(read_testdata_table(spark, sf_dir, "events"))
 
 
 _JSON_ORACLE = """
@@ -929,7 +930,7 @@ SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM eve
 def q_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.rollup import multi_granularity_rollup
 
-    return multi_granularity_rollup(_events(spark, sf_dir))
+    return multi_granularity_rollup(read_testdata_table(spark, sf_dir, "events"))
 
 
 _MULTI_ROLLUP_ORACLE = """
@@ -962,7 +963,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user in the preceding 10 minutes — the batch twin of the
     watermarked stream-stream join (tests/test_streaming_join.py runs
     the same predicate as a real stream-stream join)."""
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     from pyspark.sql import functions as F
 
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -1017,7 +1018,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three filtered scans feeding the first groupBys."""
     from pyspark.sql import functions as F
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -1072,7 +1073,7 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     full read."""
     from pyspark.sql import functions as F
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     bucket = F.width_bucket(F.col("value"), F.lit(0.0), F.lit(500.0), F.lit(10))
     return ev.groupBy(bucket.cast("long").alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1105,7 +1106,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts."""
     from pyspark.sql import functions as F
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).alias("cohort_day")
     )
@@ -1151,7 +1152,7 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.timeseries import resample_ffill
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     out = resample_ffill(
         ev,
         key_col=(F.col("user_id") % 8),
@@ -1201,7 +1202,7 @@ def q_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.to_date("ts").alias("day")
     ).distinct()
@@ -1262,7 +1263,7 @@ def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     dt = (
         F.unix_timestamp(F.lead("ts").over(w)) - F.unix_timestamp("ts")
@@ -1308,7 +1309,7 @@ def q_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.to_date(F.min("ts")).alias("day")
     )
@@ -1355,7 +1356,7 @@ def q_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     is_new = (
@@ -1429,7 +1430,7 @@ def q_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    ev = _events(spark, sf_dir)
+    ev = read_testdata_table(spark, sf_dir, "events")
     rn = F.row_number().over(W.partitionBy("user_id").orderBy("ts", "event_id"))
     first_k = ev.select("user_id", "ts", "event_id", "event_type").withColumn(
         "rn", rn
@@ -1468,171 +1469,171 @@ FROM paths GROUP BY path
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "events_cumulative_users": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "events_cumulative_users", q_cumulative_users,
         _CUMULATIVE_USERS_ORACLE,
         "cumulative unique users per day (first-seen identity — no"
         " per-day history rescan)",
     ),
-    "events_capped_sessions": QuerySpec(
+    QuerySpec(
         "events_capped_sessions", q_capped_sessions,
         _CAPPED_SESSIONS_ORACLE,
         "sessionization with gap split AND max-duration cap (grid"
         " sub-split, deterministic)",
     ),
-    "events_journey_paths": QuerySpec(
+    QuerySpec(
         "events_journey_paths", q_journey_paths, _JOURNEY_ORACLE,
         "counted 8-event user-journey prefixes (ordered collect,"
         " total order via (ts, event_id))",
     ),
-    "events_twap": QuerySpec(
+    QuerySpec(
         "events_twap", q_events_twap, _TWAP_ORACLE,
         "time-weighted average per user (holding-time weights, exact"
         " decimal accumulation)",
     ),
-    "events_streaks": QuerySpec(
+    QuerySpec(
         "events_streaks", q_streaks, _STREAKS_ORACLE,
         "islands-and-gaps consecutive-day streaks per user (constant-"
         "group window trick, no self-join)",
     ),
-    "events_resample_ffill": QuerySpec(
+    QuerySpec(
         "events_resample_ffill", q_resample_ffill, _RESAMPLE_FFILL_ORACLE,
         "hourly time-grid resample + forward fill over user-band series"
         " (gap repair; grid generated distributed)",
     ),
-    "events_funnel": QuerySpec(
+    QuerySpec(
         "events_funnel", q_funnel, _FUNNEL_ORACLE,
         "ordered view→click→purchase conversion funnel",
     ),
-    "events_histogram": QuerySpec(
+    QuerySpec(
         "events_histogram", q_histogram, _HISTOGRAM_ORACLE,
         "fixed-bound width_bucket histogram, single agg pass",
     ),
-    "events_retention": QuerySpec(
+    QuerySpec(
         "events_retention", q_retention, _RETENTION_ORACLE,
         "first-day cohort retention by day offset",
     ),
-    "events_interval_join": QuerySpec(
+    QuerySpec(
         "events_interval_join", q_interval_join, _INTERVAL_JOIN_ORACLE,
         "time-interval join (batch twin of the stream-stream join)",
     ),
-    "events_interval_join_stream": QuerySpec(
+    QuerySpec(
         "events_interval_join_stream", q_interval_join_stream, _INTERVAL_JOIN_ORACLE,
         "the same interval join executed as a watermarked STREAM-STREAM "
         "join (availableNow drain, append mode ≡ batch pairs)",
     ),
-    "events_multi_rollup": QuerySpec(
+    QuerySpec(
         "events_multi_rollup", q_multi_rollup, _MULTI_ROLLUP_ORACLE,
         "hypertable-style minute/hour/day continuous-aggregate rollup",
     ),
-    "events_tumbling_window": QuerySpec(
+    QuerySpec(
         "events_tumbling_window", q_tumbling, _TUMBLING_ORACLE,
         "1h tumbling window counts + exact sums",
     ),
-    "events_tumbling_stream": QuerySpec(
+    QuerySpec(
         "events_tumbling_stream", q_tumbling_stream, _TUMBLING_ORACLE,
         "the same tumbling agg executed as a watermarked availableNow "
         "Structured Streaming query (memory sink, complete mode)",
     ),
-    "events_sliding_window": QuerySpec(
+    QuerySpec(
         "events_sliding_window", q_sliding, _SLIDING_ORACLE,
         "1h/30m sliding window counts",
     ),
-    "events_upsert_sink_stream": QuerySpec(
+    QuerySpec(
         "events_upsert_sink_stream", q_upsert_sink_stream,
         _UPSERT_SINK_ORACLE,
         "REAL streaming upsert sink: foreachBatch keyed-state merge"
         " across generations, proven == batch latest-per-key",
     ),
-    "events_enrich_stream": QuerySpec(
+    QuerySpec(
         "events_enrich_stream", q_enrich_stream, _ENRICH_STREAM_ORACLE,
         "REAL stream-static enrichment join (stateless broadcast per"
         " micro-batch) + windowed segment rollup, oracled ≡ batch",
     ),
-    "events_sliding_stream": QuerySpec(
+    QuerySpec(
         "events_sliding_stream", q_sliding_stream, _SLIDING_ORACLE,
         "the same sliding agg executed as a watermarked availableNow "
         "Structured Streaming query (memory sink, complete mode)",
     ),
-    "events_session_window": QuerySpec(
+    QuerySpec(
         "events_session_window", q_session, _SESSION_ORACLE,
         "5-minute-gap session windows per user",
     ),
-    "events_session_stream": QuerySpec(
+    QuerySpec(
         "events_session_stream", q_session_stream, _SESSION_ORACLE,
         "the same session-window agg (merging-window state) executed as "
         "a watermarked availableNow Structured Streaming query",
     ),
-    "events_json_extract": QuerySpec(
+    QuerySpec(
         "events_json_extract", q_json_extract, _JSON_ORACLE,
         "scalar JSON extraction from props",
     ),
-    "events_dedup_stream": QuerySpec(
+    QuerySpec(
         "events_dedup_stream", q_dedup_stream, _DEDUP_STREAM_ORACLE,
         "watermarked streaming exact-dedup over an at-least-once doubled "
         "landing — emits each event exactly once (≡ batch projection)",
     ),
-    "events_user_totals_stream": QuerySpec(
+    QuerySpec(
         "events_user_totals_stream", q_user_totals_stream,
         _USER_TOTALS_STREAM_ORACLE,
         "custom applyInPandasWithState running totals across 4 micro-"
         "batches ≡ batch groupBy (integer-cents exact state)",
     ),
-    "events_markov_transitions": QuerySpec(
+    QuerySpec(
         "events_markov_transitions", q_event_transitions, _TRANSITIONS_ORACLE,
         "first-order Markov transition matrix over per-user event"
         " streams (lead pairs -> exact-count probabilities)",
     ),
-    "events_hll_sliding_distinct": QuerySpec(
+    QuerySpec(
         "events_hll_sliding_distinct", q_hll_sliding_distinct,
         _hll_sliding_oracle(),
         "trailing 3h distinct users per (type, hour) via sliding HLL"
         " register scatter + max-merge — W×register shuffle per bucket,"
         " never a W-hour raw re-scan; exact reference rides along",
     ),
-    "events_cms_stream": QuerySpec(
+    QuerySpec(
         "events_cms_stream", q_cms_stream, _CMS_STREAM_ORACLE,
         "Count-Min sketch maintained INCREMENTALLY by the streaming"
         " runtime (complete-mode sum state = the d×w cell table);"
         " exact top-k + probe estimates assembled in batch over the"
         " drain — completes the streamed sketch trio (min/max/sum)",
     ),
-    "events_quantile_sketch_stream": QuerySpec(
+    QuerySpec(
         "events_quantile_sketch_stream", q_hdr_stream, _HDR_STREAM_ORACLE,
         "HDR quantile sketch maintained INCREMENTALLY by the streaming"
         " runtime (complete-mode count state = the group × bucket"
         " table); p50/p90/p99 + merge row assembled in batch over the"
         " drain — the RANK member of the streamed sketch family",
     ),
-    "events_hll_stream": QuerySpec(
+    QuerySpec(
         "events_hll_stream", q_hll_stream, _HLL_STREAM_ORACLE,
         "HLL register sketch maintained INCREMENTALLY by the streaming"
         " runtime (complete-mode max state = the sketch itself);"
         " estimates + merge + exact reference in batch over the drain",
     ),
-    "events_kmv_stream": QuerySpec(
+    QuerySpec(
         "events_kmv_stream", q_kmv_stream, _KMV_STREAM_ORACLE,
         "KMV distinct sketch maintained INCREMENTALLY by the streaming"
         " runtime (constant state = the sketch itself); estimates + "
         "merge row computed over the drained sketch ≡ batch replay",
     ),
-    "events_rolling_active_users": QuerySpec(
+    QuerySpec(
         "events_rolling_active_users", q_rolling_active_users,
         _ROLLING_ACTIVE_ORACLE,
         "trailing 7-day distinct active users per day (dedupe-then-"
         "explode, no raw self-join)",
     ),
-    "events_attribution": QuerySpec(
+    QuerySpec(
         "events_attribution", q_attribution, _ATTRIBUTION_ORACLE,
         "first/last-touch purchase attribution over the bounded click"
         " lookback (struct-min/max, no window)",
     ),
-    "events_spacesaving_stream": QuerySpec(
+    QuerySpec(
         "events_spacesaving_stream", q_spacesaving_stream, _SS_STREAM_ORACLE,
         "SpaceSaving/Misra-Gries m-counter summary maintained by the"
         " streaming runtime across 4 micro-batches — deletion-free"
         " mergeable top-k; MG theorem verdicts + exact counts oracled"
         " (counter contents are batch-order-dependent by nature)",
     ),
-}
+]

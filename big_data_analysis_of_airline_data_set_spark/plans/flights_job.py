@@ -191,13 +191,13 @@ FROM viz GROUP BY Airline
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "flights_cleaning_job": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "flights_cleaning_job", q_flights_cleaning_job, _CLEANING_ORACLE,
         "entry-point A end-to-end: filter → na.drop → label → split → hhmm quirks",
     ),
-    "flights_viz_dataset": QuerySpec(
+    QuerySpec(
         "flights_viz_dataset", q_flights_viz_dataset, _VIZ_ORACLE,
         "cancelled ∪ cleaned viz dataset with null structure preserved",
     ),
-}
+]

@@ -249,15 +249,15 @@ SELECT '{family}' AS family,
 """
 
 
-def _family_entries(family: str, m_tag: str, label: str) -> dict[str, QuerySpec]:
-    return {
-        f"ml_{family}_tvs": QuerySpec(
+def _family_entries(family: str, m_tag: str, label: str) -> list[QuerySpec]:
+    return [
+        QuerySpec(
             f"ml_{family}_tvs",
             _invariants_query(family),
             _invariants_oracle(family),
             f"{m_tag}+M19 {label} TVS fit — oracled scaffolding invariants",
         ),
-        f"ml_{family}_metrics_banded": QuerySpec(
+        QuerySpec(
             f"ml_{family}_metrics_banded",
             _metrics_banded_query(family),
             _metrics_banded_oracle(family),
@@ -265,7 +265,7 @@ def _family_entries(family: str, m_tag: str, label: str) -> dict[str, QuerySpec]
             " membership (constant oracle); raw values via"
             " ml_queries.raw_metrics_query (module API)",
         ),
-    }
+    ]
 
 
 # ---------------------------------------------------------------------
@@ -601,20 +601,20 @@ _REF_BANDS_ORACLE = " UNION ALL ".join(
 )
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "ml_reference_bands": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "ml_reference_bands",
         q_ml_reference_bands,
         _REF_BANDS_ORACLE,
         "published report metric pattern (LR/DT AUC bands, chi2 dof vector,"
         " vocab-derived dims) on the reference-shaped sample — constant oracle",
     ),
-    "ml_target_encoding": QuerySpec(
+    QuerySpec(
         "ml_target_encoding", q_ml_target_encoding, _TARGET_ENC_ORACLE,
         "leave-one-out target encoding of a 16-level category,"
         " per-row exact (leak-corrected), broadcast category sums",
     ),
-    "ml_variant_sweep": QuerySpec(
+    QuerySpec(
         "ml_variant_sweep",
         q_ml_variant_sweep,
         _variant_sweep_oracle(),
@@ -622,25 +622,25 @@ QUERIES: dict[str, QuerySpec] = {
         " selections through build_pipeline+TVS, per-variant invariants"
         " (selection replayed in SQL, dims from train cardinalities)",
     ),
-    **_family_entries("logistic_regression", "M12", "LR"),
-    **_family_entries("decision_tree", "M13", "DT"),
-    **_family_entries("random_forest", "M14", "RF"),
-    **_family_entries("gbt", "M15", "GBT"),
-    **_family_entries("linear_svc", "M16", "LinearSVC"),
-    **_family_entries("naive_bayes", "M17", "Gaussian NB"),
-    **_family_entries("mlp", "M18", "MLP"),
-    "ml_logistic_regression_cv": QuerySpec(
+    *_family_entries("logistic_regression", "M12", "LR"),
+    *_family_entries("decision_tree", "M13", "DT"),
+    *_family_entries("random_forest", "M14", "RF"),
+    *_family_entries("gbt", "M15", "GBT"),
+    *_family_entries("linear_svc", "M16", "LinearSVC"),
+    *_family_entries("naive_bayes", "M17", "Gaussian NB"),
+    *_family_entries("mlp", "M18", "MLP"),
+    QuerySpec(
         "ml_logistic_regression_cv",
         _invariants_query("logistic_regression", tuner="cv"),
         _invariants_oracle("logistic_regression"),
         "M20 CrossValidator LR (numFolds=3 at harness scale; 10 in module API)"
         " — oracled scaffolding invariants",
     ),
-    "ml_logistic_regression_cv_metrics_banded": QuerySpec(
+    QuerySpec(
         "ml_logistic_regression_cv_metrics_banded",
         _metrics_banded_query("logistic_regression", tuner="cv"),
         _metrics_banded_oracle("logistic_regression"),
         "M20 CV-LR metrics vs majority-predictor envelope + grid membership"
         " (constant oracle); raw values via raw_metrics_query (module API)",
     ),
-}
+]

@@ -269,35 +269,35 @@ FROM base b JOIN zc USING (asset_id) JOIN lf USING (asset_id)
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "multimodal_audio_features": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "multimodal_audio_features", q_audio_features, _AUDIO_FEATURES_ORACLE,
         "decode → audio front-end features (energy/ZCR/peak/loudest"
         " frame), integer-exact formula oracle",
     ),
-    "multimodal_image_features": QuerySpec(
+    QuerySpec(
         "multimodal_image_features", q_image_features, _IMAGE_FEATURES_ORACLE,
         "decoded-pixel feature vectors (vision-encoder pooling shape),"
         " formula-oracled per component",
     ),
-    "multimodal_decode_image": QuerySpec(
+    QuerySpec(
         "multimodal_decode_image", q_decode_image, _DECODE_IMAGE_ORACLE,
         "real BMP encode→decode round-trip vs pixel-formula replay",
     ),
-    "multimodal_decode_png": QuerySpec(
+    QuerySpec(
         "multimodal_decode_png", q_decode_png, _DECODE_PNG_ORACLE,
         "real PNG (zlib + Sub/Up/Average/Paeth defilter, split IDAT)"
         " encode→decode round-trip vs pixel-formula replay",
     ),
-    "multimodal_decode_audio": QuerySpec(
+    QuerySpec(
         "multimodal_decode_audio", q_decode_audio, _DECODE_AUDIO_ORACLE,
         "real WAV/PCM16 encode→decode round-trip vs sample-formula replay",
     ),
-    "multimodal_image_resize": QuerySpec(
+    QuerySpec(
         "multimodal_image_resize", q_image_resize, _IMAGE_RESIZE_ORACLE,
         "decode → nearest-neighbor resize, integer floor sampling oracle",
     ),
-}
+]
 
 
 def q_image_phash_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,13 +363,13 @@ SELECT phash_hi, phash_lo,
 FROM hashes GROUP BY 1, 2
 """
 
-QUERIES.update(
-    {
-        "multimodal_image_phash": QuerySpec(
+QUERIES.extend(
+    [
+        QuerySpec(
             "multimodal_image_phash",
             q_image_phash_dupes,
             _IMAGE_PHASH_ORACLE,
             "Perceptual dHash dup groups, formula-oracled bit-for-bit",
         ),
-    }
+    ]
 )

@@ -17,14 +17,10 @@ from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_testdata_table(spark, sf_dir, name)
-
-
 # --- TPC-H Q1 shape ---------------------------------------------------------
 
 def q_tpch_q1_style(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_testdata_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1999-12-31").cast("timestamp")
     )
     price = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -69,7 +65,7 @@ ORDER BY l_returnflag, l_linestatus
 # --- as-of join -------------------------------------------------------------
 
 def _purchases_and_clicks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_testdata_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase")
     # one click per (user, ts): deterministic tie handling on both sides
     clicks = (
@@ -121,7 +117,7 @@ def q_range_join_bucketized(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten as an equi-join on a computed band id — the bucketization
     trick that turns a broadcast-nested-loop range join into a hash
     join at scale."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     bands = spark.createDataFrame(_BANDS, "band_id int, band_name string")
     band_id = F.least(F.floor(F.col("o_totalprice") / 100_000), F.lit(4)).cast("int")
     return (
@@ -148,7 +144,7 @@ GROUP BY band_name
 def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (the oracle-checkable baseline for
     approx_percentile, which is sketch-based and engine-specific)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return o.agg(
         F.round(F.expr("percentile(o_totalprice, 0.25)"), 6).alias("q25"),
         F.round(F.expr("percentile(o_totalprice, 0.5)"), 6).alias("q50"),
@@ -168,7 +164,7 @@ FROM orders
 
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide → long via stack() (the inverse of the flagship's pivot)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     return li.selectExpr(
         "l_orderkey",
         "l_linenumber",
@@ -190,7 +186,7 @@ def q_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     version (+100 balance); prior row retained as non-current. Built
     from semi/anti joins + union — the v1 CDC recipe where Delta's
     MERGE INTO isn't available."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    c = read_testdata_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     changed_keys = _pending_custkeys(spark, sf_dir)
     unchanged = c.join(changed_keys, "c_custkey", "left_anti").select(
         "c_custkey", "c_acctbal",
@@ -238,7 +234,7 @@ def q_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's percentile) and a TRUE literal; a drifting sketch flips the
     boolean and fails the hash.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     agg = o.agg(
         F.expr("percentile(o_totalprice, 0.5)").alias("_exact"),
         F.expr("approx_percentile(o_totalprice, 0.5, 1000)").alias("_approx"),
@@ -265,7 +261,7 @@ def q_quantiles_approx_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key — the shape that matters at scale, where a global sort
     per group would be prohibitive. Same within_bound contract: exact
     per-group median beside a 5%-relative-error boolean on the sketch."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, 0.5)").alias("_exact"),
         F.expr("approx_percentile(l_extendedprice, 0.5, 1000)").alias("_approx"),
@@ -362,7 +358,7 @@ _PENDING_SQL = "SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'P'"
 
 def _pending_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        read_testdata_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "P")
         .select(F.col("o_custkey").alias("c_custkey"))
         .distinct()
@@ -378,7 +374,7 @@ def _scd2_dim_with_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pending-order customers get v1 [lo, split) and v2 [split, hi) with
     +100 balance; everyone else one all-time version — the same change
     rule as q_scd2_upsert, extended to the time axis."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    c = read_testdata_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     changed = _pending_custkeys(spark, sf_dir)
     lo = F.lit(_PIT_LO).cast("timestamp")
     mid = F.lit(_PIT_SPLIT).cast("timestamp")
@@ -407,7 +403,7 @@ def q_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed on."""
     from ..operators.pit import point_in_time_join
 
-    fact = _t(spark, sf_dir, "orders").select(
+    fact = read_testdata_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"), "o_orderdate", "o_totalprice"
     )
     dim = _scd2_dim_with_ranges(spark, sf_dir)
@@ -461,7 +457,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (changed) — classified row-by-row with one full-outer join."""
     from ..operators.incremental import snapshot_diff
 
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    c = read_testdata_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     changed = _pending_custkeys(spark, sf_dir)
     old = c.filter(F.col("c_custkey") % _DIFF_ADD_MOD != 0)
     new = (
@@ -518,7 +514,7 @@ def q_incremental_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_aggregate_states,
     )
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     cutoff = F.lit(_MV_CUTOFF).cast("timestamp")
     existing = aggregate_state(
         o.filter(F.col("o_orderdate") < cutoff),
@@ -559,8 +555,8 @@ def q_incremental_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.incremental import insert_only_join_delta
 
     cutoff = F.lit(_JD_CUTOFF).cast("timestamp")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
+    o = read_testdata_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = read_testdata_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"),
         "l_shipdate", "l_returnflag", "l_extendedprice",
     )
@@ -786,7 +782,7 @@ def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes — the oracle re-derives both numbers bit-for-bit."""
     from ..sketches.countmin import cms_join_size_estimate
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     key = F.col("l_partkey").cast("string").alias("term")
     a = li.filter(F.year("l_shipdate") < _CJS_SPLIT_YEAR).select(key)
     b = li.filter(F.year("l_shipdate") >= _CJS_SPLIT_YEAR).select(key)
@@ -966,7 +962,7 @@ def q_graph_hierarchy_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips a level fails the hash."""
     from ..operators.graph import flatten_hierarchy
 
-    s = _t(spark, sf_dir, "supplier").select(
+    s = read_testdata_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("node"),
         F.when(
             F.col("s_suppkey") > 0, F.expr("(s_suppkey - 1) div 2")
@@ -1005,10 +1001,10 @@ def q_kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays estimates AND error exactly."""
     from ..sketches.kmv import kmv_estimate, kmv_sketch
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = read_testdata_table(spark, sf_dir, "orders").select(
         F.lit("a").alias("g"), F.col("o_custkey").cast("string").alias("v")
     )
-    c = _t(spark, sf_dir, "customer").select(
+    c = read_testdata_table(spark, sf_dir, "customer").select(
         F.lit("b").alias("g"), F.col("c_custkey").cast("string").alias("v")
     )
     # the sketch's batch dedup measured -47% here (OPTIMIZATION_r13.md
@@ -1021,9 +1017,13 @@ def q_kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = kmv_estimate(sk.unionByName(union_sk))
     wide = est.groupBy().pivot("group", ["a", "b", "u"]).sum("distinct_estimate")
     exact = (
-        _t(spark, sf_dir, "orders")
+        read_testdata_table(spark, sf_dir, "orders")
         .select(F.col("o_custkey").alias("k"))
-        .intersect(_t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k")))
+        .intersect(
+            read_testdata_table(spark, sf_dir, "customer").select(
+                F.col("c_custkey").alias("k")
+            )
+        )
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return wide.crossJoin(exact).select(
@@ -1121,7 +1121,7 @@ def q_sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the hash."""
     from ..sources.writers import write_parquet
 
-    li = _t(spark, sf_dir, "lineitem").withColumn(
+    li = read_testdata_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate")
     )
     out = _sink_dir("sink_part_rt_")
@@ -1161,7 +1161,7 @@ def q_sink_report_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     loses precision in CSV formatting or drops the header fails."""
     from ..sources.writers import write_report_csv
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     report = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -1195,7 +1195,7 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pins the timestamp codec)."""
     from ..sources.writers import write_orc
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     out = _sink_dir("sink_orc_rt_")
     write_orc(o, out, partition_by=["o_orderstatus"])
     back = spark.read.orc(out)
@@ -1237,7 +1237,7 @@ def q_sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from ..sources.writers import write_jsonl
 
-    c = _t(spark, sf_dir, "customer")
+    c = read_testdata_table(spark, sf_dir, "customer")
     out = _sink_dir("sink_jsonl_rt_")
     write_jsonl(c, out)
     back = spark.read.schema(c.schema).json(out)
@@ -1278,10 +1278,10 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     RESULT-identical, not just shuffle-free."""
     from ..sources.bucketing import bucketed_join, write_bucketed_table
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_testdata_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_testdata_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
     )
     for name, df in (("sg_bkt_orders", orders), ("sg_bkt_lineitem", li)):
@@ -1348,7 +1348,7 @@ def q_projection_name_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scripts/2_...py:137). Column pruning must reach the scan."""
     from ..operators.transforms import keep_columns_matching
 
-    p = _t(spark, sf_dir, "part")
+    p = read_testdata_table(spark, sf_dir, "part")
     return keep_columns_matching(
         p, lambda c: c.endswith("key") or c.endswith("price") or c.endswith("size")
     )
@@ -1375,7 +1375,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     just its shape — is value-checked."""
     from ..operators.graph import pagerank_scope
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     fwd = li.select(
         F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
         F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
@@ -1454,7 +1454,7 @@ def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked."""
     from ..operators.graph import pagerank_converged_scope
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     edges = li.select(
         F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
         F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
@@ -1611,7 +1611,7 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _CO_CACHE.get(key)
     if hit is None:
-        li = _t(spark, sf_dir, "lineitem")
+        li = read_testdata_table(spark, sf_dir, "lineitem")
         per_part = (
             li.select(
                 F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
@@ -1821,7 +1821,7 @@ def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer/fp arithmetic the oracle replays)."""
     from ..operators.zorder import zorder_key
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     b = li.agg(
         F.min("l_quantity"), F.max("l_quantity"),
         F.min("l_extendedprice"), F.max("l_extendedprice"),
@@ -1876,97 +1876,97 @@ FROM bucketed GROUP BY 1
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "zorder_cells": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "zorder_cells", q_zorder_cells, _zorder_oracle(),
         "Morton bit-interleave 2-D clustering cells, value-checked"
         " bucketize+interleave arithmetic",
     ),
-    "graph_pagerank": QuerySpec(
+    QuerySpec(
         "graph_pagerank", q_graph_pagerank, _pagerank_oracle(),
         "iterative PageRank (5 rounds) over part↔supplier graph,"
         " value-checked via unrolled-CTE replay",
     ),
-    "graph_pagerank_converged": QuerySpec(
+    QuerySpec(
         "graph_pagerank_converged", q_graph_pagerank_converged,
         _pagerank_converged_oracle(),
         "full-semantics PageRank: dangling-mass redistribution + exact"
         " DECIMAL L1 early stop; the stop decision itself is oracled",
     ),
-    "sink_partitioned_roundtrip": QuerySpec(
+    QuerySpec(
         "sink_partitioned_roundtrip", q_sink_partitioned_roundtrip,
         _SINK_PART_ORACLE,
         "S4: year-partitioned parquet sink → partition-discovery read-back ≡ source",
     ),
-    "sink_report_csv_roundtrip": QuerySpec(
+    QuerySpec(
         "sink_report_csv_roundtrip", q_sink_report_csv_roundtrip,
         _SINK_CSV_ORACLE,
         "S5: guarded single-CSV report sink → schema read-back ≡ aggregate",
     ),
-    "sink_orc_roundtrip": QuerySpec(
+    QuerySpec(
         "sink_orc_roundtrip", q_sink_orc_roundtrip,
         _SINK_ORC_ORACLE,
         "status-partitioned ORC sink → partition-discovery read-back ≡ source",
     ),
-    "sink_jsonl_roundtrip": QuerySpec(
+    QuerySpec(
         "sink_jsonl_roundtrip", q_sink_jsonl_roundtrip,
         _SINK_JSONL_ORACLE,
         "JSONL sink → explicit-schema read-back, doubles bit-exact",
     ),
-    "join_bucketed_colocated": QuerySpec(
+    QuerySpec(
         "join_bucketed_colocated", q_join_bucketed_colocated,
         _BUCKETED_JOIN_ORACLE,
         "same-bucketed catalog tables join Exchange-free (self-asserted)"
         " and result-match the plain join",
     ),
-    "projection_name_pattern": QuerySpec(
+    QuerySpec(
         "projection_name_pattern", q_projection_name_pattern,
         _PROJECTION_PATTERN_ORACLE,
         "P2: name-predicate column projection (pattern-matched keep list)",
     ),
-    "graph_triangles": QuerySpec(
+    QuerySpec(
         "graph_triangles", q_graph_triangles, _TRIANGLES_ORACLE,
         "triangle counting via degree-ordered wedge closure over the"
         " percentile-thresholded co-supplier graph",
     ),
-    "graph_k_core": QuerySpec(
+    QuerySpec(
         "graph_k_core", q_graph_k_core, _k_core_oracle(),
         "iterative k-core peeling (data-derived k) to fixpoint;"
         " 12-round MATERIALIZED-CTE oracle value-checks convergence",
     ),
-    "pit_join_versions": QuerySpec(
+    QuerySpec(
         "pit_join_versions", q_pit_join, _PIT_ORACLE,
         "point-in-time join to SCD2 versions (feature-store lookup,"
         " hash join + range filter — never a range join)",
     ),
-    "snapshot_diff": QuerySpec(
+    QuerySpec(
         "snapshot_diff", q_snapshot_diff, _SNAPSHOT_DIFF_ORACLE,
         "snapshot CDC delta: one full-outer join classifies every row"
         " added/removed/changed/unchanged",
     ),
-    "incremental_mv_merge": QuerySpec(
+    QuerySpec(
         "incremental_mv_merge", q_incremental_mv_merge, _MV_MERGE_ORACLE,
         "algebraic aggregate-state merge (MV maintenance): merged"
         " partials proven == full recompute",
     ),
-    "graph_hierarchy_flatten": QuerySpec(
+    QuerySpec(
         "graph_hierarchy_flatten", q_graph_hierarchy_flatten,
         _HIERARCHY_ORACLE,
         "pointer-doubling hierarchy flatten (O(log depth) rounds),"
         " recursive-CTE oracle",
     ),
-    "sketch_kmv_join_cardinality": QuerySpec(
+    QuerySpec(
         "sketch_kmv_join_cardinality", q_kmv_join_cardinality,
         _kmv_join_cardinality_oracle(),
         "join-key-overlap estimation by KMV sketch algebra"
         " (inclusion-exclusion over elementwise-min merge)",
     ),
-    "incremental_join_delta": QuerySpec(
+    QuerySpec(
         "incremental_join_delta", q_incremental_join_delta, _JOIN_DELTA_ORACLE,
         "insert-only join-view delta (dA⋈B ∪ A⋈dB), proven == direct"
         " at-least-one-side-new join",
     ),
-    "sketch_kmv_distinct": QuerySpec(
+    QuerySpec(
         "sketch_kmv_distinct", q_kmv_distinct,
         kmv_oracle_sql(
             'SELECT l_returnflag AS "group",'
@@ -1976,7 +1976,7 @@ QUERIES: dict[str, QuerySpec] = {
         "k-minimum-values distinct sketch + sketch-merge union row,"
         " exact md5 replay (no within-bound fallback)",
     ),
-    "sketch_quantile_hdr": QuerySpec(
+    QuerySpec(
         "sketch_quantile_hdr", q_hdr_quantiles,
         hdr_oracle_sql(
             'SELECT l_returnflag AS "group",'
@@ -1986,13 +1986,13 @@ QUERIES: dict[str, QuerySpec] = {
         "HDR log2-bucket quantile sketch (mergeable rank sketch):"
         " p50/p90/p99 + additive-merge union row, exact integer replay",
     ),
-    "sketch_cms_join_size": QuerySpec(
+    QuerySpec(
         "sketch_cms_join_size", q_cms_join_size, _cms_join_size_oracle(),
         "pre-join size estimation via CMS inner product (min over d"
         " rows of Σ A_j[b]·B_j[b]) — occurrence-weighted complement of"
         " KMV join cardinality; exact reference + one-sided guarantee",
     ),
-    "sketch_hll_distinct": QuerySpec(
+    QuerySpec(
         "sketch_hll_distinct", q_hll_distinct,
         hll_oracle_sql(
             'SELECT l_returnflag AS "group",'
@@ -2003,41 +2003,41 @@ QUERIES: dict[str, QuerySpec] = {
         " routing, DECIMAL harmonic sum, literal-table linear counting —"
         " exact replay, no within-bound fallback",
     ),
-    "sketch_count_min_heavy_hitters": QuerySpec(
+    QuerySpec(
         "sketch_count_min_heavy_hitters", q_count_min_heavy_hitters,
         count_min_oracle_sql(),
         "declarative Count-Min sketch: exact top-20 terms vs replayed estimates",
     ),
-    "quantiles_approx": QuerySpec(
+    QuerySpec(
         "quantiles_approx", q_quantiles_approx, _QUANTILES_APPROX_ORACLE,
         "approx_percentile sketch, oracled via exact median + error-bound boolean",
     ),
-    "quantiles_approx_by_group": QuerySpec(
+    QuerySpec(
         "quantiles_approx_by_group", q_quantiles_approx_by_group,
         _QUANTILES_APPROX_GROUP_ORACLE,
         "per-group KLL median sketches (map-side partial merge), same within-bound contract",
     ),
-    "tpch_q1_style": QuerySpec(
+    QuerySpec(
         "tpch_q1_style", q_tpch_q1_style, _Q1_ORACLE,
         "TPC-H Q1 shape: 2-key groupBy, 8 exact-decimal aggregates",
     ),
-    "asof_join": QuerySpec(
+    QuerySpec(
         "asof_join", q_asof_join, _ASOF_ORACLE,
         "as-of join via union+window vs DuckDB native ASOF JOIN",
     ),
-    "range_join_bucketized": QuerySpec(
+    QuerySpec(
         "range_join_bucketized", q_range_join_bucketized, _RANGE_ORACLE,
         "range predicate rewritten to bucketized equi-join",
     ),
-    "quantiles": QuerySpec(
+    QuerySpec(
         "quantiles", q_quantiles, _QUANTILES_ORACLE,
         "exact interpolated percentiles",
     ),
-    "unpivot": QuerySpec(
+    QuerySpec(
         "unpivot", q_unpivot, _UNPIVOT_ORACLE, "stack() unpivot"
     ),
-    "scd2_upsert": QuerySpec(
+    QuerySpec(
         "scd2_upsert", q_scd2_upsert, _SCD2_ORACLE,
         "SCD2 upsert via semi/anti joins + union",
     ),
-}
+]

@@ -35,10 +35,6 @@ from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_testdata_table(spark, sf_dir, name)
-
-
 # Synthetic "arrival delay minutes" analog on orders: deterministic in any
 # engine, range -60..60 including the 0 boundary (FIXTURES.md edge rule).
 def _delay_min(col: Column | None = None) -> Column:
@@ -82,9 +78,9 @@ def _order_delay_group() -> F.Column:
 # ---------------------------------------------------------------------------
 
 def flagship_delay_summary_by_carrier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").withColumn("grp", _order_delay_group())
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    orders = read_testdata_table(spark, sf_dir, "orders").withColumn("grp", _order_delay_group())
+    customer = read_testdata_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = read_testdata_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     joined = (
         orders.join(customer, orders.o_custkey == customer.c_custkey, "inner")
         # nation is a classic small dim: always broadcast, never shuffle it.
@@ -124,7 +120,7 @@ ORDER BY total DESC, carrier
 def q_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1/P2 — column-set projection; prunes the parquet scan to 3 cols
     (reference 40-col drop, Scripts/1_cs_777_cleaning_data.py:41-48)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     keep = {"l_orderkey", "l_linenumber", "l_quantity"}
     return project_without(li, [c for c in li.columns if c not in keep])
 
@@ -132,7 +128,7 @@ def q_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_filter_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 — equality filter (Cancelled == False analog,
     Scripts/1_cs_777_cleaning_data.py:50-53); pushed to row-group stats."""
-    return filter_eq(_t(spark, sf_dir, "orders"), "o_orderstatus", "F").select(
+    return filter_eq(read_testdata_table(spark, sf_dir, "orders"), "o_orderstatus", "F").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
 
@@ -140,7 +136,7 @@ def q_filter_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_filter_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4 — temporal split filter (Year == 2022 train/test split,
     Scripts/3_cs_777_logistic_regression.py:52-53)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return (
         o.filter(F.year("o_orderdate") == 1995)
         .select("o_orderkey", F.year("o_orderdate").cast("long").alias("o_year"), "o_totalprice")
@@ -150,14 +146,14 @@ def q_filter_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_drop_any_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 — any-null elimination (df.na.drop(),
     Scripts/1_cs_777_cleaning_data.py:56)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_testdata_table(spark, sf_dir, "events")
     return drop_any_null(ev).select("event_id", "user_id", "event_type", "value")
 
 
 def q_case_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 — CASE-derived binary label (Delay_Status rule incl. the <= 0
     boundary, Scripts/1_cs_777_cleaning_data.py:68)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -171,7 +167,7 @@ def q_time_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7/P9/P10 — hhmm hour/minute extraction with the reference's exact
     string-substr semantics (Scripts/1_cs_777_cleaning_data.py:79-92):
     3-digit times give a 1-digit hour, t<100 → hour 0, minutes unpadded."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_testdata_table(spark, sf_dir, "events")
     hhmm = (F.hour("ts") * 100 + F.minute("ts")).cast("double")
     ev = ev.withColumn("hhmm", hhmm)
     return ev.select(
@@ -186,8 +182,8 @@ def q_city_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8 — split(',').getItem(0) on a "City, ST"-shaped string
     (Scripts/1_cs_777_cleaning_data.py:75-76), string built from
     nation ⋈ broadcast(region)."""
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    n = read_testdata_table(spark, sf_dir, "nation")
+    r = read_testdata_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     df = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey, "inner")
     city_state = F.concat(F.col("n_name"), F.lit(", "), F.col("r_name"))
     return df.select(
@@ -200,7 +196,7 @@ def q_city_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cast_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10 — double→int→string and bool→int cast chains
     (Scripts/1_cs_777_cleaning_data.py:79-98)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -212,7 +208,7 @@ def q_cast_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P13 — determinized sample: key % 100 == 0 (oracle-checkable stand-in
     for df.sample(0.001, seed=777), nb:8; see FIXTURES.md §B)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return deterministic_sample(o, F.col("o_orderkey"), 100).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -221,7 +217,7 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_union_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1 — positional UNION ALL re-assembly (cancelled ∪ cleaned,
     Scripts/1_cs_777_cleaning_data.py:50-58; yearly union nb:5)."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    o = read_testdata_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     part1 = o.filter(F.col("o_orderstatus") == "F")
     part2 = o.filter(F.col("o_orderstatus") != "F")
     return union_positional([part1, part2])
@@ -233,13 +229,13 @@ def q_union_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_global_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 — global count (nb:9-10)."""
-    return _t(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("n_rows"))
+    return read_testdata_table(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("n_rows"))
 
 
 def q_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 — per-column sample variance (Summarizer.metrics('variance'),
     Scripts/2_cs_777_statistical_analysis_feature_selection.py:124-126)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.round(F.var_samp("l_extendedprice"), 6).alias("var_extendedprice"),
         F.round(F.var_samp("l_quantity"), 6).alias("var_quantity"),
@@ -249,7 +245,7 @@ def q_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_correlation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — pairwise Pearson correlation (Correlation.corr,
     Scripts/2_...py:61; pairwise-SQL form per SURVEY.md §5.2)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
         F.round(F.corr("l_discount", "l_tax"), 6).alias("corr_discount_tax"),
@@ -260,7 +256,7 @@ def q_chi_square_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — chi-square statistic from a contingency table, computed
     relationally (ChiSquareTest analog, Scripts/2_...py:91-93; SQL-form
     oracle per SURVEY.md §5.2). Observed-cells-only formula on both sides."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     cells = (
         o.groupBy(
             F.col("o_orderpriority").alias("p"),
@@ -282,7 +278,7 @@ def q_chi_square_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sum_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 — SUM by year (Distance-by-Year viz query, viz1:2). Money summed
     exactly via DECIMAL(18,2) then cast to double (order-independent)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     sum_dec = F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
     return (
         o.groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
@@ -297,7 +293,7 @@ def q_sum_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_count_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 — COUNT by month (flights-per-month viz query, viz1:4)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return (
         o.groupBy(F.month("o_orderdate").cast("long").alias("o_month"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
@@ -308,7 +304,7 @@ def q_count_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_count_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 — COUNT by day-of-week (viz1:6). ISO dow (Mon=1) on both sides:
     Spark weekday()+1 == DuckDB isodow()."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return (
         o.groupBy((F.weekday("o_orderdate") + 1).cast("long").alias("dow"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
@@ -319,14 +315,14 @@ def q_count_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_delay_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 — bucketized CASE column then GROUP BY (DelayGroup histogram,
     viz1:8; bins frozen in functions.flight_exprs.DELAY_GROUPS)."""
-    o = _t(spark, sf_dir, "orders").withColumn("delay_group", _order_delay_group())
+    o = read_testdata_table(spark, sf_dir, "orders").withColumn("delay_group", _order_delay_group())
     return o.groupBy("delay_group").agg(F.count(F.lit(1)).alias("n_orders"))
 
 
 def q_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2/O3 — orderBy desc + limit with deterministic tie-break
     (driver-side sorts of Scripts/2_...py:126, viz2:7, done distributed)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -337,7 +333,7 @@ def q_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_distinct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5 — distinct value set (np.unique over Airline, viz2:3)."""
-    return _t(spark, sf_dir, "part").select("p_brand").distinct()
+    return read_testdata_table(spark, sf_dir, "part").select("p_brand").distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -347,9 +343,9 @@ def q_distinct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_inner_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner joins + agg: revenue by nation. customer⋈nation is a
     broadcast; orders⋈customer shuffles on the key after pushdown."""
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = read_testdata_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = read_testdata_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = read_testdata_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     sum_dec = F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
     return (
         o.join(c, o.o_custkey == c.c_custkey)
@@ -361,15 +357,15 @@ def q_join_inner_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers having ≥1 pending order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
+    c = read_testdata_table(spark, sf_dir, "customer")
+    o = read_testdata_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers with NO pending order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
+    c = read_testdata_table(spark, sf_dir, "customer")
+    o = read_testdata_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
@@ -379,7 +375,7 @@ def q_window_top_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, deterministic tie-break on orderkey."""
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -394,7 +390,7 @@ def flagship_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference never had (SURVEY.md §3: no spark.sql call exists there)
     produces the identical result (same oracle as the DataFrame form)."""
     for name in ("orders", "customer", "nation"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(name)
+        read_testdata_table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(
         f"""
         SELECT n_name AS carrier,
@@ -414,39 +410,39 @@ def flagship_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "flagship_sql": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "flagship_sql",
         flagship_sql,
         _FLAGSHIP_ORACLE,
         "flagship via the spark.sql string API (same oracle as DataFrame form)",
     ),
-    "flagship_delay_summary_by_carrier": QuerySpec(
+    QuerySpec(
         "flagship_delay_summary_by_carrier",
         flagship_delay_summary_by_carrier,
         _FLAGSHIP_ORACLE,
         "A9 pivot flagship: carrier × delay-group counts + totals",
     ),
-    "projection": QuerySpec(
+    QuerySpec(
         "projection",
         q_projection,
         "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem",
         "P1 column pruning",
     ),
-    "filter_status": QuerySpec(
+    QuerySpec(
         "filter_status",
         q_filter_status,
         "SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderstatus = 'F'",
         "P3 equality filter",
     ),
-    "filter_year": QuerySpec(
+    QuerySpec(
         "filter_year",
         q_filter_year,
         "SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice "
         "FROM orders WHERE year(o_orderdate) = 1995",
         "P4 temporal filter",
     ),
-    "drop_any_null": QuerySpec(
+    QuerySpec(
         "drop_any_null",
         q_drop_any_null,
         "SELECT event_id, user_id, event_type, value FROM events "
@@ -454,7 +450,7 @@ QUERIES: dict[str, QuerySpec] = {
         "AND event_type IS NOT NULL AND value IS NOT NULL AND props IS NOT NULL",
         "P5 na.drop",
     ),
-    "case_label": QuerySpec(
+    QuerySpec(
         "case_label",
         q_case_label,
         "SELECT l_orderkey, l_linenumber, "
@@ -462,7 +458,7 @@ QUERIES: dict[str, QuerySpec] = {
         "AS delay_status FROM lineitem",
         "P6 Delay_Status CASE rule",
     ),
-    "time_digits": QuerySpec(
+    QuerySpec(
         "time_digits",
         q_time_digits,
         """
@@ -478,7 +474,7 @@ QUERIES: dict[str, QuerySpec] = {
         """,
         "P7/P9 hhmm string-substr extraction quirk",
     ),
-    "city_split": QuerySpec(
+    QuerySpec(
         "city_split",
         q_city_split,
         "SELECT n_nationkey, n_name || ', ' || r_name AS city_state, "
@@ -486,7 +482,7 @@ QUERIES: dict[str, QuerySpec] = {
         "FROM nation JOIN region ON n_regionkey = r_regionkey",
         "P8 city/state split",
     ),
-    "cast_chain": QuerySpec(
+    QuerySpec(
         "cast_chain",
         q_cast_chain,
         "SELECT l_orderkey, l_linenumber, "
@@ -494,13 +490,13 @@ QUERIES: dict[str, QuerySpec] = {
         "CAST(l_returnflag = 'R' AS BIGINT) AS returned_int FROM lineitem",
         "P10 cast chains",
     ),
-    "deterministic_sample": QuerySpec(
+    QuerySpec(
         "deterministic_sample",
         q_deterministic_sample,
         "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 100 = 0",
         "P13 determinized sample",
     ),
-    "union_reassembly": QuerySpec(
+    QuerySpec(
         "union_reassembly",
         q_union_reassembly,
         "SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = 'F' "
@@ -508,27 +504,27 @@ QUERIES: dict[str, QuerySpec] = {
         "SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus <> 'F'",
         "U1 positional union",
     ),
-    "global_count": QuerySpec(
+    QuerySpec(
         "global_count",
         q_global_count,
         "SELECT count(*) AS n_rows FROM lineitem",
         "A1 global count",
     ),
-    "variance": QuerySpec(
+    QuerySpec(
         "variance",
         q_variance,
         "SELECT round(var_samp(l_extendedprice), 6) AS var_extendedprice, "
         "round(var_samp(l_quantity), 6) AS var_quantity FROM lineitem",
         "A2 column variance",
     ),
-    "correlation_pairs": QuerySpec(
+    QuerySpec(
         "correlation_pairs",
         q_correlation_pairs,
         "SELECT round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price, "
         "round(corr(l_discount, l_tax), 6) AS corr_discount_tax FROM lineitem",
         "A3 pairwise Pearson correlation",
     ),
-    "chi_square_sql": QuerySpec(
+    QuerySpec(
         "chi_square_sql",
         q_chi_square_sql,
         """
@@ -546,7 +542,7 @@ QUERIES: dict[str, QuerySpec] = {
         """,
         "A4 chi-square from contingency table",
     ),
-    "sum_by_year": QuerySpec(
+    QuerySpec(
         "sum_by_year",
         q_sum_by_year,
         "SELECT year(o_orderdate) AS o_year, "
@@ -556,40 +552,40 @@ QUERIES: dict[str, QuerySpec] = {
         "FROM orders GROUP BY 1 ORDER BY 1",
         "A5 sum by year",
     ),
-    "count_by_month": QuerySpec(
+    QuerySpec(
         "count_by_month",
         q_count_by_month,
         "SELECT month(o_orderdate) AS o_month, count(*) AS n_orders FROM orders "
         "GROUP BY 1 ORDER BY 1",
         "A6 count by month",
     ),
-    "count_by_dow": QuerySpec(
+    QuerySpec(
         "count_by_dow",
         q_count_by_dow,
         "SELECT isodow(o_orderdate) AS dow, count(*) AS n_orders FROM orders "
         "GROUP BY 1 ORDER BY 1",
         "A7 count by day-of-week",
     ),
-    "delay_group_counts": QuerySpec(
+    QuerySpec(
         "delay_group_counts",
         q_delay_group_counts,
         f"SELECT {_GROUP_CASE_SQL} AS delay_group, count(*) AS n_orders FROM orders GROUP BY 1",
         "A8 delay-group histogram",
     ),
-    "top_k": QuerySpec(
+    QuerySpec(
         "top_k",
         q_top_k,
         "SELECT l_partkey, count(*) AS cnt FROM lineitem GROUP BY 1 "
         "ORDER BY cnt DESC, l_partkey ASC LIMIT 10",
         "O2/O3 top-k with tie-break",
     ),
-    "distinct_values": QuerySpec(
+    QuerySpec(
         "distinct_values",
         q_distinct_values,
         "SELECT DISTINCT p_brand FROM part",
         "O5 distinct",
     ),
-    "join_inner_agg": QuerySpec(
+    QuerySpec(
         "join_inner_agg",
         q_join_inner_agg,
         "SELECT n_name, "
@@ -599,21 +595,21 @@ QUERIES: dict[str, QuerySpec] = {
         "JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name",
         "inner joins + agg",
     ),
-    "join_semi": QuerySpec(
+    QuerySpec(
         "join_semi",
         q_join_semi,
         "SELECT c_custkey, c_name FROM customer WHERE EXISTS "
         "(SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'P')",
         "left-semi join",
     ),
-    "join_anti": QuerySpec(
+    QuerySpec(
         "join_anti",
         q_join_anti,
         "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS "
         "(SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'P')",
         "left-anti join",
     ),
-    "window_top_order": QuerySpec(
+    QuerySpec(
         "window_top_order",
         q_window_top_order,
         "SELECT o_custkey, o_orderkey, o_totalprice FROM ("
@@ -622,4 +618,4 @@ QUERIES: dict[str, QuerySpec] = {
         "FROM orders) WHERE rn = 1",
         "window row_number top-1 per key",
     ),
-}
+]

@@ -19,13 +19,9 @@ from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_testdata_table(spark, sf_dir, name)
-
-
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (year, status): per-group, per-year subtotal, grand total."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     sum_dec = F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
     return (
         o.withColumn("o_year", F.year("o_orderdate").cast("long"))
@@ -44,7 +40,7 @@ FROM orders GROUP BY ROLLUP (o_year, o_orderstatus)
 
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE (status, priority): all 4 grouping combinations."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders")
     )
@@ -58,7 +54,7 @@ FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 def q_conditional_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation: count_if / filtered sums per group."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     big = F.col("o_totalprice") > 250_000
     return o.groupBy("o_orderstatus").agg(
         F.count_if(big).alias("n_big"),
@@ -81,7 +77,7 @@ FROM orders GROUP BY o_orderstatus
 
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with both an 'F' and an 'O' order (INTERSECT distinct)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     p = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
     return f.intersect(p)
@@ -96,7 +92,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with orders but none pending (EXCEPT distinct)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return (
         o.select("o_custkey")
         .exceptAll(o.filter(F.col("o_orderstatus") == "P").select("o_custkey"))
@@ -115,7 +111,7 @@ SELECT DISTINCT o_custkey FROM (
 
 def q_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct count (the oracle-checkable baseline for HLL)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count_distinct("l_partkey").alias("n_parts"),
         F.count_distinct("l_suppkey").alias("n_supps"),
@@ -140,7 +136,7 @@ def q_approx_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bound is satisfiable only as ``TRUE`` — a drifting sketch flips
     the boolean and fails the hash.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     agg = li.agg(
         F.count_distinct("l_partkey").alias("n_parts_exact"),
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("_approx"),
@@ -169,7 +165,7 @@ def q_approx_distinct_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle every row. Same within-bound contract as the global query,
     with a wider 8% band (smaller per-group cardinalities sit further
     from the HLL asymptotic regime)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     agg = o.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").alias("n_custs_exact"),
         F.approx_count_distinct("o_custkey", rsd=0.02).alias("_approx"),
@@ -196,7 +192,7 @@ FROM orders GROUP BY o_orderpriority
 def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 families in one projection: regexp, substring_index, string
     ops, conditionals, date arithmetic, math — all cross-checked."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.regexp_extract("o_orderpriority", r"(\d+)", 1).alias("priority_digit"),
@@ -243,7 +239,7 @@ def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag / running sum / rank over a deterministic per-customer order
     (date then orderkey). Running sum accumulates in DECIMAL so the
     value is order-exact, cast to double at the end."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return o.select(
@@ -273,7 +269,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 def q_window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking family: rank / dense_rank / ntile / percent_rank over the
     per-customer order sequence (deterministic tie-break by orderkey)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return o.select(
         "o_custkey",
@@ -298,7 +294,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)
 
 def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family: pad/trim/replace/reverse/repeat/position/case."""
-    p = _t(spark, sf_dir, "part")
+    p = read_testdata_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.lpad("p_brand", 12, "*").alias("brand_lpad"),
@@ -331,11 +327,11 @@ FROM part
 def q_salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same result as join_inner_agg but through the salted-join rewrite
     — the oracle equality PROVES salting preserves semantics."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = read_testdata_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"), "o_totalprice"
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = read_testdata_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = read_testdata_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     sum_dec = F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
     joined = salted_join(o, c, "c_custkey", salt=8)
     return (
@@ -375,7 +371,7 @@ def _bloom_words(spark: SparkSession, sf_dir: str) -> tuple:
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _BLOOM_CACHE.get(key)
     if hit is None:
-        urgent = _t(spark, sf_dir, "orders").filter(
+        urgent = read_testdata_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         ).select(F.col("o_orderkey").alias("okey"))
         hit = build_bloom_words(urgent, "okey", k=_BLOOM_K)
@@ -397,10 +393,10 @@ def q_join_bloom_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bloom_join import apply_bloom_filter
 
     words, m_bits = _bloom_words(spark, sf_dir)
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_testdata_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"), "l_extendedprice"
     )
-    urgent = _t(spark, sf_dir, "orders").filter(
+    urgent = read_testdata_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     ).select(F.col("o_orderkey").alias("okey"), "o_orderpriority")
     pruned = apply_bloom_filter(li, "okey", words, m_bits=m_bits, k=_BLOOM_K)
@@ -445,7 +441,7 @@ def _hh_counters(spark: SparkSession, sf_dir: str) -> list:
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _HH_CMS_CACHE.get(key)
     if hit is None:
-        li = _t(spark, sf_dir, "lineitem").select("l_partkey")
+        li = read_testdata_table(spark, sf_dir, "lineitem").select("l_partkey")
         hit = build_cms_counters(
             li, term_col="l_partkey", depth=_HH_DEPTH, width=_HH_WIDTH
         )
@@ -468,8 +464,8 @@ def q_join_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.heavy_hitter_join import heavy_hitter_join
 
     counters = _hh_counters(spark, sf_dir)
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
-    part = _t(spark, sf_dir, "part").select(
+    li = read_testdata_table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
+    part = read_testdata_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
     joined = heavy_hitter_join(
@@ -511,7 +507,7 @@ def q_union_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL BY NAME."""
     from ..operators.transforms import union_by_name
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     v1 = o.filter(F.year("o_orderdate") < 1998).select(
         "o_orderkey", "o_totalprice"
     )
@@ -549,7 +545,7 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     contains / size, plus higher-order filter — grouped per order.
     Arrays serialized to strings so the cross-engine compare is dtype-
     stable (list ordering pinned by the sort)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_testdata_table(spark, sf_dir, "lineitem")
     lines = F.sort_array(F.collect_list("l_linenumber"))
     return li.groupBy("l_orderkey").agg(
         F.array_join(lines, ",").alias("line_numbers"),
@@ -572,68 +568,68 @@ FROM lineitem GROUP BY l_orderkey
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "array_functions": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "array_functions", q_array_functions, _ARRAY_ORACLE,
         "array family: collect/sort/join/contains/higher-order filter",
     ),
-    "rollup_agg": QuerySpec("rollup_agg", q_rollup, _ROLLUP_ORACLE, "ROLLUP subtotals"),
-    "cube_agg": QuerySpec("cube_agg", q_cube, _CUBE_ORACLE, "CUBE over two dims"),
-    "conditional_aggregates": QuerySpec(
+    QuerySpec("rollup_agg", q_rollup, _ROLLUP_ORACLE, "ROLLUP subtotals"),
+    QuerySpec("cube_agg", q_cube, _CUBE_ORACLE, "CUBE over two dims"),
+    QuerySpec(
         "conditional_aggregates", q_conditional_aggregates, _CONDITIONAL_ORACLE,
         "count_if / FILTER-clause aggregation",
     ),
-    "set_intersect": QuerySpec(
+    QuerySpec(
         "set_intersect", q_set_intersect, _INTERSECT_ORACLE, "INTERSECT distinct"
     ),
-    "set_except": QuerySpec("set_except", q_set_except, _EXCEPT_ORACLE, "EXCEPT"),
-    "distinct_count": QuerySpec(
+    QuerySpec("set_except", q_set_except, _EXCEPT_ORACLE, "EXCEPT"),
+    QuerySpec(
         "distinct_count", q_distinct_count, _DISTINCT_COUNT_ORACLE, "exact distinct counts"
     ),
-    "approx_distinct_by_group": QuerySpec(
+    QuerySpec(
         "approx_distinct_by_group", q_approx_distinct_by_group,
         _APPROX_DISTINCT_GROUP_ORACLE,
         "per-group HLL++ distinct sketches (map-side partial merge), within-bound contract",
     ),
-    "approx_distinct_count": QuerySpec(
+    QuerySpec(
         "approx_distinct_count", q_approx_distinct_count, _APPROX_DISTINCT_ORACLE,
         "HLL++ distinct estimate, oracled via exact count + error-bound boolean",
     ),
-    "scalar_functions": QuerySpec(
+    QuerySpec(
         "scalar_functions", q_scalar_functions, _SCALAR_ORACLE,
         "regexp/string/date/math scalar families",
     ),
-    "window_ranking": QuerySpec(
+    QuerySpec(
         "window_ranking", q_window_ranking, _WINDOW_RANKING_ORACLE,
         "rank/dense_rank/ntile/percent_rank",
     ),
-    "string_functions": QuerySpec(
+    QuerySpec(
         "string_functions", q_string_functions, _STRING_ORACLE,
         "pad/trim/replace/reverse/repeat/position family",
     ),
-    "window_analytics": QuerySpec(
+    QuerySpec(
         "window_analytics", q_window_analytics, _WINDOW_ANALYTICS_ORACLE,
         "lag + decimal-exact running sum + row_number",
     ),
-    "salted_join_agg": QuerySpec(
+    QuerySpec(
         "salted_join_agg", q_salted_join_agg, _SALTED_ORACLE,
         "skew-salted join, result-equal to plain join",
     ),
-    "union_schema_evolution": QuerySpec(
+    QuerySpec(
         "union_schema_evolution", q_union_schema_evolution,
         _UNION_EVOLUTION_ORACLE,
         "by-name union across schema generations (added column,"
         " legacy rows NULL) — UNION ALL BY NAME oracle",
     ),
-    "join_bloom_prefiltered": QuerySpec(
+    QuerySpec(
         "join_bloom_prefiltered", q_join_bloom_prefiltered, _BLOOM_JOIN_ORACLE,
         "broadcast-Bloom pre-filtered join (map-side pruning before the"
         " shuffle), result-equal to plain join",
     ),
-    "join_heavy_hitters_cm": QuerySpec(
+    QuerySpec(
         "join_heavy_hitters_cm", q_join_heavy_hitters, _HEAVY_HITTER_ORACLE,
         "Count-Min-prefiltered heavy-hitter join: map-side CMS estimate"
         " filter (no false negatives) → exact count on survivors →"
         " dimension join; result-equal to the plain HAVING-count join",
     ),
-}
+]

@@ -29,10 +29,6 @@ from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_testdata_table(spark, sf_dir, name)
-
-
 # --- GROUPING SETS ----------------------------------------------------------
 
 
@@ -40,7 +36,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS ((status), (year), ()) with per-column grouping()
     flags — the general form of which CUBE/ROLLUP are special cases.
     Uses the native DataFrame.groupingSets API (Spark 4.0+)."""
-    o = _t(spark, sf_dir, "orders").withColumn(
+    o = read_testdata_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("long")
     )
     return o.groupingSets(
@@ -79,7 +75,7 @@ def q_datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Session timezone is pinned UTC so epoch math is engine-independent.
     Spark's dayofweek() is Sunday=1 and DuckDB's is Sunday=0, so both
     sides use the ISO convention instead (weekday()+1 == isodow())."""
-    e = _t(spark, sf_dir, "events")
+    e = read_testdata_table(spark, sf_dir, "events")
     return e.select(
         "event_id",
         F.year("ts").cast("long").alias("y"),
@@ -133,7 +129,7 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ones (sd ~ 1e4) to 3, keeping the comparison inside double
     precision. Single scan → single hash aggregate; the power sums all
     fold into one partial-agg pass."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     x = F.col("o_totalprice")
     agg = o.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -205,7 +201,7 @@ def q_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     full partition. Sums accumulate in DECIMAL so every frame value is
     byte-identical across engines; the ROWS ordering is made total with
     the o_orderkey tiebreak."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     dec = F.col("o_totalprice").cast("decimal(18,2)")
     w_range = Window.partitionBy("o_custkey").orderBy("o_orderdate")
     w_rows = (
@@ -258,11 +254,11 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output; missing counts surface as 0. Completes the join-type
     matrix alongside inner/semi/anti (relational.py)."""
     c = (
-        _t(spark, sf_dir, "customer")
+        read_testdata_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 0)
         .select("c_custkey", "c_name")
     )
-    o = _t(spark, sf_dir, "orders").groupBy("o_custkey").agg(
+    o = read_testdata_table(spark, sf_dir, "orders").groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_orders")
     )
     return c.join(o, c.c_custkey == o.o_custkey, "full_outer").select(
@@ -288,7 +284,7 @@ def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     map_filter+map_values. Maps are unordered, so every projected output
     is an order-pinned scalar (the oracle states the expected values in
     plain SQL — the contract is output equality, not engine mimicry)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     m = F.create_map(
         F.lit("status"), F.col("o_orderstatus"),
         F.lit("prio"), F.col("o_orderpriority"),
@@ -319,7 +315,7 @@ def q_lateral_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per priority-string token with its position; other orders keep
     exactly one all-null row instead of disappearing — the left-outer
     semantics plain explode drops."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_testdata_table(spark, sf_dir, "orders")
     arr = F.when(
         F.col("o_orderstatus") == "F", F.split("o_orderpriority", "-")
     ).otherwise(F.array().cast("array<string>"))
@@ -346,33 +342,33 @@ LEFT JOIN LATERAL (
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "map_functions": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "map_functions", q_map_functions, _MAP_ORACLE,
         "map family: create/element_at/keys/values/filter, scalar outputs",
     ),
-    "lateral_explode": QuerySpec(
+    QuerySpec(
         "lateral_explode", q_lateral_explode, _LATERAL_ORACLE,
         "posexplode_outer vs LEFT JOIN LATERAL unnest-with-position",
     ),
-    "join_full_outer": QuerySpec(
+    QuerySpec(
         "join_full_outer", q_join_full_outer, _FULL_OUTER_ORACLE,
         "full-outer join, unmatched rows both sides, coalesced output",
     ),
-    "grouping_sets_agg": QuerySpec(
+    QuerySpec(
         "grouping_sets_agg", q_grouping_sets, _GROUPING_SETS_ORACLE,
         "GROUPING SETS with grouping() flags (native DataFrame API)",
     ),
-    "datetime_functions": QuerySpec(
+    QuerySpec(
         "datetime_functions", q_datetime_functions, _DATETIME_ORACLE,
         "calendar/timestamp scalar family over events.ts",
     ),
-    "stats_moments": QuerySpec(
+    QuerySpec(
         "stats_moments", q_stats_moments, _MOMENTS_ORACLE,
         "stddev/skew/kurtosis/covar/regr per group from one agg pass",
     ),
-    "window_frames": QuerySpec(
+    QuerySpec(
         "window_frames", q_window_frames, _WINDOW_FRAMES_ORACLE,
         "RANGE vs ROWS frames, first/last/nth_value",
     ),
-}
+]

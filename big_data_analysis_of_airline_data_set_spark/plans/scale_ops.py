@@ -452,40 +452,40 @@ LIMIT {_HH_K}
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "text_pii_redaction": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "text_pii_redaction", q_pii_redaction, _pii_oracle(),
         "PII counts + typed-tag redaction, Java-regex/RE2-portable patterns",
     ),
-    "events_peak_concurrency": QuerySpec(
+    QuerySpec(
         "events_peak_concurrency", q_peak_concurrency,
         _PEAK_CONCURRENCY_ORACLE,
         "sweep-line peak concurrent sessions per hour: bucketed prefix"
         " sweep + time-domain-sized bucket chain; inclusive intervals,"
         " all-integer, sessionization + sweep both replayed",
     ),
-    "events_user_sessions": QuerySpec(
+    QuerySpec(
         "events_user_sessions", q_user_sessions, _SESSIONS_ORACLE,
         "gap-based sessionization with per-key session ordinals",
     ),
-    "events_ewma": QuerySpec(
+    QuerySpec(
         "events_ewma", q_events_ewma, _EWMA_ORACLE,
         "trailing-K EWMA feature per user (bounded window frame)",
     ),
-    "text_heavy_hitters": QuerySpec(
+    QuerySpec(
         "text_heavy_hitters", q_heavy_hitters, _HH_ORACLE,
         "exact corpus-wide top-K terms (the CMS exact baseline)",
     ),
-    "events_anomaly_zscore": QuerySpec(
+    QuerySpec(
         "events_anomaly_zscore", q_events_anomaly, _ANOMALY_ORACLE,
         "trailing-frame z-score outlier flag (prior-rows frame, min-N gate)",
     ),
-    "events_skew_diagnosis": QuerySpec(
+    QuerySpec(
         "events_skew_diagnosis", q_skew_diagnosis, _SKEW_ORACLE,
         "hot-key report: top-N keys, row share, skew ratio vs mean load",
     ),
-    "table_profile": QuerySpec(
+    QuerySpec(
         "table_profile", q_table_profile, _profile_oracle(),
         "per-column nulls/distincts/ranges in ONE aggregation pass",
     ),
-}
+]

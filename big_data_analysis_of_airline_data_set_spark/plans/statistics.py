@@ -766,71 +766,71 @@ FROM per
 """
 
 
-QUERIES: dict[str, QuerySpec] = {
-    "stats_benford_audit": QuerySpec(
+QUERIES: list[QuerySpec] = [
+    QuerySpec(
         "stats_benford_audit", q_benford_audit, _benford_oracle(),
         "Benford first-digit screen: observed vs log10(1+1/d) shares"
         " (literal expectations, string-extracted digits)",
     ),
-    "stats_bootstrap_means": QuerySpec(
+    QuerySpec(
         "stats_bootstrap_means", q_bootstrap_means, _bootstrap_oracle(),
         "deterministic Poisson-bootstrap replica means (md5-weighted,"
         " zero RNG state, exact replay)",
     ),
-    "ri_orphans": QuerySpec(
+    QuerySpec(
         "ri_orphans", q_ri_orphans, _ri_oracle(),
         "referential-integrity audit: orphan counts per FK edge"
         " (anti-join per edge, deliberate tripwire edge included)",
     ),
-    "stats_ab_test": QuerySpec(
+    QuerySpec(
         "stats_ab_test", q_stats_ab_test, _AB_TEST_ORACLE,
         "two-proportion A/B z-test over experiment units, exact counts"
         " + value-hash-stable z",
     ),
-    "stats_ks_drift": QuerySpec(
+    QuerySpec(
         "stats_ks_drift", q_stats_ks_drift, _KS_DRIFT_ORACLE,
         "exact two-sample Kolmogorov-Smirnov drift distance,"
         " tie-exact range-frame CDFs",
     ),
-    "stats_group_ols": QuerySpec(
+    QuerySpec(
         "stats_group_ols", q_stats_group_ols, _GROUP_OLS_ORACLE,
         "per-group closed-form OLS (slope/intercept/R²) from exact"
         " DECIMAL moment sums — one map-combined aggregation",
     ),
-    "stats_mad_by_group": QuerySpec(
+    QuerySpec(
         "stats_mad_by_group", q_stats_mad, _MAD_ORACLE,
         "robust per-group median + MAD (two-pass, broadcast medians)",
     ),
-    "fd_violations": QuerySpec(
+    QuerySpec(
         "fd_violations", q_fd_violations, _fd_oracle(),
         "functional-dependency profiling: violations per candidate X->Y",
     ),
-    "feature_winsorize": QuerySpec(
+    QuerySpec(
         "feature_winsorize",
         q_feature_winsorize,
         _WINSORIZE_APPROX_ORACLE,
         "per-group p01/p99 outlier-clipping audit — sketch-threshold default,"
         " within-rank-bound contract",
     ),
-    "feature_winsorize_exact": QuerySpec(
+    QuerySpec(
         "feature_winsorize_exact",
         q_feature_winsorize_exact,
         _WINSORIZE_ORACLE,
         "exact interpolated-percentile winsorize twin (deterministic oracle baseline)",
     ),
-    "feature_selection_job": QuerySpec(
+    QuerySpec(
         "feature_selection_job",
         q_feature_selection_job,
         _feature_selection_job_oracle(),
         "entry-point B composite: corr + chi2 + selectors + variance, oracled end-to-end",
     ),
-    "mllib_correlation_matrix": QuerySpec(
+    QuerySpec(
         "mllib_correlation_matrix",
         q_mllib_correlation_matrix,
         _corr_matrix_oracle(),
         "M6 MLlib correlation matrix vs pairwise SQL corr",
     ),
-    "mllib_chi_square": QuerySpec(
+    QuerySpec(
         "mllib_chi_square",
         q_mllib_chi_square,
         " UNION ALL ".join(
@@ -838,28 +838,28 @@ QUERIES: dict[str, QuerySpec] = {
         ),
         "M7 ChiSquareTest vs SQL contingency formula",
     ),
-    "spearman_correlation": QuerySpec(
+    QuerySpec(
         "spearman_correlation",
         q_spearman_correlation,
         _SPEARMAN_ORACLE,
         "M6 spearman (MLlib) vs average-rank Pearson SQL",
     ),
-    "variance_threshold_features": QuerySpec(
+    QuerySpec(
         "variance_threshold_features",
         q_variance_threshold_features,
         _VARIANCE_THRESHOLD_ORACLE,
         "M10/M11 kth-largest-variance threshold selection",
     ),
-    "univariate_select_categorical": QuerySpec(
+    QuerySpec(
         "univariate_select_categorical",
         q_univariate_select_categorical,
         _UNIVARIATE_CAT_ORACLE,
         "M8 chi2 top-N categorical selector (equal-dof → statistic-ranked oracle)",
     ),
-    "univariate_select_continuous": QuerySpec(
+    QuerySpec(
         "univariate_select_continuous",
         q_univariate_select_continuous,
         _UNIVARIATE_CONT_ORACLE,
         "M9 ANOVA-F top-N continuous selector (explicit-F oracle)",
     ),
-}
+]

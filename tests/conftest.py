@@ -4,6 +4,7 @@ import os
 
 import pytest
 
+from big_data_analysis_of_airline_data_set_spark import plans
 from big_data_analysis_of_airline_data_set_spark.session import get_session
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -21,6 +22,8 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 # every deselected oracle parity case, and the driver's own 50-entry
 # window re-proves the rotated queries each round. Matching is by
 # nodeid substring so parametrized cases can be marked individually.
+# A plan named in ``plans._CHANGED_THIS_ROUND`` keeps its parity case
+# in the default run.
 _SLOW_NODEID_PARTS = (
     # multi-second catalog-oracle parity cases (driver/preflight cover these)
     "test_query_matches_oracle[dedup_canonical_keeper]",
@@ -56,9 +59,17 @@ _SLOW_NODEID_PARTS = (
 )
 
 
+def is_slow(nodeid: str, changed: tuple[str, ...]) -> bool:
+    """Whether ``nodeid`` is deselected by default. The catalog parity
+    case of a plan in ``changed`` always runs."""
+    if any(f"test_query_matches_oracle[{n}]" in nodeid for n in changed):
+        return False
+    return any(part in nodeid for part in _SLOW_NODEID_PARTS)
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        if any(part in item.nodeid for part in _SLOW_NODEID_PARTS):
+        if is_slow(item.nodeid, plans._CHANGED_THIS_ROUND):
             item.add_marker(pytest.mark.slow)
 
 

@@ -1,4 +1,4 @@
-"""t2-style correctness: every oracled relational query vs DuckDB at
+"""t2-style correctness: every catalog query vs its DuckDB oracle at
 sf0.001 (fast) — mirrors the driver's sf0.01 gate."""
 
 from __future__ import annotations
