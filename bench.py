@@ -394,6 +394,37 @@ def _testdata_generation(sf_dir: str) -> str:
     return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime(max(mtimes)))
 
 
+def _host_facts(spark) -> dict[str, object]:
+    """What the numbers ran on: ``cpus`` is the session's task slots
+    (the ``local[N]`` width) and ``spark_version`` the JVM's Spark, so a
+    record read alone says whether two totals are comparable."""
+    return {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "spark_version": spark.version,
+    }
+
+
+def _stdout_line(record: dict, out_path: str) -> str:
+    """The driver records only a 4096-char TAIL of stdout and parses the
+    final line as JSON (round-5 verdict #4: the r5 record came back
+    "parsed": null because the full per-suite dump overflowed that
+    window). So stdout gets a COMPACT line — headline per-query
+    timings plus per-suite totals, comfortably under 4 KB — and the
+    full per-suite detail goes to the committed file, anchored to a
+    commit rather than a captured stream."""
+    compact = {
+        k: v
+        for k, v in record.items()
+        if not (k.endswith("_queries") and k != "queries")
+    }
+    compact["detail_file"] = out_path
+    line = json.dumps(compact)
+    if len(line) > 4000:  # belt and braces: drop per-query detail too
+        compact.pop("queries", None)
+        line = json.dumps(compact)
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -524,6 +555,7 @@ def main() -> None:
         "skew_queries": skew_timings,
         "sf": float(sf),
         "testdata_generation": generation,
+        **_host_facts(spark),
         # *_stream entries timed through this sink (see BASELINE.md
         # round-12 methodology note; "noop" from r12 on).
         "stream_sink": STREAM_SINK,
@@ -558,23 +590,7 @@ def main() -> None:
             )
     except (OSError, ValueError):
         pass
-    # The driver records only a 4096-char TAIL of stdout and parses the
-    # final line as JSON (round-5 verdict #4: the r5 record came back
-    # "parsed": null because the full per-suite dump overflowed that
-    # window). So stdout gets a COMPACT line — headline per-query
-    # timings plus per-suite totals, comfortably under 4 KB — and the
-    # full per-suite detail goes to the committed file, anchored to a
-    # commit rather than a captured stream.
-    compact = {
-        k: v
-        for k, v in record.items()
-        if not (k.endswith("_queries") and k != "queries")
-    }
-    compact["detail_file"] = out_path
-    line = json.dumps(compact)
-    if len(line) > 4000:  # belt and braces: drop per-query detail too
-        compact.pop("queries", None)
-        line = json.dumps(compact)
+    line = _stdout_line(record, out_path)
     try:
         with open(out_path, "w") as f:
             f.write(json.dumps(record) + "\n")

@@ -15,7 +15,7 @@ Scale notes baked into the plans:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.flight_exprs import (
@@ -255,7 +255,15 @@ def q_correlation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_chi_square_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — chi-square statistic from a contingency table, computed
     relationally (ChiSquareTest analog, Scripts/2_...py:91-93; SQL-form
-    oracle per SURVEY.md §5.2). Observed-cells-only formula on both sides."""
+    oracle per SURVEY.md §5.2). Observed-cells-only formula on both sides.
+
+    The marginals are ``sum(c)`` windows over the one ``cells``
+    aggregate, not three re-aggregations joined back (3 jobs instead of
+    12). The grand total goes first: its window moves the cells into a
+    single partition, which already satisfies the row and column
+    windows, so they add sorts but no exchange. One stage chain also
+    means AQE has no sibling stages to finish in a varying order, so the
+    generated classes are the same every run and stay cached."""
     o = read_testdata_table(spark, sf_dir, "orders")
     cells = (
         o.groupBy(
@@ -264,12 +272,13 @@ def q_chi_square_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
     )
-    rows_t = cells.groupBy("p").agg(F.sum("c").alias("rc"))
-    cols_t = cells.groupBy("lab").agg(F.sum("c").alias("cc"))
-    n = cells.agg(F.sum("c").alias("n"))
-    joined = cells.join(rows_t, "p").join(cols_t, "lab").crossJoin(n)
+    marginals = (
+        cells.withColumn("n", F.sum("c").over(Window.partitionBy()))
+        .withColumn("rc", F.sum("c").over(Window.partitionBy("p")))
+        .withColumn("cc", F.sum("c").over(Window.partitionBy("lab")))
+    )
     exp = F.col("rc") * F.col("cc") / F.col("n")
-    return joined.agg(
+    return marginals.agg(
         F.round(F.sum(F.pow(F.col("c") - exp, 2) / exp), 6).alias("chi2"),
         F.count(F.lit(1)).alias("n_cells"),
     )

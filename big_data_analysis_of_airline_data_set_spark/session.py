@@ -7,6 +7,17 @@ Replaces the reference's ``SparkContext()`` / ``SQLContext(sc)`` bootstrap
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting).
 - Arrow on (fast toPandas / pandas_udf batches).
 - Shuffle partitions sized from the env, not the 200 default.
+- A generated-code cache that holds the working set. Spark keeps the
+  classes Janino compiles for whole-stage codegen in an LRU cache of
+  ``spark.sql.codegen.cache.maxEntries`` entries (default 100). The 16
+  headline queries alone generate about 180 distinct classes, so at the
+  default every repeat recompiles all of them and the JVM then
+  JIT-compiles the new classes again. 1024 holds the headline and
+  pipeline working sets with room to spare; the whole catalog (about
+  3,500 classes at sf0.001) is not worth holding for traffic that never
+  repeats. The conf is static: it is read once per JVM, when the first
+  query compiles, so a session made later in the same JVM cannot
+  resize it.
 
 On a real cluster the same builder is used; only ``master`` and the
 resource configs differ (supplied by spark-submit), so nothing here
@@ -67,6 +78,7 @@ def get_session(
         # Broadcast small dimension tables automatically (10 MB default is
         # fine; AQE upgrades sort-merge to broadcast at runtime too).
         "spark.sql.autoBroadcastJoinThreshold": "10485760",
+        "spark.sql.codegen.cache.maxEntries": "1024",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
         "spark.sql.session.timeZone": "UTC",

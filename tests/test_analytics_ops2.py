@@ -173,18 +173,7 @@ def test_linear_interpolation_gap_math(spark):
 
 
 # --------------------- wave-6: sequential folds ---------------------
-
-WAVE6_OPS = [
-    "events_clamped_balance",
-    "events_holt_smoothing",
-    "events_max_drawdown",
-    "stats_weighted_median",
-]
-
-
-@pytest.mark.parametrize("name", WAVE6_OPS)
-def test_wave6_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
+# Oracle parity of the wave-6 queries is test_query_matches_oracle's.
 
 
 def test_holt_matches_python_reference(spark, sf_dir):

@@ -1,11 +1,12 @@
-"""bench.py's suite table and the A/B runner's arm loop, checked without
-a Spark session: a bad suite entry otherwise surfaces only as a
-KeyError minutes into a bench run."""
+"""bench.py's suite table, its record stamps and the A/B runner's arm
+loop, checked without a Spark session: a bad suite entry otherwise
+surfaces only as a KeyError minutes into a bench run."""
 
 from __future__ import annotations
 
 import json
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -44,6 +45,24 @@ def test_suite_keys_match_the_committed_record():
     assert list(record["steal_by_suite"]) == ["headline", *bench.SUITES]
     for suite, names in bench.SUITES.items():
         assert list(record[bench._suite_keys(suite)[1]]) == names
+
+
+def test_record_stamps_host_facts_on_one_short_stdout_line():
+    with open(_BENCH_LOCAL) as f:
+        record = json.loads(f.readline())
+    existing = [
+        k for k in record if not (k.endswith("_queries") and k != "queries")
+    ]
+    session = SimpleNamespace(
+        version="4.1.2", sparkContext=SimpleNamespace(defaultParallelism=8)
+    )
+    record.update(bench._host_facts(session))
+    line = bench._stdout_line(record, "BENCH_LOCAL.json")
+    assert "\n" not in line and len(line) < 4096
+    printed = json.loads(line)
+    assert printed["cpus"] == 8 and printed["spark_version"] == "4.1.2"
+    assert set(existing) <= set(printed)
+    assert printed["detail_file"] == "BENCH_LOCAL.json"
 
 
 class _FakeArms:

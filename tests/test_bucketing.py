@@ -78,10 +78,3 @@ def test_compact_parquet_roundtrip(spark, sf_dir, tmp_path):
     a = li.agg(F.sum("l_quantity")).collect()[0][0]
     b = back.agg(F.sum("l_quantity")).collect()[0][0]
     assert abs(a - b) < 1e-6
-
-
-def test_bucketed_join_catalog_parity(spark, sf_dir):
-    from big_data_analysis_of_airline_data_set_spark.plans import all_queries
-    from tests.oracle_harness import check_query
-
-    check_query(spark, all_queries()["join_bucketed_colocated"], sf_dir)

@@ -60,6 +60,16 @@ def test_aggregations_are_partial_final(spark, sf_dir):
     assert "partial_" in plan  # map-side combine before the shuffle
 
 
+def test_chi_square_sql_aggregates_orders_once(spark, sf_dir):
+    """The marginals are windows over the one contingency-cell
+    aggregate: one orders scan, no join to bring the totals back."""
+    plan = _plan(spark, sf_dir, "chi_square_sql", mode="simple")
+    assert plan.count("FileScan parquet") == 1
+    assert "orders.parquet" in plan
+    assert "CartesianProduct" not in plan
+    assert "Join" not in plan  # BroadcastNestedLoopJoin included
+
+
 def test_semi_anti_join_strategies(spark, sf_dir):
     for name in ("join_semi", "join_anti"):
         plan = _plan(spark, sf_dir, name)
