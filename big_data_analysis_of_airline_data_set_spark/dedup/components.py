@@ -14,7 +14,7 @@ label changes. Rounds = graph diameter ≤ log n after path shortcuts —
 near-dup clusters are tiny and dense, so 2-4 rounds in practice. Each
 round is one shuffle join + one aggregation; the only driver-side
 values are the changed-count scalars evaluated at every
-``check_every``-round barrier (the reference's O1 driver-boundary
+``_CHECK_EVERY``-round barrier (the reference's O1 driver-boundary
 pattern, batched per the round-5 verdict).
 
 Not a recursive SQL engine feature: Spark has no RECURSIVE CTE, so the
@@ -28,6 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.graph import _edge_table
+
+# rounds between convergence barriers (the pagerank_converged cadence)
+_CHECK_EVERY = 2
+
 
 def connected_components(
     nodes: DataFrame,
@@ -37,26 +42,20 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iterations: int = 20,
-    check_every: int = 2,
 ) -> DataFrame:
     """(id, cluster_id) — cluster_id = min node id in the component.
 
     ``nodes``: one column ``id_col`` (singletons become their own
     cluster). ``edges``: undirected pairs (each emitted once).
-    ``check_every`` must be >= 1 — a zero/negative value would run
-    zero propagation rounds per block and the barrier would read the
-    unchanged labels as instant convergence, silently returning the
-    identity labeling (round-6 review catch).
 
-    Convergence is checked every ``check_every`` rounds (the
-    pagerank_converged batching, round-5 verdict #3): the pre-round-6
-    loop ran a full labels⋈labels comparison as a SEPARATE action
-    every round — a driver barrier plus an extra node-sized join per
+    Convergence is checked every ``_CHECK_EVERY`` rounds (the
+    pagerank_converged batching): one labels⋈labels comparison per
+    round would be a driver barrier plus an extra node-sized join per
     round, doubling the join count. Min-label propagation is MONOTONE
     (labels only ever decrease), so block-start vs block-end equality
     proves no round inside the block changed anything — the batched
     check cannot miss a change, it can only detect convergence up to
-    check_every−1 rounds late, trading ≤1 extra cheap propagation
+    _CHECK_EVERY−1 rounds late, trading ≤1 extra cheap propagation
     round for half the joins on every round of a deep run.
 
     Between barriers no action runs; each round references the label
@@ -64,60 +63,43 @@ def connected_components(
     logical plan doubles per round — bounded by materializing each
     barrier through an eager localCheckpoint, exactly the
     pagerank_converged lineage discipline. The edge table is shuffled
-    to its join partitioning once, at build."""
-    if check_every < 1:
-        raise ValueError(
-            f"check_every must be >= 1, got {check_every} (a zero-round "
-            "block would read unchanged labels as instant convergence)"
-        )
-    # one exchange at build (guide §2.4, round-13): repartitioning by
-    # the join key FIRST lets the distinct dedup in place
-    # (hashpartitioning(_src) satisfies ClusteredDistribution(_src,
-    # _dst)) and keeps that partitioning in the cache — the old order
-    # paid a second full edge shuffle for the same layout.
-    sym = (
-        edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
-        .union(edges.select(F.col(dst_col).alias("_src"), F.col(src_col).alias("_dst")))
-        .repartition(F.col("_src"))
-        .distinct()
-        .persist()
-    )
-    labels = nodes.select(
-        F.col(id_col).alias("_id"), F.col(id_col).alias("_label")
-    ).localCheckpoint(eager=True)
+    to its join partitioning once, at build (operators/graph.py
+    ``_edge_table``)."""
+    with _edge_table(edges, src_col, dst_col) as sym:
+        labels = nodes.select(
+            F.col(id_col).alias("_id"), F.col(id_col).alias("_label")
+        ).localCheckpoint(eager=True)
 
-    it = 0
-    while it < max_iterations:
-        block_start = labels
-        block = min(check_every, max_iterations - it)
-        for _ in range(block):
-            neighbor_min = (
-                sym.join(labels, sym["_src"] == labels["_id"])
-                .groupBy("_dst")
-                .agg(F.min("_label").alias("_nmin"))
+        it = 0
+        while it < max_iterations:
+            block_start = labels
+            for _ in range(min(_CHECK_EVERY, max_iterations - it)):
+                neighbor_min = (
+                    sym.join(labels, sym["_s"] == labels["_id"])
+                    .groupBy("_d")
+                    .agg(F.min("_label").alias("_nmin"))
+                )
+                labels = labels.join(
+                    neighbor_min, labels["_id"] == neighbor_min["_d"], "left"
+                ).select(
+                    "_id",
+                    F.least(
+                        F.col("_label"), F.coalesce(F.col("_nmin"), F.col("_label"))
+                    ).alias("_label"),
+                )
+                it += 1
+            # barrier: one action materializes the whole block AND decides
+            # convergence; localCheckpoint truncates the doubled lineage
+            labels = labels.localCheckpoint(eager=True)
+            changed = (
+                labels.alias("n")
+                .join(block_start.alias("o"), F.col("n._id") == F.col("o._id"))
+                .filter(F.col("n._label") != F.col("o._label"))
+                .count()
             )
-            labels = labels.join(
-                neighbor_min, labels["_id"] == neighbor_min["_dst"], "left"
-            ).select(
-                "_id",
-                F.least(
-                    F.col("_label"), F.coalesce(F.col("_nmin"), F.col("_label"))
-                ).alias("_label"),
-            )
-            it += 1
-        # barrier: one action materializes the whole block AND decides
-        # convergence; localCheckpoint truncates the doubled lineage
-        labels = labels.localCheckpoint(eager=True)
-        changed = (
-            labels.alias("n")
-            .join(block_start.alias("o"), F.col("n._id") == F.col("o._id"))
-            .filter(F.col("n._label") != F.col("o._label"))
-            .count()
-        )
-        if changed == 0:
-            break
+            if changed == 0:
+                break
 
-    sym.unpersist()
     return labels.select(F.col("_id").alias(id_col), F.col("_label").alias("cluster_id"))
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..caching import BoundedCache
 from ..operators.ranking import bucketed_global_rank, ntile_from_rank
 from ..sources.readers import read_testdata_table
 from ..stats.regression import (
@@ -29,7 +30,7 @@ from ..stats.regression import (
     WELCH_STAGE1,
     WELCH_T,
 )
-from .patterns import hll_sql_parts
+from .patterns import _unpersist_quietly, hll_sql_parts
 from .spec import QuerySpec
 
 _US_DAY = 86_400_000_000
@@ -144,16 +145,12 @@ _BFS_HOPS = 6
 # unpersists. The build (orders ⋈ lineitem + distinct) is ~30 % of the
 # warm BFS wall; caching it is an EXECUTION change only — the plan on
 # first build, and every result, is byte-identical.
-_TRADING_EDGES_CACHE = None
+_TRADING_EDGES_CACHE: BoundedCache[tuple, DataFrame] = BoundedCache(
+    4, on_evict=_unpersist_quietly
+)
 
 
 def _trading_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _TRADING_EDGES_CACHE
-    from ..caching import BoundedCache
-    from .patterns import _unpersist_quietly
-
-    if _TRADING_EDGES_CACHE is None:
-        _TRADING_EDGES_CACHE = BoundedCache(4, on_evict=_unpersist_quietly)
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _TRADING_EDGES_CACHE.get(key)
     if hit is None:

@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import BoundedCache
 from ..operators.asof import as_of_join
+from ..operators.graph import _PR_CHECK_EVERY, _PR_DP, pagerank, pagerank_converged
 from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
 
@@ -1362,7 +1364,6 @@ SELECT p_partkey, p_size, p_retailprice FROM part
 # ------------------------- iterative graph (PageRank) -------------------------
 
 _PR_ITERS = 5
-_PR_DP = 12
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1373,8 +1374,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations as unrolled CTEs with the identical per-iteration
     DECIMAL-summed rounding, so the whole iterative computation — not
     just its shape — is value-checked."""
-    from ..operators.graph import pagerank_scope
-
     li = read_testdata_table(spark, sf_dir, "lineitem")
     fwd = li.select(
         F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
@@ -1383,9 +1382,9 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # pagerank yields a LAZY persisted chain: this collect is the ONE
     # action that executes the whole loop. The top-20 rows are a
-    # legitimate driver boundary; the scope releases every cache the
-    # loop pinned on exit (even on error).
-    with pagerank_scope(edges, iterations=_PR_ITERS, round_dp=_PR_DP) as ranks:
+    # legitimate driver boundary; the block's exit releases every cache
+    # the loop pinned (even on error).
+    with pagerank(edges, iterations=_PR_ITERS) as ranks:
         rows = (
             ranks.select("node", F.round("rank", 9).alias("rank"))
             .orderBy(F.desc("rank"), F.asc("node"))
@@ -1435,7 +1434,7 @@ ORDER BY rank DESC, node ASC LIMIT 20
 
 # ------------------ converged PageRank (dangling + early stop) ------------------
 
-_PRC_MAX, _PRC_TOL, _PRC_CHECK = 10, 0.4, 2
+_PRC_MAX, _PRC_TOL = 10, 0.4
 
 
 def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1452,19 +1451,13 @@ def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds + the barrier delta decisions as CTEs and selects the
     SAME stopping iteration — the convergence decision itself is
     value-checked."""
-    from ..operators.graph import pagerank_converged_scope
-
     li = read_testdata_table(spark, sf_dir, "lineitem")
     edges = li.select(
         F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
         F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
     )
-    with pagerank_converged_scope(
-        edges,
-        max_iterations=_PRC_MAX,
-        tol=_PRC_TOL,
-        check_every=_PRC_CHECK,
-        round_dp=_PR_DP,
+    with pagerank_converged(
+        edges, max_iterations=_PRC_MAX, tol=_PRC_TOL
     ) as (ranks, stopped):
         rows = (
             ranks.select("node", F.round("rank", 9).alias("rank"))
@@ -1510,7 +1503,7 @@ r{i} AS MATERIALIZED (
         prev = f"r{i}"
     barriers = [
         i for i in range(1, _PRC_MAX + 1)
-        if i % _PRC_CHECK == 0 or i == _PRC_MAX
+        if i % _PR_CHECK_EVERY == 0 or i == _PRC_MAX
     ]
     deltas = " UNION ALL ".join(
         f"SELECT {i} AS iter, (SELECT SUM(CAST(round(abs(a.rank - b.rank), {dp})"
@@ -1581,7 +1574,9 @@ def _unpersist_quietly(_key, frame: DataFrame) -> None:
 # differs. Building it is the dominant cost of all three queries
 # (lineitem-wide shuffles), so one persisted copy per (session, sf_dir)
 # serves the whole family; eviction unpersists (round-8 verdict #3).
-_CO_CACHE = None
+_CO_CACHE: BoundedCache[tuple, DataFrame] = BoundedCache(
+    4, on_evict=_unpersist_quietly
+)
 
 
 def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1603,11 +1598,6 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
     to co-occurrence counting, not to this shape. TPC-H bounds d at
     ~4-8 suppliers/part at every SF. For corpora with unbounded hot
     keys, cap or salt the per-part array upstream."""
-    global _CO_CACHE
-    from ..caching import BoundedCache
-
-    if _CO_CACHE is None:
-        _CO_CACHE = BoundedCache(4, on_evict=_unpersist_quietly)
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _CO_CACHE.get(key)
     if hit is None:
@@ -1762,7 +1752,7 @@ def q_graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         # release even when k_core raises (exhausted round budget) —
-        # the pagerank_scope error-path discipline (the co table
+        # the pagerank error-path discipline (the co table
         # underneath belongs to the session cache, not this query)
         sym.unpersist()
     # k_core's result is an EAGER localCheckpoint — already materialized

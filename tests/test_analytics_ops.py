@@ -12,7 +12,6 @@ from tests.oracle_harness import check_query
 
 NEW_OPS = [
     "sketch_hll_set_ops",
-    "graph_bfs_distances",
     "stats_welch_ttest",
     "events_rfm_segments",
     "stats_multi_ols",
@@ -187,7 +186,6 @@ def test_rfm_quartiles_balanced(spark, sf_dir):
 # --------------------- wave 2: LPA / CUSUM / BM25 / MW-U ---------------------
 
 WAVE2 = [
-    "graph_label_propagation",
     "events_cusum_changepoint",
     "text_bm25_topk",
     "stats_mannwhitney_u",

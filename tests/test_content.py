@@ -288,20 +288,6 @@ def test_frame_sampling_shape_and_determinism(spark, sf_dir):
     assert sorted(map(tuple, frames)) == sorted(map(tuple, again))
 
 
-def test_connected_components_rejects_zero_check_every(spark):
-    """check_every < 1 would run zero propagation rounds per block and
-    read the unchanged labels as instant convergence — must raise, not
-    silently return the identity labeling."""
-    from big_data_analysis_of_airline_data_set_spark.dedup.components import (
-        connected_components,
-    )
-
-    nodes = spark.createDataFrame([(1,), (2,)], "id long")
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="check_every"):
-        connected_components(nodes, edges, check_every=0)
-
-
 def test_minhash_band_selectivity_under_hot_shingles(spark):
     """Round-8 regression pin: banded AND-amplification must hold when
     every document shares a few hot shingles. The pre-r8

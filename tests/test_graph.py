@@ -1,21 +1,38 @@
-"""PageRank operator (operators/graph.py): hand-checkable structure on
-a tiny graph, determinism, and mass behavior. Value parity with the
-unrolled DuckDB replay is the catalog oracle's job."""
+"""Graph operators (operators/graph.py, dedup/components.py):
+hand-checkable structure on tiny graphs, determinism, mass behavior,
+cache release, the sort-merge side of the broadcast gate, and empty
+input. Value parity with the unrolled DuckDB replays is the catalog
+oracles' job."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from big_data_analysis_of_airline_data_set_spark.dedup.components import (
+    connected_components,
+)
+from big_data_analysis_of_airline_data_set_spark.operators import graph
 from big_data_analysis_of_airline_data_set_spark.operators.graph import (
+    bfs_distances,
+    flatten_hierarchy,
+    k_core,
+    label_propagation,
+    orient_by_degree,
     pagerank,
-    release_pagerank,
+    pagerank_converged,
+    triangle_counts,
 )
 
 
-def _collect_and_release(df):
-    rows = df.collect()
-    release_pagerank(df)
-    return rows
+def _pagerank_rows(edges, **kwargs):
+    with pagerank(edges, **kwargs) as ranks:
+        return ranks.collect()
+
+
+def _converged_rows(edges, **kwargs):
+    with pagerank_converged(edges, **kwargs) as (ranks, stopped):
+        return ranks.collect(), stopped
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +42,7 @@ def star_ranks(spark):
         [("a", "hub"), ("b", "hub"), ("c", "hub"), ("d", "hub"), ("hub", "a")],
         "src string, dst string",
     )
-    return {r.node: r.rank for r in _collect_and_release(pagerank(edges, iterations=10))}
+    return {r.node: r.rank for r in _pagerank_rows(edges, iterations=10)}
 
 
 def test_hub_dominates(star_ranks):
@@ -48,8 +65,8 @@ def test_deterministic_across_runs(spark):
         [(f"n{i}", f"n{(i * 3) % 7}") for i in range(20)],
         "src string, dst string",
     )
-    a = sorted((r.node, r.rank) for r in _collect_and_release(pagerank(edges, iterations=4)))
-    b = sorted((r.node, r.rank) for r in _collect_and_release(pagerank(edges, iterations=4)))
+    a = sorted((r.node, r.rank) for r in _pagerank_rows(edges, iterations=4))
+    b = sorted((r.node, r.rank) for r in _pagerank_rows(edges, iterations=4))
     assert a == b
 
 
@@ -59,16 +76,12 @@ def test_uniform_cycle_stays_uniform(spark):
         [("w", "x"), ("x", "y"), ("y", "z"), ("z", "w")],
         "src string, dst string",
     )
-    ranks = {r.node: r.rank for r in _collect_and_release(pagerank(edges, iterations=6))}
+    ranks = {r.node: r.rank for r in _pagerank_rows(edges, iterations=6)}
     for v in ranks.values():
         assert abs(v - 0.25) < 1e-9
 
 
 def test_converged_mass_conservation_with_dangling(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        pagerank_converged,
-    )
-
     # star with a dangling hub successor: 'sink' has no out-edges, so
     # every round redistributes its mass; with redistribution total
     # rank mass stays 1 (the simplified pagerank() leaks it)
@@ -76,53 +89,37 @@ def test_converged_mass_conservation_with_dangling(spark):
         [("a", "sink"), ("b", "sink"), ("c", "sink"), ("sink2", "a")],
         "src string, dst string",
     )
-    ranks, stopped = pagerank_converged(edges, max_iterations=6, tol=0.0)
-    rows = _collect_and_release(ranks)
+    rows, stopped = _converged_rows(edges, max_iterations=6, tol=0.0)
     assert stopped == 6  # tol=0 never triggers the early exit
     assert abs(sum(r.rank for r in rows) - 1.0) < 1e-6
 
 
 def test_converged_early_stop_on_fixed_point(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        pagerank_converged,
-    )
-
     # symmetric directed 4-cycle is a fixed point from the uniform
     # start: delta is ~0 at the first barrier → stops at iteration 2
     edges = spark.createDataFrame(
         [("w", "x"), ("x", "y"), ("y", "z"), ("z", "w")],
         "src string, dst string",
     )
-    ranks, stopped = pagerank_converged(
-        edges, max_iterations=10, tol=1e-9, check_every=2
-    )
-    rows = _collect_and_release(ranks)
+    rows, stopped = _converged_rows(edges, max_iterations=10, tol=1e-9)
     assert stopped == 2
     for r in rows:
         assert abs(r.rank - 0.25) < 1e-9
 
 
 def test_converged_deterministic_across_runs(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        pagerank_converged,
-    )
-
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 3) % 7}") for i in range(20)],
         "src string, dst string",
     )
     out = []
     for _ in range(2):
-        ranks, stopped = pagerank_converged(edges, max_iterations=4, tol=0.0)
-        out.append((stopped, sorted((r.node, r.rank) for r in _collect_and_release(ranks))))
+        rows, stopped = _converged_rows(edges, max_iterations=4, tol=0.0)
+        out.append((stopped, sorted((r.node, r.rank) for r in rows)))
     assert out[0] == out[1]
 
 
 def test_triangle_counts_known_graph(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        triangle_counts,
-    )
-
     # K4 on {1,2,3,4} plus a pendant 5: C(4,3)=4 triangles; each K4
     # vertex sits in C(3,2)=3 of them; the pendant in none.
     edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)]
@@ -133,20 +130,12 @@ def test_triangle_counts_known_graph(spark):
 
 
 def test_triangle_counts_triangle_free(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        triangle_counts,
-    )
-
     # even cycle: 1-2-3-4-1 has no triangles
     df = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (1, 4)], "u long, v long")
     assert triangle_counts(df).count() == 0
 
 
 def test_flatten_hierarchy_pointer_doubling(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        flatten_hierarchy,
-    )
-
     # two trees: 1←2←3←4 (chain, root 1) and 10 alone
     rows = [(1, None), (2, 1), (3, 2), (4, 3), (10, None)]
     df = spark.createDataFrame(rows, "node long, parent long")
@@ -157,10 +146,6 @@ def test_flatten_hierarchy_pointer_doubling(spark):
 
 
 def test_flatten_hierarchy_deep_chain_log_rounds(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        flatten_hierarchy,
-    )
-
     # 33-deep chain needs 6 doubling rounds (2^6 = 64 ≥ 33); the
     # default max_depth=64 must resolve it fully
     rows = [(0, None)] + [(i, i - 1) for i in range(1, 34)]
@@ -174,8 +159,6 @@ def _wedge_count(oriented_df) -> int:
     """# of directed 2-paths a→b→c in an oriented edge set — the
     intermediate the wedge closure materializes before the closing
     join, i.e. the quantity degree ordering exists to bound."""
-    from pyspark.sql import functions as F
-
     e1 = oriented_df.select(F.col("s").alias("a"), F.col("t").alias("b"))
     e2 = oriented_df.select(F.col("s").alias("b"), F.col("t").alias("c"))
     return e1.join(e2, "b").count()
@@ -188,13 +171,6 @@ def test_triangle_degree_ordering_bounds_hub_fanout(spark):
     every hub edge INTO the hub (outdeg 0) leaving exactly the 2
     wedges that close into real triangles. Counts are exact, not
     bounds — a regression in the orientation changes them."""
-    from pyspark.sql import functions as F
-
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        orient_by_degree,
-        triangle_counts,
-    )
-
     hub = 10
     edges = [(i, hub) for i in range(10)] + [(hub, j) for j in range(11, 21)]
     edges += [(0, 11), (1, 12)]  # close two triangles through the hub
@@ -214,10 +190,6 @@ def test_triangle_degree_ordering_bounds_hub_fanout(spark):
 def test_triangle_counts_invariant_to_input_endpoint_order(spark):
     """orient_by_degree imposes its own total order, so the input may
     list each undirected edge with either endpoint first."""
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        triangle_counts,
-    )
-
     fwd = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)]
     rev = [(v, u) for u, v in fwd]
     a = {r.vertex: r.n_triangles
@@ -228,62 +200,32 @@ def test_triangle_counts_invariant_to_input_endpoint_order(spark):
 
 
 def test_pagerank_scope_releases_even_on_error(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        pagerank_scope,
-    )
-
+    """Leaving a ``with pagerank(...)`` or ``with pagerank_converged(...)``
+    block unpersists the loop's caches, also when the block raises."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a")], "src string, dst string"
     )
-    held = {}
+    # the loop's edge-table plan: its cache entry is visible through it
+    probe = (
+        edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
+        .repartition(F.col("_s"))
+        .distinct()
+    )
     with pytest.raises(RuntimeError, match="boom"):
-        with pagerank_scope(edges, iterations=2) as ranks:
+        with pagerank(edges, iterations=2) as ranks:
             assert ranks.count() == 2
-            held["ranks"] = ranks
+            assert probe.storageLevel.useMemory
             raise RuntimeError("boom")
-    # handles were released (and cleared) by the scope exit
-    assert held["ranks"]._pagerank_handles == ()
-
-
-def test_release_pagerank_raises_on_derived_frame(spark):
-    from pyspark.sql import functions as F
-
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        pagerank_scope,
-        release_pagerank,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a")], "src string, dst string"
-    )
-    with pagerank_scope(edges, iterations=1) as ranks:
-        derived = ranks.filter(F.col("rank") > 0)
-        with pytest.raises(ValueError, match="derived"):
-            release_pagerank(derived)
-
-
-def test_pagerank_converged_scope_matches_plain_call(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        pagerank_converged,
-        pagerank_converged_scope,
-        release_pagerank,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "hub"), ("b", "hub"), ("hub", "a")], "src string, dst string"
-    )
-    kw = dict(max_iterations=6, tol=1e-9, check_every=2)
-    with pagerank_converged_scope(edges, **kw) as (ranks, stopped):
-        scoped = sorted((r.node, r.rank) for r in ranks.collect())
-    plain_df, plain_stopped = pagerank_converged(edges, **kw)
-    plain = sorted((r.node, r.rank) for r in plain_df.collect())
-    release_pagerank(plain_df)
-    assert scoped == plain and stopped == plain_stopped
+    assert not probe.storageLevel.useMemory
+    with pytest.raises(RuntimeError, match="boom"):
+        with pagerank_converged(edges, max_iterations=2) as (ranks, stopped):
+            assert ranks.count() == 2 and stopped == 2
+            assert probe.storageLevel.useMemory
+            raise RuntimeError("boom")
+    assert not probe.storageLevel.useMemory
 
 
 def test_k_core_hand_checked(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import k_core
-
     # K4 on {1,2,3,4} + pendant 5 + a 2-path 6-7: the 2-core is exactly
     # the K4 (each vertex keeps degree 3); the pendant and the path
     # peel (the path cascades: 6 and 7 have degree 1 after each other)
@@ -294,8 +236,6 @@ def test_k_core_hand_checked(spark):
 
 
 def test_k_core_cascade_to_empty(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import k_core
-
     # a path: every removal exposes a new degree-1 endpoint — the
     # cascade must run to the empty fixpoint, not stop early
     edges = [(i, i + 1) for i in range(6)]
@@ -304,8 +244,6 @@ def test_k_core_cascade_to_empty(spark):
 
 
 def test_k_core_raises_when_rounds_exhausted(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import k_core
-
     # the 6-path cascade needs 3 peel rounds at k=2; a 1-round budget
     # must raise, never return a half-peeled 'core'
     edges = [(i, i + 1) for i in range(6)]
@@ -317,10 +255,6 @@ def test_k_core_raises_when_rounds_exhausted(spark):
 def test_k_core_symmetric_input_matches_undirected(spark):
     """symmetric=True over a pre-symmetrized edge set must equal the
     plain undirected call (it only skips the internal union+distinct)."""
-    from pyspark.sql import functions as F
-
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import k_core
-
     edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)]
     df = spark.createDataFrame(edges, "u long, v long")
     sym = df.union(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -330,55 +264,70 @@ def test_k_core_symmetric_input_matches_undirected(spark):
     assert a == b == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
-def test_label_propagation_width_scope_restores_conf(spark):
-    """Round-12: the LPA round loop narrows the shuffle width under the
-    broadcast gate; the session conf must be restored and labels must
-    equal the ungated (shuffle-path) run."""
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        label_propagation,
-    )
+_EDGES = [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4), (6, 7)]
+_FOREST = [(1, None), (2, 1), (3, 2), (4, 3), (5, None), (6, 5)]
 
-    edges = [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4)]
-    df = spark.createDataFrame(edges, "u long, v long")
+
+def _op_result(spark, name, *, empty=False):
+    """Comparable result of graph operator ``name`` on a small fixed
+    graph (or on empty input); BFS seeds at vertex 1 either way."""
+    e = spark.createDataFrame([] if empty else _EDGES, "u long, v long")
+    if name == "pagerank":
+        return sorted(_pagerank_rows(e, src="u", dst="v", iterations=5))
+    if name == "pagerank_converged":
+        rows, stopped = _converged_rows(
+            e, src="u", dst="v", max_iterations=6, tol=1e-9
+        )
+        return sorted(rows), stopped
+    if name == "k_core":
+        return sorted(k_core(e, k=2).collect())
+    if name == "label_propagation":
+        return sorted(label_propagation(e).collect())
+    if name == "bfs_distances":
+        seeds = spark.createDataFrame([(1,)], "vertex long")
+        return sorted(bfs_distances(e, seeds).collect())
+    if name == "flatten_hierarchy":
+        forest = spark.createDataFrame(
+            [] if empty else _FOREST, "node long, parent long"
+        )
+        return sorted(flatten_hierarchy(forest).collect())
+    if name == "connected_components":
+        nodes = e.select(F.col("u").alias("id")).union(e.select("v")).distinct()
+        return sorted(
+            connected_components(nodes, e, src_col="u", dst_col="v").collect()
+        )
+    assert name == "triangle_counts"
+    return sorted(triangle_counts(e).collect())
+
+
+_GATED = [
+    "pagerank",
+    "pagerank_converged",
+    "k_core",
+    "label_propagation",
+    "bfs_distances",
+    "flatten_hierarchy",
+]
+
+
+@pytest.mark.parametrize("name", _GATED)
+def test_sort_merge_path_matches_broadcast_path(spark, monkeypatch, name):
+    """With the node-count gate closed (``_BC_NODES_MAX = 0``) every gated
+    operator takes the unhinted join path at session width and returns
+    the broadcast path's result; both runs restore the shuffle width."""
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    a = {r.vertex: r.label for r in label_propagation(df, rounds=3).collect()}
+    broadcast = _op_result(spark, name)
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-    b = {
-        r.vertex: r.label
-        for r in label_propagation(df, rounds=3, broadcast_nodes_max=0).collect()
-    }
-    assert a == b
-
-
-def test_bfs_width_scope_restores_conf_and_matches_shuffle_path(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        bfs_distances,
-    )
-
-    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6)]
-    df = spark.createDataFrame(edges, "u long, v long")
-    seeds = spark.createDataFrame([(1,)], "vertex long")
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    a = {r.vertex: r.dist for r in bfs_distances(df, seeds).collect()}
+    monkeypatch.setattr(graph, "_BC_NODES_MAX", 0)
+    assert _op_result(spark, name) == broadcast
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-    b = {
-        r.vertex: r.dist
-        for r in bfs_distances(df, seeds, broadcast_nodes_max=0).collect()
-    }
-    assert a == b == {1: 0, 2: 1, 3: 2, 6: 2, 4: 3, 5: 4}
 
 
-def test_flatten_hierarchy_broadcast_gate_matches_shuffle_path(spark):
-    from big_data_analysis_of_airline_data_set_spark.operators.graph import (
-        flatten_hierarchy,
-    )
-
-    rows = [(1, None), (2, 1), (3, 2), (4, 3), (5, None), (6, 5)]
-    df = spark.createDataFrame(rows, "node long, parent long")
-    a = {r.node: (r.root, r.depth) for r in flatten_hierarchy(df).collect()}
-    b = {
-        r.node: (r.root, r.depth)
-        for r in flatten_hierarchy(df, broadcast_nodes_max=0).collect()
-    }
-    assert a == b
-    assert a[4] == (1, 3) and a[6] == (5, 1)
+@pytest.mark.parametrize(
+    "name", [*_GATED, "connected_components", "triangle_counts"]
+)
+def test_operator_on_empty_input(spark, name):
+    """Empty input gives an empty result — BFS keeps its seed at dist 0,
+    and pagerank_converged stops at iteration 0."""
+    want = {"bfs_distances": [(1, 0)], "pagerank_converged": ([], 0)}
+    assert _op_result(spark, name, empty=True) == want.get(name, [])
