@@ -183,7 +183,8 @@ SUITES: dict[str, list[str]] = {
         "events_seasonality_profile",
         "events_forecast_eval",
     ],
-    # plans/analytics_ops2.py
+    # plans/analytics_ops2.py, tpch_q3/q5 (plans/tpch.py) and two sink
+    # round trips (plans/patterns.py)
     "r6c_ops": [
         "tpch_q3_style",
         "tpch_q5_style",
@@ -198,8 +199,10 @@ SUITES: dict[str, list[str]] = {
         "sink_orc_roundtrip",
         "sink_jsonl_roundtrip",
     ],
-    # plans/analytics_ops3.py .. analytics_ops6.py: the adapted TPC-H
-    # shapes and the wave 7-10 analytics
+    # plans/tpch.py (all but Q1/Q3/Q5), then the analytics that landed
+    # beside those shapes: analytics_ops6.py .. analytics_ops9.py, seven
+    # queries now in statistics.py, content.py and events_queries.py,
+    # and join_bucketed_colocated (plans/patterns.py)
     "r6d_ops": [
         "tpch_q2_style",
         "tpch_q4_style",

@@ -28,6 +28,7 @@ _MODULES = [
         "relational2",
         "relational3",
         "patterns",
+        "tpch",
         "statistics",
         "ml_queries",
         "content",
@@ -38,9 +39,6 @@ _MODULES = [
         "multimodal_queries",
         "analytics_ops",
         "analytics_ops2",
-        "analytics_ops3",
-        "analytics_ops4",
-        "analytics_ops5",
         "analytics_ops6",
         "analytics_ops7",
         "analytics_ops8",
@@ -53,6 +51,8 @@ _WINDOW_SIZE = 50
 
 # Names whose plans this round changed; they re-prove first.
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "tpch_q3_style",
+    "tpch_q18_style",
     "graph_pagerank",
     "graph_pagerank_converged",
     "graph_k_core",

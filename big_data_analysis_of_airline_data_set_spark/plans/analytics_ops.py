@@ -31,9 +31,8 @@ from ..stats.regression import (
     WELCH_T,
 )
 from .patterns import _unpersist_quietly, hll_sql_parts
-from .spec import QuerySpec
+from .spec import US_DAY, US_HOUR, QuerySpec, day_bucket, day_bucket_sql
 
-_US_DAY = 86_400_000_000
 
 _HLL_P = 8
 
@@ -352,7 +351,7 @@ def q_events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         per.crossJoin(F.broadcast(anchor))
         .select(
             "user_id",
-            F.expr(f"(anchor_us - last_us) div {_US_DAY}").alias(
+            F.expr(f"(anchor_us - last_us) div {US_DAY}").alias(
                 "recency_days"
             ),
             "frequency",
@@ -415,7 +414,7 @@ WITH per AS (
 ), anc AS (SELECT max(last_us) AS anchor_us FROM per),
 base AS (
   SELECT user_id,
-         CAST((anchor_us - last_us) // {_US_DAY} AS BIGINT)
+         CAST((anchor_us - last_us) // {US_DAY} AS BIGINT)
            AS recency_days,
          frequency, monetary
   FROM per CROSS JOIN anc
@@ -605,7 +604,7 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_testdata_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
-        F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day"),
+        day_bucket("ts").alias("day"),
     ).agg(F.count(F.lit(1)).alias("n"))
     w_p = W.partitionBy("event_type")
     w_cum = (
@@ -635,7 +634,7 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_days").cast("long").alias("n_days"),
             F.col("n_events").cast("long").alias("n_events"),
             F.expr(
-                f"date_format(timestamp_micros(day * {_US_DAY}),"
+                f"date_format(timestamp_micros(day * {US_DAY}),"
                 " 'yyyy-MM-dd')"
             ).alias("change_day"),
             F.abs(F.col("s")).cast("long").alias("cusum_peak"),
@@ -654,7 +653,7 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CUSUM_ORACLE = f"""
 WITH daily AS (
   SELECT event_type,
-         epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
+         {day_bucket_sql('ts')} AS day,
          count(*) AS n
   FROM events GROUP BY 1, 2
 ), scored AS (
@@ -675,7 +674,7 @@ WITH daily AS (
 SELECT event_type,
        CAST(n_days AS BIGINT) AS n_days,
        CAST(n_events AS BIGINT) AS n_events,
-       strftime(make_timestamp(day * {_US_DAY}), '%Y-%m-%d') AS change_day,
+       strftime(make_timestamp(day * {US_DAY}), '%Y-%m-%d') AS change_day,
        CAST(abs(s) AS BIGINT) AS cusum_peak,
        round(CAST(abs(s) AS DOUBLE)
              / (CAST(n_days AS DOUBLE) * CAST(n_events AS DOUBLE)), 6)
@@ -1311,7 +1310,7 @@ def q_stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read is a one-column parquet scan (contrast events_forecast_eval,
     # whose re-referenced frame is the AGGREGATED daily series)
     days = e.select(
-        F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day"),
+        day_bucket("ts").alias("day"),
         (F.col("user_id") % 2).alias("arm"),
         "user_id",
         F.col("value").cast("decimal(18,6)").alias("v"),
@@ -1404,7 +1403,7 @@ _CUPED_RHO2 = f"({_CUPED_COV} * {_CUPED_COV} / ({_CUPED_VARX} * {_CUPED_VARY}))"
 def _cuped_oracle() -> str:
     return f"""
 WITH days AS (
-  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
+  SELECT {day_bucket_sql('ts')} AS day,
          user_id % 2 AS arm, user_id,
          CAST(value AS DECIMAL(18,6)) AS v
   FROM events WHERE value IS NOT NULL
@@ -1562,7 +1561,6 @@ FROM ranked
 
 # --------------------- calendar seasonality profile ---------------------
 
-_US_HOUR = 3_600_000_000
 
 
 def q_events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1576,8 +1574,8 @@ def q_events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_testdata_table(spark, sf_dir, "events")
     slots = e.groupBy(
         "event_type",
-        F.expr(f"(unix_micros(ts) div {_US_DAY} + 4) % 7").alias("dow"),
-        F.expr(f"(unix_micros(ts) div {_US_HOUR}) % 24").alias("hour"),
+        F.expr(f"(unix_micros(ts) div {US_DAY} + 4) % 7").alias("dow"),
+        F.expr(f"(unix_micros(ts) div {US_HOUR}) % 24").alias("hour"),
     ).agg(F.count(F.lit(1)).alias("n"))
     w_pick = W.partitionBy("event_type").orderBy(
         F.desc("n"), F.asc("dow"), F.asc("hour")
@@ -1607,8 +1605,8 @@ def q_events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEASONALITY_ORACLE = f"""
 WITH slots AS (
   SELECT event_type,
-         (epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} + 4) % 7 AS dow,
-         (epoch_us(CAST(ts AS TIMESTAMP)) // {_US_HOUR}) % 24 AS hour,
+         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_DAY} + 4) % 7 AS dow,
+         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_HOUR}) % 24 AS hour,
          count(*) AS n
   FROM events GROUP BY 1, 2, 3
 ), picked AS (
@@ -1649,7 +1647,7 @@ def q_events_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides) — one lazy checkpoint, or the event scan runs three times
     daily = e.groupBy(
         "event_type",
-        F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day"),
+        day_bucket("ts").alias("day"),
     ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=False)
     # calendar lags via self-joins on day-k, not lag() row windows: a
     # missing day must break the lag chain, and lag(7) over ROWS would
@@ -1716,7 +1714,7 @@ def q_events_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FORECAST_ORACLE = f"""
 WITH daily AS (
   SELECT event_type,
-         epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
+         {day_bucket_sql('ts')} AS day,
          count(*) AS n
   FROM events GROUP BY 1, 2
 ), lagged AS (

@@ -1,16 +1,14 @@
-"""Decision-support analytics catalog, wave 5: multi-way star joins,
-Pareto skyline, closed-form 2-D PCA, engagement stickiness, and
-calendar gap-fill with linear interpolation.
+"""Decision-support analytics catalog: Pareto skyline, closed-form 2-D
+PCA, weighted median, engagement stickiness, calendar gap-fill with
+linear interpolation, and the per-user sequential folds (clamped
+balance, Holt smoothing, max drawdown).
 
-No reference analogue (the reference's relational surface has zero
-joins — mosama1994 Scripts/1-2 are single-table; these are engine
-surface per the brief). Catalog contract as everywhere: Spark-first
-plans with a DuckDB oracle replaying identical arithmetic — decimal
-accumulation for order-independent sums, IEEE-identical float
-division, round(6) on statistics.
-
-All six entries enter the correctness window by ledger age
-(see ``plans/__init__.correctness_window``).
+No reference analogue (mosama1994 Scripts/1-2 are single-table).
+Catalog contract as everywhere: Spark-first plans with a DuckDB oracle
+replaying identical arithmetic — decimal accumulation for
+order-independent sums, IEEE-identical float division, round(6) on
+statistics. All eight entries enter the correctness window by ledger
+age (see ``plans/__init__.correctness_window``).
 """
 
 from __future__ import annotations
@@ -21,140 +19,8 @@ from pyspark.sql.window import Window as W
 
 from ..operators.skyline import skyline_2d
 from ..sources.readers import read_testdata_table
-from .spec import QuerySpec
+from .spec import QuerySpec, day_bucket, day_bucket_sql
 
-_US_DAY = 86_400_000_000
-
-
-# --------------------- TPC-H Q3-style star join ---------------------
-
-
-def q_tpch_q3_style(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unshipped-revenue top-10: customer(segment) ⨝ orders(date) ⨝
-    lineitem(date), grouped on the order, ranked by revenue.
-
-    Scale shape: both fact filters reach the parquet scans (pushed
-    predicates); the customer side collapses to a filtered single
-    column before joining, so AQE's runtime size estimate sees the
-    small build side and plans a broadcast-hash join for it at any SF
-    where it fits, falling back to shuffle-hash beyond — exactly the
-    decision we want made at runtime, not hard-coded. orders ⨝
-    lineitem co-partitions on the order key (one shuffle each), and
-    the final top-10 is a TakeOrdered, not a global sort."""
-    cutoff = F.lit("1998-06-30").cast("timestamp")
-    cust = (
-        read_testdata_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = read_testdata_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < cutoff
-    )
-    li = read_testdata_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > cutoff
-    )
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    one_minus_d = (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy(
-            "o_orderkey",
-            (F.unix_micros(F.col("o_orderdate")) / F.lit(_US_DAY))
-            .cast("long")
-            .alias("o_orderdate_day"),
-            "o_orderpriority",
-        )
-        .agg(F.sum(price * one_minus_d).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-_Q3_ORACLE = f"""
-SELECT o_orderkey,
-       epoch_us(CAST(o_orderdate AS TIMESTAMP)) // {_US_DAY} AS o_orderdate_day,
-       o_orderpriority,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                * CAST(1.0 - l_discount AS DECIMAL(4,2))) AS DOUBLE)
-         AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-06-30 00:00:00'
-  AND l_shipdate > TIMESTAMP '1998-06-30 00:00:00'
-GROUP BY 1, 2, 3
-ORDER BY revenue DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
-# --------------------- TPC-H Q5-style 6-way join ---------------------
-
-
-def q_tpch_q5_style(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local-supplier revenue by nation inside one region — the 6-way
-    join with the c_nationkey = s_nationkey locality predicate.
-
-    Scale shape: region ⨝ nation is O(10²) rows at ANY scale factor —
-    broadcast explicitly (no estimate needed). The locality predicate
-    rides the supplier join as a second equi-key, so it participates
-    in the hash join instead of becoming a post-join filter. The two
-    fact joins (orders on order key, supplier on supp key) are the
-    only shuffles; the date filter is pushed to the orders scan."""
-    lo = F.lit("1996-01-01").cast("timestamp")
-    hi = F.lit("1999-01-01").cast("timestamp")
-    nations = (
-        read_testdata_table(spark, sf_dir, "region")
-        .filter(F.col("r_name") == "ASIA")
-        .join(
-            read_testdata_table(spark, sf_dir, "nation"),
-            F.col("r_regionkey") == F.col("n_regionkey"),
-        )
-        .select("n_nationkey", "n_name")
-    )
-    cust = read_testdata_table(spark, sf_dir, "customer").join(
-        F.broadcast(nations), F.col("c_nationkey") == F.col("n_nationkey")
-    ).select("c_custkey", "c_nationkey", "n_name")
-    orders = read_testdata_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi)
-    )
-    li = read_testdata_table(spark, sf_dir, "lineitem")
-    sup = read_testdata_table(spark, sf_dir, "supplier")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    one_minus_d = (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(
-            sup,
-            (li.l_suppkey == sup.s_suppkey)
-            & (F.col("c_nationkey") == sup.s_nationkey),
-        )
-        .groupBy("n_name")
-        .agg(F.sum(price * one_minus_d).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
-    )
-
-
-_Q5_ORACLE = """
-SELECT n_name,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                * CAST(1.0 - l_discount AS DECIMAL(4,2))) AS DOUBLE)
-         AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name ASC
-"""
 
 
 # --------------------- 2-D Pareto skyline ---------------------
@@ -296,7 +162,7 @@ def q_events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both branches prune to the same three columns at the source
     keyed = e.select(
         "event_type",
-        F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day"),
+        day_bucket("ts").alias("day"),
         "user_id",
     ).withColumn("week", F.expr("day div 7"))
     daily = (
@@ -333,8 +199,8 @@ def q_events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STICKINESS_ORACLE = f"""
 WITH keyed AS (
   SELECT event_type,
-         epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
-         (epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY}) // 7 AS week,
+         {day_bucket_sql('ts')} AS day,
+         ({day_bucket_sql('ts')}) // 7 AS week,
          user_id
   FROM events
 ), daily AS (
@@ -379,7 +245,7 @@ def q_events_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame
     # the daily aggregate feeds two plan references (span + calendar
     # join) — one lazy checkpoint or the raw event scan runs twice
     daily = e.groupBy(
-        "user_id", F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day")
+        "user_id", day_bucket("ts").alias("day")
     ).agg(
         F.sum(F.round(F.col("value"), 6).cast("decimal(18,6)"))
         .cast("double")
@@ -426,7 +292,7 @@ def q_events_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame
 _INTERP_ORACLE = f"""
 WITH daily AS (
   SELECT user_id,
-         epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
+         {day_bucket_sql('ts')} AS day,
          CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE) AS v
   FROM events GROUP BY 1, 2
 ), span AS (
@@ -486,7 +352,7 @@ def q_events_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     running peak carried in the same fold."""
     e = read_testdata_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "user_id", F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day")
+        "user_id", day_bucket("ts").alias("day")
     ).agg(
         (
             F.sum(F.round(F.col("value"), 6).cast("decimal(18,6)"))
@@ -524,7 +390,7 @@ def q_events_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLAMPED_ORACLE = f"""
 WITH daily AS (
   SELECT user_id,
-         epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
+         {day_bucket_sql('ts')} AS day,
          CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE)
            - {_BURN!r} AS dv
   FROM events GROUP BY 1, 2
@@ -556,7 +422,7 @@ def q_events_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-component state rides a struct accumulator."""
     e = read_testdata_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "event_type", F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day")
+        "event_type", day_bucket("ts").alias("day")
     ).agg(F.count(F.lit(1)).cast("double").alias("nd"))
     series = daily.groupBy("event_type").agg(
         F.sort_array(F.collect_list(F.struct("day", "nd"))).alias("xs")
@@ -599,7 +465,7 @@ def q_events_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOLT_ORACLE = f"""
 WITH daily AS (
   SELECT event_type,
-         epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
+         {day_bucket_sql('ts')} AS day,
          CAST(count(*) AS DOUBLE) AS nd
   FROM events GROUP BY 1, 2
 ), series AS (
@@ -636,7 +502,7 @@ def q_events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-identical); floats appear only at the rounded output."""
     e = read_testdata_table(spark, sf_dir, "events")
     daily = e.groupBy(
-        "user_id", F.expr(f"unix_micros(ts) div {_US_DAY}").alias("day")
+        "user_id", day_bucket("ts").alias("day")
     ).agg(
         (
             F.sum(F.round(F.col("value"), 6).cast("decimal(18,6)"))
@@ -663,7 +529,7 @@ def q_events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DRAWDOWN_ORACLE = f"""
 WITH daily AS (
   SELECT user_id,
-         epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY} AS day,
+         {day_bucket_sql('ts')} AS day,
          SUM(CAST(round(value, 6) AS DECIMAL(18,6)))
            - CAST({_BURN!r} AS DECIMAL(18,6)) AS dv
   FROM events GROUP BY 1, 2
@@ -729,18 +595,6 @@ ORDER BY l_returnflag
 
 
 QUERIES = [
-    QuerySpec(
-        "tpch_q3_style",
-        q_tpch_q3_style,
-        _Q3_ORACLE,
-        "Segment/date-filtered 3-way star join, top-10 by revenue",
-    ),
-    QuerySpec(
-        "tpch_q5_style",
-        q_tpch_q5_style,
-        _Q5_ORACLE,
-        "6-way local-supplier revenue join with broadcast dims",
-    ),
     QuerySpec(
         "skyline_dominance",
         q_skyline_dominance,

@@ -20,10 +20,8 @@ from ..functions.ab_assignment import (
     md5_parity_arm_sql as _arm_sql,
 )
 from ..sources.readers import read_testdata_table
-from .spec import QuerySpec
+from .spec import US_DAY, US_SEC, QuerySpec
 
-_US_DAY = 86_400_000_000
-_US_SEC = 1_000_000
 
 # (z_{0.975} + z_{0.80})² for the two-sided α=0.05, power=0.80 design
 # — a transcendental-free literal pinned in Python and shipped
@@ -76,13 +74,13 @@ def q_events_funnel_ttc(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap_vc = c.select(
         F.lit("view_to_click").alias("stage"),
         F.expr(
-            f"(unix_micros(t2) - unix_micros(t1k)) div {_US_SEC}"
+            f"(unix_micros(t2) - unix_micros(t1k)) div {US_SEC}"
         ).alias("gap_s"),
     )
     gap_cp = p.select(
         F.lit("click_to_purchase").alias("stage"),
         F.expr(
-            f"(unix_micros(t3) - unix_micros(t2k)) div {_US_SEC}"
+            f"(unix_micros(t3) - unix_micros(t2k)) div {US_SEC}"
         ).alias("gap_s"),
     )
     # gaps feeds the median operator (3 refs internally) AND the
@@ -123,12 +121,12 @@ p AS (SELECT e.user_id, min(e.ts) AS t3, min(c.t2) AS t2k FROM events e
 gaps AS (
   SELECT 'view_to_click' AS stage,
          (epoch_us(CAST(t2 AS TIMESTAMP))
-          - epoch_us(CAST(t1k AS TIMESTAMP))) // {_US_SEC} AS gap_s
+          - epoch_us(CAST(t1k AS TIMESTAMP))) // {US_SEC} AS gap_s
   FROM c
   UNION ALL
   SELECT 'click_to_purchase',
          (epoch_us(CAST(t3 AS TIMESTAMP))
-          - epoch_us(CAST(t2k AS TIMESTAMP))) // {_US_SEC}
+          - epoch_us(CAST(t2k AS TIMESTAMP))) // {US_SEC}
   FROM p
 ), cum AS (
   SELECT stage, gap_s,
@@ -249,7 +247,7 @@ def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_testdata_table(spark, sf_dir, "events")
     keyed = ev.select(
         "user_id",
-        F.expr(f"(unix_micros(ts) div {_US_DAY}) div 7").alias("week"),
+        F.expr(f"(unix_micros(ts) div {US_DAY}) div 7").alias("week"),
         F.round(F.col("value"), 6).cast("decimal(18,6)").alias("v"),
     )
     first = keyed.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
@@ -290,7 +288,7 @@ def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LTV_ORACLE = f"""
 WITH keyed AS (
   SELECT user_id,
-         (epoch_us(CAST(ts AS TIMESTAMP)) // {_US_DAY}) // 7 AS week,
+         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_DAY}) // 7 AS week,
          CAST(round(value, 6) AS DECIMAL(18,6)) AS v
   FROM events
 ), first AS (

@@ -16,9 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..sources.readers import read_testdata_table
-from .spec import QuerySpec
+from .spec import US_SEC, QuerySpec
 
-_US_SEC = 1_000_000
 
 
 # ------------- event-time disorder audit -------------
@@ -72,12 +71,12 @@ def q_events_disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count(F.lit(1)).cast("double"),
                 6,
             ).alias("late_frac"),
-            (F.max("late_us") / F.lit(_US_SEC))
+            (F.max("late_us") / F.lit(US_SEC))
             .cast("double")
             .alias("max_lateness_s"),
             F.round(
                 F.sum("late_us").cast("double")
-                / F.lit(float(_US_SEC))
+                / F.lit(float(US_SEC))
                 / F.count(F.lit(1)).cast("double"),
                 6,
             ).alias("mean_lateness_s"),
@@ -106,8 +105,8 @@ SELECT event_type,
          AS n_late,
        round(CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(count(*) AS DOUBLE), 6) AS late_frac,
-       CAST(max(late_us) AS DOUBLE) / {float(_US_SEC)!r} AS max_lateness_s,
-       round(CAST(SUM(late_us) AS DOUBLE) / {float(_US_SEC)!r}
+       CAST(max(late_us) AS DOUBLE) / {float(US_SEC)!r} AS max_lateness_s,
+       round(CAST(SUM(late_us) AS DOUBLE) / {float(US_SEC)!r}
              / CAST(count(*) AS DOUBLE), 6) AS mean_lateness_s
 FROM lat
 GROUP BY event_type

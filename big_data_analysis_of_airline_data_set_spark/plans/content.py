@@ -8,7 +8,11 @@ Oracle design notes:
   list_cosine_similarity) → full value checks;
 - MinHash-LSH / SimHash / LSH-ANN are engine-specific (xxhash64, MLlib
   hash families) → rows-only here, with recall/property tests in
-  tests/test_content.py.
+  tests/test_content.py;
+- per-label centroids sum coordinates quantized to DECIMAL(18,6);
+  k-means assignment and the product-quantization codebook quantize
+  to integer micro-units (``operators/vector_quant.py``), so their
+  distances and argmins are exact BIGINTs in both engines.
 """
 
 from __future__ import annotations
@@ -1738,6 +1742,264 @@ FROM documents d LEFT JOIN per USING (doc_id)
 """
 
 
+# ------------- embedding label centroids -------------
+
+
+def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label centroid of the 64-d embedding column: vector count,
+    centroid L2 norm, and the first coordinate of the mean vector.
+
+    Scale shape: posexplode fans each vector into 64 (label, dim)
+    cells, then ONE hash aggregation (map-side combined on
+    label × dim — bounded keys) produces the per-dimension sums; the
+    second aggregation folds 64 rows per label. Float32 values widen
+    exactly to double, quantize at 6 dp into DECIMAL for
+    order-independent sums, and the means re-quantize before the
+    norm's square-sum so both engines square identical decimals."""
+    emb = read_testdata_table(spark, sf_dir, "embeddings")
+    ex = emb.select(
+        "label", F.posexplode("embedding").alias("pos", "v")
+    )
+    dim = ex.groupBy("label", "pos").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.round(F.col("v").cast("double"), 6).cast("decimal(18,6)")
+        ).alias("s"),
+    )
+    mean = dim.select(
+        "label",
+        "pos",
+        "n",
+        (F.col("s").cast("double") / F.col("n").cast("double")).alias("m"),
+    )
+    mq = F.round(F.col("m"), 6).cast("decimal(18,6)")
+    return (
+        mean.groupBy("label")
+        .agg(
+            F.max("n").cast("long").alias("n_vectors"),
+            F.round(
+                F.sqrt(F.sum(mq * mq).cast("double")), 6
+            ).alias("centroid_norm"),
+            F.min(F.when(F.col("pos") == 0, F.round(F.col("m"), 6))).alias(
+                "mean_dim0"
+            ),
+        )
+        .orderBy("label")
+    )
+
+
+_CENTROID_ORACLE = """
+WITH ex AS (
+  SELECT label, u.i - 1 AS pos, embedding[u.i] AS v
+  FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(i)
+), dim AS (
+  SELECT label, pos, count(*) AS n,
+         SUM(CAST(round(CAST(v AS DOUBLE), 6) AS DECIMAL(18,6))) AS s
+  FROM ex GROUP BY 1, 2
+), mean AS (
+  SELECT label, pos, n,
+         CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS m
+  FROM dim
+)
+SELECT label,
+       CAST(max(n) AS BIGINT) AS n_vectors,
+       round(sqrt(CAST(SUM(CAST(round(m, 6) AS DECIMAL(18,6))
+                           * CAST(round(m, 6) AS DECIMAL(18,6)))
+                       AS DOUBLE)), 6) AS centroid_norm,
+       min(CASE WHEN pos = 0 THEN round(m, 6) END) AS mean_dim0
+FROM mean
+GROUP BY label
+ORDER BY label
+"""
+
+
+# ------------- fixed-seed k-means assignment -------------
+
+
+def q_embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One k-means assignment pass: every embedding goes to the
+    nearest of 8 fixed seed centroids (the 8 lowest vec_ids), with
+    per-cluster size and mean squared distance.
+
+    Engine parity: coordinates quantize to integer micro-units
+    (operators/vector_quant.py:quantize_micro — exact in BIGINT), so
+    squared distances are EXACT integers and the argmin is a
+    deterministic (d², cid) struct-min — no float comparison
+    anywhere until the reported mean. Scale shape: the 8 centroids
+    broadcast; the distance fold is a codegen zip_with/aggregate
+    over each row's array (no 64× explode, no Python UDF); one hash
+    agg per cluster ends it."""
+    from ..operators.vector_quant import quantize_micro, squared_distance
+
+    emb = read_testdata_table(spark, sf_dir, "embeddings")
+    vecs = emb.select(
+        "vec_id", quantize_micro(F.col("embedding")).alias("vq")
+    )
+    cents = (
+        emb.orderBy("vec_id")
+        .limit(8)
+        .select(
+            F.col("vec_id").alias("cid"),
+            quantize_micro(F.col("embedding")).alias("cq"),
+        )
+    )
+    d2 = squared_distance(F.col("vq"), F.col("cq"))
+    best = (
+        vecs.crossJoin(F.broadcast(cents))
+        .select("vec_id", F.struct(d2.alias("d2"), F.col("cid")).alias("s"))
+        .groupBy("vec_id")
+        .agg(F.min("s").alias("s"))
+    )
+    return (
+        best.groupBy(F.col("s.cid").alias("cid"))
+        .agg(
+            F.count(F.lit(1)).alias("n_assigned"),
+            F.round(
+                F.sum(F.col("s.d2")).cast("double")
+                / F.lit(1e12)
+                / F.count(F.lit(1)).cast("double"),
+                6,
+            ).alias("mean_sq_dist"),
+        )
+        .orderBy("cid")
+    )
+
+
+_KMEANS_ORACLE = """
+WITH q AS (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))
+           AS vq
+  FROM embeddings
+), cents AS (
+  SELECT vec_id AS cid, vq AS cq FROM q ORDER BY vec_id LIMIT 8
+), pairs AS (
+  SELECT vec_id, cid,
+         CAST(list_sum(list_transform(generate_series(1, len(vq)),
+              i -> (vq[i] - cq[i]) * (vq[i] - cq[i]))) AS BIGINT) AS d2
+  FROM q, cents
+), best AS (
+  SELECT vec_id, d2, cid,
+         row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+  FROM pairs
+)
+SELECT cid, count(*) AS n_assigned,
+       round(CAST(SUM(d2) AS DOUBLE) / 1e12 / CAST(count(*) AS DOUBLE), 6)
+         AS mean_sq_dist
+FROM best WHERE rn = 1
+GROUP BY cid
+ORDER BY cid
+"""
+
+
+# ------------- product-quantization codebook assignment -------------
+
+
+def q_embedding_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization assignment pass: the 64-d embedding
+    splits into 8 contiguous 8-d subspaces; in each subspace every
+    sub-vector goes to the nearest of 4 seed sub-centroids (from the
+    4 lowest vec_ids). Reports per-(subspace, centroid) occupancy
+    and mean quantization error — the codebook half of an IVF-PQ
+    index, whose 8-byte codes replace 256-byte vectors at serving
+    time.
+
+    Engine parity: the same shared integer micro-unit quantization
+    as embedding_kmeans_assign
+    (operators/vector_quant.py:quantize_micro) — distances are EXACT
+    BIGINTs, argmin is a (d², cid) struct-min. Scale shape: the
+    subspace split is a codegen transform over a sequence literal
+    (8 structs per row, not 64 exploded cells); 32 centroid
+    sub-vectors broadcast; one hash agg on (subspace, cid) ends
+    it."""
+    from ..operators.vector_quant import quantize_micro, squared_distance
+
+    emb = read_testdata_table(spark, sf_dir, "embeddings")
+
+    def subspaces(qcol, out_sub, out_arr):
+        # 8 subspaces of 8 dims: slice(j*8+1, 8) for j in 0..7
+        return F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(7)),
+                lambda j: F.slice(qcol, j * F.lit(8) + F.lit(1), F.lit(8)),
+            )
+        ).alias(out_sub, out_arr)
+
+    vecs = emb.select(
+        "vec_id", subspaces(quantize_micro(F.col("embedding")), "sub", "vq")
+    )
+    cents = (
+        emb.orderBy("vec_id")
+        .limit(4)
+        .select(
+            F.col("vec_id").alias("cid"),
+            subspaces(quantize_micro(F.col("embedding")), "csub", "cq"),
+        )
+    )
+    d2 = squared_distance(F.col("vq"), F.col("cq"))
+    best = (
+        vecs.join(F.broadcast(cents), F.col("sub") == F.col("csub"))
+        .select(
+            "vec_id",
+            "sub",
+            F.struct(d2.alias("d2"), F.col("cid")).alias("s"),
+        )
+        .groupBy("vec_id", "sub")
+        .agg(F.min("s").alias("s"))
+    )
+    return (
+        best.groupBy(
+            F.col("sub").cast("long").alias("sub"),
+            F.col("s.cid").alias("cid"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_assigned"),
+            F.round(
+                F.sum(F.col("s.d2")).cast("double")
+                / F.lit(1e12)
+                / F.count(F.lit(1)).cast("double"),
+                6,
+            ).alias("mean_sq_err"),
+        )
+        .orderBy("sub", "cid")
+    )
+
+
+_PQ_ORACLE = """
+WITH q AS (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))
+           AS vq
+  FROM embeddings
+), sub AS (
+  SELECT vec_id, j.s AS sub, vq[j.s * 8 + 1 : j.s * 8 + 8] AS sq
+  FROM q, unnest(generate_series(0, 7)) AS j(s)
+), cents AS (
+  SELECT vec_id AS cid, sub AS csub, sq AS cq
+  FROM sub WHERE vec_id IN (SELECT vec_id FROM q ORDER BY vec_id LIMIT 4)
+), pairs AS (
+  SELECT s.vec_id, s.sub, c.cid,
+         CAST(list_sum(list_transform(generate_series(1, 8),
+              i -> (s.sq[i] - c.cq[i]) * (s.sq[i] - c.cq[i]))) AS BIGINT)
+           AS d2
+  FROM sub s JOIN cents c ON s.sub = c.csub
+), best AS (
+  SELECT vec_id, sub, d2, cid,
+         row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid)
+           AS rn
+  FROM pairs
+)
+SELECT sub, cid, count(*) AS n_assigned,
+       round(CAST(SUM(d2) AS DOUBLE) / 1e12 / CAST(count(*) AS DOUBLE), 6)
+         AS mean_sq_err
+FROM best WHERE rn = 1
+GROUP BY sub, cid
+ORDER BY sub, cid
+"""
+
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "text_quality_classifier", q_text_quality_classifier,
@@ -1924,5 +2186,23 @@ QUERIES: list[QuerySpec] = [
     QuerySpec(
         "multimodal_frame_sample", q_multimodal_frame_sample, _FRAME_SAMPLE_ORACLE,
         "uniform frame sampling over binary payloads (1 row -> k rows, mapInPandas)",
+    ),
+    QuerySpec(
+        "embedding_label_centroids",
+        q_embedding_label_centroids,
+        _CENTROID_ORACLE,
+        "Per-label centroid norms via decimal-exact dimension sums",
+    ),
+    QuerySpec(
+        "embedding_kmeans_assign",
+        q_embedding_kmeans_assign,
+        _KMEANS_ORACLE,
+        "Integer-exact nearest-centroid assignment, 8 fixed seeds",
+    ),
+    QuerySpec(
+        "embedding_pq_codebook",
+        q_embedding_pq_codebook,
+        _PQ_ORACLE,
+        "Product-quantization assignment, integer-exact argmin",
     ),
 ]

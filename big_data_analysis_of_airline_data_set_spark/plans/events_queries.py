@@ -8,12 +8,17 @@ result equals the batch plan — the batch oracle doubles as a hard
 check on the streaming runtime (micro-batch scheduling, watermark
 bookkeeping, state store). Further streaming behavior (update mode,
 late-data drops, stateful dedup) stays in tests/test_streaming*.py —
-those runtimes are inherently non-SQL-expressible.
+those runtimes are inherently non-SQL-expressible. The batch
+per-user features (calendar lag, trailing-week RANGE mean, inter-event
+gap statistics) work on exact integer micros and whole days from the
+kit in ``spec.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from ..caching import BoundedCache
 from ..sources.readers import read_testdata_table
@@ -23,7 +28,7 @@ from ..streaming.windows import (
     sliding_counts,
     tumbling_counts,
 )
-from .spec import QuerySpec
+from .spec import US_HOUR, US_SEC, QuerySpec, day_bucket, day_bucket_sql
 
 
 def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,13 +353,11 @@ def q_hll_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup, anchors) — a lazy localCheckpoint computes the events scan
     once (round-6 review catch; the same shared-frame pattern as
     resample_ffill)."""
-    from pyspark.sql import functions as F
-
     from ..sketches.hll import hll_estimate, hll_registers, hll_trailing_merge
 
     base = read_testdata_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("unix_micros(ts) div 3600000000").alias("hour_bucket"),
+        F.expr(f"unix_micros(ts) div {US_HOUR}").alias("hour_bucket"),
         F.col("user_id").cast("string").alias("val"),
     ).localCheckpoint(eager=False)
     regs = hll_registers(
@@ -411,7 +414,7 @@ def _hll_sliding_oracle() -> str:
     return f"""
 WITH base AS (
   SELECT event_type,
-         epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hour_bucket,
+         epoch_us(CAST(ts AS TIMESTAMP)) // {US_HOUR} AS hour_bucket,
          CAST(user_id AS VARCHAR) AS val
   FROM events
 ), hashed AS (
@@ -477,8 +480,6 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch by the SAME heavy_hitters_report the batch catalog entry
     uses. Oracle = full batch md5 replay: incremental count
     maintenance must converge to exactly the batch sketch."""
-    from pyspark.sql import functions as F
-
     from ..sketches.countmin import heavy_hitters_report
     from ..streaming.jobs import run_cms_sketch_stream_available_now
 
@@ -532,8 +533,6 @@ def q_spacesaving_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracked key; D·(m+1) ≤ n), plus stream-vs-batch row-count
     equality — the ml_*_banded evidentiary pattern: booleans oracled
     as constants, counts oracled exactly."""
-    from pyspark.sql import functions as F
-
     from ..sketches.spacesaving import (
         ITEM_SQL,
         spacesaving_invariants_report,
@@ -607,11 +606,8 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (next-action prediction, anomaly scoring against the matrix).
     One window shuffle on user_id + one pair aggregate; probabilities
     are exact-count ratios rounded at display."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     ev = read_testdata_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     pairs = (
         ev.select("user_id", "ts", "event_id", "event_type")
         .withColumn("next_type", F.lead("event_type").over(w))
@@ -622,7 +618,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    wf = Window.partitionBy("from_type")
+    wf = W.partitionBy("from_type")
     return pairs.select(
         "from_type",
         "to_type",
@@ -681,8 +677,6 @@ def q_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream is broadcast-joined per micro-batch to the customer
     dimension (stateless), then window-aggregated per market segment
     (the only stateful operator). Oracled ≡ the batch join+window."""
-    from pyspark.sql import functions as F
-
     from ..sources.readers import read_testdata_table
     from ..streaming.jobs import run_enrich_stream_available_now
 
@@ -721,8 +715,6 @@ def q_upsert_sink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     = 4 forces MULTIPLE merge generations over the landed directory,
     so the cross-batch upsert path executes, not just the first-batch
     bootstrap."""
-    from pyspark.sql import functions as F
-
     from ..streaming.jobs import run_upsert_sink_stream_available_now
 
     out = run_upsert_sink_stream_available_now(
@@ -827,8 +819,6 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_interval_join) followed by one min/max aggregate per
     purchase — no window function, no unbounded state; deterministic
     because (c_ts, click_id) ordering is total."""
-    from pyspark.sql import functions as F
-
     ev = read_testdata_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
@@ -878,8 +868,6 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes to ≤7 window days via a generated-sequence explode, and
     the per-day distinct count partially aggregates map-side. No
     self-join over raw events, no unbounded window frame."""
-    from pyspark.sql import functions as F
-
     ev = read_testdata_table(spark, sf_dir, "events")
     user_days = ev.select(
         F.to_date("ts").alias("day"), "user_id"
@@ -964,8 +952,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked stream-stream join (tests/test_streaming_join.py runs
     the same predicate as a real stream-stream join)."""
     ev = read_testdata_table(spark, sf_dir, "events")
-    from pyspark.sql import functions as F
-
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
     )
@@ -1016,8 +1002,6 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-user frames shrink to ≤ |users| rows after the first aggregate,
     so the step joins broadcast — at 100 TB the only big-data pass is
     the three filtered scans feeding the first groupBys."""
-    from pyspark.sql import functions as F
-
     ev = read_testdata_table(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
@@ -1071,8 +1055,6 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     it a single aggregate pass (no global min/max pre-scan), which is
     the right shape at scale — adaptive bounds would cost a second
     full read."""
-    from pyspark.sql import functions as F
-
     ev = read_testdata_table(spark, sf_dir, "events")
     bucket = F.width_bucket(F.col("value"), F.lit(0.0), F.lit(500.0), F.lit(10))
     return ev.groupBy(bucket.cast("long").alias("bucket")).agg(
@@ -1104,8 +1086,6 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     each later active day (day_offset). The distinct collapses events to
     ≤ |users|·|days| rows before the cohort join, which then
     broadcasts."""
-    from pyspark.sql import functions as F
-
     ev = read_testdata_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).alias("cohort_day")
@@ -1148,8 +1128,6 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the telemetry gap-repair op. is_gap marks carried-forward rows, so
     the oracle (grid via generate_series + IGNORE NULLS last_value)
     verifies both the grid construction and the fill values."""
-    from pyspark.sql import functions as F
-
     from ..operators.timeseries import resample_ffill
 
     ev = read_testdata_table(spark, sf_dir, "events")
@@ -1199,9 +1177,6 @@ def q_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     into two windows + a groupBy, no self-join, no iteration. Output:
     per user, number of streaks, longest streak, and the longest
     streak's start day (ties → earliest)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
     ev = read_testdata_table(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.to_date("ts").alias("day")
@@ -1260,9 +1235,6 @@ def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     value·dt accumulates in DECIMAL (the proven tumbling_counts
     discipline), one division at the end. One window + one aggregate;
     the window key is the series key, so no global sort."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
     ev = read_testdata_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     dt = (
@@ -1306,9 +1278,6 @@ def q_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     history per day (quadratic); the scalable identity is
     first-seen-day per user (one agg) → new users per day (one agg) →
     running sum (one ordered window over day-sized rows)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
     ev = read_testdata_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.to_date(F.min("ts")).alias("day")
@@ -1353,9 +1322,6 @@ def q_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic grid variant, stated: a re-anchoring splitter is
     order-sequential and not SQL-replayable). Output: per user,
     session count and the longest session's event count."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
     ev = read_testdata_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
@@ -1427,9 +1393,6 @@ def q_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ordered-collect semantics via sort_array over (ts, event_id, type)
     structs (struct sort is lexicographic on field order, so the path
     order is total and engine-replayable via string_agg ORDER BY)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
     ev = read_testdata_table(spark, sf_dir, "events")
     rn = F.row_number().over(W.partitionBy("user_id").orderBy("ts", "event_id"))
     first_k = ev.select("user_id", "ts", "event_id", "event_type").withColumn(
@@ -1466,6 +1429,144 @@ WITH ranked AS (
 )
 SELECT path, CAST(count(*) AS BIGINT) AS n_users
 FROM paths GROUP BY path
+"""
+
+
+# ------------- per-user calendar lag / rolling features -------------
+
+
+def q_events_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user daily feature frame for model training: previous
+    CALENDAR day's spend (NULL across gaps, not the previous row's)
+    and the trailing-7-calendar-day mean via a RANGE window.
+
+    Scale shape: everything partitions by user — state is one user's
+    bounded day series; the RANGE frame makes the trailing week a
+    calendar semantics, not a row count, with no gap-fill explode
+    needed. Daily sums quantize to DECIMAL(18,6) and the rolling
+    mean divides exact decimal sums, so floats appear only in the
+    rounded outputs."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    daily = e.groupBy(
+        "user_id", day_bucket("ts").alias("day")
+    ).agg(
+        F.sum(F.round(F.col("value"), 6).cast("decimal(18,6)")).alias("v")
+    )
+    row_w = W.partitionBy("user_id").orderBy("day")
+    range_w = (
+        W.partitionBy("user_id").orderBy("day").rangeBetween(-6, 0)
+    )
+    prev_day = F.lag("day").over(row_w)
+    prev_v = F.lag("v").over(row_w)
+    return daily.select(
+        "user_id",
+        "day",
+        F.col("v").cast("double").alias("value"),
+        F.when(prev_day == F.col("day") - 1, prev_v)
+        .cast("double")
+        .alias("lag1"),
+        F.count(F.lit(1)).over(range_w).alias("n7"),
+        F.round(
+            F.sum("v").over(range_w).cast("double")
+            / F.count(F.lit(1)).over(range_w).cast("double"),
+            6,
+        ).alias("avg7"),
+    )
+
+
+_LAG_ORACLE = f"""
+WITH daily AS (
+  SELECT user_id,
+         {day_bucket_sql('ts')} AS day,
+         SUM(CAST(round(value, 6) AS DECIMAL(18,6))) AS v
+  FROM events GROUP BY 1, 2
+)
+SELECT user_id, day,
+       CAST(v AS DOUBLE) AS value,
+       CAST(CASE WHEN lag(day) OVER w = day - 1
+                 THEN lag(v) OVER w END AS DOUBLE) AS lag1,
+       count(*) OVER r AS n7,
+       round(CAST(SUM(v) OVER r AS DOUBLE)
+             / CAST(count(*) OVER r AS DOUBLE), 6) AS avg7
+FROM daily
+WINDOW w AS (PARTITION BY user_id ORDER BY day),
+       r AS (PARTITION BY user_id ORDER BY day
+             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+"""
+
+
+# ------------- inter-event gap statistics -------------
+
+
+def q_events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type inter-arrival statistics from each user's
+    consecutive events: gap count, mean/max gap in seconds, and the
+    share of gaps longer than one hour (the inputs to a session-gap
+    threshold choice).
+
+    Engine parity: gaps are exact integer micros (BIGINT
+    difference of unix_micros), summed exactly; ties on ts break on
+    event_id so the sequence is engine-deterministic; only the mean
+    and share divide as floats, rounded to 6."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    gaps = (
+        e.select(
+            "user_id",
+            "event_type",
+            "event_id",
+            "ts",
+            F.unix_micros(F.col("ts")).alias("us"),
+        )
+        .withColumn("next_us", F.lead("us").over(w))
+        .filter(F.col("next_us").isNotNull())
+        .withColumn("gap_us", F.col("next_us") - F.col("us"))
+    )
+    return (
+        gaps.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_gaps"),
+            F.round(
+                F.sum("gap_us").cast("double")
+                / F.lit(float(US_SEC))
+                / F.count(F.lit(1)).cast("double"),
+                6,
+            ).alias("mean_gap_s"),
+            (F.max("gap_us") / F.lit(US_SEC))
+            .cast("double")
+            .alias("max_gap_s"),
+            F.round(
+                F.sum(
+                    (F.col("gap_us") > US_HOUR).cast("long")
+                ).cast("double")
+                / F.count(F.lit(1)).cast("double"),
+                6,
+            ).alias("share_gt_1h"),
+        )
+        .orderBy("event_type")
+    )
+
+
+_GAP_ORACLE = f"""
+WITH gaps AS (
+  SELECT event_type,
+         lead(epoch_us(CAST(ts AS TIMESTAMP)))
+           OVER (PARTITION BY user_id
+                 ORDER BY ts, event_id)
+           - epoch_us(CAST(ts AS TIMESTAMP)) AS gap_us
+  FROM events
+)
+SELECT event_type,
+       count(*) AS n_gaps,
+       round(CAST(SUM(gap_us) AS DOUBLE) / {float(US_SEC)!r}
+             / CAST(count(*) AS DOUBLE), 6) AS mean_gap_s,
+       CAST(max(gap_us) AS DOUBLE) / {float(US_SEC)!r} AS max_gap_s,
+       round(CAST(SUM(CASE WHEN gap_us > {US_HOUR} THEN 1 ELSE 0 END)
+                  AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS share_gt_1h
+FROM gaps
+WHERE gap_us IS NOT NULL
+GROUP BY event_type
+ORDER BY event_type
 """
 
 
@@ -1635,5 +1736,17 @@ QUERIES: list[QuerySpec] = [
         " streaming runtime across 4 micro-batches — deletion-free"
         " mergeable top-k; MG theorem verdicts + exact counts oracled"
         " (counter contents are batch-order-dependent by nature)",
+    ),
+    QuerySpec(
+        "events_lag_features",
+        q_events_lag_features,
+        _LAG_ORACLE,
+        "Calendar lag-1 and trailing-7-day RANGE-window features",
+    ),
+    QuerySpec(
+        "events_gap_stats",
+        q_events_gap_stats,
+        _GAP_ORACLE,
+        "Exact inter-arrival gap statistics per event type",
     ),
 ]

@@ -1,10 +1,10 @@
 """Classic OLAP patterns the engine must support beyond the reference's
-own surface: TPC-H Q1 shape, as-of join, range join (bucketized),
-exact quantiles, unpivot, SCD2 upsert emulation.
-
-Exact-arithmetic notes: Q1's derived measures multiply DECIMAL(18,2)
-prices by DECIMAL(4,2) factors — exact in both engines (≤38 digits,
-no scale truncation), so sums are order-independent and hash-equal.
+own surface: as-of, range (bucketized), point-in-time and bucketed
+co-located joins; exact and sketched quantiles; unpivot; SCD2 upsert,
+snapshot diff and incremental merges; sink round trips; Z-order cells;
+mergeable sketches (KMV, HLL, HDR, count-min); and the PageRank,
+k-core, triangle and hierarchy graph queries. The TPC-H shapes live in
+``tpch.py``.
 """
 
 from __future__ import annotations
@@ -16,52 +16,7 @@ from ..caching import BoundedCache
 from ..operators.asof import as_of_join
 from ..operators.graph import _PR_CHECK_EVERY, _PR_DP, pagerank, pagerank_converged
 from ..sources.readers import read_testdata_table
-from .spec import QuerySpec
-
-
-# --- TPC-H Q1 shape ---------------------------------------------------------
-
-def q_tpch_q1_style(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_testdata_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1999-12-31").cast("timestamp")
-    )
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    one_minus_d = (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
-    one_plus_t = (F.lit(1.0) + F.col("l_tax")).cast("decimal(4,2)")
-    cnt = F.count(F.lit(1))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-            F.sum(price).cast("double").alias("sum_base_price"),
-            F.sum(price * one_minus_d).cast("double").alias("sum_disc_price"),
-            F.sum(price * one_minus_d * one_plus_t).cast("double").alias("sum_charge"),
-            (F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double") / cnt).alias("avg_qty"),
-            (F.sum(price).cast("double") / cnt).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            cnt.alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-_Q1_ORACLE = """
-SELECT l_returnflag, l_linestatus,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(4,2)))
-       AS DOUBLE) AS sum_disc_price,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(4,2))
-           * CAST(1.0 + l_tax AS DECIMAL(4,2))) AS DOUBLE) AS sum_charge,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
-  round(avg(l_discount), 6) AS avg_disc,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1999-12-31 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
+from .spec import US_DAY, QuerySpec
 
 
 # --- as-of join -------------------------------------------------------------
@@ -1208,7 +1163,7 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
         .cast("double")
         .alias("total_price"),
-        (F.unix_micros(F.max("o_orderdate")) / F.lit(86_400_000_000))
+        (F.unix_micros(F.max("o_orderdate")) / F.lit(US_DAY))
         .cast("long")
         .alias("max_orderdate_day"),
     )
@@ -1219,11 +1174,11 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SINK_ORC_ORACLE = """
+_SINK_ORC_ORACLE = f"""
 SELECT o_orderstatus,
        count(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-       epoch_us(CAST(max(o_orderdate) AS TIMESTAMP)) // 86400000000
+       epoch_us(CAST(max(o_orderdate) AS TIMESTAMP)) // {US_DAY}
          AS max_orderdate_day
 FROM orders GROUP BY 1
 """
@@ -2006,10 +1961,6 @@ QUERIES: list[QuerySpec] = [
         "quantiles_approx_by_group", q_quantiles_approx_by_group,
         _QUANTILES_APPROX_GROUP_ORACLE,
         "per-group KLL median sketches (map-side partial merge), same within-bound contract",
-    ),
-    QuerySpec(
-        "tpch_q1_style", q_tpch_q1_style, _Q1_ORACLE,
-        "TPC-H Q1 shape: 2-key groupBy, 8 exact-decimal aggregates",
     ),
     QuerySpec(
         "asof_join", q_asof_join, _ASOF_ORACLE,

@@ -12,6 +12,26 @@ the same row count, the same column names/types, and the same values
 
 ``oracle`` is None for non-SQL-expressible ops (MLlib fits, LSH, custom
 stateful streaming) — driver then records a weaker rows-only check.
+
+The decimal-exact kit below is the one spelling of the two formats
+every engine pair must agree on — a Spark Column and its DuckDB SQL
+twin, which ``tests/test_spec_kit.py`` runs side by side on edge rows:
+
+- ``discounted_price()`` / ``DISCOUNTED_PRICE_SQL``: the line's net
+  price, ``DECIMAL(18,2)`` price times ``DECIMAL(4,2)`` (1 − discount).
+  Exact and engine-identical for prices of at most 15 significant
+  digits (|price| < 10^13 at cents precision). Beyond that DuckDB's
+  double→decimal cast rounds through a double product, and near the
+  DECIMAL(18,2) ceiling its int64 decimal product overflows; Spark
+  stays exact. NULL price or discount gives NULL on both sides.
+- ``day_bucket(col)`` / ``day_bucket_sql(col)``: whole days since the
+  epoch of a timestamp, as BIGINT integer division of epoch micros
+  (Spark ``div``, DuckDB ``//``). Both engines truncate toward zero,
+  so they agree on every instant from 1900-01-01 to 9999-12-31; a
+  pre-1970 instant that is not midnight lands in the next day's bucket
+  (1969-12-31 12:00 → day 0). The double-division spelling
+  ``(unix_micros(c) / US_DAY).cast("long")`` is not a twin: it rounds
+  up the last microsecond of 9999-12-31.
 """
 
 from __future__ import annotations
@@ -19,7 +39,32 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+US_SEC = 1_000_000
+US_HOUR = 3600 * US_SEC
+US_DAY = 24 * US_HOUR
+
+DISCOUNTED_PRICE_SQL = (
+    "CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(4,2))"
+)
+
+
+def discounted_price() -> Column:
+    """Spark twin of ``DISCOUNTED_PRICE_SQL``: a DECIMAL(23,4) Column."""
+    price = F.col("l_extendedprice").cast("decimal(18,2)")
+    return price * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
+
+
+def day_bucket(col: str) -> Column:
+    """Whole epoch days of timestamp column ``col``, as a long Column."""
+    return F.expr(f"unix_micros({col}) div {US_DAY}")
+
+
+def day_bucket_sql(col: str) -> str:
+    """DuckDB twin of ``day_bucket``."""
+    return f"epoch_us(CAST({col} AS TIMESTAMP)) // {US_DAY}"
 
 
 @dataclass(frozen=True)

@@ -8,6 +8,10 @@ constructed so every candidate feature shares the same dof/df-pair,
 making the p-value ordering monotone in the raw statistic, which IS
 SQL-computable: the oracles rank by chi-square statistic / explicit
 ANOVA F instead.
+
+Also here: integer-exact lag-1 autocorrelation of daily event counts
+and a customer-decile gains table on the bucketed global rank
+(``operators/ranking.py``), neither of which needs a global window.
 """
 
 from __future__ import annotations
@@ -16,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.ranking import bucketed_global_rank, ntile_from_rank
 from ..sources.readers import read_testdata_table
 from ..stats.chisquare import chi_square_test
 from ..stats.correlation import correlation_pairs_df
@@ -24,7 +29,7 @@ from ..stats.selectors import (
     select_univariate_continuous,
 )
 from ..stats.variance import variance_threshold_select
-from .spec import QuerySpec
+from .spec import QuerySpec, day_bucket, day_bucket_sql
 
 _LINEITEM_NUMERIC = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
@@ -766,6 +771,155 @@ FROM per
 """
 
 
+# ------------- lag-1 autocorrelation of daily counts -------------
+
+
+def q_stats_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lag-1 autocorrelation of each event type's daily count series
+    (consecutive calendar days only — a gap contributes no pair).
+
+    Engine parity: daily counts are integers, so every moment sum
+    (Σx, Σy, Σxy, Σx², Σy²) accumulates EXACTLY in BIGINT —
+    order-independent with no decimal quantization needed; the two
+    variance factors are cast to double BEFORE multiplying (their
+    product can exceed int64), and the only float ops are that
+    product, the sqrt, and the final division. Degenerate series
+    (zero variance) yield NULL via nullif."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    daily = e.groupBy(
+        "event_type", day_bucket("ts").alias("day")
+    ).agg(F.count(F.lit(1)).alias("x"))
+    w = Window.partitionBy("event_type").orderBy("day")
+    pairs = (
+        daily.withColumn("nday", F.lead("day").over(w))
+        .withColumn("y", F.lead("x").over(w))
+        .filter(F.col("nday") == F.col("day") + 1)
+    )
+    agg = pairs.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    )
+    n = F.col("n_pairs")
+    num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    vx = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    vy = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    return agg.select(
+        "event_type",
+        "n_pairs",
+        F.round(num / F.nullif(F.sqrt(vx * vy), F.lit(0.0)), 6).alias(
+            "autocorr_lag1"
+        ),
+    ).orderBy("event_type")
+
+
+_AUTOCORR_ORACLE = f"""
+WITH daily AS (
+  SELECT event_type,
+         {day_bucket_sql('ts')} AS day,
+         count(*) AS x
+  FROM events GROUP BY 1, 2
+), pairs AS (
+  SELECT event_type, x,
+         lead(day) OVER (PARTITION BY event_type ORDER BY day) AS nday,
+         lead(x) OVER (PARTITION BY event_type ORDER BY day) AS y,
+         day
+  FROM daily
+), p AS (SELECT * FROM pairs WHERE nday = day + 1),
+agg AS (
+  SELECT event_type,
+         count(*) AS n_pairs,
+         CAST(SUM(x) AS BIGINT) AS sx,
+         CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(x * y) AS BIGINT) AS sxy,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(y * y) AS BIGINT) AS syy
+  FROM p GROUP BY 1
+)
+SELECT event_type, n_pairs,
+       round(CAST(n_pairs * sxy - sx * sy AS DOUBLE)
+             / nullif(sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE)
+                           * CAST(n_pairs * syy - sy * sy AS DOUBLE)),
+                      0.0), 6) AS autocorr_lag1
+FROM agg
+ORDER BY event_type
+"""
+
+
+# ------------- customer decile gains table -------------
+
+
+def q_customer_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gains table over customer lifetime spend: exact revenue
+    deciles (NTILE semantics) with per-decile revenue and cumulative
+    revenue share.
+
+    Scale shape: the ranking that the textbook plan does with ONE
+    global ordered window runs instead on
+    operators/ranking.py:bucketed_global_rank — range-bucketed prefix
+    counts, with row_number confined to one bucket's rows — and the
+    NTILE assignment is recomputed from (rank, n) in exact integer
+    arithmetic (ntile_from_rank). Revenue accumulates as DECIMAL
+    cents end-to-end; floats appear only in the rounded shares."""
+    orders = read_testdata_table(spark, sf_dir, "orders")
+    rev = orders.groupBy("o_custkey").agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
+    )
+    ranked = bucketed_global_rank(
+        rev, val="rev", tiebreak="o_custkey", buckets=64, descending=True
+    )
+    n_total = rev.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    tiled = ranked.crossJoin(F.broadcast(n_total)).withColumn(
+        "decile", ntile_from_rank("_rank", "n", 10)
+    )
+    per = tiled.groupBy("decile").agg(
+        F.count(F.lit(1)).alias("n_customers"),
+        F.sum("rev").alias("drev"),
+    )
+    cum_w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
+    tot_w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return (
+        per.withColumn("cum", F.sum("drev").over(cum_w))
+        .withColumn("tot", F.sum("drev").over(tot_w))
+        .select(
+            "decile",
+            "n_customers",
+            F.col("drev").cast("double").alias("decile_revenue"),
+            F.round(
+                F.col("cum").cast("double") / F.col("tot").cast("double"), 6
+            ).alias("cum_revenue_share"),
+        )
+        .orderBy("decile")
+    )
+
+
+_DECILE_ORACLE = """
+WITH rev AS (
+  SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
+  FROM orders GROUP BY 1
+), tiled AS (
+  SELECT rev,
+         CAST(ntile(10) OVER (ORDER BY rev DESC, o_custkey ASC) AS BIGINT)
+           AS decile
+  FROM rev
+), per AS (
+  SELECT decile, count(*) AS n_customers, SUM(rev) AS drev
+  FROM tiled GROUP BY 1
+)
+SELECT decile, n_customers,
+       CAST(drev AS DOUBLE) AS decile_revenue,
+       round(CAST(SUM(drev) OVER (ORDER BY decile
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND CURRENT ROW) AS DOUBLE)
+             / CAST(SUM(drev) OVER () AS DOUBLE), 6) AS cum_revenue_share
+FROM per
+ORDER BY decile
+"""
+
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "stats_benford_audit", q_benford_audit, _benford_oracle(),
@@ -861,5 +1015,17 @@ QUERIES: list[QuerySpec] = [
         q_univariate_select_continuous,
         _UNIVARIATE_CONT_ORACLE,
         "M9 ANOVA-F top-N continuous selector (explicit-F oracle)",
+    ),
+    QuerySpec(
+        "stats_autocorr_daily",
+        q_stats_autocorr_daily,
+        _AUTOCORR_ORACLE,
+        "Integer-exact lag-1 autocorrelation of daily counts",
+    ),
+    QuerySpec(
+        "customer_decile_lift",
+        q_customer_decile_lift,
+        _DECILE_ORACLE,
+        "Gains table from bucketed global rank (no global window)",
     ),
 ]

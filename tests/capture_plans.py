@@ -1,14 +1,16 @@
 """Dev tool: write ``df.explain('formatted')`` for catalog queries to
-files — the round-12 optimization deliverable (plans/r12/<q>_{before,
-after}.txt). Driver-side only: plans are analyzed, never executed,
-except for queries that materialize internally (iterative loops),
-whose returned frame is a local/cached result — those are captured
-anyway (the per-iteration shapes live in the operator modules and are
-documented in OPTIMIZATION_r12.md).
+files, one per query, normalized by ``perfbench.stats.normalize_plan``
+(expression ids, exchange plan ids and lambda-variable suffixes
+stripped). Two captures of the same code are then byte-identical, so a
+plan-parity check between two checkouts is one ``diff -r``. Driver-side
+only: plans are analyzed, never executed, except for queries that
+materialize internally (iterative loops), whose returned frame is a
+local/cached result — those are captured anyway.
 
 Usage:
-    python tests/capture_plans.py --out-dir plans/r12 --suffix _after \
-        [--sf-dir /root/testdata/sf0.01] name1 name2 ...
+    python tests/capture_plans.py --out-dir /tmp/plans_a \
+        [--suffix _after] [--sf-dir SF_DIR] name1 name2 ...
+    diff -r /tmp/plans_a /tmp/plans_b   # empty exactly when plans match
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ import sys
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
+
+from perfbench.stats import normalize_plan  # noqa: E402
 
 
 def main() -> None:
@@ -48,7 +52,7 @@ def main() -> None:
         )
         path = os.path.join(args.out_dir, f"{name}{args.suffix}.txt")
         with open(path, "w") as f:
-            f.write(text)
+            f.write(normalize_plan(text))
         print(f"wrote {path} ({len(text)} bytes)", file=sys.stderr)
     spark.stop()
 

@@ -8,7 +8,9 @@ Usage:
         [--only name1,name2] [--start-at name]
 
 Prints one line per entry (ok/FAIL + seconds) and a final tally;
-exits non-zero on any failure.
+exits 1 on any failure. A name in --only or --start-at that is not in
+the catalog (or, for --start-at, not among the --only names) exits 2
+before a Spark session starts.
 """
 
 from __future__ import annotations
@@ -26,24 +28,31 @@ if _REPO_ROOT not in sys.path:
 from tests.oracle_harness import check_query  # noqa: E402
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default=None, help="comma-separated names")
     ap.add_argument("--start-at", default=None, help="skip entries before this name")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from big_data_analysis_of_airline_data_set_spark.plans import all_queries
     from big_data_analysis_of_airline_data_set_spark.session import get_session
 
-    spark = get_session("preflight-catalog")
-    spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
     names = list(specs)
     if args.only:
         names = [n for n in args.only.split(",") if n]
+    unknown = [n for n in names if n not in specs]
+    if args.start_at and args.start_at not in names:
+        unknown.append(args.start_at)
+    if unknown:
+        print(f"# unknown names: {','.join(unknown)}", file=sys.stderr, flush=True)
+        sys.exit(2)
     if args.start_at:
         names = names[names.index(args.start_at):]
+
+    spark = get_session("preflight-catalog")
+    spark.sparkContext.setLogLevel("ERROR")
 
     n_ok = n_fail = n_rows_only = 0
     failures: list[str] = []

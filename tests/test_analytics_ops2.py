@@ -1,7 +1,8 @@
-"""Unit + oracle-parity tests for the wave-5 analytics catalog
-(plans/analytics_ops2.py): TPC-H Q3/Q5-style star joins, 2-D Pareto
-skyline, closed-form 2-D PCA, DAU/WAU stickiness, and calendar linear
-interpolation."""
+"""Unit tests for the operators behind the plans/analytics_ops2.py
+catalog: 2-D Pareto skyline, closed-form 2-D PCA, calendar linear
+interpolation, Holt smoothing, the clamped-balance fold, and the
+weighted median. test_oracle_parity checks
+this file's catalog names against their DuckDB oracles."""
 
 from __future__ import annotations
 

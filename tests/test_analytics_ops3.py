@@ -1,7 +1,8 @@
-"""Unit + oracle-parity tests for the wave-7 analytics catalog
-(plans/analytics_ops3.py): the adapted TPC-H query shapes
-(Q2/Q4/Q8/Q12/Q14/Q18/Q19/Q22), lag-1 autocorrelation, the
-bucketed-rank decile gains table, and embedding label centroids."""
+"""Unit tests for the ranking operators behind
+``customer_decile_lift`` (plans/statistics.py):
+operators/ranking.py's bucketed_global_rank and ntile_from_rank.
+test_oracle_parity checks
+this file's catalog names against their DuckDB oracles."""
 
 from __future__ import annotations
 

@@ -1,6 +1,8 @@
-"""Oracle-parity + unit tests for the wave-8 analytics catalog
-(plans/analytics_ops4.py): adapted TPC-H Q7/Q9/Q10/Q13/Q15/Q16/Q17/
-Q21, fixed-seed k-means assignment, and calendar lag features."""
+"""Unit tests for fixed-seed k-means assignment
+(``embedding_kmeans_assign``, plans/content.py) and calendar lag
+features (``events_lag_features``, plans/events_queries.py).
+test_oracle_parity checks this file's catalog names against their
+DuckDB oracles."""
 
 from __future__ import annotations
 

@@ -1,13 +1,17 @@
-"""Oracle-parity + unit tests for the wave-9 analytics catalog
-(plans/analytics_ops5.py): TPC-H Q6/Q11/Q20 (completing all 22
-adapted shapes), product-quantization codebook assignment, and
-inter-event gap statistics."""
+"""The TPC-H family's boundary (plans/tpch.py holds all 22 adapted
+shapes and nothing else declares one), plus unit tests for the
+product-quantization codebook (``embedding_pq_codebook``,
+plans/content.py) and inter-event gap statistics
+(``events_gap_stats``, plans/events_queries.py).
+test_oracle_parity checks this file's catalog names against their
+DuckDB oracles."""
 
 from __future__ import annotations
 
 import pytest
 
-from big_data_analysis_of_airline_data_set_spark.plans import all_queries
+from big_data_analysis_of_airline_data_set_spark import plans
+from big_data_analysis_of_airline_data_set_spark.plans import all_queries, tpch
 from tests.oracle_harness import check_query
 
 NEW_OPS = [
@@ -25,13 +29,21 @@ def test_oracle_parity(spark, name, sf_dir):
 
 
 def test_all_22_tpch_shapes_present():
-    """Wave 9 completes the adapted TPC-H family: q1..q22 all have a
-    catalog entry (Q11/Q20 substitute lineitem volume for the absent
-    partsupp columns; every adaptation is documented in its
-    docstring)."""
-    names = set(all_queries())
-    missing = [q for q in range(1, 23) if f"tpch_q{q}_style" not in names]
-    assert missing == []
+    """plans/tpch.py declares exactly the 22 adapted TPC-H shapes, in
+    query order, and no other catalog module declares a ``tpch_``
+    name (Q11/Q20 substitute lineitem volume for the absent partsupp
+    columns; every adaptation is documented in its docstring)."""
+    assert tpch in plans._MODULES
+    names = [spec.name for spec in tpch.QUERIES]
+    assert names == [f"tpch_q{q}_style" for q in range(1, 23)]
+    strays = [
+        spec.name
+        for mod in plans._MODULES
+        if mod is not tpch
+        for spec in mod.QUERIES
+        if spec.name.startswith("tpch_")
+    ]
+    assert strays == []
 
 
 def test_pq_every_subvector_assigned(spark, sf_dir):

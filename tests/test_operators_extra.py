@@ -683,9 +683,7 @@ def test_rfm_bucketed_quartiles_equal_naive_ntile(spark, sf_dir):
     from pyspark.sql.window import Window as W
 
     from big_data_analysis_of_airline_data_set_spark.plans import all_queries
-    from big_data_analysis_of_airline_data_set_spark.plans.analytics_ops import (
-        _US_DAY,
-    )
+    from big_data_analysis_of_airline_data_set_spark.plans.spec import US_DAY
     from big_data_analysis_of_airline_data_set_spark.sources.readers import (
         read_testdata_table,
     )
@@ -706,7 +704,7 @@ def test_rfm_bucketed_quartiles_equal_naive_ntile(spark, sf_dir):
     anchor = per.agg(F.max("last_us").alias("anchor_us"))
     base = per.crossJoin(F.broadcast(anchor)).select(
         "user_id",
-        F.expr(f"(anchor_us - last_us) div {_US_DAY}").alias("recency_days"),
+        F.expr(f"(anchor_us - last_us) div {US_DAY}").alias("recency_days"),
         "frequency",
         "monetary",
     )
