@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_rows
 from ..text.analysis import tokens_col
 
 _HASH_PREFIX = "d_"
@@ -88,7 +89,8 @@ def dsir_scores(
     nt = sum(ct for _, ct in counts.values()) + n_buckets
     # Python // on positives == Spark's div == DuckDB's // — exact,
     # and arbitrary-precision so no overflow headroom to audit
-    br = docs.sparkSession.createDataFrame(
+    br = local_rows(
+        docs.sparkSession,
         [
             (b, ((ct + 1) * np_ * _SCALE) // ((cp + 1) * nt))
             for b, (cp, ct) in sorted(counts.items())

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 from ..curation.contamination import contamination_hits
 from ..curation.packing import pack_sequences
 from ..curation.sampling import domain_mixture, weighted_sample
+from ..sources.local import local_rows
 from ..sources.readers import read_parquet_table
 from ..sources.writers import write_parquet
 from ..text.analysis import content_fingerprint, token_count
@@ -125,7 +126,8 @@ def curate(
     counts.append(("packed", corpus.count()))
     sampled.unpersist()
 
-    report = spark.createDataFrame(
+    report = local_rows(
+        spark,
         [(i, stage, n) for i, (stage, n) in enumerate(counts)],
         "stage_idx int, stage string, n_rows bigint",
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.local import local_rows
 from .estimators import make_estimator
 from .pipeline import build_pipeline
 
@@ -38,4 +39,4 @@ def mlp_layer_sweep(
         results.append(("x".join(map(str, layers)), round(float(auc), round_to)))
     best = max(results, key=lambda t: t[1])[0]
     rows = [(shape, auc, shape == best) for shape, auc in results]
-    return spark.createDataFrame(rows, "layers string, area_ROC double, is_best boolean")
+    return local_rows(spark, rows, "layers string, area_ROC double, is_best boolean")

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_rows
 from .estimators import make_estimator, quick_grid, reference_grid
 from .evaluation import evaluate_predictions
 from .pipeline import build_feature_pipeline
@@ -103,7 +104,8 @@ def training_invariants(
         int(clf.numFeatures),
         int(clf.numClasses),
     )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [row],
         "family string, n_param_combos long, train_rows long, "
         "test_rows long, feature_dim long, n_classes long",
@@ -152,4 +154,4 @@ def run_training_job(
 
     rows = [(k, fmt(v)) for k, v in best.items()]
     rows += [(k, fmt(v)) for k, v in metrics.items()]
-    return spark.createDataFrame(rows, "parameter string, value string")
+    return local_rows(spark, rows, "parameter string, value string")

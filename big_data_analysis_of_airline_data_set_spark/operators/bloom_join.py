@@ -81,6 +81,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_rows
+
 
 def seeded_double_hash(col: F.Column, modulus: int) -> tuple[F.Column, F.Column]:
     """(h1, h2) for a Kirsch-Mitzenmacher family h_i = (h1 + i·h2) mod
@@ -233,8 +235,8 @@ def ship_as_scalar_subquery(
     on ``spark.conf.get("spark.api.mode", "classic")`` if both modes
     must be served."""
     name = f"__scalar_arr_{next(_SCALAR_VIEW_SEQ)}"
-    spark.createDataFrame(
-        [(values,)], f"arr: array<{element_type}>"
+    local_rows(
+        spark, [(values,)], f"arr: array<{element_type}>"
     ).createOrReplaceTempView(name)
     return F.expr(f"(SELECT arr FROM {name})"), name
 

@@ -18,6 +18,9 @@ The loops share one kit:
   at scale — with ONE exchange, partitioned on the key every
   iteration's join uses, so per iteration only node-sized frames move.
   (Without it, every iteration re-shuffles the full edge set.)
+- ``_sized`` partitions a cached table by the rows it holds — ceil(rows
+  / ``_ITER_ROWS_PER_TASK``), capped at the session width — because a
+  cache's partition count is the task count of every later scan of it.
 - ``_node_frame_bc`` broadcasts node-sized per-iteration frames when
   the KNOWN node count is at most ``_BC_NODES_MAX``; above it the
   sort-merge path is the right plan for tables too big to broadcast.
@@ -58,6 +61,7 @@ from pyspark.sql import functions as F
 # instead of left to static planning against unknown-stats intermediates.
 _BC_NODES_MAX = 200_000  # ≲ a few MB of (node, rank) — safely broadcastable
 _ITER_ROWS_PER_TASK = 50_000  # floor task size for node-sized shuffles
+_WIDTH_KEY = "spark.sql.shuffle.partitions"
 # pagerank's materialize-and-release cadence: at most 5 node-sized rank
 # tables stay pinned between barriers. 8 (no mid-loop barrier in the
 # 5-round catalog query) measured -3%, inside arm spread
@@ -67,6 +71,40 @@ _PR_DP = 12  # PageRank's rounding; the catalog oracles import it
 _PR_DEC = f"decimal(30,{_PR_DP})"
 # pagerank_converged's convergence-check cadence; the oracle replays it
 _PR_CHECK_EVERY = 2
+
+
+def _session_width(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as a number; 1 when it is not one
+    (some platforms set 'auto'), which every caller treats as "leave the
+    width alone"."""
+    try:
+        return int(spark.conf.get(_WIDTH_KEY))
+    except (TypeError, ValueError):
+        return 1
+
+
+def _rows_width(width: int, rows: int) -> int:
+    """ceil(rows / ``_ITER_ROWS_PER_TASK``), floored at 1 and capped at
+    ``width``: never wider than the session, and at scale (rows ≥ width
+    × 50k) exactly the session width."""
+    return max(1, min(width, -(-rows // _ITER_ROWS_PER_TASK)))
+
+
+def _sized(df: DataFrame, rows: int, *keys) -> DataFrame:
+    """``df`` hash-partitioned on ``keys`` into ``_rows_width`` partitions
+    for a KNOWN row bound ``rows`` — for a frame about to be cached. A
+    cache keeps the partition count it was written with, and AQE does
+    not coalesce a cached plan's output, so at the session's 32-way
+    width every later scan of a few-hundred-row cache schedules 32
+    nearly empty tasks (``graph_k_core`` ran hundreds of tasks per call
+    that way). An explicit ``repartition(n, key)``, not a conf scope: the
+    count is fixed in the plan, so it also holds for lazy chains whose
+    action runs after the scope would have closed. A non-numeric
+    session width keeps the plain ``repartition(key)``."""
+    width = _session_width(df.sparkSession)
+    if width <= 1:
+        return df.repartition(*keys)
+    return df.repartition(_rows_width(width, rows), *keys)
 
 
 @contextmanager
@@ -90,11 +128,24 @@ def _edge_table(
     ClusteredDistribution(_s, _d) (equal pairs share a key partition),
     so the dedup runs in place and the cache keeps the partitioning the
     loop joins on. The opposite order paid a second full edge shuffle
-    for the same layout (52% of the build step in the round-13 A/B)."""
+    for the same layout (52% of the build step in the round-13 A/B).
+
+    Width: when ``edges`` is itself cached, its count (one scan of that
+    cache, materializing it if it was not yet — work the build does
+    anyway) bounds the table's rows — doubled for the undirected union —
+    and the table is ``_sized`` from it, so every round's scans and the
+    key-reusing aggregates run as many tasks as the rows need (k_core at
+    sf0.001: one partition, not 32). An uncached input keeps the session
+    width: counting it would run its lineage twice."""
     e = edges.select(F.col(u).alias("_s"), F.col(v).alias("_d"))
     if not (directed or symmetric):
         e = e.union(edges.select(F.col(v).alias("_s"), F.col(u).alias("_d")))
-    e = e.repartition(F.col(key))
+    level = edges.storageLevel
+    if level.useMemory or level.useDisk:
+        rows = edges.count() * (1 if directed or symmetric else 2)
+        e = _sized(e, rows, F.col(key))
+    else:
+        e = e.repartition(F.col(key))
     e = (e if symmetric else e.distinct()).persist()
     try:
         yield e
@@ -122,12 +173,12 @@ def _iteration_shuffle_width(
 ) -> Iterator[None]:
     """Scope ``spark.sql.shuffle.partitions`` to the iteration loop,
     sized from a KNOWN count — ``rows()`` when given, else the node
-    count — as ceil(count / 50k), floored at 1, capped at the session
-    setting (never widens). AQE's default ``parallelismFirst=true``
-    refuses to coalesce below the core count, so a 21k-row aggregate
-    still schedules 32 tasks per stage per iteration; with ~10
-    iterations × ~3 stages the task overhead dominates wall-clock at
-    bench scale, while at graph scale this is a no-op.
+    count — by ``_rows_width`` (never widens). AQE's default
+    ``parallelismFirst=true`` refuses to coalesce below the core count,
+    so a 21k-row aggregate still schedules 32 tasks per stage per
+    iteration; with ~10 iterations × ~3 stages the task overhead
+    dominates wall-clock at bench scale, while at graph scale this is a
+    no-op.
 
     Gated on the node count (``n_nodes``, or a callable computing it):
     above ``_BC_NODES_MAX`` the loop's joins re-exchange edge-fed
@@ -141,22 +192,17 @@ def _iteration_shuffle_width(
     materializes at the caller's action, so it must not use this). The
     conf mutation is session-global: this assumes the single-threaded
     driver discipline the whole package runs under (caching.py)."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    try:
-        width = int(saved)
-    except (TypeError, ValueError):
-        width = 1
+    width = _session_width(spark)
     n = (n_nodes() if callable(n_nodes) else n_nodes) if width > 1 else 0
     if width <= 1 or n > _BC_NODES_MAX:
         yield
         return
-    k = -(-(rows() if rows else n) // _ITER_ROWS_PER_TASK)
-    spark.conf.set(key, str(max(1, min(width, k))))
+    saved = spark.conf.get(_WIDTH_KEY)
+    spark.conf.set(_WIDTH_KEY, str(_rows_width(width, rows() if rows else n)))
     try:
         yield
     finally:
-        spark.conf.set(key, saved)
+        spark.conf.set(_WIDTH_KEY, saved)
 
 
 @contextmanager
@@ -426,6 +472,28 @@ def triangle_counts(
     )
 
 
+def _peel_round(sym: DataFrame, alive: DataFrame, n_alive: int, k: int) -> DataFrame:
+    """One k-core peel round, lazy: (vertex, core_degree) of every
+    vertex in ``alive`` (``n_alive`` rows) that keeps degree ≥ ``k``
+    among ``alive``. Two semi-joins restrict the cached edge table to
+    surviving endpoints and one aggregate counts degrees; under the
+    broadcast gate both semi-joins broadcast ``alive`` and the
+    groupBy(_s) reuses the table's _s partitioning, so the round has no
+    shuffle."""
+    bc = _node_frame_bc(n_alive)
+    return (
+        sym.join(bc(alive), sym["_s"] == alive["vertex"], "left_semi")
+        .join(
+            bc(alive.select(F.col("vertex").alias("_dv"))),
+            F.col("_d") == F.col("_dv"),
+            "left_semi",
+        )
+        .groupBy(F.col("_s").alias("vertex"))
+        .agg(F.count(F.lit(1)).alias("core_degree"))
+        .filter(F.col("core_degree") >= k)
+    )
+
+
 def k_core(
     edges: DataFrame,
     *,
@@ -445,18 +513,23 @@ def k_core(
     of every edge, distinct: callers that built the symmetric set for
     their own degree statistics skip a redundant union and dedup.
 
-    Per round: two semi-joins restrict the (symmetrized, persisted,
-    src-partitioned) edge set to surviving endpoints, one degree
-    aggregate, one filter — all node/edge-sized, no driver data.
-    The survivor set is node-sized and its count is already taken
-    every round for the fixpoint test, so while it stays under
-    ``_BC_NODES_MAX`` both semi-joins broadcast it — the edge set then
-    never re-exchanges AND the degree groupBy(_s) reuses the cached
-    src-partitioning, making a whole peel round shuffle-free. The
-    survivor set shrinks MONOTONICALLY, so the fixpoint test is one
-    count comparison per round. Each round references the survivor
-    frame twice (both endpoint semi-joins), so every round's survivor
-    set materializes through an eager localCheckpoint.
+    Per round (``_peel_round``): two semi-joins restrict the
+    (symmetrized, persisted, src-partitioned) edge set to surviving
+    endpoints, one degree aggregate, one filter — all node/edge-sized,
+    no driver data. The survivor set is node-sized and its count is
+    already taken every round for the fixpoint test, so while it stays
+    under ``_BC_NODES_MAX`` both semi-joins broadcast it — the edge set
+    then never re-exchanges AND the degree groupBy(_s) reuses the
+    cached src-partitioning, making a whole peel round shuffle-free.
+    Shuffle-free is not task-free: every round scans every partition
+    of the edge table, and the survivor checkpoint keeps that
+    partition count, so a CACHED input sizes the table from its rows
+    (``_edge_table``) — at sf0.001 a round is a handful of tasks
+    instead of the session width several times over. The survivor set
+    shrinks MONOTONICALLY, so the fixpoint test is one count comparison
+    per round. Each round references the survivor frame twice (both
+    endpoint semi-joins), so every round's survivor set materializes
+    through an eager localCheckpoint.
 
     ``max_rounds`` bounds the number of SHRINKING rounds; the loop
     runs up to max_rounds + 1 iterations because detecting the
@@ -475,18 +548,7 @@ def k_core(
         )
         n_alive = alive.count()
         for _ in range(max_rounds + 1):
-            bc = _node_frame_bc(n_alive)
-            deg = (
-                sym.join(bc(alive), sym["_s"] == alive["vertex"], "left_semi")
-                .join(
-                    bc(alive.select(F.col("vertex").alias("_dv"))),
-                    F.col("_d") == F.col("_dv"),
-                    "left_semi",
-                )
-                .groupBy(F.col("_s").alias("vertex"))
-                .agg(F.count(F.lit(1)).alias("core_degree"))
-            )
-            survivors = deg.filter(F.col("core_degree") >= k).localCheckpoint(
+            survivors = _peel_round(sym, alive, n_alive, k).localCheckpoint(
                 eager=True
             )
             n_next = survivors.count()

@@ -62,6 +62,43 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     "dedup_connected_components",
     "dedup_entity_resolution",
     "dedup_canonical_keeper",
+    "graph_triangles",
+    "coreset_kcenter",
+    "curation_dsir_resample",
+    "feature_selection_job",
+    "join_bloom_prefiltered",
+    "join_bucketed_colocated",
+    "ml_decision_tree_metrics_banded",
+    "ml_decision_tree_tvs",
+    "ml_gbt_metrics_banded",
+    "ml_gbt_tvs",
+    "ml_linear_svc_metrics_banded",
+    "ml_linear_svc_tvs",
+    "ml_logistic_regression_cv",
+    "ml_logistic_regression_cv_metrics_banded",
+    "ml_logistic_regression_metrics_banded",
+    "ml_logistic_regression_tvs",
+    "ml_mlp_metrics_banded",
+    "ml_mlp_tvs",
+    "ml_naive_bayes_metrics_banded",
+    "ml_naive_bayes_tvs",
+    "ml_random_forest_metrics_banded",
+    "ml_random_forest_tvs",
+    "ml_reference_bands",
+    "ml_variant_sweep",
+    "mllib_chi_square",
+    "mllib_correlation_matrix",
+    "range_join_bucketized",
+    "ri_orphans",
+    "sink_jsonl_roundtrip",
+    "sink_orc_roundtrip",
+    "sink_partitioned_roundtrip",
+    "sink_report_csv_roundtrip",
+    "spearman_correlation",
+    "text_inverted_index",
+    "univariate_select_categorical",
+    "univariate_select_continuous",
+    "variance_threshold_features",
 )
 
 

@@ -541,7 +541,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the co table under the edge set belongs to the session cache
     # (plans/patterns.py:_co_supplier_co) — nothing to release here
-    e = _co_supplier_edges(spark, sf_dir, _LPA_PCT)
+    e, _ = _co_supplier_edges(spark, sf_dir, _LPA_PCT)
     labels = label_propagation(e, rounds=_LPA_ROUNDS)
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).cast("long").alias("n_members")

@@ -30,6 +30,7 @@ from ..dedup.spans import cross_doc_span_stats
 from ..multimodal.assets import asset_stats, documents_to_assets
 from ..similarity.brute import brute_force_topk
 from ..similarity.lsh import lsh_topk
+from ..sources.local import local_rows
 from ..sources.readers import read_testdata_table
 from ..text.analysis import (
     LANG_STOPWORDS,
@@ -1100,8 +1101,8 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (r.tok, int(r.df), int(r.n_postings), fps[r.tok]) for r in top
     ]
-    return spark.createDataFrame(
-        rows, "token string, df long, n_postings long, postings_fp string"
+    return local_rows(
+        spark, rows, "token string, df long, n_postings long, postings_fp string"
     )
 
 

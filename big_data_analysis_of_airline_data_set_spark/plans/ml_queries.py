@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..caching import BoundedCache
 from ..functions.flight_exprs import delay_status
 from ..ml.train_job import fit_family, run_training_job, training_invariants
+from ..sources.local import local_rows
 from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
 
@@ -183,7 +184,7 @@ def _metrics_banded_query(family: str, tuner: str = "tvs"):
             (name, _METRIC_BANDS[name][0] <= v <= _METRIC_BANDS[name][1])
             for name, v in metrics.items()
         ]
-        return spark.createDataFrame(rows, "parameter string, within_band boolean")
+        return local_rows(spark, rows, "parameter string, within_band boolean")
 
     fn.__name__ = f"q_ml_{family}_{tuner}_metrics_banded"
     return fn
@@ -353,7 +354,8 @@ def q_ml_variant_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         _SWEEP_CACHE.put(key, rows)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows,
         "variant string, n_categorical long, n_numeric long, "
         "n_param_combos long, train_rows long, test_rows long, "
@@ -593,7 +595,7 @@ def q_ml_reference_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             _REF_BANDS_CACHE.put(key, rows)
         finally:
             flights.unpersist()
-    return spark.createDataFrame(rows, "check_name string, within_band boolean")
+    return local_rows(spark, rows, "check_name string, within_band boolean")
 
 
 _REF_BANDS_ORACLE = " UNION ALL ".join(

@@ -14,7 +14,16 @@ from pyspark.sql import functions as F
 
 from ..caching import BoundedCache
 from ..operators.asof import as_of_join
-from ..operators.graph import _PR_CHECK_EVERY, _PR_DP, pagerank, pagerank_converged
+from ..operators.graph import (
+    _PR_CHECK_EVERY,
+    _PR_DP,
+    _rows_width,
+    _session_width,
+    _sized,
+    pagerank,
+    pagerank_converged,
+)
+from ..sources.local import local_rows
 from ..sources.readers import read_testdata_table
 from .spec import US_DAY, QuerySpec
 
@@ -75,7 +84,7 @@ def q_range_join_bucketized(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick that turns a broadcast-nested-loop range join into a hash
     join at scale."""
     o = read_testdata_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(_BANDS, "band_id int, band_name string")
+    bands = local_rows(spark, _BANDS, "band_id int, band_name string")
     band_id = F.least(F.floor(F.col("o_totalprice") / 100_000), F.lit(4)).cast("int")
     return (
         o.withColumn("band_id", band_id)
@@ -1096,8 +1105,8 @@ def q_sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize NOW (a handful of per-year rows): the returned frame
     # must not lazily read a temp dir that eviction/atexit may remove
     # before a caller collects
-    return spark.createDataFrame(
-        agg.collect(), "ship_year long, n_rows long, sum_price double"
+    return local_rows(
+        spark, agg.collect(), "ship_year long, n_rows long, sum_price double"
     )
 
 
@@ -1131,7 +1140,7 @@ def q_sink_report_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.csv(out, header=True, schema=schema)
     # materialize NOW — same temp-dir-lifetime reasoning as the
     # partitioned round-trip above
-    return spark.createDataFrame(back.collect(), schema)
+    return local_rows(spark, back.collect(), schema)
 
 
 _SINK_CSV_ORACLE = """
@@ -1167,7 +1176,8 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("max_orderdate_day"),
     )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         agg.collect(),
         "o_orderstatus string, n_orders long, total_price double,"
         " max_orderdate_day long",
@@ -1205,7 +1215,8 @@ def q_sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_acctbal"),
         F.count_distinct("c_nationkey").alias("n_nations"),
     )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         agg.collect(),
         "c_mktsegment string, n_customers long, sum_acctbal double,"
         " n_nations long",
@@ -1280,7 +1291,8 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize inside the conf window AND before the temp table
         # dirs become evictable
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             agg.collect(),
             "key_mod long, n_rows long, sum_qty double, sum_price double",
         )
@@ -1346,7 +1358,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20)
             .collect()
         )
-    return spark.createDataFrame(rows, "node string, rank double")
+    return local_rows(spark, rows, "node string, rank double")
 
 
 def _pagerank_oracle() -> str:
@@ -1420,7 +1432,8 @@ def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20)
             .collect()
         )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(r.node, r.rank, stopped) for r in rows],
         "node string, rank double, stopped_at long",
     )
@@ -1552,7 +1565,16 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation is single-task in BOTH plans; the explosion is inherent
     to co-occurrence counting, not to this shape. TPC-H bounds d at
     ~4-8 suppliers/part at every SF. For corpora with unbounded hot
-    keys, cap or salt the per-part array upstream."""
+    keys, cap or salt the per-part array upstream.
+
+    Width: the cache keeps the partition count it is written with, and
+    every query of the family scans it every call, so it is sized from
+    its own row count (operators/graph.py ``_rows_width``). The count
+    materializes the session-width build — the one lineitem pass — and
+    when fewer partitions suffice the table is re-cached through a
+    narrow ``coalesce`` of that cache (no shuffle, no lineitem rescan)
+    and the wide copy released. At scale the rows fill the session
+    width and the re-cache is skipped."""
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _CO_CACHE.get(key)
     if hit is None:
@@ -1575,23 +1597,35 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
         hit = (
             pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c")).persist()
         )
+        width = _session_width(spark)
+        n = _rows_width(width, hit.count())
+        if n < width:
+            wide, hit = hit, hit.coalesce(n).persist()
+            hit.count()
+            wide.unpersist()
         _CO_CACHE.put(key, hit)
     return hit
 
 
-def _co_supplier_edges(spark: SparkSession, sf_dir: str, pct: float) -> DataFrame:
-    """Edge set of the strong co-supplier graph: suppliers become
-    neighbors when their shared-part count exceeds the ``pct``
-    percentile of all co-occurrence counts (a RELATIVE threshold, so
-    the graph stays non-trivial at every scale factor). The underlying
-    co-occurrence table is session-cached (see _co_supplier_co) — ONE
-    copy of the graph construction serves triangles, k-core, and LPA
-    (round-6 review dedup finding; round-8 verdict made it per-session
-    instead of per-query). Callers must NOT unpersist the result's
-    lineage — the cache owns the persisted co frame."""
+def _co_supplier_edges(
+    spark: SparkSession, sf_dir: str, pct: float
+) -> tuple[DataFrame, int]:
+    """Edge set of the strong co-supplier graph, and a bound on its row
+    count: suppliers become neighbors when their shared-part count
+    exceeds the ``pct`` percentile of all co-occurrence counts (a
+    RELATIVE threshold, so the graph stays non-trivial at every scale
+    factor). The bound is the co-occurrence row count, taken in the
+    threshold's own aggregate. The underlying co-occurrence table is
+    session-cached (see _co_supplier_co) — ONE copy of the graph
+    construction serves triangles, k-core, and LPA (round-6 review
+    dedup finding; round-8 verdict made it per-session instead of
+    per-query). Callers must NOT unpersist the result's lineage — the
+    cache owns the persisted co frame."""
     co = _co_supplier_co(spark, sf_dir)
-    thr = co.agg(F.expr(f"percentile(c, {pct})")).first()[0]
-    return co.filter(F.col("c") > thr).select("u", "v")
+    thr, rows = co.agg(
+        F.expr(f"percentile(c, {pct})"), F.count(F.lit(1))
+    ).first()
+    return co.filter(F.col("c") > thr).select("u", "v"), rows
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,7 +1645,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction."""
     from ..operators.graph import orient_by_degree, triangle_counts
 
-    edges = _co_supplier_edges(spark, sf_dir, _TRI_PCT)
+    edges, _ = _co_supplier_edges(spark, sf_dir, _TRI_PCT)
     e = orient_by_degree(edges, u="u", v="v").persist()
     # per_vertex feeds TWO actions (top-10 collect + total agg) — persist
     # it too, or the whole wedge closure runs twice (review finding)
@@ -1629,7 +1663,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_vertex.unpersist()
     e.unpersist()
     rows = [("TOTAL", int(total or 0))] + [(r.vertex, r.n_triangles) for r in top]
-    return spark.createDataFrame(rows, "vertex string, n_triangles long")
+    return local_rows(spark, rows, "vertex string, n_triangles long")
 
 
 _TRIANGLES_ORACLE = f"""
@@ -1685,12 +1719,16 @@ def q_graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked."""
     from ..operators.graph import k_core
 
-    e = _co_supplier_edges(spark, sf_dir, _KCORE_PCT)
+    e, rows = _co_supplier_edges(spark, sf_dir, _KCORE_PCT)
     # symmetrize ONCE — the median-degree statistic and the peel loop
     # share it (k_core is told symmetric=True so it skips its own
-    # union+distinct; round-6 review finding)
-    sym = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    # union+distinct; round-6 review finding). Cached at the width its
+    # rows need (at most 2 per co-occurrence row), not the union's 2 ×
+    # the co table's partitions; k_core sizes its edge table from it.
+    sym = _sized(
+        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+        2 * rows,
+        "u",
     ).persist()
     med = (
         sym.groupBy("u")

@@ -19,7 +19,7 @@ from ..operators.timeseries import session_stats, trailing_ewma
 from ..sources.readers import read_testdata_table
 from ..text.analysis import tokens_col
 from ..text.redaction import PII_PATTERNS, redaction_report
-from .spec import QuerySpec
+from .spec import US_HOUR, US_SEC, QuerySpec
 
 _SESSION_GAP_S = 1800
 _EWMA_DECAY = 0.8
@@ -124,7 +124,7 @@ WITH e AS (
 ), flag AS (
   SELECT user_id, event_id, t, value,
          CASE WHEN pt IS NULL
-                   OR epoch_us(t) - epoch_us(pt) > {_SESSION_GAP_S}::BIGINT * 1000000
+                   OR epoch_us(t) - epoch_us(pt) > {_SESSION_GAP_S}::BIGINT * {US_SEC}
               THEN 1 ELSE 0 END AS ns
   FROM lagd
 ), sess AS (
@@ -185,7 +185,7 @@ WITH e AS (
 ), flag AS (
   SELECT user_id, t,
          CASE WHEN pt IS NULL
-                   OR epoch_us(t) - epoch_us(pt) > {_SESSION_GAP_S}::BIGINT * 1000000
+                   OR epoch_us(t) - epoch_us(pt) > {_SESSION_GAP_S}::BIGINT * {US_SEC}
               THEN 1 ELSE 0 END AS ns,
          event_id
   FROM lagd
@@ -203,7 +203,7 @@ WITH e AS (
   UNION ALL
   SELECT e_us, -1, user_id, session_ordinal FROM iv
 ), db AS (
-  SELECT ts // 3600000000 AS bucket, ts, delta, user_id, session_ordinal
+  SELECT ts // {US_HOUR} AS bucket, ts, delta, user_id, session_ordinal
   FROM d
 ), pref AS (
   SELECT bucket, delta,

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.ranking import bucketed_global_rank, ntile_from_rank
+from ..sources.local import local_rows
 from ..sources.readers import read_testdata_table
 from ..stats.chisquare import chi_square_test
 from ..stats.correlation import correlation_pairs_df
@@ -128,7 +129,7 @@ def q_variance_threshold_features(spark: SparkSession, sf_dir: str) -> DataFrame
     top-2 variance columns survive (strict > semantics)."""
     li = read_testdata_table(spark, sf_dir, "lineitem")
     selected, _ = variance_threshold_select(li, _LINEITEM_NUMERIC, k=3)
-    return spark.createDataFrame([(c,) for c in selected], "feature string")
+    return local_rows(spark, [(c,) for c in selected], "feature string")
 
 
 _VARIANCE_THRESHOLD_ORACLE = """
@@ -162,7 +163,7 @@ def q_univariate_select_categorical(spark: SparkSession, sf_dir: str) -> DataFra
     sel = select_univariate_categorical(
         o, ["o_orderpriority", "custkey_band"], "label", num_top=1
     )
-    return spark.createDataFrame([(c,) for c in sel], "feature string")
+    return local_rows(spark, [(c,) for c in sel], "feature string")
 
 
 _UNIVARIATE_CAT_ORACLE = f"""
@@ -205,7 +206,7 @@ def q_univariate_select_continuous(spark: SparkSession, sf_dir: str) -> DataFram
         "label", (F.col("l_orderkey") % 2).cast("double")
     )
     sel = select_univariate_continuous(li, _LINEITEM_NUMERIC, "label", num_top=2)
-    return spark.createDataFrame([(c,) for c in sel], "feature string")
+    return local_rows(spark, [(c,) for c in sel], "feature string")
 
 
 _UNIVARIATE_CONT_ORACLE = (
@@ -649,8 +650,8 @@ def q_ri_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (f"{child}.{fk}", f"{parent}.{pk}", n_child, n_orphans, n_orphans == 0)
         )
-    return spark.createDataFrame(
-        rows, "child_fk string, parent_key string, n_child long,"
+    return local_rows(
+        spark, rows, "child_fk string, parent_key string, n_child long,"
         " n_orphans long, holds boolean"
     )
 

@@ -39,6 +39,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from ..dedup.embedding import cosine_to_const_expr
+from ..sources.local import local_rows
 
 
 def _int8_codes(x: np.ndarray) -> np.ndarray:
@@ -146,6 +147,6 @@ def kcenter_coreset_quantized(
         center_codes.append(_int8_codes(np.asarray(far._v, dtype=np.float64)))
 
     spark = df.sparkSession
-    return spark.createDataFrame(
-        centers, "center_rank long, id long, max_center_sim long"
+    return local_rows(
+        spark, centers, "center_rank long, id long, max_center_sim long"
     )

@@ -7,6 +7,7 @@ from .readers import (
     register_star_views,
 )
 from .writers import write_parquet, write_report_csv
+from .local import local_rows
 from .bucketing import write_bucketed_table, bucketed_join
 from .compaction import compact_parquet
 
@@ -24,4 +25,5 @@ __all__ = [
     "write_bucketed_table",
     "bucketed_join",
     "compact_parquet",
+    "local_rows",
 ]

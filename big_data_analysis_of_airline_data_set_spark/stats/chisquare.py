@@ -16,6 +16,8 @@ from pyspark.ml.feature import StringIndexer, VectorAssembler
 from pyspark.ml.stat import ChiSquareTest
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.local import local_rows
+
 
 def index_categoricals(
     df: DataFrame, cols: list[str], *, suffix: str = "_string"
@@ -53,6 +55,6 @@ def chi_square_test(
         )
         for i in range(len(categorical_cols))
     ]
-    return spark.createDataFrame(
-        rows, "feature string, statistic double, dof bigint, p_value double"
+    return local_rows(
+        spark, rows, "feature string, statistic double, dof bigint, p_value double"
     )

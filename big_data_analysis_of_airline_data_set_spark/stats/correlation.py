@@ -19,6 +19,8 @@ from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.stat import Correlation
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.local import local_rows
+
 
 def correlation_matrix(
     df: DataFrame, cols: list[str], method: str = "pearson"
@@ -48,4 +50,4 @@ def correlation_pairs_df(
         for i in range(len(cols))
         for j in range(i, len(cols))
     ]
-    return spark.createDataFrame(rows, "col_a string, col_b string, corr double")
+    return local_rows(spark, rows, "col_a string, col_b string, corr double")

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.local import local_rows
 from .chisquare import chi_square_test
 from .correlation import correlation_pairs_df
 from .selectors import select_univariate_categorical, select_univariate_continuous
@@ -57,5 +58,5 @@ def feature_selection_job(
         + [("univariate_continuous", c) for c in sorted(sel_num)]
         + [("variance_threshold", c) for c in sorted(sel_var)]
     )
-    selected = spark.createDataFrame(selected_rows, "method string, feature string")
+    selected = local_rows(spark, selected_rows, "method string, feature string")
     return {"correlation": corr, "chi_square": chi, "selected": selected}

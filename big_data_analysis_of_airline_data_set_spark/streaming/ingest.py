@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..sources.local import local_rows
 from ..text.analysis import content_fingerprint
 
 DOCS_STREAM_SCHEMA = StructType(
@@ -56,7 +57,7 @@ def documents_stream_reader(spark: SparkSession, docs_dir: str) -> DataFrame:
 def seed_fingerprint_store(spark: SparkSession, store_dir: str) -> None:
     """Create an empty store so the first micro-batch has something to
     anti-join (parquet can't read a dir with no footer files)."""
-    spark.createDataFrame([], _STORE_SCHEMA).write.mode("overwrite").parquet(store_dir)
+    local_rows(spark, [], _STORE_SCHEMA).write.mode("overwrite").parquet(store_dir)
 
 
 def run_dedup_ingest_available_now(
@@ -82,7 +83,7 @@ def run_dedup_ingest_available_now(
         ]
     )
     # seed the sink so a zero-survivor run still reads back as empty
-    spark.createDataFrame([], out_schema).write.mode("append").parquet(out_dir)
+    local_rows(spark, [], out_schema).write.mode("append").parquet(out_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..sources.local import local_rows
 from .windows import tumbling_counts
 
 EVENTS_STREAM_SCHEMA = StructType(
@@ -131,7 +132,7 @@ def _run_to_memory(
                 .start()
             )
             q.awaitTermination()
-            spark.createDataFrame([], result.schema).createOrReplaceTempView(
+            local_rows(spark, [], result.schema).createOrReplaceTempView(
                 query_name
             )
         else:
@@ -630,8 +631,8 @@ def run_upsert_sink_stream_available_now(
     q.awaitTermination()
     shutil.rmtree(checkpoint, ignore_errors=True)
     if state["dir"] is None:  # empty source → empty state, right schema
-        return spark.createDataFrame(
-            [], "user_id long, ts timestamp, event_id long, value double"
+        return local_rows(
+            spark, [], "user_id long, ts timestamp, event_id long, value double"
         )
     # eager: the result must survive this base dir's later eviction
     return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)

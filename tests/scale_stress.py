@@ -1131,10 +1131,10 @@ def stress_graph_family(spark) -> list[dict]:
         )
 
     def co50():
-        return _co_supplier_edges(spark, SF1, 0.5)
+        return _co_supplier_edges(spark, SF1, 0.5)[0]
 
     def co90():
-        return _co_supplier_edges(spark, SF1, 0.9)
+        return _co_supplier_edges(spark, SF1, 0.9)[0]
 
     def trade():
         return _trading_edges(spark, SF1)

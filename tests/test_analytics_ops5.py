@@ -2,30 +2,13 @@
 shapes and nothing else declares one), plus unit tests for the
 product-quantization codebook (``embedding_pq_codebook``,
 plans/content.py) and inter-event gap statistics
-(``events_gap_stats``, plans/events_queries.py).
-test_oracle_parity checks this file's catalog names against their
-DuckDB oracles."""
+(``events_gap_stats``, plans/events_queries.py). Oracle parity of
+these queries is test_relational_queries.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import pytest
-
 from big_data_analysis_of_airline_data_set_spark import plans
 from big_data_analysis_of_airline_data_set_spark.plans import all_queries, tpch
-from tests.oracle_harness import check_query
-
-NEW_OPS = [
-    "tpch_q6_style",
-    "tpch_q11_style",
-    "tpch_q20_style",
-    "embedding_pq_codebook",
-    "events_gap_stats",
-]
-
-
-@pytest.mark.parametrize("name", NEW_OPS)
-def test_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
 
 
 def test_all_22_tpch_shapes_present():

@@ -1,8 +1,8 @@
 """Graph operators (operators/graph.py, dedup/components.py):
 hand-checkable structure on tiny graphs, determinism, mass behavior,
-cache release, the sort-merge side of the broadcast gate, and empty
-input. Value parity with the unrolled DuckDB replays is the catalog
-oracles' job."""
+cache release, the sort-merge side of the broadcast gate, empty input,
+and the row-sized width of the kit's cached tables. Value parity with
+the unrolled DuckDB replays is the catalog oracles' job."""
 
 from __future__ import annotations
 
@@ -23,6 +23,7 @@ from big_data_analysis_of_airline_data_set_spark.operators.graph import (
     pagerank_converged,
     triangle_counts,
 )
+from big_data_analysis_of_airline_data_set_spark.plans import all_queries
 
 
 def _pagerank_rows(edges, **kwargs):
@@ -268,10 +269,21 @@ _EDGES = [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6), (6, 4), (3, 4), (6, 7)]
 _FOREST = [(1, None), (2, 1), (3, 2), (4, 3), (5, None), (6, 5)]
 
 
-def _op_result(spark, name, *, empty=False):
+def _op_result(spark, name, *, empty=False, cached=False):
     """Comparable result of graph operator ``name`` on a small fixed
-    graph (or on empty input); BFS seeds at vertex 1 either way."""
+    graph (or on empty input); BFS seeds at vertex 1 either way. A
+    ``cached`` input makes the loops size their edge tables from its
+    row count (one partition here) instead of the session width."""
     e = spark.createDataFrame([] if empty else _EDGES, "u long, v long")
+    if cached:
+        e = e.persist()
+    try:
+        return _run_op(spark, name, e, empty)
+    finally:
+        e.unpersist()
+
+
+def _run_op(spark, name, e, empty):
     if name == "pagerank":
         return sorted(_pagerank_rows(e, src="u", dst="v", iterations=5))
     if name == "pagerank_converged":
@@ -313,13 +325,16 @@ _GATED = [
 @pytest.mark.parametrize("name", _GATED)
 def test_sort_merge_path_matches_broadcast_path(spark, monkeypatch, name):
     """With the node-count gate closed (``_BC_NODES_MAX = 0``) every gated
-    operator takes the unhinted join path at session width and returns
-    the broadcast path's result; both runs restore the shuffle width."""
+    operator takes the unhinted join path and returns the broadcast
+    path's result, over a session-width edge table and over one sized
+    from a cached input; every run restores the shuffle width."""
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     broadcast = _op_result(spark, name)
+    assert _op_result(spark, name, cached=True) == broadcast
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
     monkeypatch.setattr(graph, "_BC_NODES_MAX", 0)
     assert _op_result(spark, name) == broadcast
+    assert _op_result(spark, name, cached=True) == broadcast
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
 
 
@@ -327,7 +342,89 @@ def test_sort_merge_path_matches_broadcast_path(spark, monkeypatch, name):
     "name", [*_GATED, "connected_components", "triangle_counts"]
 )
 def test_operator_on_empty_input(spark, name):
-    """Empty input gives an empty result — BFS keeps its seed at dist 0,
-    and pagerank_converged stops at iteration 0."""
+    """Empty input, cached or not, gives an empty result — BFS keeps its
+    seed at dist 0, and pagerank_converged stops at iteration 0."""
     want = {"bfs_distances": [(1, 0)], "pagerank_converged": ([], 0)}
     assert _op_result(spark, name, empty=True) == want.get(name, [])
+    assert _op_result(spark, name, empty=True, cached=True) == want.get(name, [])
+
+
+def _tasks(spark, run) -> int:
+    """Tasks Spark ran for ``run()``, from the status store's job
+    records (per-stage records can already be evicted in a long
+    session; the job's own counts cannot)."""
+    sc, group = spark.sparkContext, "k-core-tasks"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return sum(
+        d.numTasks() - d.numSkippedTasks()
+        for d in (jsc.statusStore().job(j) for j in jobs)
+    )
+
+
+def test_k_core_query_tasks_sized_from_rows(spark, sf_dir):
+    """``graph_k_core`` at sf0.001 caches its co-occurrence table, its
+    symmetric edge set and the loop's edge table at the partition count
+    their few hundred rows need, not the session width: a warm call
+    (co table already cached) runs at most 40 tasks. Cached at the
+    session width every peel round scans every partition several times
+    over (125 tasks per call at width 8, 485 at width 32)."""
+    q = all_queries()["graph_k_core"].fn
+    q(spark, sf_dir).collect()  # builds the session's co table
+    assert _tasks(spark, lambda: q(spark, sf_dir).collect()) <= 40
+
+
+def test_edge_table_sized_only_from_a_cached_input(spark):
+    """A cached input is counted and sizes the table; an uncached one
+    keeps the session width (its lineage is never run just to size)."""
+    e = spark.createDataFrame(_EDGES, "u long, v long")
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with graph._edge_table(e, "u", "v") as sym:
+        assert sym.rdd.getNumPartitions() == width
+    e = e.persist()
+    try:
+        with graph._edge_table(e, "u", "v") as sym:
+            assert sym.rdd.getNumPartitions() == 1
+            assert sorted(sym.collect()) == sorted(
+                [(a, b) for a, b in _EDGES] + [(b, a) for a, b in _EDGES]
+            )
+    finally:
+        e.unpersist()
+
+
+def test_broadcast_peel_round_has_no_shuffle(spark):
+    """Under the broadcast gate a k-core peel round over the sized edge
+    table is shuffle-free: both semi-joins broadcast the survivors and
+    the degree aggregate reuses the table's _s partitioning."""
+    e = spark.createDataFrame(_EDGES, "u long, v long").persist()
+    try:
+        with graph._edge_table(e, "u", "v") as sym:
+            alive = sym.select(F.col("_s").alias("vertex")).distinct()
+            alive = alive.localCheckpoint(eager=True)
+            rnd = graph._peel_round(sym, alive, alive.count(), k=2)
+            nodes = _node_names(rnd._jdf.queryExecution().executedPlan())
+    finally:
+        e.unpersist()
+    assert "BroadcastExchange" in nodes and "InMemoryTableScan" in nodes
+    assert "Exchange" not in nodes
+
+
+def _node_names(plan) -> list[str]:
+    """Operator names of a physical plan, AQE's initial plan included,
+    not descending into a cache scan (its build plan is not the
+    round's)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _node_names(plan.executedPlan())
+    if name == "InMemoryTableScan":
+        return [name]
+    kids = plan.children()
+    return [name] + [
+        n for i in range(kids.size()) for n in _node_names(kids.apply(i))
+    ]
