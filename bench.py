@@ -162,7 +162,8 @@ SUITES: dict[str, list[str]] = {
         "sketch_cms_join_size",
         "events_peak_concurrency",
     ],
-    # plans/analytics_ops.py
+    # plans/analytics_ops.py (Welch, Mann-Whitney and CUPED now in
+    # plans/experiments.py)
     "r6b_ops": [
         "sketch_hll_set_ops",
         "graph_bfs_distances",
@@ -200,9 +201,10 @@ SUITES: dict[str, list[str]] = {
         "sink_jsonl_roundtrip",
     ],
     # plans/tpch.py (all but Q1/Q3/Q5), then the analytics that landed
-    # beside those shapes: analytics_ops6.py .. analytics_ops9.py, seven
-    # queries now in statistics.py, content.py and events_queries.py,
-    # and join_bucketed_colocated (plans/patterns.py)
+    # beside those shapes, now in their family modules (the A/B
+    # readouts in experiments.py; the rest in events_queries.py,
+    # statistics.py, content.py, curation_queries.py, relational2.py
+    # and patterns.py), and join_bucketed_colocated (plans/patterns.py)
     "r6d_ops": [
         "tpch_q2_style",
         "tpch_q4_style",

@@ -30,6 +30,7 @@ _MODULES = [
         "patterns",
         "tpch",
         "statistics",
+        "experiments",
         "ml_queries",
         "content",
         "curation_queries",
@@ -39,10 +40,6 @@ _MODULES = [
         "multimodal_queries",
         "analytics_ops",
         "analytics_ops2",
-        "analytics_ops6",
-        "analytics_ops7",
-        "analytics_ops8",
-        "analytics_ops9",
     )
 ]
 

@@ -1,5 +1,5 @@
 """Segment/network analytics catalog: HLL set algebra, multi-source
-BFS, Welch's t, RFM quartile segmentation, two-feature OLS.
+BFS, RFM quartile segmentation, two-feature OLS.
 
 The continuation-of-round-6 wave (no reference analogue; engine
 surface beyond the reference per the brief — the reference's own
@@ -8,7 +8,7 @@ nothing). Each entry follows the catalog contract: a Spark-first plan
 plus a DuckDB oracle that replays the SAME arithmetic — the sketch
 estimator fragments come from ``patterns.hll_sql_parts`` and the
 closed-form statistics share literal expression text with the Spark
-plan via ``stats.regression``'s WELCH_*/OLS2_* constants, so neither
+plan via ``stats.regression``'s OLS2_* constants, so neither
 side can drift.
 """
 
@@ -26,9 +26,6 @@ from ..stats.regression import (
     OLS2_B1,
     OLS2_B2,
     OLS2_R2,
-    WELCH_DOF,
-    WELCH_STAGE1,
-    WELCH_T,
 )
 from .patterns import _unpersist_quietly, hll_sql_parts
 from .spec import US_DAY, US_HOUR, QuerySpec, day_bucket, day_bucket_sql
@@ -238,73 +235,6 @@ FROM {prev} GROUP BY dist
 """
 
 
-# --------------------- Welch's two-sample t ---------------------
-
-
-def q_stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t per event type between the even/odd
-    user-id populations (stats/regression.py:welch_t_test) — the
-    continuous-metric A/B readout next to the proportion z-test.
-    Exact decimal moments in one pass; t and the Welch-Satterthwaite
-    dof evaluate the SAME expression text the oracle runs (the
-    WELCH_* constants), so the statistics hash-match."""
-    from ..stats.regression import welch_t_test
-
-    e = read_testdata_table(spark, sf_dir, "events")
-    return welch_t_test(
-        e,
-        group_cols=["event_type"],
-        segment_col=F.col("user_id") % 2,
-        value_col="value",
-        seg_a=0,
-        seg_b=1,
-    )
-
-
-def _welch_oracle() -> str:
-    stage1 = ",\n         ".join(
-        f"{text} AS {name}" for name, text in WELCH_STAGE1.items()
-    )
-    dec = "CAST(value AS DECIMAL(18,6))"
-    # product operands widen to (19,6): DuckDB keeps (18,6)x(18,6) on
-    # the int64 fast path and overflows once the INTERNAL scaled
-    # values' product exceeds int64 — (19,6) forces the hugeint path;
-    # the widening is lossless so the values are unchanged
-    dec19 = "CAST(value AS DECIMAL(19,6))"
-    return f"""
-WITH m AS (
-  SELECT event_type,
-         CAST(count(*) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS na,
-         CAST(count(*) FILTER (WHERE user_id % 2 = 1) AS BIGINT) AS nb,
-         CAST(sum(CAST({dec} AS DECIMAL(38,6)))
-              FILTER (WHERE user_id % 2 = 0) AS DOUBLE) AS sa,
-         CAST(sum(CAST({dec} AS DECIMAL(38,6)))
-              FILTER (WHERE user_id % 2 = 1) AS DOUBLE) AS sb,
-         CAST(sum(CAST({dec19} * {dec19} AS DECIMAL(38,12)))
-              FILTER (WHERE user_id % 2 = 0) AS DOUBLE) AS saa,
-         CAST(sum(CAST({dec19} * {dec19} AS DECIMAL(38,12)))
-              FILTER (WHERE user_id % 2 = 1) AS DOUBLE) AS sbb
-  FROM events WHERE value IS NOT NULL
-  GROUP BY event_type
-), m2 AS (
-  SELECT event_type, na, nb,
-         CAST(na AS DOUBLE) AS nad, CAST(nb AS DOUBLE) AS nbd,
-         sa, sb, saa, sbb
-  FROM m
-), s1 AS (
-  SELECT event_type, na, nb, nad, nbd,
-         {stage1}
-  FROM m2
-)
-SELECT event_type, na AS n_a, nb AS n_b,
-       round(mean_a, 6) AS mean_a, round(mean_b, 6) AS mean_b,
-       round(var_a, 6) AS var_a, round(var_b, 6) AS var_b,
-       round({WELCH_T}, 6) AS t_stat,
-       round({WELCH_DOF}, 6) AS dof
-FROM s1
-"""
-
-
 # --------------------- RFM quartile segmentation ---------------------
 
 
@@ -504,10 +434,6 @@ QUERIES: list[QuerySpec] = [
     QuerySpec(
         "graph_bfs_distances", q_graph_bfs_distances, _bfs_oracle(),
         "Multi-source BFS hop distances over the trading graph",
-    ),
-    QuerySpec(
-        "stats_welch_ttest", q_stats_welch_ttest, _welch_oracle(),
-        "Welch's unequal-variance two-sample t per event type",
     ),
     QuerySpec(
         "events_rfm_segments", q_events_rfm_segments, _RFM_ORACLE,
@@ -863,67 +789,6 @@ FROM (
 """
 
 
-# --------------------- Mann-Whitney U ---------------------
-
-
-def q_stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Whitney U per event type between even/odd user-id
-    populations (stats/regression.py:mann_whitney_u) — the rank-based
-    nonparametric companion to stats_welch_ttest over the same
-    segmentation, exact midranks (×2 integers) with the tie-corrected
-    normal approximation evaluated from the shared MANNWHITNEY_Z
-    text."""
-    from ..stats.regression import mann_whitney_u
-
-    e = read_testdata_table(spark, sf_dir, "events")
-    return mann_whitney_u(
-        e,
-        group_cols=["event_type"],
-        segment_col=F.col("user_id") % 2,
-        value_col="value",
-        seg_a=0,
-        seg_b=1,
-    )
-
-
-def _mannwhitney_oracle() -> str:
-    from ..stats.regression import MANNWHITNEY_Z
-
-    return f"""
-WITH pooled AS (
-  SELECT event_type,
-         CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS is_a,
-         CAST(value AS DECIMAL(18,6)) AS v
-  FROM events WHERE value IS NOT NULL
-), ranked AS (
-  SELECT event_type, is_a,
-         CAST(2 * rank() OVER (PARTITION BY event_type ORDER BY v)
-              + count(*) OVER (PARTITION BY event_type, v) - 1
-              AS BIGINT) AS mid2,
-         CAST(count(*) OVER (PARTITION BY event_type, v) AS BIGINT) AS t
-  FROM pooled
-), agg AS (
-  SELECT event_type,
-         CAST(sum(is_a) AS BIGINT) AS na,
-         CAST(sum(1 - is_a) AS BIGINT) AS nb,
-         CAST(sum(CASE WHEN is_a = 1 THEN mid2 END) AS BIGINT) AS r2a,
-         CAST(sum(CAST(t * t - 1 AS DECIMAL(38,0))) AS DOUBLE) AS s_ties_d
-  FROM ranked GROUP BY event_type
-), st AS (
-  SELECT event_type, na, nb,
-         r2a - na * (na + 1) AS u2a,
-         CAST(na AS DOUBLE) AS nad,
-         CAST(nb AS DOUBLE) AS nbd,
-         CAST(r2a - na * (na + 1) AS DOUBLE) AS u2a_d,
-         s_ties_d
-  FROM agg
-)
-SELECT event_type, na AS n_a, nb AS n_b, u2a AS u2_a,
-       round({MANNWHITNEY_Z}, 6) AS z_stat
-FROM st
-"""
-
-
 QUERIES.extend(
     [
         QuerySpec(
@@ -943,12 +808,6 @@ QUERIES.extend(
             q_text_bm25_topk,
             _bm25_oracle(),
             "BM25-style lexical top-k with rational idf",
-        ),
-        QuerySpec(
-            "stats_mannwhitney_u",
-            q_stats_mannwhitney_u,
-            _mannwhitney_oracle(),
-            "Tie-corrected Mann-Whitney U per event type",
         ),
     ]
 )
@@ -1281,173 +1140,6 @@ QUERIES.extend(
 )
 
 
-# --------------------- CUPED adjusted A/B readout ---------------------
-
-
-def q_stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction for the even/odd user A/B split: the
-    pre-period metric (first half of the observed day range) is the
-    covariate, the experiment-period metric the outcome;
-    θ = cov(x,y)/var(x) is fit POOLED across both arms (the standard
-    unbiased choice — fitting θ per arm leaks the treatment effect
-    into the adjustment), and the adjusted delta is
-    (ȳ_a − θx̄_a) − (ȳ_b − θx̄_b). ρ² is the variance-reduction
-    fraction CUPED delivers. The modern experimentation primitive the
-    plain z/t readouts lack.
-
-    Exactness: per-user period sums accumulate in DECIMAL, the
-    user-level moment sums likewise (DECIMAL(18,6) per-user values,
-    (37,12) products), and θ/deltas/ρ² are one fixed double
-    expression over exact inputs. The period split day is integer
-    arithmetic from the observed day range — no calendar functions.
-    Scale: one event→user aggregation, one 1-row moment aggregation;
-    the moment shuffle carries eight numbers."""
-    e = read_testdata_table(spark, sf_dir, "events")
-    # two plan references (mid-day scalar + per-user aggregation) and
-    # deliberately NO checkpoint: the frame is raw-event-sized, and
-    # materializing it would cost more than the second scan — the
-    # scalar pass prunes to the ts column alone, so the "duplicate"
-    # read is a one-column parquet scan (contrast events_forecast_eval,
-    # whose re-referenced frame is the AGGREGATED daily series)
-    days = e.select(
-        day_bucket("ts").alias("day"),
-        (F.col("user_id") % 2).alias("arm"),
-        "user_id",
-        F.col("value").cast("decimal(18,6)").alias("v"),
-    ).filter(F.col("v").isNotNull())
-    rng = days.agg(
-        F.expr("(min(day) + max(day) + 1) div 2").alias("mid_day")
-    )
-    per_user = (
-        days.crossJoin(F.broadcast(rng))
-        .groupBy("user_id", "arm")
-        .agg(
-            F.sum(
-                F.when(F.col("day") < F.col("mid_day"), F.col("v")).cast(
-                    "decimal(38,6)"
-                )
-            ).alias("_x"),
-            F.sum(
-                F.when(F.col("day") >= F.col("mid_day"), F.col("v")).cast(
-                    "decimal(38,6)"
-                )
-            ).alias("_y"),
-        )
-        .select(
-            "arm",
-            # users silent in a period contribute 0, not NULL (they ARE
-            # part of the experiment population)
-            F.coalesce(F.col("_x"), F.lit(0)).cast("decimal(18,6)").alias("x"),
-            F.coalesce(F.col("_y"), F.lit(0)).cast("decimal(18,6)").alias("y"),
-        )
-    )
-    m = per_user.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("long").alias(
-            "n_a"
-        ),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias(
-            "n_b"
-        ),
-        F.sum(F.col("x").cast("decimal(38,6)")).cast("double").alias("sx"),
-        F.sum(F.col("y").cast("decimal(38,6)")).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,12)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,12)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast("decimal(38,12)"))
-        .cast("double")
-        .alias("syy"),
-        F.sum(F.when(F.col("arm") == 0, F.col("x")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sxa"),
-        F.sum(F.when(F.col("arm") == 0, F.col("y")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sya"),
-        F.sum(F.when(F.col("arm") == 1, F.col("x")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sxb"),
-        F.sum(F.when(F.col("arm") == 1, F.col("y")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("syb"),
-    )
-    return m.select(
-        "n_a",
-        "n_b",
-        F.round(F.expr(_CUPED_THETA), 6).alias("theta"),
-        F.round(F.expr(_CUPED_DELTA_RAW), 6).alias("delta_raw"),
-        F.round(F.expr(_CUPED_DELTA_ADJ), 6).alias("delta_cuped"),
-        F.round(F.expr(_CUPED_RHO2), 6).alias("rho2"),
-    )
-
-
-# shared closed-form texts over the moment columns (n, n_a, n_b, sx,
-# sy, sxy, sxx, syy, sxa, sya, sxb, syb) — same strings for F.expr and
-# the oracle
-_CUPED_COV = "(CAST(n AS DOUBLE) * sxy - sx * sy)"
-_CUPED_VARX = "nullif(CAST(n AS DOUBLE) * sxx - sx * sx, 0.0)"
-_CUPED_VARY = "nullif(CAST(n AS DOUBLE) * syy - sy * sy, 0.0)"
-_CUPED_THETA = f"({_CUPED_COV} / {_CUPED_VARX})"
-_CUPED_DELTA_RAW = (
-    "(sya / CAST(n_a AS DOUBLE) - syb / CAST(n_b AS DOUBLE))"
-)
-_CUPED_DELTA_ADJ = (
-    f"((sya / CAST(n_a AS DOUBLE) - {_CUPED_THETA} * sxa / CAST(n_a AS DOUBLE))"
-    f" - (syb / CAST(n_b AS DOUBLE) - {_CUPED_THETA} * sxb / CAST(n_b AS DOUBLE)))"
-)
-_CUPED_RHO2 = f"({_CUPED_COV} * {_CUPED_COV} / ({_CUPED_VARX} * {_CUPED_VARY}))"
-
-
-def _cuped_oracle() -> str:
-    return f"""
-WITH days AS (
-  SELECT {day_bucket_sql('ts')} AS day,
-         user_id % 2 AS arm, user_id,
-         CAST(value AS DECIMAL(18,6)) AS v
-  FROM events WHERE value IS NOT NULL
-), rng AS (
-  SELECT (min(day) + max(day) + 1) // 2 AS mid_day FROM days
-), per_user AS (
-  SELECT user_id, arm,
-         CAST(coalesce(sum(CASE WHEN day < mid_day THEN v END), 0)
-              AS DECIMAL(18,6)) AS x,
-         CAST(coalesce(sum(CASE WHEN day >= mid_day THEN v END), 0)
-              AS DECIMAL(18,6)) AS y
-  FROM days CROSS JOIN rng
-  GROUP BY user_id, arm
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-         CAST(sum(CAST(y AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-         CAST(sum(CAST(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))
-                       AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-         CAST(sum(CAST(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))
-                       AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-         CAST(sum(CAST(CAST(y AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))
-                       AS DECIMAL(38,12))) AS DOUBLE) AS syy,
-         CAST(sum(CAST(CASE WHEN arm = 0 THEN x END AS DECIMAL(38,6)))
-              AS DOUBLE) AS sxa,
-         CAST(sum(CAST(CASE WHEN arm = 0 THEN y END AS DECIMAL(38,6)))
-              AS DOUBLE) AS sya,
-         CAST(sum(CAST(CASE WHEN arm = 1 THEN x END AS DECIMAL(38,6)))
-              AS DOUBLE) AS sxb,
-         CAST(sum(CAST(CASE WHEN arm = 1 THEN y END AS DECIMAL(38,6)))
-              AS DOUBLE) AS syb
-  FROM per_user
-)
-SELECT n_a, n_b,
-       round({_CUPED_THETA}, 6) AS theta,
-       round({_CUPED_DELTA_RAW}, 6) AS delta_raw,
-       round({_CUPED_DELTA_ADJ}, 6) AS delta_cuped,
-       round({_CUPED_RHO2}, 6) AS rho2
-FROM m
-"""
-
-
 # --------------------- Pareto / revenue concentration ---------------------
 
 
@@ -1747,12 +1439,6 @@ FROM agg
 
 QUERIES.extend(
     [
-        QuerySpec(
-            "stats_cuped_adjustment",
-            q_stats_cuped_adjustment,
-            _cuped_oracle(),
-            "CUPED-adjusted A/B delta with pooled theta and rho^2",
-        ),
         QuerySpec(
             "stats_pareto_coverage",
             q_stats_pareto_coverage,

@@ -1,9 +1,10 @@
 """Corpus-assembly query catalog: domain quota sampling, mixture
-rebalancing, sequence packing, benchmark decontamination, and int8
-embedding quantization — the post-dedup stage of a training-data
-pipeline (no reference analogue; beyond-reference ops per the brief).
+rebalancing (uniform and sqrt-temperature targets), sequence packing,
+benchmark decontamination, and int8 embedding quantization — the
+post-dedup stage of a training-data pipeline (no reference analogue;
+beyond-reference ops per the brief).
 
-All five are deterministic and fully oracled: sampling orders by md5
+All are deterministic and fully oracled: sampling orders by md5
 (engine-universal), packing is a window cumulative sum,
 decontamination replays md5 shingle hashes, and quantization emits
 integer checksums under explicit floor(+0.5) rounding.
@@ -627,6 +628,71 @@ FROM k
 """
 
 
+# ------------- temperature-smoothed domain mixture -------------
+
+
+def q_curation_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-smoothed source mixture for training-data
+    sampling (τ = 0.5): target share ∝ n^τ, the standard fix for
+    head-domain domination (raw sampling) vs uniform (τ→0). Reports
+    per source the raw share, the smoothed target share, and the
+    implied up/down-sampling factor.
+
+    Engine parity: τ = 0.5 makes the smoothing a SQRT — IEEE-exact
+    and identical in both engines, unlike a general pow/exp·ln
+    (libm-divergent). One count aggregation; the share denominators
+    are 2-number scalars broadcast back."""
+    docs = read_testdata_table(spark, sf_dir, "documents")
+    counts = docs.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+    # quantize each sqrt to 6 dp BEFORE summing: a raw double sum is
+    # order-dependent across partitions/engines (the repo's exact-
+    # accumulation contract); the decimal sum is exact
+    sq = F.round(F.sqrt(F.col("n_docs").cast("double")), 6).cast(
+        "decimal(18,6)"
+    )
+    tot = counts.agg(
+        F.sum("n_docs").cast("double").alias("tot_n"),
+        F.sum(sq).cast("double").alias("tot_sq"),
+    )
+    raw = F.col("n_docs").cast("double") / F.col("tot_n")
+    temp = sq.cast("double") / F.col("tot_sq")
+    return (
+        counts.crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            "n_docs",
+            F.round(raw, 6).alias("raw_share"),
+            F.round(temp, 6).alias("temp_share"),
+            F.round(temp / raw, 6).alias("sample_factor"),
+        )
+        .orderBy("source")
+    )
+
+
+_TEMPERATURE_ORACLE = """
+WITH counts AS (
+  SELECT source, count(*) AS n_docs FROM documents GROUP BY 1
+), tot AS (
+  SELECT CAST(SUM(n_docs) AS DOUBLE) AS tot_n,
+         CAST(SUM(CAST(round(sqrt(CAST(n_docs AS DOUBLE)), 6)
+                       AS DECIMAL(18,6))) AS DOUBLE) AS tot_sq
+  FROM counts
+)
+SELECT source, n_docs,
+       round(CAST(n_docs AS DOUBLE) / tot_n, 6) AS raw_share,
+       round(CAST(CAST(round(sqrt(CAST(n_docs AS DOUBLE)), 6)
+                       AS DECIMAL(18,6)) AS DOUBLE) / tot_sq, 6)
+         AS temp_share,
+       round((CAST(CAST(round(sqrt(CAST(n_docs AS DOUBLE)), 6)
+                        AS DECIMAL(18,6)) AS DOUBLE) / tot_sq)
+             / (CAST(n_docs AS DOUBLE) / tot_n), 6) AS sample_factor
+FROM counts, tot
+ORDER BY source
+"""
+
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "curation_chunking", q_chunking, _CHUNKING_ORACLE,
@@ -654,6 +720,12 @@ QUERIES: list[QuerySpec] = [
     QuerySpec(
         "curation_domain_mixture", q_domain_mixture, _MIXTURE_ORACLE,
         "domain token shares + uniform-target down-sampling weights",
+    ),
+    QuerySpec(
+        "curation_temperature_mixture",
+        q_curation_temperature_mixture,
+        _TEMPERATURE_ORACLE,
+        "Sqrt-temperature source mixture with sampling factors",
     ),
     QuerySpec(
         "curation_sequence_packing", q_sequence_packing, _PACKING_ORACLE,

@@ -11,7 +11,9 @@ late-data drops, stateful dedup) stays in tests/test_streaming*.py —
 those runtimes are inherently non-SQL-expressible. The batch
 per-user features (calendar lag, trailing-week RANGE mean, inter-event
 gap statistics) work on exact integer micros and whole days from the
-kit in ``spec.py``.
+kit in ``spec.py``. Beside the count funnel sit its time-to-convert
+and 7-day-window variants, the weekly cohort LTV triangle and the
+event-time disorder audit behind a watermark choice.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..caching import BoundedCache
+from ..operators.weighted_quantile import weighted_median
 from ..sources.readers import read_testdata_table
 from ..streaming.windows import (
     json_extract_k,
@@ -28,7 +31,7 @@ from ..streaming.windows import (
     sliding_counts,
     tumbling_counts,
 )
-from .spec import US_HOUR, US_SEC, QuerySpec, day_bucket, day_bucket_sql
+from .spec import US_DAY, US_HOUR, US_SEC, QuerySpec, day_bucket, day_bucket_sql
 
 
 def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -996,6 +999,32 @@ def q_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _first_views(ev: DataFrame) -> DataFrame:
+    """Step 1 of every funnel: each viewer's first view time ``t1``."""
+    return (
+        ev.filter(F.col("event_type") == "view")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
+    )
+
+
+def _step_counts(
+    v: DataFrame, c: DataFrame, p: DataFrame, click: str, purchase: str
+) -> DataFrame:
+    """(step, stage, n_users) for the view, click and purchase frames."""
+
+    def step(df: DataFrame, n: int, stage: str) -> DataFrame:
+        return df.agg(F.count(F.lit(1)).alias("n_users")).select(
+            F.lit(n).cast("long").alias("step"),
+            F.lit(stage).alias("stage"),
+            "n_users",
+        )
+
+    return step(v, 1, "view").unionByName(step(c, 2, click)).unionByName(
+        step(p, 3, purchase)
+    )
+
+
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel view → click → purchase: a user counts
     at step N only with an event strictly after their step-N-1 time.
@@ -1003,11 +1032,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the step joins broadcast — at 100 TB the only big-data pass is
     the three filtered scans feeding the first groupBys."""
     ev = read_testdata_table(spark, sf_dir, "events")
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
+    v = _first_views(ev)
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(F.broadcast(v), "user_id")
@@ -1022,17 +1047,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("t3"))
     )
-
-    def step(df: DataFrame, n: int, stage: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n_users")).select(
-            F.lit(n).cast("long").alias("step"),
-            F.lit(stage).alias("stage"),
-            "n_users",
-        )
-
-    return step(v, 1, "view").unionByName(step(c, 2, "click")).unionByName(
-        step(p, 3, "purchase")
-    )
+    return _step_counts(v, c, p, "click", "purchase")
 
 
 _FUNNEL_ORACLE = """
@@ -1047,6 +1062,349 @@ p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
 SELECT CAST(1 AS BIGINT) AS step, 'view' AS stage, count(*) AS n_users FROM v
 UNION ALL SELECT 2, 'click', count(*) FROM c
 UNION ALL SELECT 3, 'purchase', count(*) FROM p
+"""
+
+
+# ------------- funnel time-to-convert -------------
+
+
+def q_events_funnel_ttc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-to-convert between funnel steps (view→click,
+    click→purchase): per-stage converter count, mean gap, and the
+    exact lower-median gap in whole seconds.
+
+    Scale shape: the funnel stage frames reduce to one row per user
+    before any join (same discipline as events_funnel); the median
+    runs on operators/weighted_quantile.py:weighted_median with unit
+    weights — range-bucketed prefix counts, ordered window only
+    inside the crossing bucket, never a whole-stage sort. Gaps are
+    exact integer seconds (micros div 10⁶ on positive gaps), so sums
+    stay in BIGINT/DECIMAL and only the mean divides as float."""
+    ev = read_testdata_table(spark, sf_dir, "events")
+    v = _first_views(ev)
+    c = (
+        ev.filter(F.col("event_type") == "click")
+        .join(F.broadcast(v), "user_id")
+        .filter(F.col("ts") > F.col("t1"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t2"), F.min("t1").alias("t1k"))
+    )
+    p = (
+        ev.filter(F.col("event_type") == "purchase")
+        .join(F.broadcast(c), "user_id")
+        .filter(F.col("ts") > F.col("t2"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t3"), F.min("t2").alias("t2k"))
+    )
+    # integer division, not /-then-cast: Spark's cast-to-long
+    # truncates while DuckDB's CAST rounds — div/// agree on the
+    # positive gaps
+    gap_vc = c.select(
+        F.lit("view_to_click").alias("stage"),
+        F.expr(
+            f"(unix_micros(t2) - unix_micros(t1k)) div {US_SEC}"
+        ).alias("gap_s"),
+    )
+    gap_cp = p.select(
+        F.lit("click_to_purchase").alias("stage"),
+        F.expr(
+            f"(unix_micros(t3) - unix_micros(t2k)) div {US_SEC}"
+        ).alias("gap_s"),
+    )
+    # gaps feeds the median operator (3 refs internally) AND the
+    # mean aggregate — checkpoint once here
+    gaps = gap_vc.unionByName(gap_cp).localCheckpoint(eager=False)
+    med = weighted_median(
+        gaps,
+        group="stage",
+        val="gap_s",
+        weight_expr=F.lit(1).cast("decimal(18,2)"),
+        buckets=64,
+    ).select(
+        "stage", F.col("weighted_median").alias("median_gap_s")
+    )
+    means = gaps.groupBy("stage").agg(
+        F.count(F.lit(1)).alias("n_converters"),
+        F.round(
+            F.sum("gap_s").cast("double") / F.count(F.lit(1)).cast("double"),
+            6,
+        ).alias("mean_gap_s"),
+    )
+    return (
+        means.join(med, "stage")
+        .select("stage", "n_converters", "mean_gap_s", "median_gap_s")
+        .orderBy("stage")
+    )
+
+
+_TTC_ORACLE = f"""
+WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+           WHERE event_type = 'view' GROUP BY user_id),
+c AS (SELECT e.user_id, min(e.ts) AS t2, min(v.t1) AS t1k FROM events e
+      JOIN v ON e.user_id = v.user_id
+      WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY e.user_id),
+p AS (SELECT e.user_id, min(e.ts) AS t3, min(c.t2) AS t2k FROM events e
+      JOIN c ON e.user_id = c.user_id
+      WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY e.user_id),
+gaps AS (
+  SELECT 'view_to_click' AS stage,
+         (epoch_us(CAST(t2 AS TIMESTAMP))
+          - epoch_us(CAST(t1k AS TIMESTAMP))) // {US_SEC} AS gap_s
+  FROM c
+  UNION ALL
+  SELECT 'click_to_purchase',
+         (epoch_us(CAST(t3 AS TIMESTAMP))
+          - epoch_us(CAST(t2k AS TIMESTAMP))) // {US_SEC}
+  FROM p
+), cum AS (
+  SELECT stage, gap_s,
+         SUM(w) OVER (PARTITION BY stage ORDER BY gap_s
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cw,
+         SUM(w) OVER (PARTITION BY stage) AS total
+  FROM (SELECT stage, gap_s,
+               SUM(CAST(1 AS DECIMAL(18,2))) AS w
+        FROM gaps GROUP BY 1, 2) d
+), med AS (
+  SELECT stage, min(gap_s) AS median_gap_s
+  FROM cum WHERE 2 * cw >= total GROUP BY stage
+)
+SELECT g.stage, count(*) AS n_converters,
+       round(CAST(SUM(g.gap_s) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
+         AS mean_gap_s,
+       min(m.median_gap_s) AS median_gap_s
+FROM gaps g JOIN med m ON g.stage = m.stage
+GROUP BY g.stage
+ORDER BY g.stage
+"""
+
+
+# ------------- conversion-window funnel -------------
+
+
+def q_events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The count funnel with a CONVERSION WINDOW: a click counts only
+    within 7 days of the first view, a purchase only within 7 days
+    of the qualifying click — the production funnel semantics
+    (unbounded funnels overcount by attributing unrelated late
+    events).
+
+    Scale shape: identical reduction discipline to events_funnel —
+    each stage reduces to one row per user before the next broadcast
+    join; the window bound rides the stage filter, costing
+    nothing."""
+    ev = read_testdata_table(spark, sf_dir, "events")
+    win = F.expr("INTERVAL 7 DAYS")
+    v = _first_views(ev)
+    c = (
+        ev.filter(F.col("event_type") == "click")
+        .join(F.broadcast(v), "user_id")
+        .filter((F.col("ts") > F.col("t1")) & (F.col("ts") <= F.col("t1") + win))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t2"))
+    )
+    p = (
+        ev.filter(F.col("event_type") == "purchase")
+        .join(F.broadcast(c), "user_id")
+        .filter((F.col("ts") > F.col("t2")) & (F.col("ts") <= F.col("t2") + win))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t3"))
+    )
+    return _step_counts(v, c, p, "click_7d", "purchase_7d")
+
+
+_FUNNEL_WINDOWED_ORACLE = """
+WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+           WHERE event_type = 'view' GROUP BY user_id),
+c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
+      JOIN v ON e.user_id = v.user_id
+      WHERE e.event_type = 'click' AND e.ts > v.t1
+        AND e.ts <= v.t1 + INTERVAL 7 DAY
+      GROUP BY e.user_id),
+p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
+      JOIN c ON e.user_id = c.user_id
+      WHERE e.event_type = 'purchase' AND e.ts > c.t2
+        AND e.ts <= c.t2 + INTERVAL 7 DAY
+      GROUP BY e.user_id)
+SELECT CAST(1 AS BIGINT) AS step, 'view' AS stage, count(*) AS n_users FROM v
+UNION ALL SELECT 2, 'click_7d', count(*) FROM c
+UNION ALL SELECT 3, 'purchase_7d', count(*) FROM p
+"""
+
+
+# ------------- weekly cohort LTV -------------
+
+
+def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly-cohort lifetime value triangle: users cohort by their
+    first-activity week; revenue accumulates per (cohort_week,
+    weeks_since_first) with cohort size and cumulative LTV per user.
+
+    Scale shape: the cohort assignment is ONE per-user min
+    (broadcast back onto the user's own events via a keyed join —
+    both sides reduce/partition on user_id); the triangle frame is
+    O(weeks²) rows, so its cumulative window is bounded by the time
+    domain, never event volume. Revenue quantizes to DECIMAL(18,6);
+    the cumulative sum stays decimal until the final rounded
+    division."""
+    ev = read_testdata_table(spark, sf_dir, "events")
+    keyed = ev.select(
+        "user_id",
+        F.expr(f"(unix_micros(ts) div {US_DAY}) div 7").alias("week"),
+        F.round(F.col("value"), 6).cast("decimal(18,6)").alias("v"),
+    )
+    first = keyed.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
+    joined = keyed.join(first, "user_id").withColumn(
+        "weeks_since", F.col("week") - F.col("cohort_week")
+    )
+    cohort_sizes = first.groupBy("cohort_week").agg(
+        F.count(F.lit(1)).alias("cohort_users")
+    )
+    tri = joined.groupBy("cohort_week", "weeks_since").agg(
+        F.sum("v").alias("rev")
+    )
+    cum_w = (
+        W.partitionBy("cohort_week")
+        .orderBy("weeks_since")
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    return (
+        tri.withColumn("cum_rev", F.sum("rev").over(cum_w))
+        .join(F.broadcast(cohort_sizes), "cohort_week")
+        .select(
+            "cohort_week",
+            "weeks_since",
+            "cohort_users",
+            F.col("rev").cast("double").alias("week_revenue"),
+            F.round(
+                F.col("cum_rev").cast("double")
+                / F.col("cohort_users").cast("double"),
+                6,
+            ).alias("cum_ltv_per_user"),
+        )
+        .orderBy("cohort_week", "weeks_since")
+    )
+
+
+_LTV_ORACLE = f"""
+WITH keyed AS (
+  SELECT user_id,
+         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_DAY}) // 7 AS week,
+         CAST(round(value, 6) AS DECIMAL(18,6)) AS v
+  FROM events
+), first AS (
+  SELECT user_id, min(week) AS cohort_week FROM keyed GROUP BY 1
+), sizes AS (
+  SELECT cohort_week, count(*) AS cohort_users FROM first GROUP BY 1
+), tri AS (
+  SELECT f.cohort_week, k.week - f.cohort_week AS weeks_since,
+         SUM(k.v) AS rev
+  FROM keyed k JOIN first f ON k.user_id = f.user_id
+  GROUP BY 1, 2
+)
+SELECT t.cohort_week, t.weeks_since, s.cohort_users,
+       CAST(t.rev AS DOUBLE) AS week_revenue,
+       round(CAST(SUM(t.rev) OVER (PARTITION BY t.cohort_week
+                                   ORDER BY t.weeks_since
+                                   ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND CURRENT ROW) AS DOUBLE)
+             / CAST(s.cohort_users AS DOUBLE), 6) AS cum_ltv_per_user
+FROM tri t JOIN sizes s ON t.cohort_week = s.cohort_week
+ORDER BY t.cohort_week, t.weeks_since
+"""
+
+
+# ------------- event-time disorder audit -------------
+
+
+def q_events_disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Out-of-orderness audit per event type: treating event_id as
+    arrival order, how far do event times run behind the running
+    event-time high-water mark? Reports the late fraction and the
+    max/mean lateness — EXACTLY the numbers that justify a
+    structured-streaming watermark delay (`withWatermark("ts", X)`)
+    instead of guessing X.
+
+    Engine parity: lateness = clamped (running max − ts) in exact
+    integer micros; the running max is an ordered prefix window on
+    (event_id) — unique, so engine-deterministic. Scale shape: the
+    window partitions by event_type (per-type arrival streams);
+    state is one type's ordered frame, and at 100 TB arrival order
+    would partition further by ingest shard."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    w = (
+        W.partitionBy("event_type")
+        .orderBy("event_id")
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    us = F.unix_micros(F.col("ts"))
+    # each type's FIRST arrival has no prior high-water mark: drop it
+    # BEFORE the clamp — greatest(0, NULL) is engine-divergent
+    # (Spark's greatest skips NULLs), so the NULL must never reach it
+    lat = (
+        e.select(
+            "event_type",
+            us.alias("us"),
+            F.max(us).over(w).alias("prev_max"),
+        )
+        .filter(F.col("prev_max").isNotNull())
+        .select(
+            "event_type",
+            F.greatest(
+                F.lit(0).cast("long"), F.col("prev_max") - F.col("us")
+            ).alias("late_us"),
+        )
+    )
+    return (
+        lat.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_arrivals"),
+            F.sum((F.col("late_us") > 0).cast("long")).alias("n_late"),
+            F.round(
+                F.sum((F.col("late_us") > 0).cast("long")).cast("double")
+                / F.count(F.lit(1)).cast("double"),
+                6,
+            ).alias("late_frac"),
+            (F.max("late_us") / F.lit(US_SEC))
+            .cast("double")
+            .alias("max_lateness_s"),
+            F.round(
+                F.sum("late_us").cast("double")
+                / F.lit(float(US_SEC))
+                / F.count(F.lit(1)).cast("double"),
+                6,
+            ).alias("mean_lateness_s"),
+        )
+        .orderBy("event_type")
+    )
+
+
+_DISORDER_ORACLE = f"""
+WITH marked AS (
+  SELECT event_type,
+         epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+         max(epoch_us(CAST(ts AS TIMESTAMP))) OVER
+           (PARTITION BY event_type ORDER BY event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+           AS prev_max
+  FROM events
+), lat AS (
+  SELECT event_type,
+         greatest(CAST(0 AS BIGINT), prev_max - us) AS late_us
+  FROM marked WHERE prev_max IS NOT NULL
+)
+SELECT event_type,
+       count(*) AS n_arrivals,
+       CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_late,
+       round(CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS DOUBLE)
+             / CAST(count(*) AS DOUBLE), 6) AS late_frac,
+       CAST(max(late_us) AS DOUBLE) / {float(US_SEC)!r} AS max_lateness_s,
+       round(CAST(SUM(late_us) AS DOUBLE) / {float(US_SEC)!r}
+             / CAST(count(*) AS DOUBLE), 6) AS mean_lateness_s
+FROM lat
+GROUP BY event_type
+ORDER BY event_type
 """
 
 
@@ -1606,6 +1964,30 @@ QUERIES: list[QuerySpec] = [
     QuerySpec(
         "events_funnel", q_funnel, _FUNNEL_ORACLE,
         "ordered view→click→purchase conversion funnel",
+    ),
+    QuerySpec(
+        "events_funnel_ttc",
+        q_events_funnel_ttc,
+        _TTC_ORACLE,
+        "Funnel step time-to-convert: mean + bucketed exact median",
+    ),
+    QuerySpec(
+        "events_funnel_windowed",
+        q_events_funnel_windowed,
+        _FUNNEL_WINDOWED_ORACLE,
+        "Funnel with a 7-day conversion window per step",
+    ),
+    QuerySpec(
+        "events_cohort_ltv",
+        q_events_cohort_ltv,
+        _LTV_ORACLE,
+        "Weekly cohort LTV triangle with decimal cumulative revenue",
+    ),
+    QuerySpec(
+        "events_disorder_audit",
+        q_events_disorder_audit,
+        _DISORDER_ORACLE,
+        "Event-time lateness audit behind the watermark choice",
     ),
     QuerySpec(
         "events_histogram", q_histogram, _HISTOGRAM_ORACLE,

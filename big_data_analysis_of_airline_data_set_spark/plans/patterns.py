@@ -3,7 +3,7 @@ own surface: as-of, range (bucketized), point-in-time and bucketed
 co-located joins; exact and sketched quantiles; unpivot; SCD2 upsert,
 snapshot diff and incremental merges; sink round trips; Z-order cells;
 mergeable sketches (KMV, HLL, HDR, count-min); and the PageRank,
-k-core, triangle and hierarchy graph queries. The TPC-H shapes live in
+k-core, triangle, hierarchy and degree-histogram graph queries. The TPC-H shapes live in
 ``tpch.py``.
 """
 
@@ -1859,6 +1859,49 @@ FROM bucketed GROUP BY 1
 """
 
 
+# ------------- bit-length-binned degree distribution -------------
+
+
+def q_graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Log₂-binned degree distribution of the customer→order
+    bipartite graph (the first diagnostic before choosing a skew
+    strategy: how heavy is the degree tail?).
+
+    Engine parity: the bin is the integer BIT LENGTH of the degree —
+    LENGTH(BIN(deg)) is the engine-neutral floor(log₂)+1 (both
+    engines print minimal binary strings; float log2 misbins at
+    power-of-two boundaries, see the repo gotcha). All counts
+    exact."""
+    orders = read_testdata_table(spark, sf_dir, "orders")
+    deg = orders.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    return (
+        deg.groupBy(
+            F.length(F.bin(F.col("deg"))).cast("long").alias("deg_bits")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.min("deg").alias("min_deg"),
+            F.max("deg").alias("max_deg"),
+            F.sum("deg").alias("total_orders"),
+        )
+        .orderBy("deg_bits")
+    )
+
+
+_DEGREE_ORACLE = """
+SELECT CAST(length(bin(deg)) AS BIGINT) AS deg_bits,
+       count(*) AS n_customers,
+       min(deg) AS min_deg,
+       max(deg) AS max_deg,
+       CAST(SUM(deg) AS BIGINT) AS total_orders
+FROM (SELECT o_custkey, count(*) AS deg FROM orders GROUP BY 1) d
+GROUP BY 1
+ORDER BY 1
+"""
+
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "zorder_cells", q_zorder_cells, _zorder_oracle(),
@@ -1916,6 +1959,12 @@ QUERIES: list[QuerySpec] = [
         "graph_k_core", q_graph_k_core, _k_core_oracle(),
         "iterative k-core peeling (data-derived k) to fixpoint;"
         " 12-round MATERIALIZED-CTE oracle value-checks convergence",
+    ),
+    QuerySpec(
+        "graph_degree_histogram",
+        q_graph_degree_histogram,
+        _DEGREE_ORACLE,
+        "Bit-length-binned degree distribution (skew diagnostic)",
     ),
     QuerySpec(
         "pit_join_versions", q_pit_join, _PIT_ORACLE,

@@ -1,7 +1,8 @@
-"""Extended relational surface: rollup/grouping sets, set operations,
-approximate + exact distinct counts, scalar-function showcase, analytic
-windows, and the skew-salted join (result-equivalent to the plain
-join, proving the rewrite).
+"""Extended relational surface: rollup/grouping sets and
+percent-of-parent shares, set operations, approximate + exact
+distinct counts, scalar-function showcase, analytic windows, and the
+skew-salted join (result-equivalent to the plain join, proving the
+rewrite).
 
 The reference uses none of these (SURVEY.md §2.4/§2.7 note their
 absence), but a complete engine surface needs them and the judge's
@@ -568,6 +569,84 @@ FROM lineitem GROUP BY l_orderkey
 """
 
 
+# ------------- percent-of-parent hierarchy shares -------------
+
+
+def q_rollup_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Region → nation revenue hierarchy with each level's share of
+    its parent: nation % of region, region % of grand total — the
+    drill-down table every BI layer renders.
+
+    Scale shape: ONE aggregation reduces the fact join to the
+    nation-level frame (O(nations) rows); the region and grand
+    totals are windows over that TINY frame partitioned by region /
+    unpartitioned — never over fact rows. Revenue stays DECIMAL
+    through both window sums; the two shares are the only float
+    ops."""
+    nation = read_testdata_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    region = read_testdata_table(spark, sf_dir, "region").select(
+        "r_regionkey", "r_name"
+    )
+    cust = read_testdata_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_nationkey"
+    )
+    orders = read_testdata_table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy("o_custkey").agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
+    )
+    per_nation = (
+        per_cust.join(cust, per_cust.o_custkey == cust.c_custkey)
+        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .groupBy("r_name", "n_name")
+        .agg(F.sum("rev").alias("rev"))
+    )
+    w_region = Window.partitionBy("r_name")
+    w_all = Window.partitionBy()
+    return per_nation.select(
+        "r_name",
+        "n_name",
+        F.col("rev").cast("double").alias("revenue"),
+        F.round(
+            F.col("rev").cast("double")
+            / F.sum("rev").over(w_region).cast("double"),
+            6,
+        ).alias("pct_of_region"),
+        F.round(
+            F.sum("rev").over(w_region).cast("double")
+            / F.sum("rev").over(w_all).cast("double"),
+            6,
+        ).alias("region_pct_of_total"),
+    ).orderBy("r_name", "n_name")
+
+
+_SHARE_ORACLE = """
+WITH per_cust AS (
+  SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
+  FROM orders GROUP BY 1
+), per_nation AS (
+  SELECT r_name, n_name, SUM(rev) AS rev
+  FROM per_cust
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation ON c_nationkey = n_nationkey
+  JOIN region ON n_regionkey = r_regionkey
+  GROUP BY 1, 2
+)
+SELECT r_name, n_name,
+       CAST(rev AS DOUBLE) AS revenue,
+       round(CAST(rev AS DOUBLE)
+             / CAST(SUM(rev) OVER (PARTITION BY r_name) AS DOUBLE), 6)
+         AS pct_of_region,
+       round(CAST(SUM(rev) OVER (PARTITION BY r_name) AS DOUBLE)
+             / CAST(SUM(rev) OVER () AS DOUBLE), 6)
+         AS region_pct_of_total
+FROM per_nation
+ORDER BY r_name, n_name
+"""
+
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "array_functions", q_array_functions, _ARRAY_ORACLE,
@@ -578,6 +657,12 @@ QUERIES: list[QuerySpec] = [
     QuerySpec(
         "conditional_aggregates", q_conditional_aggregates, _CONDITIONAL_ORACLE,
         "count_if / FILTER-clause aggregation",
+    ),
+    QuerySpec(
+        "rollup_share_of_parent",
+        q_rollup_share_of_parent,
+        _SHARE_ORACLE,
+        "Nation-of-region and region-of-total revenue shares",
     ),
     QuerySpec(
         "set_intersect", q_set_intersect, _INTERSECT_ORACLE, "INTERSECT distinct"

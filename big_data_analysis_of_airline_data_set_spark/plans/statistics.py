@@ -9,9 +9,12 @@ making the p-value ordering monotone in the raw statistic, which IS
 SQL-computable: the oracles rank by chi-square statistic / explicit
 ANOVA F instead.
 
-Also here: integer-exact lag-1 autocorrelation of daily event counts
-and a customer-decile gains table on the bucketed global rank
-(``operators/ranking.py``), neither of which needs a global window.
+Also here: integer-exact lag-1 autocorrelation of daily event counts,
+a customer-decile gains table on the bucketed global rank
+(``operators/ranking.py``) and the ABC revenue classes on the
+bucketed-prefix cumulative, none of which needs a global window; and
+the feature-hashing collision audit. The A/B readouts live in
+``experiments.py``.
 """
 
 from __future__ import annotations
@@ -300,57 +303,6 @@ SELECT '{_KS_A}' AS group_a, '{_KS_B}' AS group_b,
                      - CAST(cb AS DOUBLE) / nullif(nb, 0))), 6)
          AS ks_d
 FROM c
-"""
-
-
-def q_stats_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test (stats/regression.py:ab_proportion_ztest):
-    users split into A/B by user_id parity, conversion = any purchase
-    event above 200 (non-degenerate rates at every sf). Exact unit
-    counts; the only floats are divisions and one sqrt —
-    correctly-rounded IEEE, so z hash-matches. The p-value is
-    deliberately absent (erf is libm-specific across engines)."""
-    from ..stats.regression import ab_proportion_ztest
-
-    ev = read_testdata_table(spark, sf_dir, "events")
-    return ab_proportion_ztest(
-        ev,
-        unit_col="user_id",
-        variant_col=F.when(F.col("user_id") % 2 == 0, "A").otherwise("B"),
-        conversion_col=(
-            (F.col("event_type") == "purchase") & (F.col("value") > 200)
-        ),
-    )
-
-
-_AB_TEST_ORACLE = """
-WITH units AS (
-  SELECT user_id,
-         CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
-         max(CASE WHEN event_type = 'purchase' AND value > 200
-                  THEN 1 ELSE 0 END) AS converted
-  FROM events GROUP BY 1, 2
-), pv AS (
-  SELECT variant, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(converted) AS BIGINT) AS c
-  FROM units GROUP BY variant
-), wide AS (
-  SELECT max(CASE WHEN variant = 'A' THEN n END) AS n_a,
-         max(CASE WHEN variant = 'A' THEN c END) AS conv_a,
-         max(CASE WHEN variant = 'B' THEN n END) AS n_b,
-         max(CASE WHEN variant = 'B' THEN c END) AS conv_b
-  FROM pv
-)
-SELECT 'A' AS variant_a, 'B' AS variant_b,
-       (SELECT CAST(count(*) AS BIGINT) FROM pv) AS n_variants,
-       n_a, conv_a, n_b, conv_b,
-       round(CAST(conv_a AS DOUBLE) / n_a, 6) AS rate_a,
-       round(CAST(conv_b AS DOUBLE) / n_b, 6) AS rate_b,
-       round((CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)
-             / nullif(sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                    * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                    * (1.0 / n_a + 1.0 / n_b)), 0.0), 6) AS z_stat
-FROM wide
 """
 
 
@@ -921,6 +873,178 @@ ORDER BY decile
 """
 
 
+# ------------- feature-hashing collision audit -------------
+
+_HASH_DIM = 64  # deliberately small so collisions exist at every sf
+
+
+def q_feature_hashing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hashing-trick collision audit: part brand+type categories hash
+    into a 64-bucket feature space (md5 prefix mod D — the
+    engine-replayable stand-in for the usual murmur); reports bucket
+    occupancy, distinct-category collisions, and the collision rate
+    the encoder would silently absorb.
+
+    The practical read: distinct_categories > 1 buckets tell you how
+    much signal the chosen D destroys BEFORE a model is trained —
+    at 100 TB the category vocabulary is only knowable this way.
+
+    Engine parity: the bucket is the established 56-bit md5-prefix →
+    BIGINT decode mod D; counts are exact."""
+    part = read_testdata_table(spark, sf_dir, "part")
+    cat = F.concat_ws("|", F.col("p_brand"), F.col("p_type"))
+    bucket = (
+        F.conv(F.substring(F.md5(cat), 1, 14), 16, 10).cast("long")
+        % _HASH_DIM
+    )
+    per_bucket = (
+        part.select(cat.alias("category"), bucket.alias("bucket"))
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count_distinct("category").alias("n_categories"),
+        )
+    )
+    return per_bucket.select(
+        "bucket",
+        "n_rows",
+        "n_categories",
+        (F.col("n_categories") > 1).alias("has_collision"),
+    ).orderBy("bucket")
+
+
+# 56-bit md5-prefix decode — the proven cross-engine fragment (see
+# curation_queries._MD5_56): exact BIGINT shift-adds, never a double
+# power (16^13 sums exceed 2^53 and would mis-round the modulus).
+_HASHING_ORACLE = f"""
+WITH rows_hashed AS (
+  SELECT category,
+         CAST(list_sum(list_transform(generate_series(1, 14), j ->
+              CAST(strpos('0123456789abcdef', substr(h, j, 1)) - 1
+                   AS BIGINT)
+              * (CAST(1 AS BIGINT) << (4 * (14 - j)))))
+              AS BIGINT) % {_HASH_DIM} AS bucket
+  FROM (SELECT concat_ws('|', p_brand, p_type) AS category,
+               md5(concat_ws('|', p_brand, p_type)) AS h
+        FROM part) s
+)
+SELECT bucket,
+       count(*) AS n_rows,
+       count(DISTINCT category) AS n_categories,
+       count(DISTINCT category) > 1 AS has_collision
+FROM rows_hashed
+GROUP BY bucket
+ORDER BY bucket
+"""
+
+
+# ------------- ABC revenue classification -------------
+
+
+def q_orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ABC inventory classification of parts by lineitem revenue:
+    accumulate revenue share in descending-revenue order and class
+    A = first 80% of revenue, B = next 15%, C = the tail. Reports
+    the class sizes and revenue shares — the 'how concentrated is
+    my catalog' table.
+
+    Engine parity: cumulative shares compare DECIMAL cum sums
+    against DECIMAL thresholds of the exact total (5·cum vs 4·total,
+    20·cum vs 19·total — integer multiples, no float thresholds);
+    ties break on part key. Scale shape: the descending cumulative
+    is the bucketed-prefix decomposition AGAIN (fourth instance) —
+    per-bucket DECIMAL sums chain on the 64-row bucket frame, and
+    the ordered window runs only WITHIN a bucket, so no whole-parts
+    single-partition sort exists anywhere in the plan."""
+    from ..operators.range_bucket import with_range_bucket
+
+    li = read_testdata_table(spark, sf_dir, "lineitem")
+    # rev feeds the bucketing twice (bounds + rows) via the helper
+    rev = (
+        li.groupBy("l_partkey")
+        .agg(
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias(
+                "rev"
+            )
+        )
+        .localCheckpoint(eager=False)
+    )
+    bucketed = with_range_bucket(rev, "rev", 64, descending=True)
+    per_bucket = bucketed.groupBy("_b").agg(F.sum("rev").alias("_wb"))
+    off_w = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
+    tot_w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    offsets = per_bucket.select(
+        "_b",
+        F.coalesce(
+            F.sum("_wb").over(off_w), F.lit(0).cast("decimal(38,2)")
+        ).alias("_carry"),
+        F.sum("_wb").over(tot_w).alias("tot"),
+    )
+    in_w = (
+        Window.partitionBy("_b")
+        .orderBy(F.desc("rev"), F.asc("l_partkey"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    classed = (
+        bucketed.join(F.broadcast(offsets), "_b")
+        .select(
+            "l_partkey",
+            "rev",
+            (F.col("_carry") + F.sum("rev").over(in_w)).alias("cum"),
+            "tot",
+        )
+    ).select(
+        "l_partkey",
+        "rev",
+        F.when(
+            F.lit(5) * F.col("cum") <= F.lit(4) * F.col("tot"), F.lit("A")
+        )
+        .when(
+            F.lit(20) * F.col("cum") <= F.lit(19) * F.col("tot"), F.lit("B")
+        )
+        .otherwise(F.lit("C"))
+        .alias("abc_class"),
+        "tot",
+    )
+    return (
+        classed.groupBy("abc_class")
+        .agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.round(
+                F.sum("rev").cast("double") / F.max("tot").cast("double"), 6
+            ).alias("revenue_share"),
+        )
+        .orderBy("abc_class")
+    )
+
+
+_ABC_ORACLE = """
+WITH rev AS (
+  SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS rev
+  FROM lineitem GROUP BY 1
+), ranked AS (
+  SELECT l_partkey, rev,
+         SUM(rev) OVER (ORDER BY rev DESC, l_partkey ASC
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cum,
+         SUM(rev) OVER () AS tot
+  FROM rev
+), classed AS (
+  SELECT l_partkey, rev, tot,
+         CASE WHEN 5 * cum <= 4 * tot THEN 'A'
+              WHEN 20 * cum <= 19 * tot THEN 'B'
+              ELSE 'C' END AS abc_class
+  FROM ranked
+)
+SELECT abc_class, count(*) AS n_parts,
+       round(CAST(SUM(rev) AS DOUBLE) / CAST(max(tot) AS DOUBLE), 6)
+         AS revenue_share
+FROM classed
+GROUP BY abc_class
+ORDER BY abc_class
+"""
+
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "stats_benford_audit", q_benford_audit, _benford_oracle(),
@@ -936,11 +1060,6 @@ QUERIES: list[QuerySpec] = [
         "ri_orphans", q_ri_orphans, _ri_oracle(),
         "referential-integrity audit: orphan counts per FK edge"
         " (anti-join per edge, deliberate tripwire edge included)",
-    ),
-    QuerySpec(
-        "stats_ab_test", q_stats_ab_test, _AB_TEST_ORACLE,
-        "two-proportion A/B z-test over experiment units, exact counts"
-        " + value-hash-stable z",
     ),
     QuerySpec(
         "stats_ks_drift", q_stats_ks_drift, _KS_DRIFT_ORACLE,
@@ -972,6 +1091,12 @@ QUERIES: list[QuerySpec] = [
         q_feature_winsorize_exact,
         _WINSORIZE_ORACLE,
         "exact interpolated-percentile winsorize twin (deterministic oracle baseline)",
+    ),
+    QuerySpec(
+        "feature_hashing_audit",
+        q_feature_hashing_audit,
+        _HASHING_ORACLE,
+        "Hashing-trick bucket occupancy and collision rate",
     ),
     QuerySpec(
         "feature_selection_job",
@@ -1028,5 +1153,11 @@ QUERIES: list[QuerySpec] = [
         q_customer_decile_lift,
         _DECILE_ORACLE,
         "Gains table from bucketed global rank (no global window)",
+    ),
+    QuerySpec(
+        "orders_abc_classification",
+        q_orders_abc_classification,
+        _ABC_ORACLE,
+        "ABC 80/15/5 revenue classes, bucketed-prefix cumulative",
     ),
 ]

@@ -91,11 +91,23 @@ def _normalize_events(df: DataFrame) -> DataFrame:
 # and must fail loudly, not be papered over by a cast.
 _INTEGRALS = (ByteType, ShortType, IntegerType, LongType)
 
-# (applicationId, path) → "pin" | "align"; see read_testdata_table.
-# LRU-bounded: a long-lived session cycling many sf_dirs keeps only
-# the most recent verdicts (each is one string; the bound guards the
-# key space, ~10 tables × live sf_dirs).
-_SCHEMA_VERDICT_CACHE: BoundedCache[tuple, str] = BoundedCache(64)
+# (applicationId, path) → the file's self-described schema; see
+# read_testdata_table. LRU-bounded: a long-lived session cycling many
+# sf_dirs keeps only the most recent footers (the bound guards the key
+# space, ~10 tables × live sf_dirs).
+_ON_DISK_SCHEMA_CACHE: BoundedCache[tuple, StructType] = BoundedCache(64)
+
+
+def _on_disk_schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet footer's schema of ``path``, inferred once per
+    (session, path). Inference is a Spark job, and files under a given
+    path don't change type mid-session."""
+    key = (spark.sparkContext.applicationId, path)
+    schema = _ON_DISK_SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = read_parquet_table(spark, path).schema
+        _ON_DISK_SCHEMA_CACHE.put(key, schema)
+    return schema
 
 
 def _safe_cast_ok(actual: DataType, expected: DataType) -> bool:
@@ -185,37 +197,28 @@ def read_testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFram
         # the on-disk ts encoding varies by testdata generation, and
         # pinning (say) LongType against a TIMESTAMP_MICROS file silently
         # reads raw micros as nanos. The legacy flag is session-settable
-        # and only affects NANOS files, so pin it unconditionally.
+        # and only affects NANOS files, so pin it unconditionally, before
+        # the footer is first read; the scan then pins the file's own
+        # schema, never the normalized one.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _normalize_events(read_parquet_table(spark, path))
+        on_disk = _on_disk_schema(spark, path)
+        df = _normalize_events(read_parquet_table(spark, path, on_disk))
         return _align_to_schema(df, TESTDATA_SCHEMAS["events"], name)
     expected = TESTDATA_SCHEMAS.get(name)
     if expected is None:
         return read_parquet_table(spark, path)
-    # The pin-vs-align verdict is a pure function of the on-disk footer,
-    # so cache it per (session, path): the validation costs one extra
-    # relation setup (footer read + py4j round-trips), which multiplied
-    # across every table touch of every query measurably drags the
-    # bench; files under a given path don't change type mid-session.
-    key = (spark.sparkContext.applicationId, path)
-    verdict = _SCHEMA_VERDICT_CACHE.get(key)
-    if verdict is None:
-        df = read_parquet_table(spark, path)
-        on_disk = {f.name: f.dataType for f in df.schema.fields}
-        verdict = (
-            "pin"
-            if all(
-                f.name in on_disk and _pinnable(on_disk[f.name], f.dataType)
-                for f in expected.fields
-            )
-            else "align"
-        )
-        _SCHEMA_VERDICT_CACHE.put(key, verdict)
-        if verdict == "align":
-            return _align_to_schema(df, expected, name)
-    if verdict == "pin":
+    # The pin-vs-align verdict is a pure function of the cached footer
+    # schema: without the cache, the validation costs one extra relation
+    # setup (footer read + py4j round-trips), which multiplied across
+    # every table touch of every query measurably drags the bench.
+    schema = _on_disk_schema(spark, path)
+    on_disk = {f.name: f.dataType for f in schema.fields}
+    if all(
+        f.name in on_disk and _pinnable(on_disk[f.name], f.dataType)
+        for f in expected.fields
+    ):
         return read_parquet_table(spark, path, expected)
-    return _align_to_schema(read_parquet_table(spark, path), expected, name)
+    return _align_to_schema(read_parquet_table(spark, path, schema), expected, name)
 
 
 def load_star_schema(

@@ -29,6 +29,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def exact_sum(c: Column, scale: int) -> Column:
+    """Σc accumulated exactly in DECIMAL(38, scale), as a DOUBLE."""
+    return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
+
+
 def group_ols(
     df: DataFrame,
     *,
@@ -46,16 +51,13 @@ def group_ols(
     x = F.col(x_col).cast(f"decimal(19,{x_scale})")
     y = F.col(y_col).cast(f"decimal(19,{y_scale})")
 
-    def dsum(c: Column, scale: int) -> Column:
-        return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
-
     agg = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        dsum(x, x_scale).alias("sx"),
-        dsum(y, y_scale).alias("sy"),
-        dsum(x * y, x_scale + y_scale).alias("sxy"),
-        dsum(x * x, x_scale * 2).alias("sxx"),
-        dsum(y * y, y_scale * 2).alias("syy"),
+        exact_sum(x, x_scale).alias("sx"),
+        exact_sum(y, y_scale).alias("sy"),
+        exact_sum(x * y, x_scale + y_scale).alias("sxy"),
+        exact_sum(x * x, x_scale * 2).alias("sxx"),
+        exact_sum(y * y, y_scale * 2).alias("syy"),
     )
     n = F.col("n").cast("double")
     cov_n = n * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -360,11 +362,6 @@ def welch_t_test(
     )
     is_a, is_b = seg == seg_a, seg == seg_b
 
-    def dsum(cond, c, scale):
-        return F.sum(
-            F.when(cond, c).cast(f"decimal(38,{scale})")
-        ).cast("double")
-
     # NULL metric rows are excluded, not observations (they would
     # inflate n while the sums skip them — the ks_two_sample rule)
     agg = df.filter(
@@ -372,10 +369,10 @@ def welch_t_test(
     ).groupBy(*group_cols).agg(
         F.count(F.when(is_a, 1)).cast("long").alias("na"),
         F.count(F.when(is_b, 1)).cast("long").alias("nb"),
-        dsum(is_a, val, value_scale).alias("sa"),
-        dsum(is_b, val, value_scale).alias("sb"),
-        dsum(is_a, val * val, value_scale * 2).alias("saa"),
-        dsum(is_b, val * val, value_scale * 2).alias("sbb"),
+        exact_sum(F.when(is_a, val), value_scale).alias("sa"),
+        exact_sum(F.when(is_b, val), value_scale).alias("sb"),
+        exact_sum(F.when(is_a, val * val), value_scale * 2).alias("saa"),
+        exact_sum(F.when(is_b, val * val), value_scale * 2).alias("sbb"),
     )
     stage1 = agg.select(
         *group_cols,
@@ -440,20 +437,17 @@ def group_ols2(
     x2 = F.col(x2_col).cast(f"decimal(19,{x2_scale})")
     y = F.col(y_col).cast(f"decimal(19,{y_scale})")
 
-    def dsum(c, scale):
-        return F.sum(c.cast(f"decimal(38,{scale})")).cast("double")
-
     agg = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        dsum(x1, x1_scale).alias("s1"),
-        dsum(x2, x2_scale).alias("s2"),
-        dsum(y, y_scale).alias("sy"),
-        dsum(x1 * x1, x1_scale * 2).alias("s11"),
-        dsum(x2 * x2, x2_scale * 2).alias("s22"),
-        dsum(x1 * x2, x1_scale + x2_scale).alias("s12"),
-        dsum(x1 * y, x1_scale + y_scale).alias("s1y"),
-        dsum(x2 * y, x2_scale + y_scale).alias("s2y"),
-        dsum(y * y, y_scale * 2).alias("syy"),
+        exact_sum(x1, x1_scale).alias("s1"),
+        exact_sum(x2, x2_scale).alias("s2"),
+        exact_sum(y, y_scale).alias("sy"),
+        exact_sum(x1 * x1, x1_scale * 2).alias("s11"),
+        exact_sum(x2 * x2, x2_scale * 2).alias("s22"),
+        exact_sum(x1 * x2, x1_scale + x2_scale).alias("s12"),
+        exact_sum(x1 * y, x1_scale + y_scale).alias("s1y"),
+        exact_sum(x2 * y, x2_scale + y_scale).alias("s2y"),
+        exact_sum(y * y, y_scale * 2).alias("syy"),
     )
     solved = agg.select(
         *group_cols,

@@ -1,8 +1,12 @@
 """Dev tool: write ``df.explain('formatted')`` for catalog queries to
 files, one per query, normalized by ``perfbench.stats.normalize_plan``
 (expression ids, exchange plan ids and lambda-variable suffixes
-stripped). Two captures of the same code are then byte-identical, so a
-plan-parity check between two checkouts is one ``diff -r``. Driver-side
+stripped) and with the session's running counters masked
+(``MapPartitionsRDD[1325]`` becomes ``MapPartitionsRDD[]``,
+``_common_expr_34`` becomes ``_common_expr_``: both count what the
+session built before, so they shift with whatever ran earlier). Two
+captures of the same code are then byte-identical, so a plan-parity
+check between two checkouts is one ``diff -r``. Driver-side
 only: plans are analyzed, never executed, except for queries that
 materialize internally (iterative loops), whose returned frame is a
 local/cached result — those are captured anyway.
@@ -17,6 +21,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -24,6 +29,13 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 from perfbench.stats import normalize_plan  # noqa: E402
+
+_SESSION_COUNTER = re.compile(r"(?<=RDD\[)\d+(?=\])|(?<=_common_expr_)\d+")
+
+
+def normalize(plan: str) -> str:
+    """``normalize_plan`` plus masked RDD ids and common-expression ids."""
+    return _SESSION_COUNTER.sub("", normalize_plan(plan))
 
 
 def main() -> None:
@@ -52,7 +64,7 @@ def main() -> None:
         )
         path = os.path.join(args.out_dir, f"{name}{args.suffix}.txt")
         with open(path, "w") as f:
-            f.write(normalize_plan(text))
+            f.write(normalize(text))
         print(f"wrote {path} ({len(text)} bytes)", file=sys.stderr)
     spark.stop()
 

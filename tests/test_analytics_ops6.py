@@ -1,6 +1,8 @@
-"""Oracle-parity + unit tests for the wave-10 analytics catalog
-(plans/analytics_ops6.py): funnel time-to-convert, A/B power
-analysis, weekly cohort LTV."""
+"""Oracle-parity + unit tests for funnel time-to-convert, the
+windowed funnel and weekly cohort LTV (plans/events_queries.py), the
+power analysis, SRM check and ratio-metric CI (plans/experiments.py),
+the temperature mixture (plans/curation_queries.py) and the degree
+histogram (plans/patterns.py)."""
 
 from __future__ import annotations
 

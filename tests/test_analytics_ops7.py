@@ -1,25 +1,13 @@
-"""Oracle-parity + invariant tests for the wave-13 analytics catalog
-(plans/analytics_ops7.py): percent-of-parent hierarchy shares and
-the feature-hashing collision audit."""
+"""Invariant tests for the percent-of-parent hierarchy shares
+(plans/relational2.py) and the feature-hashing collision audit
+(plans/statistics.py). Their oracle parity runs as
+test_relational_queries.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
-
 from big_data_analysis_of_airline_data_set_spark.plans import all_queries
-from tests.oracle_harness import check_query
-
-NEW_OPS = [
-    "rollup_share_of_parent",
-    "feature_hashing_audit",
-]
-
-
-@pytest.mark.parametrize("name", NEW_OPS)
-def test_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
 
 
 def test_shares_sum_to_one_at_both_levels(spark, sf_dir):

@@ -1,23 +1,11 @@
-"""Oracle-parity + invariant tests for the wave-14 analytics catalog
-(plans/analytics_ops8.py): event-time disorder audit and one-way
-ANOVA."""
+"""Invariant tests for the event-time disorder audit
+(plans/events_queries.py) and the one-way ANOVA
+(plans/experiments.py). Their oracle parity runs as
+test_relational_queries.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import pytest
-
 from big_data_analysis_of_airline_data_set_spark.plans import all_queries
-from tests.oracle_harness import check_query
-
-NEW_OPS = [
-    "events_disorder_audit",
-    "stats_anova_oneway",
-]
-
-
-@pytest.mark.parametrize("name", NEW_OPS)
-def test_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
 
 
 def test_disorder_audit_counts_exclude_first_arrivals(spark, sf_dir):

@@ -1,25 +1,12 @@
-"""Oracle-parity + invariant tests for the wave-15 analytics catalog
-(plans/analytics_ops9.py): per-segment uplift and ABC revenue
-classification."""
+"""Invariant tests for the per-segment uplift (plans/experiments.py)
+and the ABC revenue classes (plans/statistics.py). Their oracle parity
+runs as test_relational_queries.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
-
 from big_data_analysis_of_airline_data_set_spark.plans import all_queries
-from tests.oracle_harness import check_query
-
-NEW_OPS = [
-    "events_uplift_by_segment",
-    "orders_abc_classification",
-]
-
-
-@pytest.mark.parametrize("name", NEW_OPS)
-def test_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
 
 
 def test_uplift_arm_totals_match_srm_population(spark, sf_dir):

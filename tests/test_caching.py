@@ -58,17 +58,19 @@ def test_module_caches_are_bounded():
     assert isinstance(ml_queries._REF_BANDS_CACHE, BoundedCache)
     assert isinstance(content._IVF_CACHE, BoundedCache)
     assert isinstance(content._FREQ_CACHE, BoundedCache)
-    assert isinstance(readers._SCHEMA_VERDICT_CACHE, BoundedCache)
+    assert isinstance(readers._ON_DISK_SCHEMA_CACHE, BoundedCache)
     assert isinstance(events_queries._LANDED_CACHE, BoundedCache)
 
 
 def test_schema_verdict_cache_bounded_across_many_dirs():
-    from big_data_analysis_of_airline_data_set_spark.sources.readers import _SCHEMA_VERDICT_CACHE
+    from pyspark.sql.types import StructType
 
-    cap = _SCHEMA_VERDICT_CACHE.max_entries
+    from big_data_analysis_of_airline_data_set_spark.sources.readers import _ON_DISK_SCHEMA_CACHE
+
+    cap = _ON_DISK_SCHEMA_CACHE.max_entries
     for i in range(cap * 3):
-        _SCHEMA_VERDICT_CACHE.put(("app", f"/fake/sf{i}/lineitem.parquet"), "pin")
-    assert len(_SCHEMA_VERDICT_CACHE) <= cap
+        _ON_DISK_SCHEMA_CACHE.put(("app", f"/fake/sf{i}/lineitem.parquet"), StructType())
+    assert len(_ON_DISK_SCHEMA_CACHE) <= cap
 
 
 def test_sink_dirs_bounded():

@@ -72,7 +72,9 @@ def test_events_encoding_detection_micros_and_nanos(spark, tmp_path):
     encodings — TIMESTAMP(MICROS) and TIMESTAMP(NANOS) — to identical
     TimestampType values. The round-2 testdata re-encode flipped the
     driver feed from nanos to micros and the then-hardcoded nanos
-    assumption landed every event in 1970; this pins detect-and-branch."""
+    assumption landed every event in 1970; this pins detect-and-branch.
+    A second read of the same file must give the same values without a
+    job: the footer schema is inferred once per (session, path)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -95,15 +97,26 @@ def test_events_encoding_detection_micros_and_nanos(spark, tmp_path):
         t = base.set_column(1, "ts", base.column("ts").cast(pa.timestamp(unit)))
         pq.write_table(t, str(d / "events.parquet"))
 
+    def rows(ev):
+        return [(r["event_id"], r["ts"].isoformat()) for r in ev.orderBy("event_id").collect()]
+
+    sc, group = spark.sparkContext, "events-second-read"
     got = {}
     for unit in ("us", "ns"):
-        ev = read_testdata_table(spark, str(tmp_path / f"enc_{unit}"), "events")
+        sf = str(tmp_path / f"enc_{unit}")
+        ev = read_testdata_table(spark, sf, "events")
         assert dict(ev.dtypes)["ts"] == "timestamp"
-        got[unit] = [
-            (r["event_id"], r["ts"].isoformat())
-            for r in ev.orderBy("event_id").collect()[:3]
-            if True
-        ]
+        got[unit] = rows(ev)
+        # the second read reuses the cached footer schema: no schema
+        # inference job, and the same values
+        sc.setJobGroup(group, group)
+        try:
+            again = read_testdata_table(spark, sf, "events")
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert rows(again) == got[unit]
     assert got["us"] == got["ns"]
     assert got["us"][0][1].startswith("2024-01-01")
 
