@@ -18,9 +18,10 @@ The loops share one kit:
   at scale — with ONE exchange, partitioned on the key every
   iteration's join uses, so per iteration only node-sized frames move.
   (Without it, every iteration re-shuffles the full edge set.)
-- ``_sized`` partitions a cached table by the rows it holds — ceil(rows
-  / ``_ITER_ROWS_PER_TASK``), capped at the session width — because a
-  cache's partition count is the task count of every later scan of it.
+- ``_sized`` partitions a cached table by the rows it holds — one
+  partition per 50k rows, capped at the session width
+  (``session.rows_width``) — because a cache's partition count is the
+  task count of every later scan of it.
 - ``_node_frame_bc`` broadcasts node-sized per-iteration frames when
   the KNOWN node count is at most ``_BC_NODES_MAX``; above it the
   sort-merge path is the right plan for tables too big to broadcast.
@@ -55,12 +56,13 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import rows_width, session_width
+
 # Per-iteration frames are NODE-sized (3 narrow columns), not data-sized:
 # once the node count is known (it is counted anyway for the teleport
 # term), the join strategy and the shuffle width can be chosen from it
 # instead of left to static planning against unknown-stats intermediates.
 _BC_NODES_MAX = 200_000  # ≲ a few MB of (node, rank) — safely broadcastable
-_ITER_ROWS_PER_TASK = 50_000  # floor task size for node-sized shuffles
 _WIDTH_KEY = "spark.sql.shuffle.partitions"
 # pagerank's materialize-and-release cadence: at most 5 node-sized rank
 # tables stay pinned between barriers. 8 (no mid-loop barrier in the
@@ -73,25 +75,8 @@ _PR_DEC = f"decimal(30,{_PR_DP})"
 _PR_CHECK_EVERY = 2
 
 
-def _session_width(spark) -> int:
-    """``spark.sql.shuffle.partitions`` as a number; 1 when it is not one
-    (some platforms set 'auto'), which every caller treats as "leave the
-    width alone"."""
-    try:
-        return int(spark.conf.get(_WIDTH_KEY))
-    except (TypeError, ValueError):
-        return 1
-
-
-def _rows_width(width: int, rows: int) -> int:
-    """ceil(rows / ``_ITER_ROWS_PER_TASK``), floored at 1 and capped at
-    ``width``: never wider than the session, and at scale (rows ≥ width
-    × 50k) exactly the session width."""
-    return max(1, min(width, -(-rows // _ITER_ROWS_PER_TASK)))
-
-
 def _sized(df: DataFrame, rows: int, *keys) -> DataFrame:
-    """``df`` hash-partitioned on ``keys`` into ``_rows_width`` partitions
+    """``df`` hash-partitioned on ``keys`` into ``rows_width`` partitions
     for a KNOWN row bound ``rows`` — for a frame about to be cached. A
     cache keeps the partition count it was written with, and AQE does
     not coalesce a cached plan's output, so at the session's 32-way
@@ -101,10 +86,10 @@ def _sized(df: DataFrame, rows: int, *keys) -> DataFrame:
     count is fixed in the plan, so it also holds for lazy chains whose
     action runs after the scope would have closed. A non-numeric
     session width keeps the plain ``repartition(key)``."""
-    width = _session_width(df.sparkSession)
+    width = session_width(df.sparkSession)
     if width <= 1:
         return df.repartition(*keys)
-    return df.repartition(_rows_width(width, rows), *keys)
+    return df.repartition(rows_width(width, rows), *keys)
 
 
 @contextmanager
@@ -173,7 +158,7 @@ def _iteration_shuffle_width(
 ) -> Iterator[None]:
     """Scope ``spark.sql.shuffle.partitions`` to the iteration loop,
     sized from a KNOWN count — ``rows()`` when given, else the node
-    count — by ``_rows_width`` (never widens). AQE's default
+    count — by ``rows_width`` (never widens). AQE's default
     ``parallelismFirst=true`` refuses to coalesce below the core count,
     so a 21k-row aggregate still schedules 32 tasks per stage per
     iteration; with ~10 iterations × ~3 stages the task overhead
@@ -192,13 +177,13 @@ def _iteration_shuffle_width(
     materializes at the caller's action, so it must not use this). The
     conf mutation is session-global: this assumes the single-threaded
     driver discipline the whole package runs under (caching.py)."""
-    width = _session_width(spark)
+    width = session_width(spark)
     n = (n_nodes() if callable(n_nodes) else n_nodes) if width > 1 else 0
     if width <= 1 or n > _BC_NODES_MAX:
         yield
         return
     saved = spark.conf.get(_WIDTH_KEY)
-    spark.conf.set(_WIDTH_KEY, str(_rows_width(width, rows() if rows else n)))
+    spark.conf.set(_WIDTH_KEY, str(rows_width(width, rows() if rows else n)))
     try:
         yield
     finally:

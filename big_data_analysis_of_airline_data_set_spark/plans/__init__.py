@@ -48,17 +48,18 @@ _WINDOW_SIZE = 50
 
 # Names whose plans this round changed; they re-prove first.
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
-    "tpch_q3_style",
-    "tpch_q18_style",
-    "graph_pagerank",
-    "graph_pagerank_converged",
-    "graph_k_core",
-    "graph_label_propagation",
-    "graph_bfs_distances",
-    "graph_hierarchy_flatten",
-    "dedup_connected_components",
-    "dedup_entity_resolution",
-    "dedup_canonical_keeper",
+    "events_tumbling_stream",
+    "events_sliding_stream",
+    "events_session_stream",
+    "events_interval_join_stream",
+    "events_dedup_stream",
+    "events_kmv_stream",
+    "events_hll_stream",
+    "events_cms_stream",
+    "events_quantile_sketch_stream",
+    "events_enrich_stream",
+    "events_user_totals_stream",
+    "events_spacesaving_stream",
     "graph_triangles",
     "coreset_kcenter",
     "curation_dsir_resample",
@@ -116,10 +117,17 @@ def _latest_passing_round(ledger_dir: Path) -> dict[str, int]:
 
 
 def correctness_window(names: list[str], ledger_dir: Path = _REPO_ROOT) -> list[str]:
-    """The first ``_WINDOW_SIZE`` of ``names`` in correctness-window order."""
+    """The first ``_WINDOW_SIZE`` of ``names`` in correctness-window order.
+    A ``_CHANGED_THIS_ROUND`` longer than the window raises: the names
+    past it would silently go unchecked."""
     unknown = [n for n in _CHANGED_THIS_ROUND if n not in names]
     if unknown:
         raise ValueError(f"changed names not in registry: {unknown}")
+    if len(_CHANGED_THIS_ROUND) > _WINDOW_SIZE:
+        raise ValueError(
+            f"{len(_CHANGED_THIS_ROUND)} changed names overflow the "
+            f"{_WINDOW_SIZE}-name window: {list(_CHANGED_THIS_ROUND[_WINDOW_SIZE:])}"
+        )
     latest = _latest_passing_round(ledger_dir)
     never = [n for n in names if n not in latest]
     aged = sorted((n for n in names if n in latest), key=lambda n: (latest[n], n))

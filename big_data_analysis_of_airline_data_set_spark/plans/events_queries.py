@@ -1,14 +1,13 @@
 """Events/streaming query catalog — batch-mode runs of the
 DataFrame-symmetric window transforms (streaming.windows), each with a
-DuckDB oracle, plus ONE true Structured Streaming execution
-(``events_tumbling_stream``): the same tumbling aggregation run as a
-watermarked availableNow stream over landed parquet and drained to a
-memory sink. Complete output mode emits every window, so the drained
-result equals the batch plan — the batch oracle doubles as a hard
-check on the streaming runtime (micro-batch scheduling, watermark
-bookkeeping, state store). Further streaming behavior (update mode,
-late-data drops, stateful dedup) stays in tests/test_streaming*.py —
-those runtimes are inherently non-SQL-expressible. The batch
+DuckDB oracle, and their true Structured Streaming twins (the
+``events_*_stream`` entries): each builds its stream over landed
+parquet from the same transform or sketch the batch query uses and
+runs it through ``streaming.jobs.drain``. Complete output mode emits
+every window, so the drained result equals the batch plan — the batch
+oracle doubles as a hard check on the streaming runtime (micro-batch
+scheduling, watermark bookkeeping, state store). Late-data drops stay
+in tests/test_streaming*.py — they are not SQL-expressible. The batch
 per-user features (calendar lag, trailing-week RANGE mean, inter-event
 gap statistics) work on exact integer micros and whole days from the
 kit in ``spec.py``. Beside the count funnel sit its time-to-convert
@@ -25,7 +24,10 @@ from pyspark.sql.window import Window as W
 from ..caching import BoundedCache
 from ..operators.weighted_quantile import weighted_median
 from ..sources.readers import read_testdata_table
+from ..streaming.jobs import drain, events_stream_reader
 from ..streaming.windows import (
+    enriched_segment_counts,
+    interval_join_pairs,
     json_extract_k,
     session_counts,
     sliding_counts,
@@ -152,7 +154,6 @@ def q_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _landed_events_flat_dir(spark, sf_dir),
         query_name="events_user_totals_stream",
         max_files_per_trigger=1,
-        stream_shuffle_partitions=8,
     )
 
 
@@ -169,43 +170,41 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     is landed twice, the watermarked ``dropDuplicatesWithinWatermark``
     stream must emit each event_id exactly once — oracled against the
     plain batch projection of the (single-copy) events table. Exercises
-    the streaming dedup state store with REAL duplicate traffic."""
-    from ..streaming.jobs import run_dedup_stream_available_now
+    the streaming dedup state store with REAL duplicate traffic.
 
-    return run_dedup_stream_available_now(
-        spark,
-        _landed_events_doubled_dir(spark, sf_dir),
-        watermark="30 minutes",
-        # the doubled landing's files each span the full time range —
-        # single-batch drain, else later files are late-dropped
-        max_files_per_trigger=None,
-        # state-store commits scale with partition count; size to
-        # harness-scale state volume, not the batch shuffle default
-        stream_shuffle_partitions=8,
+    The doubled landing's files are NOT time-ordered (each spans the
+    full time range), so it drains in one micro-batch: after a first
+    batch the watermark would sit near the data's end and every later
+    file's rows would be dropped as late rather than deduplicated.
+    Time-ordered file feeds (the production shape) can keep
+    file-granular batches."""
+    landed = _landed_events_doubled_dir(spark, sf_dir)
+    stream = events_stream_reader(
+        spark, landed, max_files_per_trigger=None
+    ).withWatermark("ts", "30 minutes")
+    deduped = stream.dropDuplicatesWithinWatermark(["event_id"]).select(
+        "event_id", "user_id", "event_type", "value"
     )
+    return drain(deduped, landed, query_name="events_dedup_stream")
 
 
 def q_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling aggregation as a REAL streaming query: land the
     (encoding-normalized) events once, then readStream → watermark →
     window agg → memory sink with trigger(availableNow) — the idiomatic
-    backfill execution. Complete mode ⇒ result equals the batch plan."""
-    from ..streaming.jobs import run_tumbling_stream_available_now
-
+    backfill execution. Complete mode ⇒ result equals the batch plan.
+    Backfill shape: the drain takes as few micro-batches as it can
+    (file-granular triggering is the tests' incremental-state knob)."""
     landed = _landed_events_dir(spark, sf_dir)
-    result = run_tumbling_stream_available_now(
-        spark,
+    stream = events_stream_reader(
+        spark, landed, max_files_per_trigger=None
+    ).withWatermark("ts", "30 minutes")
+    return drain(
+        tumbling_counts(stream, width="1 hour"),
         landed,
-        watermark="30 minutes",
-        width="1 hour",
-        # backfill shape: drain in as few micro-batches as possible —
-        # file-granular triggering is the tests' incremental-state knob
-        max_files_per_trigger=None,
-        # state-store commits scale with partition count; size to
-        # harness-scale state volume, not the batch shuffle default
-        stream_shuffle_partitions=8,
+        query_name="events_tumbling_stream",
+        output_mode="complete",
     )
-    return result
 
 
 _KMV_STREAM_K = 64
@@ -213,23 +212,30 @@ _KMV_STREAM_K = 64
 
 def q_kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event type via a KMV sketch maintained
-    INCREMENTALLY by the streaming runtime (streaming.jobs
-    run_kmv_sketch_stream_available_now): the streaming state IS the
+    INCREMENTALLY by the streaming runtime: per (event_type, j) the
+    running MIN of the j-th hash of user_id. The streaming state IS the
     sketch — groups × k longs, constant for any stream volume, which is
-    why no watermark is needed. Estimates, the merged union row, and
-    the exact reference counts are computed over the drained sketch in
-    batch (the production split: streams maintain sketches, queries
-    read them). Oracle = full batch md5 replay, so the incremental
-    min-maintenance must converge to exactly the batch sketch."""
-    from ..sketches.kmv import kmv_report
-    from ..streaming.jobs import run_kmv_sketch_stream_available_now
+    why no watermark is needed and complete-mode output is cheap (an
+    exact streaming distinct count would hold every user id in state).
+    Estimates, the merged union row, and the exact reference counts are
+    computed over the drained sketch in batch (the production split:
+    streams maintain sketches, queries read them). Oracle = full batch
+    md5 replay, so the incremental min-maintenance must converge to
+    exactly the batch sketch."""
+    from ..sketches.kmv import kmv_report, kmv_sketch
 
-    sk = run_kmv_sketch_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        k=_KMV_STREAM_K,
-        max_files_per_trigger=None,
-        stream_shuffle_partitions=8,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(spark, landed, max_files_per_trigger=None)
+    sk = drain(
+        kmv_sketch(
+            stream.select("event_type", "user_id"),
+            group_col="event_type",
+            value_col="user_id",
+            k=_KMV_STREAM_K,
+        ),
+        landed,
+        query_name="events_kmv_sketch_stream",
+        output_mode="complete",
     )
     # the merge/estimate/exact assembly is SHARED with the batch query
     # (sketches.kmv.kmv_report) — only the sketch's provenance differs
@@ -255,24 +261,30 @@ _HLL_STREAM_P = 8
 
 def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event type via an HLL register sketch
-    maintained INCREMENTALLY by the streaming runtime (streaming.jobs
-    run_hll_sketch_stream_available_now) — the max-merge twin of
+    maintained INCREMENTALLY by the streaming runtime: per (event_type,
+    register) the running MAX of the hash rank — the max-merge twin of
     events_kmv_stream: state is groups × ≤2^p small ints, constant for
-    any stream volume. Estimates, the merged 'ALL' row, and the exact
-    reference counts are computed over the drained register table in
-    batch; the assembly is SHARED with the batch query
-    (sketches.hll.hll_report), so the estimator cannot diverge between
-    paths. Oracle = full batch md5 replay: incremental max-maintenance
-    must converge to exactly the batch sketch."""
-    from ..sketches.hll import hll_report
-    from ..streaming.jobs import run_hll_sketch_stream_available_now
+    any stream volume (no watermark, complete-mode output cheap).
+    Estimates, the merged 'ALL' row, and the exact reference counts are
+    computed over the drained register table in batch; the assembly is
+    SHARED with the batch query (sketches.hll.hll_report), so the
+    estimator cannot diverge between paths. The register max is
+    order-insensitive, so the oracle's full batch md5 replay holds the
+    incremental max-maintenance to exactly the batch sketch."""
+    from ..sketches.hll import hll_registers, hll_report
 
-    regs = run_hll_sketch_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        p=_HLL_STREAM_P,
-        max_files_per_trigger=None,
-        stream_shuffle_partitions=8,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(spark, landed, max_files_per_trigger=None)
+    regs = drain(
+        hll_registers(
+            stream.select("event_type", "user_id"),
+            group_col="event_type",
+            value_col="user_id",
+            p=_HLL_STREAM_P,
+        ),
+        landed,
+        query_name="events_hll_sketch_stream",
+        output_mode="complete",
     )
     return hll_report(
         regs,
@@ -296,10 +308,10 @@ _HDR_STREAM_SUB_BITS = 5
 
 def q_hdr_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value quantiles (p50/p90/p99) per event type via an HDR bucket
-    sketch maintained INCREMENTALLY by the streaming runtime
-    (streaming.jobs.run_hdr_sketch_stream_available_now) — the RANK
-    member of the streamed sketch family: state is groups × ≤ ~1.9k
-    bucket counts, constant for any stream volume (no watermark
+    sketch maintained INCREMENTALLY by the streaming runtime: per
+    (event_type, bucket code) the running COUNT of values routed there —
+    the RANK member of the streamed sketch family: state is groups ×
+    ≤ ~1.9k bucket counts, constant for any stream volume (no watermark
     needed, complete-mode output cheap). Estimates, the additive-merge
     'ALL' row, and the true-rank reference are computed over the
     drained bucket table in batch; the assembly is SHARED with the
@@ -307,17 +319,20 @@ def q_hdr_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator cannot diverge between paths. Oracle = full batch
     integer replay: incremental count-maintenance must converge to
     exactly the batch sketch."""
-    from ..sketches.quantile import hdr_quantile_report
-    from ..streaming.jobs import run_hdr_sketch_stream_available_now
+    from ..sketches.quantile import hdr_bucket_counts, hdr_quantile_report
 
-    sk = run_hdr_sketch_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        group_col="event_type",
-        value_col="value",
-        sub_bits=_HDR_STREAM_SUB_BITS,
-        max_files_per_trigger=None,
-        stream_shuffle_partitions=8,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(spark, landed, max_files_per_trigger=None)
+    sk = drain(
+        hdr_bucket_counts(
+            stream.select("event_type", "value"),
+            group_col="event_type",
+            value_col="value",
+            sub_bits=_HDR_STREAM_SUB_BITS,
+        ),
+        landed,
+        query_name="events_hdr_sketch_stream",
+        output_mode="complete",
     )
     return hdr_quantile_report(
         sk,
@@ -475,24 +490,29 @@ _CMS_STREAM_DEPTH, _CMS_STREAM_WIDTH, _CMS_STREAM_K = 4, 1024, 20
 
 def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event frequencies via a Count-Min sketch maintained
-    INCREMENTALLY by the streaming runtime (streaming.jobs
-    run_cms_sketch_stream_available_now) — the sum-merge member that
+    INCREMENTALLY by the streaming runtime: per (j, bucket) the running
+    COUNT of occurrences routed there — the sum-merge member that
     completes the streamed sketch trio (KMV min / HLL max / CMS sum):
-    state is the d×w cell table, constant for any stream volume. The
-    exact top-20 users and their probe estimates are assembled in
-    batch by the SAME heavy_hitters_report the batch catalog entry
-    uses. Oracle = full batch md5 replay: incremental count
-    maintenance must converge to exactly the batch sketch."""
-    from ..sketches.countmin import heavy_hitters_report
-    from ..streaming.jobs import run_cms_sketch_stream_available_now
+    state is the d×w cell table, constant for any stream volume, which
+    is why sketches stream where exact counts cannot. The exact top-20
+    users and their probe estimates are assembled in batch by the SAME
+    heavy_hitters_report the batch catalog entry uses. Oracle = full
+    batch md5 replay: incremental count maintenance must converge to
+    exactly the batch sketch."""
+    from ..sketches.countmin import count_min_sketch_table, heavy_hitters_report
 
-    cells = run_cms_sketch_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        depth=_CMS_STREAM_DEPTH,
-        width=_CMS_STREAM_WIDTH,
-        max_files_per_trigger=None,
-        stream_shuffle_partitions=8,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(spark, landed, max_files_per_trigger=None)
+    cells = drain(
+        count_min_sketch_table(
+            stream.selectExpr("CAST(user_id AS STRING) AS term"),
+            term_col="term",
+            depth=_CMS_STREAM_DEPTH,
+            width=_CMS_STREAM_WIDTH,
+        ),
+        landed,
+        query_name="events_cms_sketch_stream",
+        output_mode="complete",
     )
     occ = read_testdata_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("term")
@@ -548,12 +568,6 @@ def q_spacesaving_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         m=_SS_M,
         query_name="events_spacesaving_stream",
         max_files_per_trigger=1,
-        # state = m counters × 5 event types; every micro-batch commits
-        # one state store per partition, so width tracks the GROUP
-        # count, not the session's batch default (measured: 4.0 s at 8
-        # partitions vs 3.2 s at 2, identical results — the
-        # jobs._run_to_memory sizing rule)
-        stream_shuffle_partitions=2,
     )
     exact = (
         read_testdata_table(spark, sf_dir, "events")
@@ -659,42 +673,40 @@ def q_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sliding aggregation under the real streaming runtime
     (availableNow drain, complete mode) — oracled ≡ batch."""
-    from ..streaming.jobs import run_sliding_stream_available_now
-
-    return run_sliding_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        watermark="30 minutes",
-        width="1 hour",
-        slide="30 minutes",
-        max_files_per_trigger=None,
-        # state-store commits scale with partition count; size to
-        # harness-scale state volume, not the batch shuffle default
-        stream_shuffle_partitions=8,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(
+        spark, landed, max_files_per_trigger=None
+    ).withWatermark("ts", "30 minutes")
+    return drain(
+        sliding_counts(stream, width="1 hour", slide="30 minutes"),
+        landed,
+        query_name="events_sliding_stream",
+        output_mode="complete",
     )
 
 
 def q_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC enrichment join under the real streaming runtime
-    (streaming/jobs.py:run_enrich_stream_available_now): the event
-    stream is broadcast-joined per micro-batch to the customer
+    (streaming.windows.enriched_segment_counts, complete mode): the
+    event stream is broadcast-joined per micro-batch to the customer
     dimension (stateless), then window-aggregated per market segment
-    (the only stateful operator). Oracled ≡ the batch join+window."""
-    from ..sources.readers import read_testdata_table
-    from ..streaming.jobs import run_enrich_stream_available_now
-
+    (the only stateful operator). That is why this is the shape for
+    dimension enrichment at stream time, while a stream-STREAM join
+    (events_interval_join_stream) pays watermark-deep state on both
+    sides. Oracled ≡ the batch join+window."""
     dim = read_testdata_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("dim_key"),
         F.col("c_mktsegment").alias("segment"),
     )
-    return run_enrich_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        dim,
-        watermark="30 minutes",
-        width="1 hour",
-        max_files_per_trigger=None,
-        stream_shuffle_partitions=8,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(
+        spark, landed, max_files_per_trigger=None
+    ).withWatermark("ts", "30 minutes")
+    return drain(
+        enriched_segment_counts(stream, dim, width="1 hour"),
+        landed,
+        query_name="events_enrich_stream",
+        output_mode="complete",
     )
 
 
@@ -710,7 +722,7 @@ GROUP BY 1, 2
 
 
 def q_upsert_sink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming UPSERT sink (streaming/jobs.py
+    """Streaming UPSERT sink (streaming.jobs
     run_upsert_sink_stream_available_now): micro-batches merge into a
     keyed parquet state via foreachBatch (generation-swap writes);
     the final serving table must equal the batch latest-event-per-user
@@ -751,18 +763,18 @@ FROM ranked WHERE rn = 1
 
 def q_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The session-window aggregation under the real streaming runtime
-    — the state-heavy case (merging windows) — oracled ≡ batch."""
-    from ..streaming.jobs import run_session_stream_available_now
-
-    return run_session_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        watermark="30 minutes",
-        gap="5 minutes",
-        max_files_per_trigger=None,
-        # state-store commits scale with partition count; size to
-        # harness-scale state volume, not the batch shuffle default
-        stream_shuffle_partitions=8,
+    — the state-heavy case: windows merge as events arrive, and the
+    watermark bounds how long an open session can wait for a late
+    extension before its state is finalized. Oracled ≡ batch."""
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(
+        spark, landed, max_files_per_trigger=None
+    ).withWatermark("ts", "30 minutes")
+    return drain(
+        session_counts(stream, gap="5 minutes"),
+        landed,
+        query_name="events_session_stream",
+        output_mode="complete",
     )
 
 
@@ -983,19 +995,19 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c
 
 
 def q_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The interval join as a real watermarked stream-stream join —
-    oracled against the batch interval-join SQL."""
-    from ..streaming.jobs import run_interval_join_stream_available_now
-
-    return run_interval_join_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        watermark="30 minutes",
-        lookback="10 MINUTES",
-        max_files_per_trigger=None,
-        # state-store commits scale with partition count; size to
-        # harness-scale state volume, not the batch shuffle default
-        stream_shuffle_partitions=8,
+    """The interval join as a real watermarked stream-stream join
+    (streaming.windows.interval_join_pairs, append mode) — oracled
+    against the batch interval-join SQL."""
+    landed = _landed_events_dir(spark, sf_dir)
+    return drain(
+        interval_join_pairs(
+            events_stream_reader(spark, landed, max_files_per_trigger=None),
+            events_stream_reader(spark, landed, max_files_per_trigger=None),
+            watermark="30 minutes",
+            lookback="10 MINUTES",
+        ),
+        landed,
+        query_name="events_interval_join_stream",
     )
 
 

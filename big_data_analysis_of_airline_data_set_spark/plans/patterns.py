@@ -17,12 +17,11 @@ from ..operators.asof import as_of_join
 from ..operators.graph import (
     _PR_CHECK_EVERY,
     _PR_DP,
-    _rows_width,
-    _session_width,
     _sized,
     pagerank,
     pagerank_converged,
 )
+from ..session import rows_width, session_width
 from ..sources.local import local_rows
 from ..sources.readers import read_testdata_table
 from .spec import US_DAY, QuerySpec
@@ -1569,7 +1568,7 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Width: the cache keeps the partition count it is written with, and
     every query of the family scans it every call, so it is sized from
-    its own row count (operators/graph.py ``_rows_width``). The count
+    its own row count (``session.rows_width``). The count
     materializes the session-width build — the one lineitem pass — and
     when fewer partitions suffice the table is re-cached through a
     narrow ``coalesce`` of that cache (no shuffle, no lineitem rescan)
@@ -1597,8 +1596,8 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
         hit = (
             pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c")).persist()
         )
-        width = _session_width(spark)
-        n = _rows_width(width, hit.count())
+        width = session_width(spark)
+        n = rows_width(width, hit.count())
         if n < width:
             wide, hit = hit, hit.coalesce(n).persist()
             hit.count()

@@ -32,6 +32,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "big-data-analysis-airline-spark"
 
+# Floor task size for shuffles sized from a known row count.
+ROWS_PER_TASK = 50_000
+
 
 def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -88,3 +91,22 @@ def get_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_width(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a number; 1 when it is not one
+    (some platforms set 'auto'), which every caller treats as "leave the
+    width alone"."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return 1
+
+
+def rows_width(width: int, rows: int) -> int:
+    """ceil(rows / ``ROWS_PER_TASK``), floored at 1 and capped at
+    ``width``: never wider than the session, and at scale (rows ≥ width
+    × 50k) exactly the session width. The graph loops size their cached
+    tables and iteration shuffles with it, the streaming drain its
+    stateful shuffle."""
+    return max(1, min(width, -(-rows // ROWS_PER_TASK)))

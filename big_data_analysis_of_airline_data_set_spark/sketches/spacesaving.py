@@ -145,14 +145,13 @@ def spacesaving_stream(
     m: int = 4,
     query_name: str = "events_spacesaving",
     max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain the landed events dir through the per-event-type
     SpaceSaving operator; returns the FINAL summary per event_type
     (event_type, n_seen, d_total, keys, weights). ``n_seen`` strictly
     increases per group per update (a group is only invoked on batches
     containing its rows), so the final row is the max-n_seen one."""
-    from ..streaming.jobs import _run_to_memory, events_stream_reader
+    from ..streaming.jobs import drain, events_stream_reader
 
     stream = (
         events_stream_reader(
@@ -168,13 +167,7 @@ def spacesaving_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_to_memory(
-        updated,
-        query_name=query_name,
-        output_mode="update",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    snap = spark.table(query_name)
+    snap = drain(updated, events_dir, query_name=query_name, output_mode="update")
     # last update per group = max n_seen (strictly increasing): a
     # struct-max picks the whole final row in one aggregate — a
     # self-join of the memory sink trips on duplicate attribute ids

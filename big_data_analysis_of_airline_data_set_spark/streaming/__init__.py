@@ -4,11 +4,7 @@ from .ingest import (
     run_dedup_ingest_available_now,
     seed_fingerprint_store,
 )
-from .jobs import (
-    events_stream_reader,
-    run_tumbling_stream_available_now,
-    run_dedup_stream_available_now,
-)
+from .jobs import drain, events_stream_reader
 
 __all__ = [
     "documents_stream_reader",
@@ -18,7 +14,6 @@ __all__ = [
     "sliding_counts",
     "session_counts",
     "json_extract_k",
+    "drain",
     "events_stream_reader",
-    "run_tumbling_stream_available_now",
-    "run_dedup_stream_available_now",
 ]

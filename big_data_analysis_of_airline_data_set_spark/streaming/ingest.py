@@ -24,14 +24,13 @@ idempotent per epoch because replays rewrite the same batch).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..sources.local import local_rows
 from ..text.analysis import content_fingerprint
+from .jobs import drain
 
 DOCS_STREAM_SCHEMA = StructType(
     [
@@ -105,12 +104,5 @@ def run_dedup_ingest_available_now(
         fresh.select("fingerprint").write.mode("append").parquet(store_dir)
         fresh.unpersist()
 
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, docs_dir, query_name=query_name, foreach_batch=sink)
     return spark.read.parquet(out_dir)

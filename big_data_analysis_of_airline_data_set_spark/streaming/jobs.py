@@ -1,10 +1,15 @@
-"""Structured Streaming jobs over the events table.
+"""Structured Streaming over the events table, drained with
+``trigger(availableNow=True)``: the query reads all available input and
+stops, the deterministic way to exercise a real streaming query in
+tests and the idiomatic backfill pattern on a cluster.
 
-``readStream`` file source with the pinned events schema → the SAME
-window transforms as batch (streaming.windows) → memory/parquet sink.
-``trigger(availableNow=True)`` drains all available input then stops —
-the deterministic way to exercise a real streaming query in tests and
-the idiomatic backfill pattern on a cluster.
+``drain`` is the package's one ``writeStream``. A catalog query builds
+its stream from ``events_stream_reader`` and the SAME transform the
+batch query uses (streaming.windows, the sketches), then hands it to
+``drain``; the foreachBatch sinks (landing, document ingest, the upsert
+sink) hand it their batch function. The drain owns the checkpoint
+directory, the sink, the progress record and the stateful shuffle
+width.
 
 Watermarks bound state: ``withWatermark('ts', ...)`` lets Spark drop
 window state once the event-time frontier passes, and
@@ -20,7 +25,9 @@ so batch and stream plans are column-for-column identical.
 
 from __future__ import annotations
 
+import os
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -32,8 +39,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import rows_width, session_width
 from ..sources.local import local_rows
-from .windows import tumbling_counts
 
 EVENTS_STREAM_SCHEMA = StructType(
     [
@@ -64,464 +71,115 @@ def events_stream_reader(
 
 # Observability: final + per-batch progress of the last drain per
 # query name (state-store rows, batch durations). Written after every
-# _run_to_memory drain; read by tests/scale_stress.py's streaming
-# growth rung. Never read by any query path.
+# drain; read by perfbench, tests/scale_stress.py's streaming growth
+# rung and tests/streaming_noop_rung.py. Never read by any query path.
 LAST_PROGRESS: dict[str, list[dict]] = {}
 
-# Drain sink selector (round-12 verdict item 3). "memory" is the
-# catalog/oracle contract: the drained output is collected into a
-# driver memory table so the DuckDB oracle can read the full result —
-# correct for correctness, but at the ×100 rung the driver-side
-# collection is the measured staller, so timing it benches the
-# HARNESS, not the operator. bench.py flips this to "noop" so the
-# streaming suites time the real drain (source → state store → sink)
-# with output rows written-and-discarded JVM-side; the downstream
+# Drain sink selector. "memory" is the catalog/oracle contract: the
+# drained output is collected into a driver memory table so the DuckDB
+# oracle can read the full result — correct for correctness, but at the
+# ×100 rung the driver-side collection is the measured staller, so
+# timing it benches the HARNESS, not the operator. bench.py and
+# perfbench flip this to "noop" so the streaming suites time the real
+# drain (source → state store → sink) with output rows
+# written-and-discarded JVM-side; the downstream
 # ``spark.table(query_name)`` contract is preserved via an
 # empty-but-correctly-typed temp view (bench timings never read the
-# output values). Correctness paths (driver t2, pytest) never touch
-# this flag and always drain to memory.
+# output values). Correctness paths (driver, pytest) never touch this
+# flag and always drain to memory.
 DRAIN_SINK = "memory"
 
-# Per-drain checkpoints live in the system temp dir. /dev/shm measured
-# neutral (the page cache absorbs the per-batch WAL and state-store
-# delta writes) and the RocksDB state store +12% at dimension-sized
-# state (OPTIMIZATION_r13.md §5): the remaining drain wall is
-# per-micro-batch scheduling, which is the file-granular semantic.
+
+def _source_rows(source_dir: str) -> int:
+    """Rows held by the parquet files under the directory tree
+    ``source_dir``, read from the footers: no Spark job, a few ms for a
+    landed events directory. Names starting with ``_`` or ``.``
+    (``_SUCCESS``, checksums, ``_spark_metadata``) are not data."""
+    import pyarrow.parquet as pq
+
+    rows = 0
+    for root, dirs, files in os.walk(source_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        rows += sum(
+            pq.read_metadata(os.path.join(root, f)).num_rows
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return rows
 
 
-def _run_to_memory(
+def drain(
     result: DataFrame,
+    source_dir: str,
     *,
     query_name: str,
-    output_mode: str,
-    shuffle_partitions: int | None = None,
-) -> None:
-    """Drain ``result`` to a memory sink with availableNow.
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+) -> DataFrame | None:
+    """Run the streaming frame ``result``, read from ``source_dir``, to
+    completion with availableNow; return ``spark.table(query_name)``, or
+    None when ``foreach_batch`` is the sink.
 
-    ``shuffle_partitions`` sizes the STATEFUL shuffle for this query
-    (picked up at query start and locked into the checkpoint). Stateful
-    streaming cost scales with the number of state-store instances —
-    every micro-batch commits one store per partition per stateful
-    operator — so partitions must be sized to STATE volume, not the
-    session's batch-shuffle default (measured: the sf0.1 stream-stream
-    join drains 4x faster at 8 partitions than at 32, identical
-    results). None inherits the session setting.
+    The drain owns:
+
+    - the checkpoint: a fresh ``ckpt-<query_name>-*`` directory under
+      ``tempfile.gettempdir()``, removed once the query has terminated,
+      also when it failed. Nothing reads it after termination: every
+      drain starts from offset zero. (/dev/shm measured neutral there,
+      and the RocksDB state store +12% at dimension-sized state,
+      OPTIMIZATION_r13.md §5.)
+    - the sink: ``foreach_batch`` when given, else ``DRAIN_SINK``.
+    - the progress record: ``LAST_PROGRESS[query_name]``, every
+      micro-batch's progress (retention is raised past the default 100
+      for the drain, so a many-batch drain reports its whole state-store
+      history).
+    - the stateful shuffle width. Every micro-batch commits one state
+      store per shuffle partition per stateful operator, so the width
+      must follow the state volume, not the session's batch default:
+      ``session.rows_width`` of the rows the source holds, the rule the
+      graph kit sizes its caches with. At sf0.01 (10k events) that is
+      1 partition and at sf0.1 2, where 8 cost 1.1–2.4x the CPU for
+      identical results (BASELINE.md). The width is locked into the
+      checkpoint at query start; a non-numeric session width is left
+      alone.
     """
     spark = result.sparkSession
-    saved = None
-    # recentProgress retains only the last numRecentProgressUpdates
-    # (default ~100) progress events, so a many-micro-batch drain would
-    # silently under-report the state-store peak that the growth rungs
-    # derive from LAST_PROGRESS (round-12 advice).  Raise the retention
-    # far beyond any drain we run; restored after the drain.
-    saved_prog = spark.conf.get(
-        "spark.sql.streaming.numRecentProgressUpdates", "100"
-    )
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-    if shuffle_partitions is not None:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    scoped = {"spark.sql.streaming.numRecentProgressUpdates": "100000"}
+    width = session_width(spark)
+    if width > 1:
+        scoped["spark.sql.shuffle.partitions"] = str(
+            rows_width(width, _source_rows(source_dir))
+        )
+    saved = {k: spark.conf.get(k) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
-        checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
-        if DRAIN_SINK == "noop":
-            q = (
-                result.writeStream.format("noop")
+        with tempfile.TemporaryDirectory(
+            prefix=f"ckpt-{query_name}-", ignore_cleanup_errors=True
+        ) as checkpoint:
+            writer = (
+                result.writeStream.queryName(query_name)
                 .outputMode(output_mode)
                 .option("checkpointLocation", checkpoint)
                 .trigger(availableNow=True)
-                .start()
             )
+            if foreach_batch is not None:
+                writer = writer.foreachBatch(foreach_batch)
+            else:
+                writer = writer.format(DRAIN_SINK)
+            q = writer.start()
             q.awaitTermination()
-            local_rows(spark, [], result.schema).createOrReplaceTempView(
-                query_name
-            )
-        else:
-            q = (
-                result.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        try:
-            LAST_PROGRESS[query_name] = list(q.recentProgress)
-        except Exception:  # noqa: BLE001 — observability must never fail a drain
-            LAST_PROGRESS[query_name] = []
+            try:
+                LAST_PROGRESS[query_name] = list(q.recentProgress)
+            except Exception:  # noqa: BLE001 — observability must never fail a drain
+                LAST_PROGRESS[query_name] = []
     finally:
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", saved_prog
-        )
-        if saved is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-
-
-def run_tumbling_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    watermark: str = "30 minutes",
-    width: str = "1 hour",
-    query_name: str = "events_tumbling_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window counts, drained with availableNow.
-    Returns the complete result (update mode drained to memory)."""
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    ).withWatermark("ts", watermark)
-    result = tumbling_counts(stream, width=width)
-    _run_to_memory(
-        result,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_sliding_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    watermark: str = "30 minutes",
-    width: str = "1 hour",
-    slide: str = "30 minutes",
-    query_name: str = "events_sliding_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Watermarked sliding-window counts drained with availableNow —
-    the same batch transform (streaming.windows.sliding_counts) under
-    the streaming runtime; complete mode ⇒ result equals the batch
-    plan, so the batch oracle checks the stream execution."""
-    from .windows import sliding_counts
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    ).withWatermark("ts", watermark)
-    result = sliding_counts(stream, width=width, slide=slide)
-    _run_to_memory(
-        result,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_session_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    watermark: str = "30 minutes",
-    gap: str = "5 minutes",
-    query_name: str = "events_session_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Watermarked session-window counts drained with availableNow.
-    Session windows are the state-heavy case (windows merge as events
-    arrive); the watermark bounds how long an open session can wait for
-    a late extension before its state is finalized."""
-    from .windows import session_counts
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    ).withWatermark("ts", watermark)
-    result = session_counts(stream, gap=gap)
-    _run_to_memory(
-        result,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_interval_join_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    watermark: str = "30 minutes",
-    lookback: str = "10 MINUTES",
-    query_name: str = "events_interval_join_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Watermarked STREAM-STREAM interval join drained with
-    availableNow: each purchase pairs with the same user's clicks in
-    the preceding ``lookback``. Both sides carry watermarks and the
-    join predicate bounds event-time distance, so Spark can expire
-    buffered state — the only shape a stream-stream join is allowed to
-    run unbounded. Inner join + append mode emits exactly the matched
-    pairs: the BATCH interval-join oracle checks the streaming
-    runtime's join-state bookkeeping."""
-    from pyspark.sql import functions as F
-
-    def side(event_type: str, id_alias: str, ts_alias: str, user_alias: str):
-        return (
-            events_stream_reader(
-                spark, events_dir, max_files_per_trigger=max_files_per_trigger
-            )
-            .filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(user_alias),
-                F.col("event_id").alias(id_alias),
-                F.col("ts").alias(ts_alias),
-            )
-            .withWatermark(ts_alias, watermark)
-        )
-
-    p = side("purchase", "purchase_id", "p_ts", "user_id")
-    c = side("click", "click_id", "c_ts", "c_user")
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}")),
-    ).select("user_id", "purchase_id", "click_id")
-    _run_to_memory(
-        joined,
-        query_name=query_name,
-        output_mode="append",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_dedup_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    watermark: str = "30 minutes",
-    query_name: str = "events_dedup_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Streaming exact dedup on event_id with watermark-bounded state.
-
-    NOTE on replay inputs whose files are NOT time-ordered (e.g. a
-    doubled landing where each file spans the full time range): drain
-    with ``max_files_per_trigger=None`` — after the first micro-batch
-    the watermark sits near the data's end, so any later file's rows
-    would be dropped as late rather than deduplicated. Time-ordered
-    file feeds (the production shape) can keep file-granular batches.
-    """
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    ).withWatermark("ts", watermark)
-    deduped = stream.dropDuplicatesWithinWatermark(["event_id"]).select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    _run_to_memory(
-        deduped,
-        query_name=query_name,
-        output_mode="append",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_kmv_sketch_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    k: int = 64,
-    query_name: str = "events_kmv_sketch_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Incrementally maintain the KMV distinct sketch (sketches.kmv)
-    under the streaming runtime: per (event_type, j) the running MIN of
-    the j-th hash of user_id, drained with availableNow.
-
-    This is the sketch's headline property made executable: the
-    streaming STATE is the sketch itself — groups × k longs, CONSTANT
-    regardless of stream volume — so no watermark is needed and
-    complete-mode output is cheap. (An exact streaming distinct-count
-    would hold every user id in state.) Estimates are then computed
-    over the drained sketch table in batch, the production split:
-    the stream maintains the sketch, queries read it."""
-    from ..sketches.kmv import kmv_sketch
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    sk = kmv_sketch(
-        stream.select("event_type", "user_id"),
-        group_col="event_type",
-        value_col="user_id",
-        k=k,
-    )
-    _run_to_memory(
-        sk,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_hll_sketch_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    p: int = 8,
-    query_name: str = "events_hll_sketch_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Incrementally maintain the HLL register sketch (sketches.hll)
-    under the streaming runtime: per (event_type, register) the running
-    MAX of the hash rank, drained with availableNow — the max-merge
-    twin of run_kmv_sketch_stream_available_now's min-maintenance.
-    State is groups × ≤2^p small ints, constant for any stream volume
-    (no watermark needed, complete-mode output cheap); estimates are
-    computed over the drained register table in batch (the production
-    split: streams maintain sketches, queries read them). Because the
-    register max is ORDER-INSENSITIVE the drained state must equal the
-    batch-built sketch exactly — which the catalog oracle's full md5
-    replay checks."""
-    from ..sketches.hll import hll_registers
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    regs = hll_registers(
-        stream.select("event_type", "user_id"),
-        group_col="event_type",
-        value_col="user_id",
-        p=p,
-    )
-    _run_to_memory(
-        regs,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_cms_sketch_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    term_expr: str = "CAST(user_id AS STRING)",
-    depth: int = 4,
-    width: int = 1024,
-    query_name: str = "events_cms_sketch_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Incrementally maintain the Count-Min frequency sketch
-    (sketches.countmin) under the streaming runtime: per (j, bucket)
-    the running COUNT of occurrences routed there, drained with
-    availableNow — the sum-merge member of the streamed sketch trio
-    (KMV = min, HLL = max, CMS = sum; all three keep CONSTANT state
-    regardless of stream volume, which is the whole reason sketches
-    stream where exact counts cannot). Estimates are computed over the
-    drained cell table in batch via the shared
-    ``heavy_hitters_report`` assembly. Counts are order-insensitive,
-    so the drained state must equal the batch-built sketch cell for
-    cell — which the catalog oracle's full md5 replay checks."""
-    from ..sketches.countmin import count_min_sketch_table
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    cells = count_min_sketch_table(
-        stream.selectExpr(f"{term_expr} AS term"),
-        term_col="term",
-        depth=depth,
-        width=width,
-    )
-    _run_to_memory(
-        cells,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_hdr_sketch_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    sub_bits: int = 5,
-    query_name: str = "events_hdr_sketch_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Incrementally maintain the HDR quantile sketch
-    (sketches.quantile) under the streaming runtime: per
-    (group, bucket code) the running COUNT of values routed there,
-    drained with availableNow — the RANK member of the streamed sketch
-    family (KMV = min, HLL = max, CMS/HDR = sum; all keep CONSTANT
-    state regardless of stream volume). Quantile estimates, the merged
-    'ALL' row, and the true-rank reference are computed over the
-    drained bucket table in batch via the shared
-    ``hdr_quantile_report`` assembly (the production split: streams
-    maintain sketches, queries read them). Bucket counts are
-    order-insensitive, so the drained state must equal the batch-built
-    sketch cell for cell — which the catalog oracle's full integer
-    replay checks."""
-    from ..sketches.quantile import hdr_bucket_counts
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    sk = hdr_bucket_counts(
-        stream.select(group_col, value_col),
-        group_col=group_col,
-        value_col=value_col,
-        sub_bits=sub_bits,
-    )
-    _run_to_memory(
-        sk,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
-    return spark.table(query_name)
-
-
-def run_enrich_stream_available_now(
-    spark: SparkSession,
-    events_dir: str,
-    dim: DataFrame,
-    *,
-    watermark: str = "30 minutes",
-    width: str = "1 hour",
-    query_name: str = "events_enrich_stream",
-    max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Stream-STATIC enrichment join under the real streaming runtime
-    (streaming.windows.enriched_segment_counts drained availableNow,
-    complete mode). The join itself is stateless — per micro-batch the
-    static dim is broadcast-hash-joined map-side; only the downstream
-    window aggregate commits state — which is why this is the shape for
-    dimension enrichment at stream time, while stream-STREAM joins
-    (run_interval_join_stream_available_now) pay watermark-deep state
-    on both sides."""
-    from .windows import enriched_segment_counts
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    ).withWatermark("ts", watermark)
-    result = enriched_segment_counts(stream, dim, width=width)
-    _run_to_memory(
-        result,
-        query_name=query_name,
-        output_mode="complete",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    if foreach_batch is not None:
+        return None
+    if DRAIN_SINK == "noop":
+        local_rows(spark, [], result.schema).createOrReplaceTempView(query_name)
     return spark.table(query_name)
 
 
@@ -586,12 +244,12 @@ def run_upsert_sink_stream_available_now(
     cannot give an earlier caller a file-not-found (the pre-hardening
     failure mode: >8 calls in one process invalidated the oldest
     unread result). Checkpoint blocks are freed by the ContextCleaner
-    when the frame is dropped; the stream checkpoint dir, never read
-    again after awaitTermination, is removed immediately."""
+    when the frame is dropped; the stream checkpoint belongs to
+    ``drain``."""
+    import atexit
     import shutil
 
     global _UPSERT_CLEANUP_REGISTERED
-    import atexit
 
     if not _UPSERT_CLEANUP_REGISTERED:
         def _cleanup() -> None:
@@ -618,18 +276,14 @@ def run_upsert_sink_stream_available_now(
         if old is not None:
             shutil.rmtree(old, ignore_errors=True)
 
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
+    drain(
+        events_stream_reader(
+            spark, events_dir, max_files_per_trigger=max_files_per_trigger
+        ),
+        events_dir,
+        query_name=query_name,
+        foreach_batch=merge_batch,
     )
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(checkpoint, ignore_errors=True)
     if state["dir"] is None:  # empty source → empty state, right schema
         return local_rows(
             spark, [], "user_id long, ts timestamp, event_id long, value double"

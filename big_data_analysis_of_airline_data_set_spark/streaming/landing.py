@@ -15,8 +15,6 @@ overwrite of date partitions).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,7 +36,7 @@ def land_events_stream(
     """Streaming landing loop over an events parquet directory (ts
     already microsecond timestamps — see streaming.jobs reader note),
     drained with availableNow."""
-    from .jobs import events_stream_reader
+    from .jobs import drain, events_stream_reader
 
     stream = events_stream_reader(spark, events_dir).withColumn(
         "event_date", F.to_date("ts")
@@ -48,12 +46,4 @@ def land_events_stream(
         # dynamic partition overwrite keeps re-delivered batches idempotent
         batch_df.write.mode("append").partitionBy("event_date").parquet(out_dir)
 
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, events_dir, query_name=query_name, foreach_batch=sink)

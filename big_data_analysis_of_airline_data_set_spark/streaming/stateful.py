@@ -6,7 +6,8 @@ This is the escape hatch for operators Spark's built-in windowed aggs
 can't express (per-key custom state machines). State is per user_id;
 GroupStateTimeout is disabled here (the drain is availableNow), but a
 production stream would set an event-time timeout to bound state, like
-the watermarked windows in streaming.jobs.
+the watermarked windows in streaming.jobs. The drain (streaming.jobs)
+sizes the state's shuffle from the rows the events directory holds.
 """
 
 from __future__ import annotations
@@ -48,15 +49,12 @@ def running_user_totals_stream(
     *,
     query_name: str = "user_totals",
     max_files_per_trigger: int | None = 1,
-    stream_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain the events dir through the stateful operator; returns the
-    final per-user totals (last update per user wins).
-    ``stream_shuffle_partitions`` sizes the stateful shuffle — state-
-    store commits scale with partition count (see jobs._run_to_memory)."""
+    final per-user totals (last update per user wins)."""
     from pyspark.sql import functions as F
 
-    from .jobs import events_stream_reader
+    from .jobs import drain, events_stream_reader
 
     stream = events_stream_reader(
         spark, events_dir, max_files_per_trigger=max_files_per_trigger
@@ -68,21 +66,9 @@ def running_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from .jobs import _run_to_memory
-
-    # one shared drain helper owns the memory sink + conf-override
-    # plumbing (round-4 review: a second hand-rolled copy here would
-    # silently miss future fixes to the shared path)
-    _run_to_memory(
-        updated,
-        query_name=query_name,
-        output_mode="update",
-        shuffle_partitions=stream_shuffle_partitions,
-    )
     # memory sink holds one row per update; the last per user is final
-    snap = spark.table(query_name)
-    w_latest = snap.groupBy("user_id").agg(
+    snap = drain(updated, events_dir, query_name=query_name, output_mode="update")
+    return snap.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("sum_value").alias("sum_value"),
     )
-    return w_latest

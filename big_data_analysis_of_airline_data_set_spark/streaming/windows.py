@@ -100,3 +100,41 @@ def enriched_segment_counts(
             "sum_value",
         )
     )
+
+
+def interval_join_pairs(
+    purchases: DataFrame,
+    clicks: DataFrame,
+    *,
+    watermark: str = "30 minutes",
+    lookback: str = "10 MINUTES",
+) -> DataFrame:
+    """Each purchase paired with every click by the same user in the
+    preceding ``lookback``, as a watermarked STREAM-STREAM join of two
+    event streams (one per side: a stream-stream join reads its source
+    twice). Both sides carry watermarks and the join predicate bounds
+    the event-time distance, so Spark can expire buffered state — the
+    only shape a stream-stream join is allowed to run unbounded. An
+    inner join in append mode emits exactly the matched pairs, so the
+    batch interval join (plans.events_queries.q_interval_join) checks
+    the streaming runtime's join-state bookkeeping."""
+
+    def side(events: DataFrame, event_type: str, user: str, eid: str, ts: str):
+        return (
+            events.filter(F.col("event_type") == event_type)
+            .select(
+                F.col("user_id").alias(user),
+                F.col("event_id").alias(eid),
+                F.col("ts").alias(ts),
+            )
+            .withWatermark(ts, watermark)
+        )
+
+    p = side(purchases, "purchase", "user_id", "purchase_id", "p_ts")
+    c = side(clicks, "click", "c_user", "click_id", "c_ts")
+    return p.join(
+        c,
+        (F.col("user_id") == F.col("c_user"))
+        & (F.col("c_ts") <= F.col("p_ts"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}")),
+    ).select("user_id", "purchase_id", "click_id")

@@ -4,7 +4,11 @@ files, one per query, normalized by ``perfbench.stats.normalize_plan``
 stripped) and with the session's running counters masked
 (``MapPartitionsRDD[1325]`` becomes ``MapPartitionsRDD[]``,
 ``_common_expr_34`` becomes ``_common_expr_``: both count what the
-session built before, so they shift with whatever ran earlier). Two
+session built before, so they shift with whatever ran earlier). The
+call site Spark records for an RDD (``at localCheckpoint at
+NativeMethodAccessorImpl.java:0``, or ``at <unknown>:0`` in a fresh
+process) and the IVF index's temp directory (``ivf_index_k3j9x``) are
+masked too. Two
 captures of the same code are then byte-identical, so a plan-parity
 check between two checkouts is one ``diff -r``. Driver-side
 only: plans are analyzed, never executed, except for queries that
@@ -31,11 +35,15 @@ if _REPO_ROOT not in sys.path:
 from perfbench.stats import normalize_plan  # noqa: E402
 
 _SESSION_COUNTER = re.compile(r"(?<=RDD\[)\d+(?=\])|(?<=_common_expr_)\d+")
+_CALL_SITE = re.compile(r"(RDD\[\] at \w+ at )\S+:\d+")
+_IVF_INDEX_DIR = re.compile(r"(?<=ivf_index_)\w+")
 
 
 def normalize(plan: str) -> str:
-    """``normalize_plan`` plus masked RDD ids and common-expression ids."""
-    return _SESSION_COUNTER.sub("", normalize_plan(plan))
+    """``normalize_plan`` plus masked RDD ids, common-expression ids, RDD
+    call sites and IVF index directories."""
+    plan = _SESSION_COUNTER.sub("", normalize_plan(plan))
+    return _IVF_INDEX_DIR.sub("", _CALL_SITE.sub(r"\1<call site>", plan))
 
 
 def main() -> None:

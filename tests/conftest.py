@@ -26,8 +26,6 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 # in the default run.
 _SLOW_NODEID_PARTS = (
     # multi-second catalog-oracle parity cases (driver/preflight cover these)
-    "test_query_matches_oracle[dedup_canonical_keeper]",
-    "test_query_matches_oracle[dedup_connected_components]",
     "test_query_matches_oracle[ml_reference_bands]",
     "test_query_matches_oracle[dedup_ngram_jaccard]",
     "test_query_matches_oracle[dedup_embedding_lsh]",
@@ -35,7 +33,6 @@ _SLOW_NODEID_PARTS = (
     "test_query_matches_oracle[dedup_minhash_lsh]",
     "test_query_matches_oracle[ml_variant_sweep]",
     "test_query_matches_oracle[ml_linear_svc_metrics_banded]",
-    "test_query_matches_oracle[graph_pagerank_converged]",
     "test_oracle_parity[sketch_hll_set_ops]",
     "test_no_degenerate_join_in_any_catalog_query[dedup_embedding_lsh]",
     # whole-pipeline integration (fit-heavy; minutes each with setup)

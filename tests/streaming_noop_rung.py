@@ -19,7 +19,9 @@ partitions, availableNow):
   x10         1M         399,470            992,330          (seconds)
   x100       10M       3,994,700          9,923,300          18.7 s / 34.2 s
 
-State grows EXACTLY ×10 per decade at both operators.
+State grows EXACTLY ×10 per decade at both operators. The drain now
+sizes the stateful shuffle from the rung's row count
+(``session.rows_width``), so a rerun no longer holds 8 partitions.
 
 Usage:
     PYTHONPATH=/root/repo python3 tests/streaming_noop_rung.py [x1 x10 x100]
@@ -33,48 +35,28 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 import time
 
 
-def _drain_noop(result, *, shuffle_partitions: int = 8):
+def _drain_noop(result, source_dir: str, name: str):
     """availableNow drain to the noop sink; returns (wall_s,
     state_rows_peak, micro_batches)."""
-    spark = result.sparkSession
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # Keep every progress event so the state peak covers ALL
-    # micro-batches, not just the last ~100 (round-12 advice).
-    saved_prog = spark.conf.get(
-        "spark.sql.streaming.numRecentProgressUpdates", "100"
-    )
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
+    from big_data_analysis_of_airline_data_set_spark.streaming import jobs
+
+    saved = jobs.DRAIN_SINK
+    jobs.DRAIN_SINK = "noop"
     try:
         t0 = time.time()
-        q = (
-            result.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt-noop-"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        jobs.drain(result, source_dir, query_name=name)
         wall = round(time.time() - t0, 2)
-        prog = list(q.recentProgress)
-        peak = max(
-            (
-                op.get("numRowsTotal", 0)
-                for p in prog
-                for op in p.get("stateOperators", [])
-            ),
-            default=None,
-        )
-        return wall, peak, len(prog)
     finally:
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", saved_prog
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+        jobs.DRAIN_SINK = saved
+    prog = jobs.LAST_PROGRESS[name]
+    peak = max(
+        (op.get("numRowsTotal", 0) for p in prog for op in p.get("stateOperators", [])),
+        default=None,
+    )
+    return wall, peak, len(prog)
 
 
 def run(spark, rungs: list[str]):
@@ -84,6 +66,9 @@ def run(spark, rungs: list[str]):
     from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
         events_stream_reader,
     )
+    from big_data_analysis_of_airline_data_set_spark.streaming.windows import (
+        interval_join_pairs,
+    )
 
     rows = []
     for rung in rungs:
@@ -91,36 +76,20 @@ def run(spark, rungs: list[str]):
         ss._events_xn(spark, d, int(rung[1:]))
         events = os.path.join(d, "events.parquet")
 
-        def side(event_type, id_alias, ts_alias, user_alias):
-            return (
-                events_stream_reader(spark, events, max_files_per_trigger=None)
-                .filter(F.col("event_type") == event_type)
-                .select(
-                    F.col("user_id").alias(user_alias),
-                    F.col("event_id").alias(id_alias),
-                    F.col("ts").alias(ts_alias),
-                )
-                .withWatermark(ts_alias, "30 minutes")
-            )
+        def stream():
+            return events_stream_reader(spark, events, max_files_per_trigger=None)
 
-        p = side("purchase", "purchase_id", "p_ts", "user_id")
-        c = side("click", "click_id", "c_ts", "c_user")
-        joined = p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("c_ts") <= F.col("p_ts"))
-            & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES")),
-        ).select("user_id", "purchase_id", "click_id")
-        rows.append((rung, "interval_join", *_drain_noop(joined)))
+        joined = interval_join_pairs(stream(), stream())
+        rows.append((rung, "interval_join", *_drain_noop(joined, events, "noop_join")))
         print("noop_rung", rows[-1], flush=True)
 
-        stream = events_stream_reader(spark, events, max_files_per_trigger=None)
         sess = (
-            stream.withWatermark("ts", "30 minutes")
+            stream()
+            .withWatermark("ts", "30 minutes")
             .groupBy("user_id", F.session_window("ts", "5 minutes"))
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        rows.append((rung, "session_window", *_drain_noop(sess)))
+        rows.append((rung, "session_window", *_drain_noop(sess, events, "noop_session")))
         print("noop_rung", rows[-1], flush=True)
     return rows
 

@@ -15,3 +15,14 @@ def test_session_counters_masked():
     # ExistingRDD[...] lists output columns, not an id: only their
     # expression ids go
     assert normalize("Scan ExistingRDD[a#12L]") == "Scan ExistingRDD[a]"
+
+
+def test_call_site_and_ivf_index_dir_masked():
+    warm = "+- MapPartitionsRDD[12] at localCheckpoint at NativeMethodAccessorImpl.java:0"
+    fresh = "+- MapPartitionsRDD[3] at localCheckpoint at <unknown>:0"
+    assert normalize(warm) == normalize(fresh)
+    assert normalize(fresh) == "+- MapPartitionsRDD[] at localCheckpoint at <call site>"
+    a = "Location: InMemoryFileIndex [file:/tmp/ivf_index_k3j9x_a1/part]"
+    b = "Location: InMemoryFileIndex [file:/tmp/ivf_index_q0p2zz7m/part]"
+    assert normalize(a) == normalize(b)
+    assert "/tmp/ivf_index_/part" in normalize(a)

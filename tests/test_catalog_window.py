@@ -29,7 +29,7 @@ def test_committed_window_heads_the_registry():
     assert all(n in latest for n in outside)
     changed = plans._CHANGED_THIS_ROUND
     aged = [latest[n] for n in window if n in latest and n not in changed]
-    assert max(aged) <= min(latest[n] for n in outside)
+    assert not aged or max(aged) <= min(latest[n] for n in outside)
 
 
 def test_never_checked_first_then_oldest(tmp_path, monkeypatch):
@@ -48,6 +48,15 @@ def test_never_checked_first_then_oldest(tmp_path, monkeypatch):
     window = plans.correctness_window(names, tmp_path)
     assert window[:2] == ["q30", "q41"]
     assert window[2:21] == never
+
+
+def test_changed_names_past_the_window_raise(monkeypatch):
+    names = _registry()
+    monkeypatch.setattr(plans, "_CHANGED_THIS_ROUND", tuple(names[:50]))
+    assert plans.correctness_window(names) == names[:50]
+    monkeypatch.setattr(plans, "_CHANGED_THIS_ROUND", tuple(names[:51]))
+    with pytest.raises(ValueError, match=f"overflow the 50-name window: .*{names[50]}"):
+        plans.correctness_window(names)
 
 
 def test_empty_ledger_keeps_registry_order(tmp_path, monkeypatch):
@@ -73,6 +82,6 @@ def test_changed_plan_parity_case_is_never_slow():
     parity = "tests/test_relational_queries.py::test_query_matches_oracle[{}]".format
     assert is_slow(parity("dedup_minhash_lsh"), ())
     assert not is_slow(parity("dedup_minhash_lsh"), ("dedup_minhash_lsh",))
-    assert is_slow(parity("graph_pagerank_converged"), ("graph_pagerank",))
+    assert is_slow(parity("ml_linear_svc_metrics_banded"), ("ml_linear_svc",))
     assert not is_slow(parity("tpch_q1_style"), ())
     assert is_slow("tests/test_reference_metrics.py::test_x", ("dedup_minhash_lsh",))

@@ -518,18 +518,26 @@ def test_streamed_sketch_state_is_constant_sized(spark, sf_dir):
         _CMS_STREAM_WIDTH,
         _landed_events_dir,
     )
+    from big_data_analysis_of_airline_data_set_spark.sketches.countmin import (
+        count_min_sketch_table,
+    )
     from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
-        run_cms_sketch_stream_available_now,
+        drain,
+        events_stream_reader,
     )
 
-    cells = run_cms_sketch_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        depth=_CMS_STREAM_DEPTH,
-        width=_CMS_STREAM_WIDTH,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(spark, landed, max_files_per_trigger=None)
+    cells = drain(
+        count_min_sketch_table(
+            stream.selectExpr("CAST(user_id AS STRING) AS term"),
+            term_col="term",
+            depth=_CMS_STREAM_DEPTH,
+            width=_CMS_STREAM_WIDTH,
+        ),
+        landed,
         query_name="cms_state_size_check",
-        max_files_per_trigger=None,
-        stream_shuffle_partitions=4,
+        output_mode="complete",
     )
     assert cells.count() <= _CMS_STREAM_DEPTH * _CMS_STREAM_WIDTH
 
@@ -675,17 +683,26 @@ def test_streamed_hdr_state_is_constant_sized(spark, sf_dir):
         _HDR_STREAM_SUB_BITS,
         _landed_events_dir,
     )
+    from big_data_analysis_of_airline_data_set_spark.sketches.quantile import (
+        hdr_bucket_counts,
+    )
     from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
-        run_hdr_sketch_stream_available_now,
+        drain,
+        events_stream_reader,
     )
 
-    sk = run_hdr_sketch_stream_available_now(
-        spark,
-        _landed_events_dir(spark, sf_dir),
-        sub_bits=_HDR_STREAM_SUB_BITS,
+    landed = _landed_events_dir(spark, sf_dir)
+    stream = events_stream_reader(spark, landed, max_files_per_trigger=None)
+    sk = drain(
+        hdr_bucket_counts(
+            stream.select("event_type", "value"),
+            group_col="event_type",
+            value_col="value",
+            sub_bits=_HDR_STREAM_SUB_BITS,
+        ),
+        landed,
         query_name="hdr_state_size_check",
-        max_files_per_trigger=None,
-        stream_shuffle_partitions=4,
+        output_mode="complete",
     )
     rows = sk.collect()
     groups = {r["group"] for r in rows}

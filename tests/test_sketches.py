@@ -535,9 +535,7 @@ def test_spacesaving_stream_matches_batch_fold(spark):
     df.repartition(4).write.mode("overwrite").parquet(d)
     out = {
         r.event_type: r
-        for r in spacesaving_stream(
-            spark, d, m=3, query_name="ss_unit", stream_shuffle_partitions=2
-        ).collect()
+        for r in spacesaving_stream(spark, d, m=3, query_name="ss_unit").collect()
     }
     a = out["a"]
     assert a.n_seen == 400

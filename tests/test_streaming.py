@@ -11,17 +11,19 @@ from pyspark.sql import functions as F
 
 from big_data_analysis_of_airline_data_set_spark.sources.readers import read_testdata_table
 from big_data_analysis_of_airline_data_set_spark.streaming import (
-    run_dedup_stream_available_now,
-    run_tumbling_stream_available_now,
+    drain,
+    events_stream_reader,
     tumbling_counts,
+)
+from big_data_analysis_of_airline_data_set_spark.streaming.windows import (
+    enriched_segment_counts,
 )
 
 
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir):
     """events parquet copied into a dir the file stream source can list
-    (the testdata single .parquet file works directly as a dir? no —
-    readStream.parquet wants a directory), split into two files so
+    (readStream.parquet wants a directory), split into two files so
     maxFilesPerTrigger exercises multi-batch progress."""
     d = tempfile.mkdtemp(prefix="events-stream-")
     ev = read_testdata_table(spark, sf_dir, "events")
@@ -31,52 +33,26 @@ def events_dir(spark, sf_dir):
     shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.fixture(scope="module")
-def stream_events_reader_schema():
-    return None
+def _tumbling_drain(spark, events_dir, query_name):
+    stream = events_stream_reader(spark, events_dir).withWatermark("ts", "30 minutes")
+    return drain(
+        tumbling_counts(stream),
+        events_dir,
+        query_name=query_name,
+        output_mode="complete",
+    )
 
 
 def test_stream_tumbling_matches_batch(spark, events_dir):
-    from pyspark.sql.types import (
-        StructType, StructField, LongType, TimestampType, StringType, DoubleType,
-    )
-
     # batch reference over the same files
     batch = spark.read.parquet(events_dir)
     expected = {
         (r.window_start, r.event_type): (r.n_events, r.sum_value)
         for r in tumbling_counts(batch).collect()
     }
-
-    # streaming run over the same dir (ts already a proper timestamp here)
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(events_dir)
-    ).withWatermark("ts", "30 minutes")
-    result = tumbling_counts(stream)
-    import tempfile as tf
-
-    q = (
-        result.writeStream.format("memory")
-        .queryName("sym_check")
-        .outputMode("complete")
-        .option("checkpointLocation", tf.mkdtemp(prefix="ckpt-sym-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     got = {
         (r.window_start, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.table("sym_check").collect()
+        for r in _tumbling_drain(spark, events_dir, "sym_check").collect()
     }
     assert got == expected
 
@@ -89,8 +65,11 @@ def test_stream_dedup_within_watermark(spark, sf_dir):
         dup = ev.limit(5)  # duplicate first 5 event_ids
         ev.union(dup).repartition(1).write.mode("overwrite").parquet(d)
 
-        out = run_dedup_stream_available_now(
-            spark, d, query_name="dedup_check"
+        stream = events_stream_reader(spark, d).withWatermark("ts", "30 minutes")
+        out = drain(
+            stream.dropDuplicatesWithinWatermark(["event_id"]),
+            d,
+            query_name="dedup_check",
         )
         n_distinct = ev.select("event_id").distinct().count()
         assert out.count() == n_distinct
@@ -100,9 +79,9 @@ def test_stream_dedup_within_watermark(spark, sf_dir):
 
 
 def test_stream_runner_on_testdata_events(spark, sf_dir, events_dir):
-    """End-to-end runner over parquet dir; complete-mode totals equal
+    """End-to-end drain over parquet dir; complete-mode totals equal
     the raw event count."""
-    out = run_tumbling_stream_available_now(spark, events_dir, query_name="e2e_check")
+    out = _tumbling_drain(spark, events_dir, "e2e_check")
     total = out.agg(F.sum("n_events")).collect()[0][0]
     raw = spark.read.parquet(events_dir).count()
     assert total == raw
@@ -112,20 +91,23 @@ def test_stream_static_enrichment_matches_batch(spark, events_dir, sf_dir):
     """Stream-static broadcast join + aggregation must equal the same
     transform run in batch over the same files (DataFrame symmetry),
     and must produce multiple segments (the join actually enriched)."""
-    from big_data_analysis_of_airline_data_set_spark.streaming.enrich import (
-        enriched_segment_counts,
-        run_enriched_stream_available_now,
+    dim = read_testdata_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("dim_key"),
+        F.col("c_mktsegment").alias("segment"),
     )
-
-    dim = read_testdata_table(spark, sf_dir, "customer")
+    key = lambda r: (r.window_start, r.segment)  # noqa: E731
     batch = spark.read.parquet(events_dir)
     expected = {
-        r.c_mktsegment: (r.n_events, r.sum_value)
+        key(r): (r.n_events, r.sum_value)
         for r in enriched_segment_counts(batch, dim).collect()
     }
-    got_df = run_enriched_stream_available_now(
-        spark, events_dir, dim, query_name="enriched_counts_t"
+    stream = events_stream_reader(spark, events_dir).withWatermark("ts", "30 minutes")
+    got_df = drain(
+        enriched_segment_counts(stream, dim),
+        events_dir,
+        query_name="enriched_counts_t",
+        output_mode="complete",
     )
-    got = {r.c_mktsegment: (r.n_events, r.sum_value) for r in got_df.collect()}
+    got = {key(r): (r.n_events, r.sum_value) for r in got_df.collect()}
     assert got == expected
-    assert len(got) >= 2
+    assert len({segment for _, segment in got} - {"UNKNOWN"}) >= 2

@@ -11,7 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_analysis_of_airline_data_set_spark.sources.readers import read_testdata_table
-from big_data_analysis_of_airline_data_set_spark.streaming import sliding_counts, session_counts
+from big_data_analysis_of_airline_data_set_spark.streaming import (
+    drain,
+    events_stream_reader,
+    session_counts,
+    sliding_counts,
+)
 from big_data_analysis_of_airline_data_set_spark.streaming.landing import (
     land_events_batch,
     land_events_stream,
@@ -81,26 +86,15 @@ def test_stateful_user_totals_match_batch(spark, events_dir):
 @pytest.mark.parametrize("transform", [sliding_counts, session_counts])
 def test_sliding_and_session_windows_stream(spark, events_dir, transform):
     """The batch-symmetric transforms run as REAL streams too."""
-    import tempfile as tf
-
     batch_expected = {tuple(r) for r in transform(spark.read.parquet(events_dir)).collect()}
-    from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
-        events_stream_reader,
-    )
-
-    name = f"sym_{transform.__name__}"
     stream = events_stream_reader(spark, events_dir).withWatermark("ts", "1 hour")
-    result = transform(stream)
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tf.mkdtemp(prefix=f"ckpt-{name}-"))
-        .trigger(availableNow=True)
-        .start()
+    out = drain(
+        transform(stream),
+        events_dir,
+        query_name=f"sym_{transform.__name__}",
+        output_mode="complete",
     )
-    q.awaitTermination()
-    got = {tuple(r) for r in spark.table(name).collect()}
+    got = {tuple(r) for r in out.collect()}
     assert got == batch_expected
 
 
@@ -114,29 +108,24 @@ def test_kmv_sketch_stream_incremental_equals_batch(spark, sf_dir):
         _landed_events_dir,
     )
     from big_data_analysis_of_airline_data_set_spark.sketches.kmv import kmv_sketch
-    from big_data_analysis_of_airline_data_set_spark.sources.readers import (
-        read_testdata_table,
-    )
-    from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
-        run_kmv_sketch_stream_available_now,
-    )
+
+    def sketch(events):
+        return kmv_sketch(
+            events.select("event_type", "user_id"),
+            group_col="event_type",
+            value_col="user_id",
+            k=16,
+        )
 
     landed = _landed_events_dir(spark, sf_dir)
-    streamed = run_kmv_sketch_stream_available_now(
-        spark,
+    streamed = drain(
+        # one file per micro-batch: several micro-batches
+        sketch(events_stream_reader(spark, landed, max_files_per_trigger=1)),
         landed,
-        k=16,
         query_name="kmv_stream_incr_test",
-        max_files_per_trigger=1,  # several micro-batches
-        stream_shuffle_partitions=4,
+        output_mode="complete",
     )
-    ev = read_testdata_table(spark, sf_dir, "events")
-    batch = kmv_sketch(
-        ev.select("event_type", "user_id"),
-        group_col="event_type",
-        value_col="user_id",
-        k=16,
-    )
+    batch = sketch(read_testdata_table(spark, sf_dir, "events"))
     s = {(r.group, r.j): r.min_h for r in streamed.collect()}
     b = {(r.group, r.j): r.min_h for r in batch.collect()}
     assert s == b
@@ -219,27 +208,23 @@ def test_hdr_stream_incremental_batches_equal_batch_sketch(spark, sf_dir):
     from big_data_analysis_of_airline_data_set_spark.sketches.quantile import (
         hdr_bucket_counts,
     )
-    from big_data_analysis_of_airline_data_set_spark.sources.readers import (
-        read_testdata_table,
-    )
-    from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
-        run_hdr_sketch_stream_available_now,
-    )
+
+    def sketch(events):
+        return hdr_bucket_counts(
+            events.select("event_type", "value"),
+            group_col="event_type",
+            value_col="value",
+        )
 
     landed = _landed_events_dir(spark, sf_dir)
-    streamed = run_hdr_sketch_stream_available_now(
-        spark,
+    streamed = drain(
+        # one file per micro-batch: several micro-batches
+        sketch(events_stream_reader(spark, landed, max_files_per_trigger=1)),
         landed,
         query_name="hdr_stream_incr_test",
-        max_files_per_trigger=1,  # several micro-batches
-        stream_shuffle_partitions=4,
+        output_mode="complete",
     )
-    ev = read_testdata_table(spark, sf_dir, "events")
-    batch = hdr_bucket_counts(
-        ev.select("event_type", "value"),
-        group_col="event_type",
-        value_col="value",
-    )
+    batch = sketch(read_testdata_table(spark, sf_dir, "events"))
     s = {(r.group, r.code): r.cnt for r in streamed.collect()}
     b = {(r.group, r.code): r.cnt for r in batch.collect()}
     assert s == b and len(s) > 0

@@ -12,7 +12,13 @@ from pyspark.sql import functions as F
 
 from big_data_analysis_of_airline_data_set_spark.plans.events_queries import q_interval_join
 from big_data_analysis_of_airline_data_set_spark.sources.readers import read_testdata_table
-from big_data_analysis_of_airline_data_set_spark.streaming.jobs import events_stream_reader
+from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
+    drain,
+    events_stream_reader,
+)
+from big_data_analysis_of_airline_data_set_spark.streaming.windows import (
+    interval_join_pairs,
+)
 
 
 @pytest.fixture(scope="module")
@@ -30,41 +36,13 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_dir):
         (r.user_id, r.purchase_id, r.click_id)
         for r in q_interval_join(spark, sf_dir).collect()
     }
-
-    stream = events_stream_reader(spark, events_dir)
-    p = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "30 minutes")
+    joined = interval_join_pairs(
+        events_stream_reader(spark, events_dir),
+        events_stream_reader(spark, events_dir),
     )
-    c = (
-        events_stream_reader(spark, events_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "30 minutes")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES")),
-    ).select("user_id", "purchase_id", "click_id")
-
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_join")
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt-ssj-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     got = {
-        (r.user_id, r.purchase_id, r.click_id) for r in spark.table("ss_join").collect()
+        (r.user_id, r.purchase_id, r.click_id)
+        for r in drain(joined, events_dir, query_name="ss_join").collect()
     }
     assert got == expected
     assert len(got) > 0
@@ -79,16 +57,8 @@ def test_stream_static_dimension_join(spark, events_dir):
     )
     stream = events_stream_reader(spark, events_dir)
     enriched = stream.join(F.broadcast(users), "user_id").groupBy("tier").count()
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("st_join")
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt-stj-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r.tier: r["count"] for r in spark.table("st_join").collect()}
+    out = drain(enriched, events_dir, query_name="st_join", output_mode="complete")
+    got = {r.tier: r["count"] for r in out.collect()}
     batch = spark.read.parquet(events_dir).join(users, "user_id").groupBy("tier").count()
     want = {r.tier: r["count"] for r in batch.collect()}
     assert got == want
