@@ -162,8 +162,12 @@ SUITES: dict[str, list[str]] = {
         "sketch_cms_join_size",
         "events_peak_concurrency",
     ],
-    # plans/analytics_ops.py (Welch, Mann-Whitney and CUPED now in
-    # plans/experiments.py)
+    # by family home: BFS and LPA in plans/graph_queries.py; Welch,
+    # Mann-Whitney and CUPED in plans/experiments.py; the events_*
+    # readouts in plans/events_queries.py; OLS, Gini and Pareto in
+    # plans/statistics.py; BM25 and BPE pairs in plans/content.py; HLL
+    # set ops and basket pairs in plans/patterns.py; the image pHash in
+    # plans/multimodal_queries.py
     "r6b_ops": [
         "sketch_hll_set_ops",
         "graph_bfs_distances",
@@ -184,8 +188,9 @@ SUITES: dict[str, list[str]] = {
         "events_seasonality_profile",
         "events_forecast_eval",
     ],
-    # plans/analytics_ops2.py, tpch_q3/q5 (plans/tpch.py) and two sink
-    # round trips (plans/patterns.py)
+    # tpch_q3/q5 (plans/tpch.py); the skyline and two sink round trips
+    # (plans/patterns.py); PCA and the weighted median
+    # (plans/statistics.py); the events_* series (plans/events_queries.py)
     "r6c_ops": [
         "tpch_q3_style",
         "tpch_q5_style",

@@ -443,7 +443,7 @@ def triangle_counts(
     Pass ``oriented=True`` when ``edges`` already came from
     ``orient_by_degree`` (e.g. the caller persisted the oriented set so
     the three wedge scans share one orientation pass — the
-    plans/patterns.py:q_graph_triangles pattern)."""
+    plans/graph_queries.py:q_graph_triangles pattern)."""
     o = edges.select(F.col(u).alias("s"), F.col(v).alias("t")) if oriented \
         else orient_by_degree(edges, u=u, v=v)
     e1 = o.select(F.col("s").alias("a"), F.col("t").alias("b"))

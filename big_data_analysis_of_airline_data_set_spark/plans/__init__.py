@@ -28,6 +28,7 @@ _MODULES = [
         "relational2",
         "relational3",
         "patterns",
+        "graph_queries",
         "tpch",
         "statistics",
         "experiments",
@@ -38,8 +39,6 @@ _MODULES = [
         "flights_job",
         "scale_ops",
         "multimodal_queries",
-        "analytics_ops",
-        "analytics_ops2",
     )
 ]
 
@@ -48,6 +47,8 @@ _WINDOW_SIZE = 50
 
 # Names whose plans this round changed; they re-prove first.
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "stats_power_analysis",
+    "events_uplift_by_segment",
     "events_tumbling_stream",
     "events_sliding_stream",
     "events_session_stream",
@@ -95,8 +96,6 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     "spearman_correlation",
     "text_inverted_index",
     "univariate_select_categorical",
-    "univariate_select_continuous",
-    "variance_threshold_features",
 )
 
 

@@ -12,13 +12,16 @@ Oracle design notes:
 - per-label centroids sum coordinates quantized to DECIMAL(18,6);
   k-means assignment and the product-quantization codebook quantize
   to integer micro-units (``operators/vector_quant.py``), so their
-  distances and argmins are exact BIGINTs in both engines.
+  distances and argmins are exact BIGINTs in both engines;
+- BM25 top-k scores with a log-free idf and BPE merge-pair counts
+  replay exactly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..caching import BoundedCache
 from ..dedup.embedding import banded_embedding_near_dup_pairs
@@ -1438,8 +1441,6 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-sized) so its join broadcasts; the corpus-size scalar
     rides in as a broadcast cross join rather than a driver collect.
     At 100 TB the only big shuffles are the two term-keyed aggregates."""
-    from pyspark.sql.window import Window
-
     from ..text.analysis import tokens_col
 
     d = read_testdata_table(spark, sf_dir, "documents")
@@ -2001,6 +2002,235 @@ ORDER BY sub, cid
 """
 
 
+# ------------- BM25-style lexical top-k -------------
+
+_BM25_TERMS = ("merge", "vector", "stream")
+_BM25_TOPK = 20
+
+
+def _bm25_partial(i: int) -> str:
+    # rational ("odds") idf — deliberately log-free: ln() is
+    # libm-specific across engines (the text_token_rarity precedent;
+    # contrast HLL's precomputed ln table, impossible here because df
+    # is data-dependent). Monotone in df like the textbook log idf;
+    # the scoring contract is THIS formula, pinned by the oracle.
+    # k1 = 1.2, b = 0.75 baked as double literals (e-notation parses
+    # as DOUBLE in both engines; bare decimals parse as DECIMAL).
+    return (
+        f"(((nd - df{i}d + 0.5e0) / (df{i}d + 0.5e0))"
+        f" * (tf{i}d * 2.2e0)"
+        f" / (tf{i}d + 1.2e0 * (0.25e0 + 0.75e0 * dld / avgdl)))"
+    )
+
+
+_BM25_SCORE = " + ".join(_bm25_partial(i) for i in (1, 2, 3))
+
+
+def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25-style lexical retrieval: top-20 documents for a fixed
+    3-term query, scored with the Robertson tf saturation
+    (k1 = 1.2, b = 0.75 length normalization) and a RATIONAL idf
+    (see _bm25_partial — log-free so the score replays exactly; the
+    contract is the pinned formula). The score expression TEXT is
+    shared between F.expr and the oracle. Per-term partials are added
+    in fixed query order — never a float SUM whose order the engine
+    chooses.
+
+    Scale shape: the token explode is filtered to the query terms
+    BEFORE the aggregate (predicate on the generator output — only
+    query-term hits shuffle); doc length comes from a non-exploding
+    size(split); the corpus stats and df table are one-row broadcast
+    cross joins. Top-k is a single ordered limit."""
+    from ..text.analysis import token_count, tokens_col
+
+    d = read_testdata_table(spark, sf_dir, "documents")
+    base = d.select(
+        "doc_id", token_count(F.col("text")).alias("dl")
+    ).localCheckpoint(eager=False)
+    toks = d.select(
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
+    ).filter(F.col("term").isin(list(_BM25_TERMS)))
+    qtf = toks.groupBy("doc_id").agg(
+        *[
+            F.sum(F.when(F.col("term") == t, 1).otherwise(0))
+            .cast("long")
+            .alias(f"tf{i}")
+            for i, t in enumerate(_BM25_TERMS, 1)
+        ]
+    ).localCheckpoint(eager=False)
+    stats = base.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("dl").cast("long").alias("total_dl"),
+    )
+    dfs = qtf.agg(
+        *[
+            F.sum((F.col(f"tf{i}") > 0).cast("int"))
+            .cast("long")
+            .alias(f"df{i}")
+            for i in (1, 2, 3)
+        ]
+    )
+    j = (
+        qtf.join(base, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .crossJoin(F.broadcast(dfs))
+        .select(
+            "doc_id",
+            "dl",
+            "tf1",
+            "tf2",
+            "tf3",
+            F.expr("CAST(n_docs AS DOUBLE)").alias("nd"),
+            F.expr(
+                "CAST(total_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)"
+            ).alias("avgdl"),
+            F.expr("CAST(dl AS DOUBLE)").alias("dld"),
+            *[
+                F.expr(f"CAST(df{i} AS DOUBLE)").alias(f"df{i}d")
+                for i in (1, 2, 3)
+            ],
+            *[
+                F.expr(f"CAST(tf{i} AS DOUBLE)").alias(f"tf{i}d")
+                for i in (1, 2, 3)
+            ],
+        )
+    )
+    scored = j.select(
+        "doc_id",
+        "dl",
+        "tf1",
+        "tf2",
+        "tf3",
+        F.round(F.expr(_BM25_SCORE), 6).alias("score"),
+    )
+    # Top-k via orderBy().limit(): compiles to TakeOrderedAndProject —
+    # each partition keeps a local k-heap and the driver merges k-sized
+    # slices, so no single-partition global sort of the scored corpus.
+    # Result-identical to a row_number cutoff under the (score desc,
+    # doc_id asc) TOTAL order.
+    return (
+        scored.orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(_BM25_TOPK)
+        .select(
+            "doc_id",
+            "dl",
+            F.col("tf1").alias(f"tf_{_BM25_TERMS[0]}"),
+            F.col("tf2").alias(f"tf_{_BM25_TERMS[1]}"),
+            F.col("tf3").alias(f"tf_{_BM25_TERMS[2]}"),
+            "score",
+        )
+    )
+
+
+def _bm25_oracle() -> str:
+    t1, t2, t3 = _BM25_TERMS
+    in_list = ", ".join(f"'{t}'" for t in _BM25_TERMS)
+    tf_cols = ",\n         ".join(
+        f"CAST(sum(CASE WHEN term = '{t}' THEN 1 ELSE 0 END) AS BIGINT)"
+        f" AS tf{i}"
+        for i, t in enumerate(_BM25_TERMS, 1)
+    )
+    df_cols = ",\n         ".join(
+        f"CAST(sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT)"
+        f" AS df{i}"
+        for i in (1, 2, 3)
+    )
+    return rf"""
+WITH base AS (
+  SELECT doc_id,
+         CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
+           AS dl
+  FROM documents
+), tok AS (
+  SELECT doc_id,
+         unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+  FROM documents
+), qtf AS (
+  SELECT doc_id,
+         {tf_cols}
+  FROM tok WHERE term IN ({in_list}) GROUP BY doc_id
+), stats AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(sum(dl) AS BIGINT) AS total_dl
+  FROM base
+), dfs AS (
+  SELECT {df_cols}
+  FROM qtf
+), j AS (
+  SELECT q.doc_id, b.dl, q.tf1, q.tf2, q.tf3,
+         CAST(n_docs AS DOUBLE) AS nd,
+         CAST(total_dl AS DOUBLE) / CAST(n_docs AS DOUBLE) AS avgdl,
+         CAST(b.dl AS DOUBLE) AS dld,
+         CAST(df1 AS DOUBLE) AS df1d,
+         CAST(df2 AS DOUBLE) AS df2d,
+         CAST(df3 AS DOUBLE) AS df3d,
+         CAST(q.tf1 AS DOUBLE) AS tf1d,
+         CAST(q.tf2 AS DOUBLE) AS tf2d,
+         CAST(q.tf3 AS DOUBLE) AS tf3d
+  FROM qtf q JOIN base b USING (doc_id)
+  CROSS JOIN stats CROSS JOIN dfs
+), scored AS (
+  SELECT doc_id, dl, tf1, tf2, tf3,
+         round({_BM25_SCORE}, 6) AS score
+  FROM j
+)
+SELECT doc_id, dl, tf1 AS tf_{t1}, tf2 AS tf_{t2}, tf3 AS tf_{t3}, score
+FROM (
+  SELECT *, row_number() OVER (ORDER BY score DESC, doc_id) AS rn
+  FROM scored
+) WHERE rn <= {_BM25_TOPK}
+"""
+
+# ------------- BPE merge-pair statistics -------------
+
+_BPE_PAIR_TOPK = 20
+
+
+def q_text_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Adjacent token-pair frequencies across the corpus — the
+    counting step of ONE BPE/WordPiece merge iteration (the pair a
+    tokenizer trainer would merge next), and the bigram statistic
+    behind collocation mining. posexplode keeps positions; pairs
+    come from a per-document lead() window, counted globally; top-k
+    with a (count desc, t1, t2) total order. Scale: the shuffle
+    carries (pair, count) partial aggregates — vocabulary², not
+    corpus-sized."""
+    from ..text.analysis import tokens_col
+
+    d = read_testdata_table(spark, sf_dir, "documents")
+    tok = d.select(
+        "doc_id",
+        F.posexplode(tokens_col(F.col("text"))).alias("pos", "term"),
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    big = tok.select(
+        F.col("term").alias("t1"),
+        F.lead("term", 1).over(w).alias("t2"),
+    ).filter(F.col("t2").isNotNull())
+    return (
+        big.groupBy("t1", "t2")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
+        .orderBy(F.desc("n_pairs"), F.asc("t1"), F.asc("t2"))
+        .limit(_BPE_PAIR_TOPK)
+    )
+
+
+_BPE_PAIRS_ORACLE = rf"""
+WITH tok AS (
+  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS a
+  FROM documents
+), idx AS (
+  SELECT doc_id, a, unnest(generate_series(1, len(a) - 1)) AS i
+  FROM tok
+), big AS (
+  SELECT a[i] AS t1, a[i + 1] AS t2 FROM idx
+)
+SELECT t1, t2, CAST(count(*) AS BIGINT) AS n_pairs
+FROM big GROUP BY 1, 2
+ORDER BY n_pairs DESC, t1 ASC, t2 ASC
+LIMIT {_BPE_PAIR_TOPK}
+"""
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "text_quality_classifier", q_text_quality_classifier,
@@ -2205,5 +2435,17 @@ QUERIES: list[QuerySpec] = [
         q_embedding_pq_codebook,
         _PQ_ORACLE,
         "Product-quantization assignment, integer-exact argmin",
+    ),
+    QuerySpec(
+        "text_bm25_topk",
+        q_text_bm25_topk,
+        _bm25_oracle(),
+        "BM25-style lexical top-k with rational idf",
+    ),
+    QuerySpec(
+        "text_bpe_merge_pairs",
+        q_text_bpe_merge_pairs,
+        _BPE_PAIRS_ORACLE,
+        "Adjacent token-pair counts (one BPE merge step)",
     ),
 ]

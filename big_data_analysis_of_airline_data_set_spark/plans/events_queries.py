@@ -12,7 +12,10 @@ per-user features (calendar lag, trailing-week RANGE mean, inter-event
 gap statistics) work on exact integer micros and whole days from the
 kit in ``spec.py``. Beside the count funnel sit its time-to-convert
 and 7-day-window variants, the weekly cohort LTV triangle and the
-event-time disorder audit behind a watermark choice.
+event-time disorder audit behind a watermark choice, then RFM,
+diversity, seasonality, stickiness and the readouts on ``spec.py``'s
+daily series (CUSUM, forecast evaluation, Holt, interpolation, the
+clamped balance, drawdown).
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..caching import BoundedCache
+from ..operators.ranking import bucketed_global_rank, ntile_from_rank
 from ..operators.weighted_quantile import weighted_median
 from ..sources.readers import read_testdata_table
 from ..streaming.jobs import drain, events_stream_reader
@@ -33,7 +37,20 @@ from ..streaming.windows import (
     sliding_counts,
     tumbling_counts,
 )
-from .spec import US_DAY, US_HOUR, US_SEC, QuerySpec, day_bucket, day_bucket_sql
+from .spec import (
+    DAILY_COUNTS_SQL,
+    DAILY_SPEND_SQL,
+    SPEND_SQL,
+    US_DAY,
+    US_HOUR,
+    US_SEC,
+    QuerySpec,
+    daily_counts,
+    daily_spend,
+    day_bucket,
+    day_bucket_sql,
+    spend,
+)
 
 
 def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1263,7 +1280,7 @@ def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = ev.select(
         "user_id",
         F.expr(f"(unix_micros(ts) div {US_DAY}) div 7").alias("week"),
-        F.round(F.col("value"), 6).cast("decimal(18,6)").alias("v"),
+        spend().alias("v"),
     )
     first = keyed.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     joined = keyed.join(first, "user_id").withColumn(
@@ -1302,7 +1319,7 @@ _LTV_ORACLE = f"""
 WITH keyed AS (
   SELECT user_id,
          (epoch_us(CAST(ts AS TIMESTAMP)) // {US_DAY}) // 7 AS week,
-         CAST(round(value, 6) AS DECIMAL(18,6)) AS v
+         {SPEND_SQL} AS v
   FROM events
 ), first AS (
   SELECT user_id, min(week) AS cohort_week FROM keyed GROUP BY 1
@@ -1817,11 +1834,7 @@ def q_events_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean divides exact decimal sums, so floats appear only in the
     rounded outputs."""
     e = read_testdata_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "user_id", day_bucket("ts").alias("day")
-    ).agg(
-        F.sum(F.round(F.col("value"), 6).cast("decimal(18,6)")).alias("v")
-    )
+    daily = daily_spend(e)
     row_w = W.partitionBy("user_id").orderBy("day")
     range_w = (
         W.partitionBy("user_id").orderBy("day").rangeBetween(-6, 0)
@@ -1846,10 +1859,7 @@ def q_events_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LAG_ORACLE = f"""
 WITH daily AS (
-  SELECT user_id,
-         {day_bucket_sql('ts')} AS day,
-         SUM(CAST(round(value, 6) AS DECIMAL(18,6))) AS v
-  FROM events GROUP BY 1, 2
+  {DAILY_SPEND_SQL}
 )
 SELECT user_id, day,
        CAST(v AS DOUBLE) AS value,
@@ -1937,6 +1947,862 @@ FROM gaps
 WHERE gap_us IS NOT NULL
 GROUP BY event_type
 ORDER BY event_type
+"""
+
+
+# ------------- RFM quartile segmentation -------------
+
+
+def q_events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM segmentation: per user, recency (whole days since the
+    user's last event, anchored at the global latest event), frequency
+    (event count), monetary (exact decimal value sum), each cut into
+    quartiles with a user_id tie-break so the quartile boundary is
+    total-ordered and engine-identical; rfm_code packs the three
+    digits. Recency arithmetic is integer microseconds
+    (unix_micros // us_per_day — no timezone, no date truncation).
+    Anonymous events (NULL user_id) are excluded in BOTH engines:
+    user-level RFM has no user to attribute them to, a NULL group
+    would silently vanish in the quartile equi-joins, and a NULL
+    tie-break key is itself engine-divergent (Spark windows sort
+    NULLs first, DuckDB last).
+
+    Scale shape: NTILE semantics without ntile's global ordered
+    window. Each of the three dimensions ranks via
+    operators/ranking.py:bucketed_global_rank (range-bucketed prefix
+    counts; row_number confined to one bucket's partition) and the
+    quartile is recomputed from (rank, n) in exact integer arithmetic
+    (ntile_from_rank) — three user-id-keyed joins instead of three
+    single-partition sorts of the user frame. The oracle value-checks
+    ntile(4) itself, proving the decomposition exact."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    per = (
+        e.filter(F.col("user_id").isNotNull())
+        .groupBy("user_id")
+        .agg(
+            F.max(F.unix_micros(F.col("ts"))).alias("last_us"),
+            F.count(F.lit(1)).cast("long").alias("frequency"),
+            F.sum(
+                F.col("value").cast("decimal(18,6)").cast("decimal(38,6)")
+            ).cast("double").alias("monetary"),
+        )
+        # feeds the anchor aggregate AND the final projection — the
+        # double-referenced-frame discipline
+        .localCheckpoint(eager=False)
+    )
+    anchor = per.agg(F.max("last_us").alias("anchor_us"))
+    base = (
+        per.crossJoin(F.broadcast(anchor))
+        .select(
+            "user_id",
+            F.expr(f"(anchor_us - last_us) div {US_DAY}").alias(
+                "recency_days"
+            ),
+            "frequency",
+            "monetary",
+        )
+        # referenced by the count scalar, three rank frames, and the
+        # final projection — one lazy checkpoint or the upstream
+        # aggregate runs five times
+        .localCheckpoint(eager=False)
+    )
+    n_total = base.agg(F.count(F.lit(1)).cast("long").alias("n"))
+
+    def quartile(val: str, out: str, descending: bool) -> DataFrame:
+        ranked = bucketed_global_rank(
+            base.select("user_id", val),
+            val=val,
+            tiebreak="user_id",
+            buckets=64,
+            descending=descending,
+            # base is already lazily checkpointed; a 2-col projection
+            # of it is cheaper to recompute than to re-materialize
+            checkpoint=False,
+        )
+        return ranked.crossJoin(F.broadcast(n_total)).select(
+            "user_id",
+            ntile_from_rank("_rank", "n", 4).alias(out),
+        )
+
+    r = quartile("recency_days", "r_q", descending=False)
+    f_ = quartile("frequency", "f_q", descending=True)
+    m = quartile("monetary", "m_q", descending=True)
+    return (
+        base.join(r, "user_id")
+        .join(f_, "user_id")
+        .join(m, "user_id")
+        .select(
+            "user_id",
+            "recency_days",
+            "frequency",
+            "monetary",
+            "r_q",
+            "f_q",
+            "m_q",
+        )
+        .withColumn(
+            "rfm_code",
+            F.col("r_q") * 100 + F.col("f_q") * 10 + F.col("m_q"),
+        )
+    )
+
+
+_RFM_ORACLE = f"""
+WITH per AS (
+  SELECT user_id,
+         max(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
+         CAST(count(*) AS BIGINT) AS frequency,
+         CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) AS DECIMAL(38,6)))
+              AS DOUBLE) AS monetary
+  FROM events WHERE user_id IS NOT NULL GROUP BY user_id
+), anc AS (SELECT max(last_us) AS anchor_us FROM per),
+base AS (
+  SELECT user_id,
+         CAST((anchor_us - last_us) // {US_DAY} AS BIGINT)
+           AS recency_days,
+         frequency, monetary
+  FROM per CROSS JOIN anc
+), q AS (
+  SELECT user_id, recency_days, frequency, monetary,
+         CAST(ntile(4) OVER (ORDER BY recency_days, user_id) AS BIGINT)
+           AS r_q,
+         CAST(ntile(4) OVER (ORDER BY frequency DESC, user_id) AS BIGINT)
+           AS f_q,
+         CAST(ntile(4) OVER (ORDER BY monetary DESC, user_id) AS BIGINT)
+           AS m_q
+  FROM base
+)
+SELECT user_id, recency_days, frequency, monetary, r_q, f_q, m_q,
+       r_q * 100 + f_q * 10 + m_q AS rfm_code
+FROM q
+"""
+
+
+# ------------- CUSUM change-point -------------
+
+
+def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM change-point per event type over the daily count series:
+    S_t = Σ_{i<=t}(n_i − mean), peak |S_t| marks the day the level
+    shifted — the classic drift localizer (a mean test says THAT
+    volume changed; CUSUM says WHEN). Kept in exact integers by
+    scaling with the day count: S_t·D = D·cum_t − t·T (cum/totals are
+    BIGINT), so the argmax day and peak are hash-exact; only the
+    normalized peak divides. One grouped window pass — at 100 TB the
+    windows stay inside each event type's daily series (days, not
+    events)."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    daily = daily_counts(e)
+    w_p = W.partitionBy("event_type")
+    w_cum = (
+        W.partitionBy("event_type")
+        .orderBy("day")
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    w_idx = W.partitionBy("event_type").orderBy("day")
+    scored = daily.select(
+        "event_type",
+        "day",
+        F.count(F.lit(1)).over(w_p).alias("n_days"),
+        F.sum("n").over(w_p).alias("n_events"),
+        (
+            F.count(F.lit(1)).over(w_p) * F.sum("n").over(w_cum)
+            - F.row_number().over(w_idx) * F.sum("n").over(w_p)
+        ).alias("s"),
+    )
+    w_pick = W.partitionBy("event_type").orderBy(
+        F.desc(F.abs(F.col("s"))), F.asc("day")
+    )
+    return (
+        scored.withColumn("rn", F.row_number().over(w_pick))
+        .filter(F.col("rn") == 1)
+        .select(
+            "event_type",
+            F.col("n_days").cast("long").alias("n_days"),
+            F.col("n_events").cast("long").alias("n_events"),
+            F.expr(
+                f"date_format(timestamp_micros(day * {US_DAY}),"
+                " 'yyyy-MM-dd')"
+            ).alias("change_day"),
+            F.abs(F.col("s")).cast("long").alias("cusum_peak"),
+            F.round(
+                F.abs(F.col("s")).cast("double")
+                / (
+                    F.col("n_days").cast("double")
+                    * F.col("n_events").cast("double")
+                ),
+                6,
+            ).alias("cusum_peak_norm"),
+        )
+    )
+
+
+_CUSUM_ORACLE = f"""
+WITH daily AS (
+  {DAILY_COUNTS_SQL}
+), scored AS (
+  SELECT event_type, day,
+         count(*) OVER (PARTITION BY event_type) AS n_days,
+         sum(n) OVER (PARTITION BY event_type) AS n_events,
+         count(*) OVER (PARTITION BY event_type)
+           * sum(n) OVER (PARTITION BY event_type ORDER BY day
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           - row_number() OVER (PARTITION BY event_type ORDER BY day)
+             * sum(n) OVER (PARTITION BY event_type) AS s
+  FROM daily
+), picked AS (
+  SELECT *, row_number() OVER (PARTITION BY event_type
+                               ORDER BY abs(s) DESC, day ASC) AS rn
+  FROM scored
+)
+SELECT event_type,
+       CAST(n_days AS BIGINT) AS n_days,
+       CAST(n_events AS BIGINT) AS n_events,
+       strftime(make_timestamp(day * {US_DAY}), '%Y-%m-%d') AS change_day,
+       CAST(abs(s) AS BIGINT) AS cusum_peak,
+       round(CAST(abs(s) AS DOUBLE)
+             / (CAST(n_days AS DOUBLE) * CAST(n_events AS DOUBLE)), 6)
+         AS cusum_peak_norm
+FROM picked WHERE rn = 1
+"""
+
+
+# ------------- diversity indices -------------
+
+
+def q_events_diversity_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per event type, the concentration of activity across users:
+    richness (distinct users), the Gini-Simpson index
+    1 − Σp_u² (probability two random events come from different
+    users), and effective user count 1/Σp_u² (Hill number of order
+    2). Both are RATIONAL in the integer counts — Σp² = Σn_u²/N² —
+    so unlike Shannon entropy (libm ln), they replay exactly; the
+    integer moments ship alongside. Shuffle: one (type, user)
+    aggregation, then a type-sized rollup."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    per_user = e.groupBy("event_type", "user_id").agg(
+        F.count(F.lit(1)).alias("n_u")
+    )
+    agg = per_user.groupBy("event_type").agg(
+        F.sum("n_u").cast("long").alias("n_events"),
+        F.count(F.lit(1)).cast("long").alias("n_users"),
+        F.sum(
+            (F.col("n_u") * F.col("n_u")).cast("decimal(38,0)")
+        ).cast("long").alias("sum_sq"),
+    )
+    return agg.select(
+        "event_type",
+        "n_events",
+        "n_users",
+        "sum_sq",
+        F.round(
+            F.expr(
+                "1.0e0 - CAST(sum_sq AS DOUBLE)"
+                " / (CAST(n_events AS DOUBLE) * CAST(n_events AS DOUBLE))"
+            ),
+            6,
+        ).alias("simpson"),
+        F.round(
+            F.expr(
+                "CAST(n_events AS DOUBLE) * CAST(n_events AS DOUBLE)"
+                " / nullif(CAST(sum_sq AS DOUBLE), 0.0)"
+            ),
+            6,
+        ).alias("effective_users"),
+    )
+
+
+_DIVERSITY_ORACLE = """
+WITH per_user AS (
+  SELECT event_type, user_id, count(*) AS n_u
+  FROM events GROUP BY 1, 2
+), agg AS (
+  SELECT event_type,
+         CAST(sum(n_u) AS BIGINT) AS n_events,
+         CAST(count(*) AS BIGINT) AS n_users,
+         CAST(sum(CAST(n_u * n_u AS DECIMAL(38,0))) AS BIGINT) AS sum_sq
+  FROM per_user GROUP BY event_type
+)
+SELECT event_type, n_events, n_users, sum_sq,
+       round(1.0e0 - CAST(sum_sq AS DOUBLE)
+             / (CAST(n_events AS DOUBLE) * CAST(n_events AS DOUBLE)), 6)
+         AS simpson,
+       round(CAST(n_events AS DOUBLE) * CAST(n_events AS DOUBLE)
+             / nullif(CAST(sum_sq AS DOUBLE), 0.0), 6)
+         AS effective_users
+FROM agg
+"""
+
+
+# ------------- calendar seasonality profile -------------
+
+
+def q_events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-of-week × hour activity profile per event type: the peak
+    slot (ties to the earliest slot), slot coverage, and the
+    trough-to-peak ratio — the calendar fingerprint behind staffing/
+    alerting baselines. Day-of-week is pure integer arithmetic from
+    the epoch day ((day + 4) mod 7, 0 = Sunday — 1970-01-01 was a
+    Thursday), hour likewise — no calendar functions, no timezone
+    surface at all."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    slots = e.groupBy(
+        "event_type",
+        F.expr(f"(unix_micros(ts) div {US_DAY} + 4) % 7").alias("dow"),
+        F.expr(f"(unix_micros(ts) div {US_HOUR}) % 24").alias("hour"),
+    ).agg(F.count(F.lit(1)).alias("n"))
+    w_pick = W.partitionBy("event_type").orderBy(
+        F.desc("n"), F.asc("dow"), F.asc("hour")
+    )
+    picked = slots.select(
+        "event_type",
+        "dow",
+        "hour",
+        "n",
+        F.row_number().over(w_pick).alias("rn"),
+        F.count(F.lit(1)).over(W.partitionBy("event_type")).alias("n_slots"),
+        F.min("n").over(W.partitionBy("event_type")).alias("min_n"),
+        F.max("n").over(W.partitionBy("event_type")).alias("max_n"),
+    )
+    return picked.filter(F.col("rn") == 1).select(
+        "event_type",
+        F.col("n_slots").cast("long").alias("n_slots"),
+        F.col("dow").cast("long").alias("peak_dow"),
+        F.col("hour").cast("long").alias("peak_hour"),
+        F.col("n").cast("long").alias("peak_count"),
+        F.round(
+            F.expr("CAST(min_n AS DOUBLE) / CAST(max_n AS DOUBLE)"), 6
+        ).alias("trough_peak_ratio"),
+    )
+
+
+_SEASONALITY_ORACLE = f"""
+WITH slots AS (
+  SELECT event_type,
+         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_DAY} + 4) % 7 AS dow,
+         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_HOUR}) % 24 AS hour,
+         count(*) AS n
+  FROM events GROUP BY 1, 2, 3
+), picked AS (
+  SELECT event_type, dow, hour, n,
+         row_number() OVER (PARTITION BY event_type
+                            ORDER BY n DESC, dow ASC, hour ASC) AS rn,
+         count(*) OVER (PARTITION BY event_type) AS n_slots,
+         min(n) OVER (PARTITION BY event_type) AS min_n,
+         max(n) OVER (PARTITION BY event_type) AS max_n
+  FROM slots
+)
+SELECT event_type,
+       CAST(n_slots AS BIGINT) AS n_slots,
+       CAST(dow AS BIGINT) AS peak_dow,
+       CAST(hour AS BIGINT) AS peak_hour,
+       CAST(n AS BIGINT) AS peak_count,
+       round(CAST(min_n AS DOUBLE) / CAST(max_n AS DOUBLE), 6)
+         AS trough_peak_ratio
+FROM picked WHERE rn = 1
+"""
+
+
+# ------------- seasonal-naive forecast evaluation -------------
+
+
+def q_events_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forecast-accuracy scoreboard per event type: the seasonal-naive
+    forecast (same day last week, lag 7) scored against the
+    random-walk baseline (lag 1) over the daily count series —
+    MAE for both and the MASE-style ratio. The evaluation backbone
+    of any forecasting pipeline, in pure integer error sums (counts
+    are integers; |n_t − n_{t−7}| sums exactly) with two final
+    divisions. Days missing a lag are excluded from that side's MAE
+    and the common MASE window uses days where BOTH lags exist —
+    stated, and replayed by the oracle."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    # the daily series feeds three plan references (base + two lag
+    # sides) — one lazy checkpoint, or the event scan runs three times
+    daily = daily_counts(e).localCheckpoint(eager=False)
+    # calendar lags via self-joins on day-k, not lag() row windows: a
+    # missing day must break the lag chain, and lag(7) over ROWS would
+    # silently reach 8+ calendar days back across gaps
+    lagged = daily.alias("t").join(
+        daily.select(
+            "event_type",
+            (F.col("day") + 1).alias("day"),
+            F.col("n").alias("n_lag1"),
+        ).alias("l1"),
+        ["event_type", "day"],
+        "left",
+    ).join(
+        daily.select(
+            "event_type",
+            (F.col("day") + 7).alias("day"),
+            F.col("n").alias("n_lag7"),
+        ).alias("l7"),
+        ["event_type", "day"],
+        "left",
+    )
+    agg = lagged.groupBy("event_type").agg(
+        F.count(F.when(F.col("n_lag7").isNotNull(), 1)).cast("long").alias(
+            "n_eval7"
+        ),
+        F.sum(
+            F.when(
+                F.col("n_lag7").isNotNull(),
+                F.abs(F.col("n") - F.col("n_lag7")),
+            )
+        ).cast("long").alias("ae7"),
+        F.sum(
+            F.when(
+                F.col("n_lag7").isNotNull() & F.col("n_lag1").isNotNull(),
+                F.abs(F.col("n") - F.col("n_lag7")),
+            )
+        ).cast("long").alias("ae7_both"),
+        F.sum(
+            F.when(
+                F.col("n_lag7").isNotNull() & F.col("n_lag1").isNotNull(),
+                F.abs(F.col("n") - F.col("n_lag1")),
+            )
+        ).cast("long").alias("ae1_both"),
+    )
+    return agg.select(
+        "event_type",
+        "n_eval7",
+        F.round(
+            F.expr(
+                "CAST(ae7 AS DOUBLE) / nullif(CAST(n_eval7 AS DOUBLE), 0.0)"
+            ),
+            6,
+        ).alias("mae_seasonal"),
+        F.round(
+            F.expr(
+                "CAST(ae7_both AS DOUBLE) / nullif(CAST(ae1_both AS DOUBLE),"
+                " 0.0)"
+            ),
+            6,
+        ).alias("mase"),
+    )
+
+
+_FORECAST_ORACLE = f"""
+WITH daily AS (
+  {DAILY_COUNTS_SQL}
+), lagged AS (
+  SELECT t.event_type, t.day, t.n, l1.n AS n_lag1, l7.n AS n_lag7
+  FROM daily t
+  LEFT JOIN daily l1 ON l1.event_type = t.event_type
+                    AND l1.day = t.day - 1
+  LEFT JOIN daily l7 ON l7.event_type = t.event_type
+                    AND l7.day = t.day - 7
+), agg AS (
+  SELECT event_type,
+         CAST(count(CASE WHEN n_lag7 IS NOT NULL THEN 1 END) AS BIGINT)
+           AS n_eval7,
+         CAST(sum(CASE WHEN n_lag7 IS NOT NULL
+                       THEN abs(n - n_lag7) END) AS BIGINT) AS ae7,
+         CAST(sum(CASE WHEN n_lag7 IS NOT NULL AND n_lag1 IS NOT NULL
+                       THEN abs(n - n_lag7) END) AS BIGINT) AS ae7_both,
+         CAST(sum(CASE WHEN n_lag7 IS NOT NULL AND n_lag1 IS NOT NULL
+                       THEN abs(n - n_lag1) END) AS BIGINT) AS ae1_both
+  FROM lagged GROUP BY event_type
+)
+SELECT event_type, n_eval7,
+       round(CAST(ae7 AS DOUBLE) / nullif(CAST(n_eval7 AS DOUBLE), 0.0), 6)
+         AS mae_seasonal,
+       round(CAST(ae7_both AS DOUBLE) / nullif(CAST(ae1_both AS DOUBLE), 0.0),
+             6) AS mase
+FROM agg
+"""
+
+
+# ------------- DAU/WAU stickiness -------------
+
+
+def q_events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly engagement stickiness per event type: average daily
+    distinct users over weekly distinct users (the DAU/MAU shape at
+    week granularity — the events table spans ~30 days).
+
+    Two exact distinct aggregations over one scan — the daily and
+    weekly distinct sets are different cardinalities, so neither can
+    be derived from the other without storing user sets; both
+    aggregations partition by (event_type, week[, day]), so the join
+    that zips them is between two already-reduced frames."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    # keyed feeds two aggregations and is deliberately NOT
+    # checkpointed: it is raw-event-sized, so materializing it costs
+    # more than the second column-pruned scan (the CUPED rationale);
+    # both branches prune to the same three columns at the source
+    keyed = e.select(
+        "event_type",
+        day_bucket("ts").alias("day"),
+        "user_id",
+    ).withColumn("week", F.expr("day div 7"))
+    daily = (
+        keyed.groupBy("event_type", "week", "day")
+        .agg(F.count_distinct("user_id").alias("dau"))
+        .groupBy("event_type", "week")
+        .agg(
+            F.count(F.lit(1)).alias("days_active"),
+            F.sum("dau").alias("dau_total"),
+        )
+    )
+    weekly = keyed.groupBy("event_type", "week").agg(
+        F.count_distinct("user_id").alias("wau")
+    )
+    avg_dau = F.col("dau_total").cast("double") / F.col(
+        "days_active"
+    ).cast("double")
+    return (
+        daily.join(weekly, ["event_type", "week"])
+        .select(
+            "event_type",
+            "week",
+            "days_active",
+            F.round(avg_dau, 6).alias("avg_dau"),
+            "wau",
+            F.round(avg_dau / F.col("wau").cast("double"), 6).alias(
+                "stickiness"
+            ),
+        )
+        .orderBy("event_type", "week")
+    )
+
+
+_STICKINESS_ORACLE = f"""
+WITH keyed AS (
+  SELECT event_type,
+         {day_bucket_sql('ts')} AS day,
+         ({day_bucket_sql('ts')}) // 7 AS week,
+         user_id
+  FROM events
+), daily AS (
+  SELECT event_type, week, day, count(DISTINCT user_id) AS dau
+  FROM keyed GROUP BY 1, 2, 3
+), per_week AS (
+  SELECT event_type, week,
+         CAST(count(*) AS BIGINT) AS days_active,
+         CAST(sum(dau) AS BIGINT) AS dau_total
+  FROM daily GROUP BY 1, 2
+), weekly AS (
+  SELECT event_type, week, count(DISTINCT user_id) AS wau
+  FROM keyed GROUP BY 1, 2
+)
+SELECT p.event_type, p.week, p.days_active,
+       round(CAST(p.dau_total AS DOUBLE) / CAST(p.days_active AS DOUBLE), 6)
+         AS avg_dau,
+       w.wau,
+       round(CAST(p.dau_total AS DOUBLE) / CAST(p.days_active AS DOUBLE)
+             / CAST(w.wau AS DOUBLE), 6) AS stickiness
+FROM per_week p
+JOIN weekly w USING (event_type, week)
+ORDER BY event_type, week
+"""
+
+
+# ------------- calendar linear interpolation -------------
+
+
+def q_events_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user daily spend series with missing calendar days filled
+    by linear interpolation between the nearest observed days (no
+    extrapolation — each user's span runs first-activity to
+    last-activity, so both endpoints are anchors).
+
+    Scale shape: the calendar explode is bounded by users × span-days
+    (the DATE RANGE, not the event count); every window partitions by
+    user_id, so state is one user's series — no global ordering
+    anywhere. Daily sums quantize to DECIMAL(18,6) for
+    order-independent accumulation before the float interpolation."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    # the daily aggregate feeds two plan references (span + calendar
+    # join) — one lazy checkpoint or the raw event scan runs twice
+    daily = (
+        daily_spend(e)
+        .select("user_id", "day", F.col("v").cast("double").alias("v"))
+        .localCheckpoint(eager=False)
+    )
+    span = daily.groupBy("user_id").agg(
+        F.min("day").alias("lo"), F.max("day").alias("hi")
+    )
+    cal = span.select(
+        "user_id", F.explode(F.sequence("lo", "hi")).alias("day")
+    )
+    j = cal.join(daily, ["user_id", "day"], "left")
+    back = (
+        W.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    fwd = (
+        W.partitionBy("user_id")
+        .orderBy("day")
+        .rowsBetween(0, W.unboundedFollowing)
+    )
+    anchor_day = F.when(F.col("v").isNotNull(), F.col("day"))
+    w = (
+        j.withColumn("pv", F.last("v", ignorenulls=True).over(back))
+        .withColumn("pd", F.last(anchor_day, ignorenulls=True).over(back))
+        .withColumn("nv", F.first("v", ignorenulls=True).over(fwd))
+        .withColumn("nd", F.first(anchor_day, ignorenulls=True).over(fwd))
+    )
+    frac = (F.col("day") - F.col("pd")).cast("double") / (
+        F.col("nd") - F.col("pd")
+    ).cast("double")
+    filled = F.when(F.col("v").isNotNull(), F.col("v")).otherwise(
+        F.col("pv") + (F.col("nv") - F.col("pv")) * frac
+    )
+    return w.select(
+        "user_id",
+        "day",
+        F.round(filled, 6).alias("value_filled"),
+        F.col("v").isNull().cast("long").alias("interpolated"),
+    )
+
+
+_INTERP_ORACLE = f"""
+WITH spend AS (
+  {DAILY_SPEND_SQL}
+), daily AS (
+  SELECT user_id, day, CAST(v AS DOUBLE) AS v FROM spend
+), span AS (
+  SELECT user_id, min(day) AS lo, max(day) AS hi FROM daily GROUP BY 1
+), cal AS (
+  SELECT user_id, unnest(generate_series(lo, hi)) AS day FROM span
+), j AS (
+  SELECT c.user_id, c.day, d.v
+  FROM cal c LEFT JOIN daily d ON c.user_id = d.user_id AND c.day = d.day
+), w AS (
+  SELECT user_id, day, v,
+    last_value(v IGNORE NULLS) OVER
+      (PARTITION BY user_id ORDER BY day
+       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
+    last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS) OVER
+      (PARTITION BY user_id ORDER BY day
+       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
+    first_value(v IGNORE NULLS) OVER
+      (PARTITION BY user_id ORDER BY day
+       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
+    first_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS) OVER
+      (PARTITION BY user_id ORDER BY day
+       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
+  FROM j
+)
+SELECT user_id, day,
+       round(CASE WHEN v IS NOT NULL THEN v
+                  ELSE pv + (nv - pv)
+                       * (CAST(day - pd AS DOUBLE)
+                          / CAST(nd - pd AS DOUBLE)) END, 6)
+         AS value_filled,
+       CAST(v IS NULL AS BIGINT) AS interpolated
+FROM w
+"""
+
+
+# ------------- sequential-fold family -------------
+#
+# Linear recurrences (clamped balances, exponential smoothing) are NOT
+# window-expressible — each output depends on the previous OUTPUT, not
+# the previous input. The scalable Spark shape for per-key bounded
+# series: collect the key's day-ordered series into an array (bounded
+# by the DATE RANGE, not event count) and run the recurrence as a
+# higher-order-function fold inside codegen — no Python UDF, no
+# driver loop. The DuckDB oracle replays the identical fold via
+# list_reduce with the seed prepended (DuckDB 1.0 list_reduce takes no
+# initial accumulator), so both engines execute the same IEEE op
+# sequence in the same order.
+
+_BURN = 100.0  # daily spend threshold: ~the median per-user daily sum
+
+
+def q_events_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user wallet simulation: daily net delta (spend − burn)
+    folded in day order with the balance clamped at zero — the
+    inventory/credit recurrence b_t = max(0, b_{t-1} + d_t), with the
+    running peak carried in the same fold."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    daily = daily_spend(e).select(
+        "user_id", "day", (F.col("v").cast("double") - F.lit(_BURN)).alias("dv")
+    )
+    series = daily.groupBy("user_id").agg(
+        F.sort_array(F.collect_list(F.struct("day", "dv"))).alias("xs")
+    )
+    folded = series.select(
+        "user_id",
+        F.size("xs").alias("n_days").cast("long"),
+        F.aggregate(
+            "xs",
+            F.struct(
+                F.lit(0.0).alias("bal"), F.lit(0.0).alias("peak")
+            ),
+            lambda acc, x: F.struct(
+                F.greatest(acc.bal + x.dv, F.lit(0.0)).alias("bal"),
+                F.greatest(
+                    acc.peak, F.greatest(acc.bal + x.dv, F.lit(0.0))
+                ).alias("peak"),
+            ),
+        ).alias("st"),
+    )
+    return folded.select(
+        "user_id",
+        "n_days",
+        F.round(F.col("st.bal"), 6).alias("final_balance"),
+        F.round(F.col("st.peak"), 6).alias("peak_balance"),
+    )
+
+
+_CLAMPED_ORACLE = f"""
+WITH spend AS (
+  {DAILY_SPEND_SQL}
+), daily AS (
+  SELECT user_id, day, CAST(v AS DOUBLE) - {_BURN!r} AS dv FROM spend
+), series AS (
+  SELECT user_id,
+         CAST(count(*) AS BIGINT) AS n_days,
+         list_prepend([0.0::DOUBLE, 0.0::DOUBLE],
+                      list([dv] ORDER BY day)) AS xs
+  FROM daily GROUP BY user_id
+), folded AS (
+  SELECT user_id, n_days,
+         list_reduce(xs, (a, x) ->
+           [greatest(a[1] + x[1], 0.0),
+            greatest(a[2], greatest(a[1] + x[1], 0.0))]) AS st
+  FROM series
+)
+SELECT user_id, n_days,
+       round(st[1], 6) AS final_balance,
+       round(st[2], 6) AS peak_balance
+FROM folded
+"""
+
+
+def q_events_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holt double-exponential smoothing over each event type's daily
+    count series (alpha=0.5, beta=0.3; level seeded at the first
+    observation, trend at zero): final level/trend state plus the
+    one-step-ahead forecast. Same fold shape as the clamped balance —
+    the two-component state rides a struct accumulator."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    daily = daily_counts(e).select(
+        "event_type", "day", F.col("n").cast("double").alias("nd")
+    )
+    series = daily.groupBy("event_type").agg(
+        F.sort_array(F.collect_list(F.struct("day", "nd"))).alias("xs")
+    )
+
+    def _step(acc, x):
+        lnew = F.lit(0.5) * x.nd + F.lit(0.5) * (acc.level + acc.trend)
+        return F.struct(
+            lnew.alias("level"),
+            (F.lit(0.3) * (lnew - acc.level) + F.lit(0.7) * acc.trend).alias(
+                "trend"
+            ),
+        )
+
+    folded = series.select(
+        "event_type",
+        F.size("xs").cast("long").alias("n_days"),
+        F.aggregate(
+            F.slice(
+                "xs", 2, F.greatest(F.size("xs") - 1, F.lit(0))
+            ),
+            F.struct(
+                F.element_at("xs", 1).nd.alias("level"),
+                F.lit(0.0).alias("trend"),
+            ),
+            _step,
+        ).alias("st"),
+    )
+    return folded.select(
+        "event_type",
+        "n_days",
+        F.round(F.col("st.level"), 6).alias("level"),
+        F.round(F.col("st.trend"), 6).alias("trend"),
+        F.round(F.col("st.level") + F.col("st.trend"), 6).alias(
+            "forecast_next"
+        ),
+    ).orderBy("event_type")
+
+
+_HOLT_ORACLE = f"""
+WITH counts AS (
+  {DAILY_COUNTS_SQL}
+), daily AS (
+  SELECT event_type, day, CAST(n AS DOUBLE) AS nd FROM counts
+), series AS (
+  SELECT event_type,
+         CAST(count(*) AS BIGINT) AS n_days,
+         list([nd] ORDER BY day) AS xs
+  FROM daily GROUP BY event_type
+), folded AS (
+  SELECT event_type, n_days,
+         list_reduce(
+           list_prepend([xs[1][1], 0.0::DOUBLE], xs[2:]),
+           (a, x) ->
+             [0.5 * x[1] + 0.5 * (a[1] + a[2]),
+              0.3 * ((0.5 * x[1] + 0.5 * (a[1] + a[2])) - a[1])
+                + 0.7 * a[2]]) AS st
+  FROM series
+)
+SELECT event_type, n_days,
+       round(st[1], 6) AS level,
+       round(st[2], 6) AS trend,
+       round(st[1] + st[2], 6) AS forecast_next
+FROM folded
+ORDER BY event_type
+"""
+
+
+def q_events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user running-peak drawdown over the cumulative daily net
+    series — unlike the clamp/Holt recurrences this IS
+    window-expressible (prefix sum, prefix max, max gap), so it stays
+    in ordered windows partitioned by user: state is one user's
+    bounded series. All prefix sums accumulate in DECIMAL (a prefix in
+    day order is a fixed sequence, but decimal keeps it exact and
+    engine-identical); floats appear only at the rounded output."""
+    e = read_testdata_table(spark, sf_dir, "events")
+    daily = daily_spend(e).select(
+        "user_id", "day", (F.col("v") - F.lit(_BURN).cast("decimal(18,6)")).alias("dv")
+    )
+    w = W.partitionBy("user_id").orderBy("day").rowsBetween(
+        W.unboundedPreceding, 0
+    )
+    cum = (
+        daily.withColumn("cum", F.sum("dv").over(w))
+        .withColumn("peak", F.max(F.col("cum")).over(w))
+        .withColumn("dd", F.col("peak") - F.col("cum"))
+    )
+    return cum.groupBy("user_id").agg(
+        F.round(F.max_by("cum", "day").cast("double"), 6).alias(
+            "final_balance"
+        ),
+        F.round(F.max("peak").cast("double"), 6).alias("peak_balance"),
+        F.round(F.max("dd").cast("double"), 6).alias("max_drawdown"),
+    )
+
+
+_DRAWDOWN_ORACLE = f"""
+WITH spend AS (
+  {DAILY_SPEND_SQL}
+), daily AS (
+  SELECT user_id, day, v - CAST({_BURN!r} AS DECIMAL(18,6)) AS dv FROM spend
+), c AS (
+  SELECT user_id, day,
+         SUM(dv) OVER (PARTITION BY user_id ORDER BY day
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cum
+  FROM daily
+), p AS (
+  SELECT user_id, day, cum,
+         MAX(cum) OVER (PARTITION BY user_id ORDER BY day
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS peak
+  FROM c
+)
+SELECT user_id,
+       round(CAST(max_by(cum, day) AS DOUBLE), 6) AS final_balance,
+       round(CAST(max(peak) AS DOUBLE), 6) AS peak_balance,
+       round(CAST(max(peak - cum) AS DOUBLE), 6) AS max_drawdown
+FROM p GROUP BY user_id
 """
 
 
@@ -2142,5 +3008,65 @@ QUERIES: list[QuerySpec] = [
         q_events_gap_stats,
         _GAP_ORACLE,
         "Exact inter-arrival gap statistics per event type",
+    ),
+    QuerySpec(
+        "events_rfm_segments",
+        q_events_rfm_segments,
+        _RFM_ORACLE,
+        "RFM quartile segmentation with engine-identical ntile cuts",
+    ),
+    QuerySpec(
+        "events_cusum_changepoint",
+        q_events_cusum_changepoint,
+        _CUSUM_ORACLE,
+        "Integer-exact CUSUM change-point per event type",
+    ),
+    QuerySpec(
+        "events_diversity_index",
+        q_events_diversity_index,
+        _DIVERSITY_ORACLE,
+        "Gini-Simpson diversity and effective users per type",
+    ),
+    QuerySpec(
+        "events_seasonality_profile",
+        q_events_seasonality_profile,
+        _SEASONALITY_ORACLE,
+        "Integer dow x hour peak/trough calendar profile",
+    ),
+    QuerySpec(
+        "events_forecast_eval",
+        q_events_forecast_eval,
+        _FORECAST_ORACLE,
+        "Seasonal-naive vs random-walk MAE/MASE scoreboard",
+    ),
+    QuerySpec(
+        "events_stickiness",
+        q_events_stickiness,
+        _STICKINESS_ORACLE,
+        "Weekly DAU/WAU stickiness per event type",
+    ),
+    QuerySpec(
+        "events_linear_interpolation",
+        q_events_linear_interpolation,
+        _INTERP_ORACLE,
+        "Per-user calendar gap-fill with linear interpolation",
+    ),
+    QuerySpec(
+        "events_clamped_balance",
+        q_events_clamped_balance,
+        _CLAMPED_ORACLE,
+        "Zero-clamped wallet recurrence via codegen array fold",
+    ),
+    QuerySpec(
+        "events_holt_smoothing",
+        q_events_holt_smoothing,
+        _HOLT_ORACLE,
+        "Holt double-exponential smoothing as a struct-state fold",
+    ),
+    QuerySpec(
+        "events_max_drawdown",
+        q_events_max_drawdown,
+        _DRAWDOWN_ORACLE,
+        "Running-peak drawdown from decimal-exact prefix windows",
     ),
 ]

@@ -47,7 +47,7 @@ from ..stats.regression import (
     mann_whitney_u,
     welch_t_test,
 )
-from .spec import QuerySpec, day_bucket, day_bucket_sql
+from .spec import SPEND_SQL, QuerySpec, day_bucket, day_bucket_sql, spend
 
 # ------------- the kit -------------
 
@@ -85,9 +85,9 @@ def widened_product_sql(a: str, b: str) -> str:
     return f"CAST({a} AS DECIMAL(19,6)) * CAST({b} AS DECIMAL(19,6))"
 
 
-USER_SPEND_SQL = """per_user AS (
+USER_SPEND_SQL = f"""per_user AS (
   SELECT event_type, user_id,
-         SUM(CAST(round(value, 6) AS DECIMAL(18,6))) AS v
+         SUM({SPEND_SQL}) AS v
   FROM events GROUP BY 1, 2
 )"""
 
@@ -95,18 +95,23 @@ USER_SPEND_SQL = """per_user AS (
 def user_spend(ev: DataFrame, *keys: str) -> DataFrame:
     """Spark twin of ``USER_SPEND_SQL``: spend ``v`` per (keys, user)."""
     return ev.groupBy(*keys, "user_id").agg(
-        F.sum(F.round(F.col("value"), 6).cast("decimal(18,6)")).alias("v")
+        F.sum(spend()).alias("v")
     )
 
 
 def spend_moments(n: str) -> list[Column]:
     """(count as ``n``, Σv as ``sv``, Σv² as ``svv``) over ``user_spend``.
-    Σv needs no widening cast: ``v`` is already a DECIMAL(28,6) sum."""
+    Σv needs no widening cast: ``v`` is already a DECIMAL(28,6) sum. Σv²
+    squares ``v`` as DECIMAL(18,6), an exact DECIMAL(37,12) product;
+    Spark types the DECIMAL(28,6) square as DECIMAL(38,6) and would
+    round every square to 6 decimals. Precondition: each user's spend
+    fits DECIMAL(18,6) (|v| < 10^12)."""
     v = F.col("v")
+    v18 = v.cast("decimal(18,6)")
     return [
         F.count(F.lit(1)).alias(n),
         F.sum(v).cast("double").alias("sv"),
-        exact_sum(v * v, 12).alias("svv"),
+        exact_sum(v18 * v18, 12).alias("svv"),
     ]
 
 

@@ -2,9 +2,10 @@
 own surface: as-of, range (bucketized), point-in-time and bucketed
 co-located joins; exact and sketched quantiles; unpivot; SCD2 upsert,
 snapshot diff and incremental merges; sink round trips; Z-order cells;
-mergeable sketches (KMV, HLL, HDR, count-min); and the PageRank,
-k-core, triangle, hierarchy and degree-histogram graph queries. The TPC-H shapes live in
-``tpch.py``.
+the 2-D Pareto skyline and market-basket pairs; and mergeable
+sketches (KMV, HLL and its pairwise set algebra, HDR, count-min). The
+TPC-H shapes live in ``tpch.py``, the graph queries in
+``graph_queries.py``.
 """
 
 from __future__ import annotations
@@ -12,16 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import BoundedCache
 from ..operators.asof import as_of_join
-from ..operators.graph import (
-    _PR_CHECK_EVERY,
-    _PR_DP,
-    _sized,
-    pagerank,
-    pagerank_converged,
-)
-from ..session import rows_width, session_width
+from ..operators.skyline import skyline_2d
 from ..sources.local import local_rows
 from ..sources.readers import read_testdata_table
 from .spec import US_DAY, QuerySpec
@@ -913,39 +906,99 @@ FROM est JOIN ex ON est."group" = ex."group"
 """
 
 
-# ------------------------- hierarchy flatten -------------------------
+# ------------------------- HLL set algebra (pairs) -------------------------
 
 
-def q_graph_hierarchy_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parent-pointer hierarchy flatten by pointer doubling
-    (operators/graph.py:flatten_hierarchy): the supplier keys form a
-    binary-heap tree (parent = (k−1) div 2, root 0 — a synthesized but
-    arbitrarily-deep hierarchy), flattened to (node, root, depth) in
-    O(log depth) self-join rounds. The oracle walks the SAME forest
-    with a recursive CTE — the depth of every node and the single root
-    are value-checked, so a wrong hop-count addition or a pointer that
-    skips a level fails the hash."""
-    from ..operators.graph import flatten_hierarchy
+def q_sketch_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise union / intersection / Jaccard estimates between the
+    order-key sets of lineitem's return classes from ONE pass of
+    m-register sketches (sketches/hll.py:hll_set_ops) — the mergeable
+    set algebra that makes register sketches the segment-overlap wire
+    format at 100 TB (per-pair work is m small rows, data-independent).
+    Exact counts ride along; every estimate is engine-replayed, so the
+    oracle hash-checks the full inclusion-exclusion chain."""
+    from ..sketches.hll import hll_set_ops
 
-    s = read_testdata_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("node"),
-        F.when(
-            F.col("s_suppkey") > 0, F.expr("(s_suppkey - 1) div 2")
-        ).alias("parent"),
+    li = read_testdata_table(spark, sf_dir, "lineitem")
+    return hll_set_ops(
+        li, group_col="l_returnflag", value_col="l_orderkey", p=_HLL_P
     )
-    return flatten_hierarchy(s, max_depth=64)
 
 
-_HIERARCHY_ORACLE = """
-WITH RECURSIVE r(node, root, depth) AS (
-  SELECT s_suppkey, s_suppkey, CAST(0 AS BIGINT)
-  FROM supplier WHERE s_suppkey = 0
-  UNION ALL
-  SELECT s.s_suppkey, r.root, r.depth + 1
-  FROM supplier s JOIN r ON (s.s_suppkey - 1) // 2 = r.node
-  WHERE s.s_suppkey > 0
+def _hll_set_ops_oracle() -> str:
+    q = hll_sql_parts(_HLL_P)
+    est_case = f"""
+         round(CASE WHEN e_raw <= {q["lc_bound"]!r} AND zero_registers > 0
+                    THEN (SELECT lc_est FROM lc WHERE v = zero_registers)
+                    ELSE e_raw END, 6)"""
+    return f"""
+WITH base AS (
+  SELECT l_returnflag AS "group", CAST(l_orderkey AS VARCHAR) AS val
+  FROM lineitem
+), hashed AS (
+  SELECT "group", {q["hash_expr"]} AS h FROM base
+), regs AS (
+  SELECT "group", h // {1 << q["sb"]} AS register,
+         max({q["rank_case"]}) AS max_rho
+  FROM hashed GROUP BY 1, 2
+), pairs AS (
+  SELECT a.g AS group_a, b.g AS group_b
+  FROM (SELECT DISTINCT "group" AS g FROM regs) a
+  JOIN (SELECT DISTINCT "group" AS g FROM regs) b ON a.g < b.g
+), uregs AS (
+  SELECT p.group_a, p.group_b, r.register, max(r.max_rho) AS max_rho
+  FROM pairs p
+  JOIN regs r ON r."group" = p.group_a OR r."group" = p.group_b
+  GROUP BY 1, 2, 3
+), lc(v, lc_est) AS (VALUES
+    {q["lc_rows"]}
+), gagg AS (
+  SELECT "group", CAST({q["m"]} - count(*) AS BIGINT) AS zero_registers,
+         {q["numerator"]!r} / CAST(sum({q["term_sql"]})
+             + CAST({q["m"]} - count(*) AS DECIMAL(38,0))
+               * {q["zero_term"]} AS DOUBLE) AS e_raw
+  FROM regs GROUP BY "group"
+), pagg AS (
+  SELECT group_a, group_b,
+         CAST({q["m"]} - count(*) AS BIGINT) AS zero_registers,
+         {q["numerator"]!r} / CAST(sum({q["term_sql"]})
+             + CAST({q["m"]} - count(*) AS DECIMAL(38,0))
+               * {q["zero_term"]} AS DOUBLE) AS e_raw
+  FROM uregs GROUP BY 1, 2
+), gest AS (
+  SELECT "group",{est_case} AS est
+  FROM gagg
+), pest AS (
+  SELECT group_a, group_b,{est_case} AS est
+  FROM pagg
+), dv AS (
+  SELECT DISTINCT "group" AS g, val FROM base
+), ex AS (
+  SELECT g, CAST(count(*) AS BIGINT) AS exact FROM dv GROUP BY g
+), xin AS (
+  SELECT x.g AS group_a, y.g AS group_b,
+         CAST(count(*) AS BIGINT) AS exact_intersection
+  FROM dv x JOIN dv y ON x.val = y.val AND x.g < y.g
+  GROUP BY 1, 2
 )
-SELECT node, root, depth FROM r
+SELECT p.group_a, p.group_b,
+       CAST({q["m"]} AS BIGINT) AS m_registers,
+       ga.est AS est_a, gb.est AS est_b, pe.est AS est_union,
+       round(ga.est + gb.est - pe.est, 6) AS est_intersection,
+       round((ga.est + gb.est - pe.est) / pe.est, 6) AS est_jaccard,
+       xa.exact AS exact_a, xb.exact AS exact_b,
+       CAST(coalesce(xi.exact_intersection, 0) AS BIGINT)
+         AS exact_intersection,
+       CAST(xa.exact + xb.exact - coalesce(xi.exact_intersection, 0)
+            AS BIGINT) AS exact_union
+FROM pairs p
+JOIN gest ga ON ga."group" = p.group_a
+JOIN gest gb ON gb."group" = p.group_b
+JOIN pest pe ON pe.group_a = p.group_a AND pe.group_b = p.group_b
+JOIN ex xa ON xa.g = p.group_a
+JOIN ex xb ON xb.g = p.group_b
+LEFT JOIN xin xi
+  ON xi.group_a = p.group_a AND xi.group_b = p.group_b
 """
 
 
@@ -1327,465 +1380,139 @@ SELECT p_partkey, p_size, p_retailprice FROM part
 """
 
 
-# ------------------------- iterative graph (PageRank) -------------------------
-
-_PR_ITERS = 5
+# --------------------- 2-D Pareto skyline ---------------------
 
 
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative PageRank (operators/graph.py) over the bipartite
-    part↔supplier graph from lineitem (edges both directions, distinct).
-    Five synchronous rounds as a driver loop of join+aggregate steps;
-    top-20 nodes, deterministic tiebreak. The oracle replays all five
-    iterations as unrolled CTEs with the identical per-iteration
-    DECIMAL-summed rounding, so the whole iterative computation — not
-    just its shape — is value-checked."""
+def q_skyline_dominance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cheapest-and-smallest part frontier: the distinct
+    (p_retailprice, p_size) pairs not dominated under minimize-both
+    (operators/skyline.py:skyline_2d — per-x min, range-bucketed
+    prefix minima; no global-ordering window)."""
+    part = read_testdata_table(spark, sf_dir, "part").select(
+        "p_retailprice", F.col("p_size").cast("long").alias("p_size")
+    )
+    return skyline_2d(part, "p_retailprice", "p_size", buckets=64)
+
+
+_SKYLINE_ORACLE = """
+WITH pairs AS (
+  SELECT p_retailprice, CAST(min(p_size) AS BIGINT) AS p_size
+  FROM part GROUP BY p_retailprice
+)
+SELECT p_retailprice, p_size
+FROM pairs p
+WHERE NOT EXISTS (
+  SELECT 1 FROM pairs q
+  WHERE q.p_retailprice < p.p_retailprice AND q.p_size <= p.p_size
+)
+"""
+
+
+# --------------------- market-basket association rules ---------------------
+
+_BASKET_TOPK = 20
+
+
+def q_basket_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent part pairs within orders with association-rule
+    readouts (support, both confidences, lift) — market-basket
+    analysis, the classic retail workload class. Apriori property as
+    the scale lever: parts appearing in < 2 orders are pruned BEFORE
+    the pair self-join (an item below pair-support cannot form a
+    frequent pair), so the explode is bounded by basket_size² over
+    the pruned baskets, never |parts|². Top-k with a (support desc,
+    pa, pb) total order so the limit boundary is deterministic."""
     li = read_testdata_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # pagerank yields a LAZY persisted chain: this collect is the ONE
-    # action that executes the whole loop. The top-20 rows are a
-    # legitimate driver boundary; the block's exit releases every cache
-    # the loop pinned (even on error).
-    with pagerank(edges, iterations=_PR_ITERS) as ranks:
-        rows = (
-            ranks.select("node", F.round("rank", 9).alias("rank"))
-            .orderBy(F.desc("rank"), F.asc("node"))
-            .limit(20)
-            .collect()
+    # basket table feeds the order count, the item frequencies, AND
+    # both sides of the pair join — compute once
+    b = (
+        li.select(
+            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
         )
-    return local_rows(spark, rows, "node string, rank double")
-
-
-def _pagerank_oracle() -> str:
-    prev = "r0"
-    iter_ctes = []
-    for i in range(1, _PR_ITERS + 1):
-        iter_cte = f"""
-r{i} AS (
-  SELECT n.node,
-         round((1 - 0.85) / (SELECT cnt FROM nn)
-               + 0.85 * CAST(coalesce(s.mass, 0) AS DOUBLE), {_PR_DP}) AS rank
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node,
-           SUM(CAST(round(r.rank / o.deg, {_PR_DP}) AS DECIMAL(30,{_PR_DP}))) AS mass
-    FROM edges e
-    JOIN {prev} r ON e.src = r.node
-    JOIN outdeg o ON e.src = o.src
-    GROUP BY e.dst
-  ) s USING (node)
-)"""
-        iter_ctes.append(iter_cte)
-        prev = f"r{i}"
-    return f"""
-WITH fwd AS (
-  SELECT DISTINCT 'p' || l_partkey AS src, 's' || l_suppkey AS dst FROM lineitem
-), edges AS (
-  SELECT src, dst FROM fwd UNION SELECT dst, src FROM fwd
-), nodes AS (
-  SELECT DISTINCT src AS node FROM edges
-  UNION SELECT DISTINCT dst FROM edges
-), nn AS (SELECT count(*) AS cnt FROM nodes),
-outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-r0 AS (
-  SELECT node, round(1.0 / (SELECT cnt FROM nn), {_PR_DP}) AS rank FROM nodes
-),{",".join(iter_ctes)}
-SELECT node, round(rank, 9) AS rank FROM {prev}
-ORDER BY rank DESC, node ASC LIMIT 20
-"""
-
-
-# ------------------ converged PageRank (dangling + early stop) ------------------
-
-_PRC_MAX, _PRC_TOL = 10, 0.4
-
-
-def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-semantics PageRank (operators/graph.py:pagerank_converged)
-    over the DIRECTED part→supplier graph — suppliers have no
-    out-edges, so every round carries real dangling mass to
-    redistribute (the bipartite double-edged graph of q_graph_pagerank
-    has none) — stopping when the exact DECIMAL L1 delta between
-    consecutive iterations drops under tol at a barrier check.
-
-    tol=0.4 stops the 10-round budget at round 8 on this graph
-    (delta ≈ 1.54·0.81^t, scale-free across sfs), so the early-exit
-    path executes, not just compiles. The oracle unrolls all 10
-    rounds + the barrier delta decisions as CTEs and selects the
-    SAME stopping iteration — the convergence decision itself is
-    value-checked."""
-    li = read_testdata_table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
+        .distinct()
+        .localCheckpoint(eager=False)
     )
-    with pagerank_converged(
-        edges, max_iterations=_PRC_MAX, tol=_PRC_TOL
-    ) as (ranks, stopped):
-        rows = (
-            ranks.select("node", F.round("rank", 9).alias("rank"))
-            .orderBy(F.desc("rank"), F.asc("node"))
-            .limit(20)
-            .collect()
+    norders = b.agg(F.count_distinct("o").cast("long").alias("n_orders"))
+    ifreq = b.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    bk = b.join(
+        ifreq.filter(F.col("cnt") >= 2).select("p"), "p", "left_semi"
+    ).localCheckpoint(eager=False)
+    pairs = (
+        bk.alias("x")
+        .join(
+            bk.alias("y"),
+            (F.col("x.o") == F.col("y.o")) & (F.col("x.p") < F.col("y.p")),
         )
-    return local_rows(
-        spark,
-        [(r.node, r.rank, stopped) for r in rows],
-        "node string, rank double, stopped_at long",
+        .groupBy(F.col("x.p").alias("pa"), F.col("y.p").alias("pb"))
+        .agg(F.count(F.lit(1)).cast("long").alias("support"))
+        .filter(F.col("support") >= 2)
+    )
+    enriched = (
+        pairs.join(
+            ifreq.select(F.col("p").alias("pa"), F.col("cnt").alias("cnt_a")),
+            "pa",
+        )
+        .join(
+            ifreq.select(F.col("p").alias("pb"), F.col("cnt").alias("cnt_b")),
+            "pb",
+        )
+        .crossJoin(F.broadcast(norders))
+    )
+    return (
+        enriched.select(
+            "pa",
+            "pb",
+            "support",
+            "cnt_a",
+            "cnt_b",
+            F.round(
+                F.expr("CAST(support AS DOUBLE) / CAST(cnt_a AS DOUBLE)"), 6
+            ).alias("conf_a_to_b"),
+            F.round(
+                F.expr("CAST(support AS DOUBLE) / CAST(cnt_b AS DOUBLE)"), 6
+            ).alias("conf_b_to_a"),
+            F.round(
+                F.expr(
+                    "CAST(support AS DOUBLE) * CAST(n_orders AS DOUBLE)"
+                    " / (CAST(cnt_a AS DOUBLE) * CAST(cnt_b AS DOUBLE))"
+                ),
+                6,
+            ).alias("lift"),
+        )
+        .orderBy(F.desc("support"), F.asc("pa"), F.asc("pb"))
+        .limit(_BASKET_TOPK)
     )
 
 
-def _pagerank_converged_oracle() -> str:
-    dp = _PR_DP
-    dec = f"DECIMAL(30,{dp})"
-    iter_ctes = []
-    prev = "r0"
-    # AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and
-    # each r_i references r_{i-1} twice (mass + dangling) — inlined,
-    # the expansion is 2^10 scans of lineitem (measured: fd exhaustion);
-    # materialized, each round is computed once, mirroring the Spark
-    # side's per-iteration persist.
-    for i in range(1, _PRC_MAX + 1):
-        iter_ctes.append(f"""
-r{i} AS MATERIALIZED (
-  SELECT n.node, n.deg,
-         round((1 - 0.85) / (SELECT cnt FROM nn)
-               + 0.85 * (CAST(coalesce(s.mass, 0) AS DOUBLE)
-                         + CAST(coalesce(
-                             (SELECT SUM(CAST(rank AS {dec}))
-                              FROM {prev} WHERE deg = 0), 0) AS DOUBLE)
-                           / (SELECT cnt FROM nn)),
-               {dp}) AS rank
-  FROM nd n LEFT JOIN (
-    SELECT e.dst AS node,
-           SUM(CAST(round(r.rank / r.deg, {dp}) AS {dec})) AS mass
-    FROM edges e
-    JOIN {prev} r ON e.src = r.node AND r.deg > 0
-    GROUP BY e.dst
-  ) s USING (node)
-)""")
-        prev = f"r{i}"
-    barriers = [
-        i for i in range(1, _PRC_MAX + 1)
-        if i % _PR_CHECK_EVERY == 0 or i == _PRC_MAX
-    ]
-    deltas = " UNION ALL ".join(
-        f"SELECT {i} AS iter, (SELECT SUM(CAST(round(abs(a.rank - b.rank), {dp})"
-        f" AS {dec})) FROM r{i} a JOIN r{i - 1} b USING (node)) AS delta"
-        for i in barriers
-    )
-    allr = " UNION ALL ".join(
-        f"SELECT {i} AS iter, node, rank FROM r{i}" for i in barriers
-    )
-    return f"""
-WITH edges AS MATERIALIZED (
-  SELECT DISTINCT 'p' || l_partkey AS src, 's' || l_suppkey AS dst FROM lineitem
-), nodes AS (
-  SELECT DISTINCT src AS node FROM edges
-  UNION SELECT DISTINCT dst FROM edges
-), nn AS MATERIALIZED (SELECT count(*) AS cnt FROM nodes),
-outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-nd AS MATERIALIZED (
-  SELECT n.node, coalesce(o.deg, 0) AS deg
-  FROM nodes n LEFT JOIN outdeg o ON n.node = o.src
-),
-r0 AS MATERIALIZED (
-  SELECT node, deg, round(1.0 / (SELECT cnt FROM nn), {dp}) AS rank FROM nd
-),{",".join(iter_ctes)},
-deltas AS ({deltas}),
-stop AS (
-  SELECT coalesce(min(iter) FILTER (WHERE delta < {_PRC_TOL}), {_PRC_MAX}) AS si
-  FROM deltas
-),
-allr AS ({allr})
-SELECT node, round(rank, 9) AS rank,
-       (SELECT CAST(si AS BIGINT) FROM stop) AS stopped_at
-FROM allr WHERE iter = (SELECT si FROM stop)
-ORDER BY rank DESC, node ASC LIMIT 20
-"""
-
-
-# ------------------------- triangle counting -------------------------
-
-_TRI_TOPK = 10
-_TRI_PCT = 0.9
-
-
-def _unpersist_quietly(_key, frame: DataFrame) -> None:
-    """BoundedCache eviction hook for persisted frames: an entry can
-    outlive its SparkSession (keys carry the applicationId precisely
-    because sessions cycle), and unpersisting against a stopped
-    session raises — eviction must release best-effort, never fail.
-
-    Plan-identity caveat (the caching.PlanPin postmortem pattern):
-    Spark's CacheManager keys by canonical plan and is shared across
-    sessions of one SparkContext, so evicting an OLD session's entry
-    whose plan matches a LIVE session's freshly-cached twin (same
-    sf_dir, new applicationId) would evict the live entry too. The
-    consequence is a recompute, never wrongness, and the repo's
-    one-session-per-process discipline (session.get_session) makes
-    the overlap unreachable in practice — noted here because the
-    failure would look like an inexplicable cache miss, not an error."""
-    try:
-        frame.unpersist()
-    except Exception:
-        pass
-
-
-# The co-occurrence table is PCT-INDEPENDENT: every co-supplier graph
-# query (triangles at pct 0.9, k-core and LPA at 0.5) consumes the same
-# (u, v, shared-part-count) frame and only the threshold filter
-# differs. Building it is the dominant cost of all three queries
-# (lineitem-wide shuffles), so one persisted copy per (session, sf_dir)
-# serves the whole family; eviction unpersists (round-8 verdict #3).
-_CO_CACHE: BoundedCache[tuple, DataFrame] = BoundedCache(
-    4, on_evict=_unpersist_quietly
-)
-
-
-def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The co-supplier co-occurrence table (u, v, c): supplier pairs
-    (u < v) with the count of distinct parts both supply, persisted
-    and owned by the session cache.
-
-    Build shape — two shuffles, no join: group lineitem's (part,
-    supplier) pairs by part into a sorted DISTINCT supplier array
-    (collect_set dedups map-side), explode each array's ordered pairs
-    (posexplode + slice, no shuffle), then hash-aggregate pair counts.
-    The previous plan (distinct → self-join on part → count) paid
-    three lineitem-scale shuffles and a join for the same rows.
-
-    Skew posture at 100 TB: a part with d distinct suppliers emits
-    d(d-1)/2 pairs from ONE task here — but the self-join plan
-    co-partitions by part too, so the hot part's quadratic pair
-    generation is single-task in BOTH plans; the explosion is inherent
-    to co-occurrence counting, not to this shape. TPC-H bounds d at
-    ~4-8 suppliers/part at every SF. For corpora with unbounded hot
-    keys, cap or salt the per-part array upstream.
-
-    Width: the cache keeps the partition count it is written with, and
-    every query of the family scans it every call, so it is sized from
-    its own row count (``session.rows_width``). The count
-    materializes the session-width build — the one lineitem pass — and
-    when fewer partitions suffice the table is re-cached through a
-    narrow ``coalesce`` of that cache (no shuffle, no lineitem rescan)
-    and the wide copy released. At scale the rows fill the session
-    width and the re-cache is skipped."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CO_CACHE.get(key)
-    if hit is None:
-        li = read_testdata_table(spark, sf_dir, "lineitem")
-        per_part = (
-            li.select(
-                F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
-            )
-            .groupBy("p")
-            .agg(F.sort_array(F.collect_set("s")).alias("ss"))
-        )
-        pairs = per_part.select(
-            F.posexplode("ss").alias("i", "u"), "ss"
-        ).select(
-            "u",
-            F.explode(
-                F.slice(F.col("ss"), F.col("i") + F.lit(2), F.size("ss"))
-            ).alias("v"),
-        )
-        hit = (
-            pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c")).persist()
-        )
-        width = session_width(spark)
-        n = rows_width(width, hit.count())
-        if n < width:
-            wide, hit = hit, hit.coalesce(n).persist()
-            hit.count()
-            wide.unpersist()
-        _CO_CACHE.put(key, hit)
-    return hit
-
-
-def _co_supplier_edges(
-    spark: SparkSession, sf_dir: str, pct: float
-) -> tuple[DataFrame, int]:
-    """Edge set of the strong co-supplier graph, and a bound on its row
-    count: suppliers become neighbors when their shared-part count
-    exceeds the ``pct`` percentile of all co-occurrence counts (a
-    RELATIVE threshold, so the graph stays non-trivial at every scale
-    factor). The bound is the co-occurrence row count, taken in the
-    threshold's own aggregate. The underlying co-occurrence table is
-    session-cached (see _co_supplier_co) — ONE copy of the graph
-    construction serves triangles, k-core, and LPA (round-6 review
-    dedup finding; round-8 verdict made it per-session instead of
-    per-query). Callers must NOT unpersist the result's lineage — the
-    cache owns the persisted co frame."""
-    co = _co_supplier_co(spark, sf_dir)
-    thr, rows = co.agg(
-        F.expr(f"percentile(c, {pct})"), F.count(F.lit(1))
-    ).first()
-    return co.filter(F.col("c") > thr).select("u", "v"), rows
-
-
-def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting (operators/graph.py triangle_counts) over the
-    strong co-supplier graph: suppliers become neighbors when their
-    shared-part count exceeds the 90th percentile of all co-occurrence
-    counts (a RELATIVE threshold, so the graph stays non-trivial at
-    every scale factor). Output: the top-10 vertices by triangle
-    participation plus a TOTAL row. The co-occurrence table lives in
-    the session cache (shared with k-core and LPA); the DEGREE-ORIENTED
-    edge set is persisted for the duration (it is consumed by all
-    three wedge-join scans, so the orientation's degree joins run
-    once), collected, and released — the pagerank
-    result-materialization pattern. The oracle replays the plain
-    id-ordered closure: orientation changes which join finds each
-    triangle, never the triangle set, so results are identical by
-    construction."""
-    from ..operators.graph import orient_by_degree, triangle_counts
-
-    edges, _ = _co_supplier_edges(spark, sf_dir, _TRI_PCT)
-    e = orient_by_degree(edges, u="u", v="v").persist()
-    # per_vertex feeds TWO actions (top-10 collect + total agg) — persist
-    # it too, or the whole wedge closure runs twice (review finding)
-    per_vertex = triangle_counts(e, u="s", v="t", oriented=True).persist()
-    top = (
-        per_vertex.select(
-            F.col("vertex").cast("string").alias("vertex"), "n_triangles"
-        )
-        .orderBy(F.desc("n_triangles"), F.asc("vertex"))
-        .limit(_TRI_TOPK)
-        .collect()
-    )
-    # each triangle contributes 3 vertex participations
-    total = per_vertex.agg((F.sum("n_triangles") / 3).cast("long")).first()[0]
-    per_vertex.unpersist()
-    e.unpersist()
-    rows = [("TOTAL", int(total or 0))] + [(r.vertex, r.n_triangles) for r in top]
-    return local_rows(spark, rows, "vertex string, n_triangles long")
-
-
-_TRIANGLES_ORACLE = f"""
-WITH ps AS (
-  SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
-), co AS (
-  SELECT a.s AS u, b.s AS v, count(*) AS c
-  FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
+_BASKET_ORACLE = f"""
+WITH b AS (
+  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+), norders AS (
+  SELECT CAST(count(DISTINCT o) AS BIGINT) AS n_orders FROM b
+), ifreq AS (
+  SELECT p, CAST(count(*) AS BIGINT) AS cnt FROM b GROUP BY p
+), bk AS (
+  SELECT b.o, b.p FROM b JOIN ifreq USING (p) WHERE ifreq.cnt >= 2
+), pairs AS (
+  SELECT x.p AS pa, y.p AS pb, CAST(count(*) AS BIGINT) AS support
+  FROM bk x JOIN bk y ON x.o = y.o AND x.p < y.p
   GROUP BY 1, 2
-), thr AS (SELECT quantile_cont(c, {_TRI_PCT}) AS t FROM co),
-e AS (SELECT u, v FROM co CROSS JOIN thr WHERE c > t),
-tri AS (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM e e1 JOIN e e2 ON e1.v = e2.u
-  JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-), pv AS (
-  SELECT vertex, CAST(count(*) AS BIGINT) AS n_triangles
-  FROM (SELECT a AS vertex FROM tri UNION ALL
-        SELECT b FROM tri UNION ALL SELECT c FROM tri)
-  GROUP BY vertex
+  HAVING count(*) >= 2
 )
-SELECT 'TOTAL' AS vertex,
-       CAST(coalesce((SELECT count(*) FROM tri), 0) AS BIGINT) AS n_triangles
-UNION ALL
-SELECT * FROM (
-  SELECT CAST(vertex AS VARCHAR), n_triangles FROM pv
-  ORDER BY n_triangles DESC, CAST(vertex AS VARCHAR) ASC LIMIT {_TRI_TOPK}
-)
-"""
-
-
-# ------------------------- k-core decomposition -------------------------
-
-_KCORE_PCT = 0.5       # co-occurrence threshold percentile (denser than
-                       # the triangles graph so peeling has structure)
-_KCORE_FRAC = 0.6      # k = floor(0.6 * median degree) + 1 — below the
-                       # median, so near-regular graphs keep a core
-                       # (k above the median cascades to empty on them)
-_KCORE_ROUNDS = 12     # observed peeling depth <= 4 at every sf
-
-
-def q_graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition (operators/graph.py:k_core) of the
-    co-supplier graph at the 50th-percentile co-occurrence threshold,
-    with k derived from the DATA — floor(0.6 × median symmetric
-    degree) + 1 — so the core is non-trivial and the peeling
-    converges at every scale factor (relative thresholds, the
-    q_graph_triangles lesson). Output: every core vertex with its
-    in-core degree. The oracle unrolls 12 peel rounds as MATERIALIZED
-    CTEs (each round references the previous survivor set TWICE — the
-    2^N inlining trap) and reads the fixpoint round; the Spark loop
-    stops at the fixpoint count, so convergence itself is
-    value-checked."""
-    from ..operators.graph import k_core
-
-    e, rows = _co_supplier_edges(spark, sf_dir, _KCORE_PCT)
-    # symmetrize ONCE — the median-degree statistic and the peel loop
-    # share it (k_core is told symmetric=True so it skips its own
-    # union+distinct; round-6 review finding). Cached at the width its
-    # rows need (at most 2 per co-occurrence row), not the union's 2 ×
-    # the co table's partitions; k_core sizes its edge table from it.
-    sym = _sized(
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        2 * rows,
-        "u",
-    ).persist()
-    med = (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.expr("percentile(n, 0.5)"))
-        .first()[0]
-    )
-    import math
-
-    k = int(math.floor(_KCORE_FRAC * float(med))) + 1
-    try:
-        core = k_core(
-            sym, k=k, u="u", v="v", max_rounds=_KCORE_ROUNDS, symmetric=True
-        )
-    finally:
-        # release even when k_core raises (exhausted round budget) —
-        # the pagerank error-path discipline (the co table
-        # underneath belongs to the session cache, not this query)
-        sym.unpersist()
-    # k_core's result is an EAGER localCheckpoint — already materialized
-    # and decoupled from co/e, so the inputs are safe to release above
-    # and the frame returns lazily (no driver round-trip of the core)
-    return core.select(
-        F.col("vertex").cast("long").alias("vertex"),
-        F.col("core_degree").cast("long").alias("core_degree"),
-    )
-
-
-def _k_core_oracle() -> str:
-    prev = "a0"
-    rounds = []
-    for i in range(1, _KCORE_ROUNDS + 1):
-        rounds.append(f"""
-a{i} AS MATERIALIZED (
-  SELECT s.s AS vertex, CAST(count(*) AS BIGINT) AS core_degree
-  FROM sym s
-  JOIN {prev} x ON s.s = x.vertex
-  JOIN {prev} y ON s.d = y.vertex
-  GROUP BY s.s
-  HAVING count(*) >= (SELECT k FROM kv)
-)""")
-        prev = f"a{i}"
-    return f"""
-WITH ps AS (
-  SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem
-), co AS (
-  SELECT a.s AS u, b.s AS v, count(*) AS c
-  FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s
-  GROUP BY 1, 2
-), thr AS (SELECT quantile_cont(c, {_KCORE_PCT}) AS t FROM co),
-e AS MATERIALIZED (SELECT u, v FROM co CROSS JOIN thr WHERE c > t),
-sym AS MATERIALIZED (SELECT u AS s, v AS d FROM e UNION SELECT v, u FROM e),
-kv AS MATERIALIZED (
-  SELECT CAST(floor({_KCORE_FRAC} * quantile_cont(n, 0.5)) + 1 AS BIGINT) AS k
-  FROM (SELECT s, count(*) AS n FROM sym GROUP BY s)
-),
-a0 AS MATERIALIZED (SELECT DISTINCT s AS vertex FROM sym),{",".join(rounds)}
-SELECT vertex, core_degree FROM {prev}
+SELECT pa, pb, support, a.cnt AS cnt_a, bb.cnt AS cnt_b,
+       round(CAST(support AS DOUBLE) / CAST(a.cnt AS DOUBLE), 6)
+         AS conf_a_to_b,
+       round(CAST(support AS DOUBLE) / CAST(bb.cnt AS DOUBLE), 6)
+         AS conf_b_to_a,
+       round(CAST(support AS DOUBLE) * CAST(n_orders AS DOUBLE)
+             / (CAST(a.cnt AS DOUBLE) * CAST(bb.cnt AS DOUBLE)), 6)
+         AS lift
+FROM pairs
+JOIN ifreq a ON a.p = pa
+JOIN ifreq bb ON bb.p = pb
+CROSS JOIN norders
+ORDER BY support DESC, pa ASC, pb ASC
+LIMIT {_BASKET_TOPK}
 """
 
 
@@ -1858,65 +1585,11 @@ FROM bucketed GROUP BY 1
 """
 
 
-# ------------- bit-length-binned degree distribution -------------
-
-
-def q_graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log₂-binned degree distribution of the customer→order
-    bipartite graph (the first diagnostic before choosing a skew
-    strategy: how heavy is the degree tail?).
-
-    Engine parity: the bin is the integer BIT LENGTH of the degree —
-    LENGTH(BIN(deg)) is the engine-neutral floor(log₂)+1 (both
-    engines print minimal binary strings; float log2 misbins at
-    power-of-two boundaries, see the repo gotcha). All counts
-    exact."""
-    orders = read_testdata_table(spark, sf_dir, "orders")
-    deg = orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    return (
-        deg.groupBy(
-            F.length(F.bin(F.col("deg"))).cast("long").alias("deg_bits")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.min("deg").alias("min_deg"),
-            F.max("deg").alias("max_deg"),
-            F.sum("deg").alias("total_orders"),
-        )
-        .orderBy("deg_bits")
-    )
-
-
-_DEGREE_ORACLE = """
-SELECT CAST(length(bin(deg)) AS BIGINT) AS deg_bits,
-       count(*) AS n_customers,
-       min(deg) AS min_deg,
-       max(deg) AS max_deg,
-       CAST(SUM(deg) AS BIGINT) AS total_orders
-FROM (SELECT o_custkey, count(*) AS deg FROM orders GROUP BY 1) d
-GROUP BY 1
-ORDER BY 1
-"""
-
-
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "zorder_cells", q_zorder_cells, _zorder_oracle(),
         "Morton bit-interleave 2-D clustering cells, value-checked"
         " bucketize+interleave arithmetic",
-    ),
-    QuerySpec(
-        "graph_pagerank", q_graph_pagerank, _pagerank_oracle(),
-        "iterative PageRank (5 rounds) over part↔supplier graph,"
-        " value-checked via unrolled-CTE replay",
-    ),
-    QuerySpec(
-        "graph_pagerank_converged", q_graph_pagerank_converged,
-        _pagerank_converged_oracle(),
-        "full-semantics PageRank: dangling-mass redistribution + exact"
-        " DECIMAL L1 early stop; the stop decision itself is oracled",
     ),
     QuerySpec(
         "sink_partitioned_roundtrip", q_sink_partitioned_roundtrip,
@@ -1950,22 +1623,6 @@ QUERIES: list[QuerySpec] = [
         "P2: name-predicate column projection (pattern-matched keep list)",
     ),
     QuerySpec(
-        "graph_triangles", q_graph_triangles, _TRIANGLES_ORACLE,
-        "triangle counting via degree-ordered wedge closure over the"
-        " percentile-thresholded co-supplier graph",
-    ),
-    QuerySpec(
-        "graph_k_core", q_graph_k_core, _k_core_oracle(),
-        "iterative k-core peeling (data-derived k) to fixpoint;"
-        " 12-round MATERIALIZED-CTE oracle value-checks convergence",
-    ),
-    QuerySpec(
-        "graph_degree_histogram",
-        q_graph_degree_histogram,
-        _DEGREE_ORACLE,
-        "Bit-length-binned degree distribution (skew diagnostic)",
-    ),
-    QuerySpec(
         "pit_join_versions", q_pit_join, _PIT_ORACLE,
         "point-in-time join to SCD2 versions (feature-store lookup,"
         " hash join + range filter — never a range join)",
@@ -1979,12 +1636,6 @@ QUERIES: list[QuerySpec] = [
         "incremental_mv_merge", q_incremental_mv_merge, _MV_MERGE_ORACLE,
         "algebraic aggregate-state merge (MV maintenance): merged"
         " partials proven == full recompute",
-    ),
-    QuerySpec(
-        "graph_hierarchy_flatten", q_graph_hierarchy_flatten,
-        _HIERARCHY_ORACLE,
-        "pointer-doubling hierarchy flatten (O(log depth) rounds),"
-        " recursive-CTE oracle",
     ),
     QuerySpec(
         "sketch_kmv_join_cardinality", q_kmv_join_cardinality,
@@ -2066,5 +1717,21 @@ QUERIES: list[QuerySpec] = [
     QuerySpec(
         "scd2_upsert", q_scd2_upsert, _SCD2_ORACLE,
         "SCD2 upsert via semi/anti joins + union",
+    ),
+    QuerySpec(
+        "sketch_hll_set_ops", q_sketch_hll_set_ops, _hll_set_ops_oracle(),
+        "Pairwise HLL union/intersection/Jaccard set algebra",
+    ),
+    QuerySpec(
+        "basket_frequent_pairs",
+        q_basket_frequent_pairs,
+        _BASKET_ORACLE,
+        "Apriori-pruned frequent part pairs with confidence/lift",
+    ),
+    QuerySpec(
+        "skyline_dominance",
+        q_skyline_dominance,
+        _SKYLINE_ORACLE,
+        "Exact 2-D Pareto skyline via range-bucketed prefix minima",
     ),
 ]

@@ -32,6 +32,18 @@ twin, which ``tests/test_spec_kit.py`` runs side by side on edge rows:
   (1969-12-31 12:00 → day 0). The double-division spelling
   ``(unix_micros(c) / US_DAY).cast("long")`` is not a twin: it rounds
   up the last microsecond of 9999-12-31.
+
+The daily-series kit, on ``day_bucket``:
+
+- ``spend()`` / ``SPEND_SQL``: an event's value quantized as
+  ``round(value, 6)`` → DECIMAL(18,6), so its sums are exact.
+- ``daily_spend(events)`` / ``DAILY_SPEND_SQL``: (user_id, day, v),
+  each user's spend summed per epoch day; NULL if all values are NULL.
+- ``daily_counts(events)`` / ``DAILY_COUNTS_SQL``: (event_type, day,
+  n), each type's events per epoch day.
+
+A day without events is a missing row, never a zero. Callers cast or
+shift ``v``/``n`` after the aggregate; Catalyst folds that into it.
 """
 
 from __future__ import annotations
@@ -65,6 +77,40 @@ def day_bucket(col: str) -> Column:
 def day_bucket_sql(col: str) -> str:
     """DuckDB twin of ``day_bucket``."""
     return f"epoch_us(CAST({col} AS TIMESTAMP)) // {US_DAY}"
+
+
+SPEND_SQL = "CAST(round(value, 6) AS DECIMAL(18,6))"
+
+
+def spend() -> Column:
+    """Spark twin of ``SPEND_SQL``: a DECIMAL(18,6) Column."""
+    return F.round(F.col("value"), 6).cast("decimal(18,6)")
+
+
+DAILY_SPEND_SQL = f"""SELECT user_id,
+         {day_bucket_sql('ts')} AS day,
+         SUM({SPEND_SQL}) AS v
+  FROM events GROUP BY 1, 2"""
+
+
+def daily_spend(events: DataFrame) -> DataFrame:
+    """Spark twin of ``DAILY_SPEND_SQL``: (user_id, day, v)."""
+    return events.groupBy("user_id", day_bucket("ts").alias("day")).agg(
+        F.sum(spend()).alias("v")
+    )
+
+
+DAILY_COUNTS_SQL = f"""SELECT event_type,
+         {day_bucket_sql('ts')} AS day,
+         count(*) AS n
+  FROM events GROUP BY 1, 2"""
+
+
+def daily_counts(events: DataFrame) -> DataFrame:
+    """Spark twin of ``DAILY_COUNTS_SQL``: (event_type, day, n)."""
+    return events.groupBy("event_type", day_bucket("ts").alias("day")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
 @dataclass(frozen=True)

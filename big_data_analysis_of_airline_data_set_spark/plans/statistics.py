@@ -9,12 +9,13 @@ making the p-value ordering monotone in the raw statistic, which IS
 SQL-computable: the oracles rank by chi-square statistic / explicit
 ANOVA F instead.
 
-Also here: integer-exact lag-1 autocorrelation of daily event counts,
-a customer-decile gains table on the bucketed global rank
-(``operators/ranking.py``) and the ABC revenue classes on the
-bucketed-prefix cumulative, none of which needs a global window; and
-the feature-hashing collision audit. The A/B readouts live in
-``experiments.py``.
+Also here: integer-exact lag-1 autocorrelation of daily event counts
+(``spec.daily_counts``), a customer-decile gains table on the bucketed
+global rank (``operators/ranking.py``), the ABC revenue classes and
+Pareto coverage on the bucketed-prefix cumulative, none of which needs
+a global window; the feature-hashing collision audit; two-feature
+closed-form OLS, the Gini coefficient, closed-form 2-D PCA and the
+weighted median. The A/B readouts live in ``experiments.py``.
 """
 
 from __future__ import annotations
@@ -28,12 +29,13 @@ from ..sources.local import local_rows
 from ..sources.readers import read_testdata_table
 from ..stats.chisquare import chi_square_test
 from ..stats.correlation import correlation_pairs_df
+from ..stats.regression import OLS2_B0, OLS2_B1, OLS2_B2, OLS2_R2
 from ..stats.selectors import (
     select_univariate_categorical,
     select_univariate_continuous,
 )
 from ..stats.variance import variance_threshold_select
-from .spec import QuerySpec, day_bucket, day_bucket_sql
+from .spec import DAILY_COUNTS_SQL, QuerySpec, daily_counts
 
 _LINEITEM_NUMERIC = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
@@ -739,9 +741,7 @@ def q_stats_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     product, the sqrt, and the final division. Degenerate series
     (zero variance) yield NULL via nullif."""
     e = read_testdata_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", day_bucket("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = daily_counts(e).withColumnRenamed("n", "x")
     w = Window.partitionBy("event_type").orderBy("day")
     pairs = (
         daily.withColumn("nday", F.lead("day").over(w))
@@ -770,11 +770,10 @@ def q_stats_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _AUTOCORR_ORACLE = f"""
-WITH daily AS (
-  SELECT event_type,
-         {day_bucket_sql('ts')} AS day,
-         count(*) AS x
-  FROM events GROUP BY 1, 2
+WITH counts AS (
+  {DAILY_COUNTS_SQL}
+), daily AS (
+  SELECT event_type, day, n AS x FROM counts
 ), pairs AS (
   SELECT event_type, x,
          lead(day) OVER (PARTITION BY event_type ORDER BY day) AS nday,
@@ -1045,6 +1044,384 @@ ORDER BY abc_class
 """
 
 
+# ------------- two-feature OLS -------------
+
+
+def q_stats_multi_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-feature closed-form least squares per return flag
+    (stats/regression.py:group_ols2): extendedprice ~ quantity +
+    discount — multiple regression as ten exact decimal moments and a
+    Cramer 3×3 solve, no iteration. The coefficient and R² expressions
+    are the OLS2_* texts the oracle evaluates verbatim."""
+    from ..stats.regression import group_ols2
+
+    li = read_testdata_table(spark, sf_dir, "lineitem")
+    return group_ols2(
+        li,
+        group_cols=["l_returnflag"],
+        x1_col="l_quantity",
+        x2_col="l_discount",
+        y_col="l_extendedprice",
+    )
+
+
+def _multi_ols_oracle() -> str:
+    d = "DECIMAL(19,2)"
+
+    def dsum(expr: str, scale: int) -> str:
+        return f"CAST(sum(CAST({expr} AS DECIMAL(38,{scale}))) AS DOUBLE)"
+
+    x1 = f"CAST(l_quantity AS {d})"
+    x2 = f"CAST(l_discount AS {d})"
+    y = f"CAST(l_extendedprice AS {d})"
+    return f"""
+WITH m AS (
+  SELECT l_returnflag,
+         CAST(count(*) AS BIGINT) AS n,
+         {dsum(x1, 2)} AS s1,
+         {dsum(x2, 2)} AS s2,
+         {dsum(y, 2)} AS sy,
+         {dsum(f"{x1} * {x1}", 4)} AS s11,
+         {dsum(f"{x2} * {x2}", 4)} AS s22,
+         {dsum(f"{x1} * {x2}", 4)} AS s12,
+         {dsum(f"{x1} * {y}", 4)} AS s1y,
+         {dsum(f"{x2} * {y}", 4)} AS s2y,
+         {dsum(f"{y} * {y}", 4)} AS syy
+  FROM lineitem GROUP BY l_returnflag
+), m2 AS (
+  SELECT l_returnflag, n, CAST(n AS DOUBLE) AS nd,
+         s1, s2, sy, s11, s22, s12, s1y, s2y, syy
+  FROM m
+), solved AS (
+  SELECT l_returnflag, n, nd, sy, s1y, s2y, syy,
+         {OLS2_B0} AS b0,
+         {OLS2_B1} AS b1,
+         {OLS2_B2} AS b2
+  FROM m2
+)
+SELECT l_returnflag, n,
+       round(b0, 6) AS b0, round(b1, 6) AS b1, round(b2, 6) AS b2,
+       round({OLS2_R2}, 6) AS r2
+FROM solved
+"""
+
+
+# ------------- Gini / Lorenz inequality -------------
+
+
+def q_stats_gini_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gini coefficient of order value per priority class — the
+    Lorenz-curve inequality measure (revenue concentration, the
+    80/20 audit). Computed from the rank identity
+    G = 2·Σi·x_(i) / (n·Σx) − (n+1)/n over values totally ordered by
+    (value, order key): the rank-weighted sum and Σx accumulate
+    exactly in DECIMAL (tied values commute — swapping equal x
+    between adjacent ranks leaves Σi·x unchanged, so the tie-break
+    only pins engine determinism), and the final expression is two
+    divisions over exact inputs. One per-group ordering window + one
+    aggregation."""
+    o = read_testdata_table(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_orderpriority").orderBy(
+        F.asc("x"), F.asc("o_orderkey")
+    )
+    ranked = o.select(
+        "o_orderpriority",
+        "o_orderkey",
+        F.col("o_totalprice").cast("decimal(18,2)").alias("x"),
+    ).select(
+        "o_orderpriority",
+        "x",
+        F.row_number().over(w).cast("long").alias("i"),
+    )
+    agg = ranked.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(F.col("x").cast("decimal(38,2)")).cast("double").alias("sx"),
+        F.sum((F.col("i") * F.col("x")).cast("decimal(38,2)"))
+        .cast("double")
+        .alias("sxi"),
+    )
+    return agg.select(
+        "o_orderpriority",
+        "n",
+        F.col("sx").alias("total_value"),
+        F.round(
+            F.expr(
+                "2.0e0 * sxi / nullif(CAST(n AS DOUBLE) * sx, 0.0)"
+                " - (CAST(n AS DOUBLE) + 1.0e0) / CAST(n AS DOUBLE)"
+            ),
+            6,
+        ).alias("gini"),
+    )
+
+
+_GINI_ORACLE = """
+WITH ranked AS (
+  SELECT o_orderpriority,
+         CAST(o_totalprice AS DECIMAL(18,2)) AS x,
+         CAST(row_number() OVER (
+           PARTITION BY o_orderpriority
+           ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) ASC, o_orderkey ASC
+         ) AS BIGINT) AS i
+  FROM orders
+), agg AS (
+  SELECT o_orderpriority,
+         CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(CAST(x AS DECIMAL(38,2))) AS DOUBLE) AS sx,
+         CAST(sum(CAST(i * x AS DECIMAL(38,2))) AS DOUBLE) AS sxi
+  FROM ranked GROUP BY o_orderpriority
+)
+SELECT o_orderpriority, n, sx AS total_value,
+       round(2.0e0 * sxi / nullif(CAST(n AS DOUBLE) * sx, 0.0)
+             - (CAST(n AS DOUBLE) + 1.0e0) / CAST(n AS DOUBLE), 6) AS gini
+FROM agg
+"""
+
+
+# ------------- Pareto / revenue concentration -------------
+
+
+def q_stats_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue-concentration readout over customers (the 80/20
+    audit companion to stats_gini_by_group): how many top customers
+    cover 50% / 90% of revenue, and the revenue share of the top
+    decile. All threshold crossings are EXACT DECIMAL comparisons
+    (2·cumsum ≥ total, 10·cumsum ≥ 9·total — no float thresholds),
+    under a (revenue desc, custkey) total order.
+
+    Scale shape: the descending cumulative is the bucketed-prefix
+    decomposition (fifth instance of operators/range_bucket.py) —
+    per-bucket DECIMAL sums and counts chain on the 64-row bucket
+    frame, and the ordered window runs only WITHIN a bucket, so no
+    whole-customers single-partition sort exists in the plan."""
+    from ..operators.range_bucket import with_range_bucket
+
+    o = read_testdata_table(spark, sf_dir, "orders")
+    # per_cust feeds the bucketing twice (bounds + rows) via the helper
+    per_cust = (
+        o.groupBy(F.col("o_custkey").alias("cust"))
+        .agg(
+            F.sum(
+                F.col("o_totalprice")
+                .cast("decimal(18,2)")
+                .cast("decimal(38,2)")
+            )
+            .cast("decimal(18,2)")
+            .alias("rev")
+        )
+        .localCheckpoint(eager=False)
+    )
+    bucketed = with_range_bucket(per_cust, "rev", 64, descending=True)
+    per_bucket = bucketed.groupBy("_b").agg(
+        F.sum(F.col("rev").cast("decimal(38,2)")).alias("_wb"),
+        F.count(F.lit(1)).alias("_nb"),
+    )
+    off_w = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
+    tot_w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    offsets = per_bucket.select(
+        "_b",
+        F.coalesce(
+            F.sum("_wb").over(off_w), F.lit(0).cast("decimal(38,2)")
+        ).alias("_carry"),
+        F.coalesce(F.sum("_nb").over(off_w), F.lit(0))
+        .cast("long")
+        .alias("_off"),
+        F.sum("_wb").over(tot_w).alias("total"),
+        F.sum("_nb").over(tot_w).cast("long").alias("n_customers"),
+    )
+    in_w = Window.partitionBy("_b").orderBy(F.desc("rev"), F.asc("cust"))
+    in_cum = in_w.rowsBetween(Window.unboundedPreceding, 0)
+    ranked = bucketed.join(F.broadcast(offsets), "_b").select(
+        (F.col("_off") + F.row_number().over(in_w)).cast("long").alias("i"),
+        (
+            F.col("_carry")
+            + F.sum(F.col("rev").cast("decimal(38,2)")).over(in_cum)
+        ).alias("cum"),
+        "total",
+        "n_customers",
+    )
+    return ranked.groupBy().agg(
+        F.max("n_customers").cast("long").alias("n_customers"),
+        F.max("total").cast("double").alias("total_revenue"),
+        F.min(F.when(F.col("cum") * 2 >= F.col("total"), F.col("i")))
+        .cast("long")
+        .alias("n_top_half"),
+        F.min(F.when(F.col("cum") * 10 >= F.col("total") * 9, F.col("i")))
+        .cast("long")
+        .alias("n_top_90pct"),
+        F.round(
+            F.max(
+                F.when(
+                    F.col("i") == F.expr("(n_customers + 9) div 10"),
+                    F.col("cum").cast("double") / F.col("total").cast("double"),
+                )
+            ),
+            6,
+        ).alias("top_decile_share"),
+    )
+
+
+_PARETO_ORACLE = """
+WITH per_cust AS (
+  SELECT o_custkey AS cust,
+         CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2))
+                       AS DECIMAL(38,2))) AS DECIMAL(18,2)) AS rev
+  FROM orders GROUP BY o_custkey
+), ranked AS (
+  SELECT row_number() OVER (ORDER BY rev DESC, cust ASC) AS i,
+         sum(CAST(rev AS DECIMAL(38,2))) OVER (
+           ORDER BY rev DESC, cust ASC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+         sum(CAST(rev AS DECIMAL(38,2))) OVER () AS total,
+         count(*) OVER () AS n_customers
+  FROM per_cust
+)
+SELECT CAST(max(n_customers) AS BIGINT) AS n_customers,
+       CAST(max(total) AS DOUBLE) AS total_revenue,
+       CAST(min(CASE WHEN cum * 2 >= total THEN i END) AS BIGINT)
+         AS n_top_half,
+       CAST(min(CASE WHEN cum * 10 >= total * 9 THEN i END) AS BIGINT)
+         AS n_top_90pct,
+       round(max(CASE WHEN i = (n_customers + 9) // 10
+                      THEN CAST(cum AS DOUBLE) / CAST(total AS DOUBLE)
+                 END), 6) AS top_decile_share
+FROM ranked
+"""
+
+
+# ------------- closed-form 2-D PCA -------------
+
+
+def q_stats_pca_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-return-class principal components of (quantity,
+    extendedprice): sample covariance matrix from one decimal-exact
+    aggregation pass, then the 2×2 eigenvalues in closed form
+    (λ = (tr ± sqrt(tr² − 4·det)) / 2) — no iterative solver, no
+    MLlib fit, and the whole computation is a single map-side-combined
+    groupBy whose output is three rows.
+
+    Engine parity: the five power sums accumulate as DECIMAL products
+    of DECIMAL(18,2) quantizations (order-independent, exact — the
+    internal scaled products stay far under int64, see the
+    DuckDB-fast-path note in the repo gotchas); sums convert exactly
+    to double at tested scales (unscaled values < 2⁵³), and every
+    subsequent op is IEEE-identical division/sqrt, rounded to 6."""
+    li = read_testdata_table(spark, sf_dir, "lineitem")
+    x = F.col("l_quantity").cast("decimal(18,2)")
+    y = F.col("l_extendedprice").cast("decimal(18,2)")
+    agg = li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).cast("double").alias("sx"),
+        F.sum(y).cast("double").alias("sy"),
+        F.sum(x * x).cast("double").alias("sxx"),
+        F.sum(y * y).cast("double").alias("syy"),
+        F.sum(x * y).cast("double").alias("sxy"),
+    )
+    nd = F.col("n").cast("double")
+    var_x = (F.col("sxx") - F.col("sx") * F.col("sx") / nd) / (nd - 1)
+    var_y = (F.col("syy") - F.col("sy") * F.col("sy") / nd) / (nd - 1)
+    cov = (F.col("sxy") - F.col("sx") * F.col("sy") / nd) / (nd - 1)
+    tr = var_x + var_y
+    disc = F.sqrt(
+        (var_x - var_y) * (var_x - var_y) + F.lit(4.0) * cov * cov
+    )
+    l1 = (tr + disc) / F.lit(2.0)
+    l2 = (tr - disc) / F.lit(2.0)
+    return agg.select(
+        "l_returnflag",
+        "n",
+        F.round(var_x, 6).alias("var_x"),
+        F.round(var_y, 6).alias("var_y"),
+        F.round(cov, 6).alias("cov_xy"),
+        F.round(l1, 6).alias("lambda1"),
+        F.round(l2, 6).alias("lambda2"),
+        F.round(l1 / tr, 6).alias("explained_ratio"),
+    ).orderBy("l_returnflag")
+
+
+_PCA_ORACLE = """
+WITH agg AS (
+  SELECT l_returnflag,
+         count(*) AS n,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))
+                  * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
+         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                  * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS syy,
+         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))
+                  * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sxy
+  FROM lineitem GROUP BY l_returnflag
+), m AS (
+  SELECT l_returnflag, n,
+         (sxx - sx * sx / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1)
+           AS var_x,
+         (syy - sy * sy / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1)
+           AS var_y,
+         (sxy - sx * sy / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1)
+           AS cov_xy
+  FROM agg
+), e AS (
+  SELECT *,
+         var_x + var_y AS tr,
+         sqrt((var_x - var_y) * (var_x - var_y)
+              + 4.0 * cov_xy * cov_xy) AS disc
+  FROM m
+)
+SELECT l_returnflag, n,
+       round(var_x, 6) AS var_x,
+       round(var_y, 6) AS var_y,
+       round(cov_xy, 6) AS cov_xy,
+       round((tr + disc) / 2.0, 6) AS lambda1,
+       round((tr - disc) / 2.0, 6) AS lambda2,
+       round(((tr + disc) / 2.0) / tr, 6) AS explained_ratio
+FROM e
+ORDER BY l_returnflag
+"""
+
+
+# ------------- weighted median -------------
+
+
+def q_stats_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantity-weighted median extended price per return class
+    (operators/weighted_quantile.py:weighted_median — range-bucketed
+    prefix weights; the ordered window runs only inside the single
+    crossing bucket, never over a whole group)."""
+    from ..operators.weighted_quantile import weighted_median
+
+    li = read_testdata_table(spark, sf_dir, "lineitem")
+    return weighted_median(
+        li,
+        group="l_returnflag",
+        val="l_extendedprice",
+        weight_expr=F.col("l_quantity").cast("decimal(18,2)"),
+        buckets=128,
+    ).orderBy("l_returnflag")
+
+
+_WMEDIAN_ORACLE = """
+WITH pairs AS (
+  SELECT l_returnflag AS g, l_extendedprice AS v,
+         SUM(CAST(l_quantity AS DECIMAL(18,2))) AS w
+  FROM lineitem GROUP BY 1, 2
+), c AS (
+  SELECT g, v, w,
+         SUM(w) OVER (PARTITION BY g ORDER BY v
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cum,
+         SUM(w) OVER (PARTITION BY g) AS total
+  FROM pairs
+)
+SELECT g AS l_returnflag,
+       min(v) AS weighted_median,
+       CAST(max(total) AS DOUBLE) AS total_weight
+FROM c
+WHERE 2 * cum >= total
+GROUP BY g
+ORDER BY l_returnflag
+"""
+
+
 QUERIES: list[QuerySpec] = [
     QuerySpec(
         "stats_benford_audit", q_benford_audit, _benford_oracle(),
@@ -1159,5 +1536,33 @@ QUERIES: list[QuerySpec] = [
         q_orders_abc_classification,
         _ABC_ORACLE,
         "ABC 80/15/5 revenue classes, bucketed-prefix cumulative",
+    ),
+    QuerySpec(
+        "stats_multi_ols", q_stats_multi_ols, _multi_ols_oracle(),
+        "Two-feature closed-form OLS via Cramer normal equations",
+    ),
+    QuerySpec(
+        "stats_gini_by_group",
+        q_stats_gini_by_group,
+        _GINI_ORACLE,
+        "Exact Gini coefficient of order value per priority",
+    ),
+    QuerySpec(
+        "stats_pareto_coverage",
+        q_stats_pareto_coverage,
+        _PARETO_ORACLE,
+        "Exact-threshold revenue concentration (50/90/top-decile)",
+    ),
+    QuerySpec(
+        "stats_pca_2d",
+        q_stats_pca_2d,
+        _PCA_ORACLE,
+        "Closed-form 2x2 covariance eigendecomposition per group",
+    ),
+    QuerySpec(
+        "stats_weighted_median",
+        q_stats_weighted_median,
+        _WMEDIAN_ORACLE,
+        "Weighted median via range-bucketed prefix weights",
     ),
 ]

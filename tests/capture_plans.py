@@ -17,8 +17,12 @@ local/cached result — those are captured anyway.
 
 Usage:
     python tests/capture_plans.py --out-dir /tmp/plans_a \
-        [--suffix _after] [--sf-dir SF_DIR] name1 name2 ...
+        [--suffix _after] [--sf-dir SF_DIR] [name1 name2 ...]
     diff -r /tmp/plans_a /tmp/plans_b   # empty exactly when plans match
+
+Without query names it captures every registry query in registry
+order, the full-catalog capture a plan-parity check needs on both
+sides.
 """
 
 from __future__ import annotations
@@ -46,9 +50,16 @@ def normalize(plan: str) -> str:
     return _IVF_INDEX_DIR.sub("", _CALL_SITE.sub(r"\1<call site>", plan))
 
 
+def selected(names: list[str]) -> list[str]:
+    """``names``, or every registry query in registry order if none."""
+    from big_data_analysis_of_airline_data_set_spark.plans import all_queries
+
+    return names or list(all_queries())
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("queries", nargs="*")
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--suffix", default="")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -65,7 +76,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ensure_events_landed(spark, args.sf_dir)
     specs = all_queries()
-    for name in args.queries:
+    for name in selected(args.queries):
         df = specs[name].fn(spark, args.sf_dir)
         text = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"

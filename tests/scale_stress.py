@@ -1116,18 +1116,15 @@ def stress_graph_family(spark) -> list[dict]:
         pagerank_converged,
         triangle_counts,
     )
-    from big_data_analysis_of_airline_data_set_spark.plans.analytics_ops import (
-        _trading_edges,
-    )
-    from big_data_analysis_of_airline_data_set_spark.plans.patterns import (
+    from big_data_analysis_of_airline_data_set_spark.plans.graph_queries import (
         _co_supplier_edges,
+        _trading_edges,
+        part_supplier_edges,
     )
 
     def ps_edges():
-        li = spark.read.parquet(os.path.join(SF1, "lineitem.parquet"))
-        return li.select(
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
+        return part_supplier_edges(
+            spark.read.parquet(os.path.join(SF1, "lineitem.parquet"))
         )
 
     def co50():

@@ -1,6 +1,8 @@
-"""Unit + oracle-parity tests for the segment/network analytics wave
-(plans/analytics_ops.py): HLL set algebra, multi-source BFS, Welch's
-t, RFM quartiles, two-feature OLS."""
+"""Unit + oracle-parity tests for HLL set algebra (plans/patterns.py),
+multi-source BFS and label propagation (plans/graph_queries.py),
+Welch's t and Mann-Whitney U (plans/experiments.py), RFM quartiles
+and the event-series readouts (plans/events_queries.py), and
+two-feature OLS, Gini and Pareto coverage (plans/statistics.py)."""
 
 from __future__ import annotations
 
@@ -183,18 +185,7 @@ def test_rfm_quartiles_balanced(spark, sf_dir):
     ).all()
 
 
-# --------------------- wave 2: LPA / CUSUM / BM25 / MW-U ---------------------
-
-WAVE2 = [
-    "events_cusum_changepoint",
-    "text_bm25_topk",
-    "stats_mannwhitney_u",
-]
-
-
-@pytest.mark.parametrize("name", WAVE2)
-def test_wave2_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
+# --------------------- LPA / BM25 / MW-U ---------------------
 
 
 def test_label_propagation_two_cliques(spark):
@@ -295,20 +286,7 @@ def test_bm25_scores_ordered_and_positive(spark, sf_dir):
     ).all()
 
 
-# ----------- wave 3: basket / gini / diversity / bpe-pairs / phash -----------
-
-WAVE3 = [
-    "basket_frequent_pairs",
-    "stats_gini_by_group",
-    "events_diversity_index",
-    "text_bpe_merge_pairs",
-    "multimodal_image_phash",
-]
-
-
-@pytest.mark.parametrize("name", WAVE3)
-def test_wave3_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
+# ----------- basket / gini / diversity / phash -----------
 
 
 def test_basket_rules_internally_consistent(spark, sf_dir):
@@ -326,10 +304,6 @@ def test_basket_rules_internally_consistent(spark, sf_dir):
 
 
 def test_gini_known_values(spark):
-    from big_data_analysis_of_airline_data_set_spark.plans.analytics_ops import (
-        q_stats_gini_by_group,
-    )
-
     # equal values -> Gini 0; one order holding all value among n=4
     # -> G = (n-1)/n - ... exact small case checked against the
     # closed form computed by hand: x = [0,0,0,4]:
@@ -343,7 +317,7 @@ def test_gini_known_values(spark):
         [(1, "Q", 0.0), (2, "Q", 0.0), (3, "Q", 0.0), (4, "Q", 4.0)],
         "o_orderkey long, o_orderpriority string, o_totalprice double",
     )
-    import big_data_analysis_of_airline_data_set_spark.plans.analytics_ops as m
+    import big_data_analysis_of_airline_data_set_spark.plans.statistics as m
     import big_data_analysis_of_airline_data_set_spark.sources.readers as readers
     orig = readers.read_testdata_table
     try:
@@ -365,7 +339,7 @@ def test_gini_known_values(spark):
 
 
 def test_diversity_uniform_vs_concentrated(spark):
-    from big_data_analysis_of_airline_data_set_spark.plans import analytics_ops as m
+    from big_data_analysis_of_airline_data_set_spark.plans import events_queries as m
     import unittest.mock as mock
 
     rows = [(i, "uniform", float(i)) for i in range(10)] + [
@@ -428,19 +402,7 @@ def test_image_dhash_matches_formula_locally(spark):
     assert got[0] == got[256]
 
 
-# ------- wave 4: CUPED / pareto / seasonality / forecast eval -------
-
-WAVE4 = [
-    "stats_cuped_adjustment",
-    "stats_pareto_coverage",
-    "events_seasonality_profile",
-    "events_forecast_eval",
-]
-
-
-@pytest.mark.parametrize("name", WAVE4)
-def test_wave4_oracle_parity(spark, name, sf_dir):
-    check_query(spark, all_queries()[name], sf_dir)
+# ------- CUPED / pareto / seasonality / forecast eval -------
 
 
 def test_cuped_reduces_variance_shape(spark, sf_dir):
@@ -481,7 +443,7 @@ def test_forecast_eval_gap_breaks_lag(spark):
     """A missing calendar day must not let lag reach further back —
     the self-join-on-day-k formulation, not lag() over rows."""
     from big_data_analysis_of_airline_data_set_spark.plans import (
-        analytics_ops as m,
+        events_queries as m,
     )
     import unittest.mock as mock
     import datetime as dt

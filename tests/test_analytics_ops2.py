@@ -1,8 +1,9 @@
-"""Unit tests for the operators behind the plans/analytics_ops2.py
-catalog: 2-D Pareto skyline, closed-form 2-D PCA, calendar linear
-interpolation, Holt smoothing, the clamped-balance fold, and the
-weighted median. test_oracle_parity checks
-this file's catalog names against their DuckDB oracles."""
+"""Unit tests for the operators behind the 2-D Pareto skyline
+(plans/patterns.py), closed-form 2-D PCA and the weighted median
+(plans/statistics.py), and calendar linear interpolation, Holt
+smoothing and the clamped-balance fold (plans/events_queries.py).
+test_oracle_parity checks this file's catalog names against their
+DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -120,7 +121,7 @@ def test_pca_2d_matches_numpy(spark, sf_dir):
 def test_linear_interpolation_gap_math(spark):
     from pyspark.sql import functions as F
 
-    from big_data_analysis_of_airline_data_set_spark.plans.analytics_ops2 import (
+    from big_data_analysis_of_airline_data_set_spark.plans.events_queries import (
         q_events_linear_interpolation,
     )
 

@@ -150,7 +150,7 @@ def test_plan_pin_release_of_unpinned_twin_is_noop(spark):
 
 def test_one_session_per_process_discipline(spark):
     """Pins the discipline that makes _unpersist_quietly's
-    plan-identity caveat unreachable (plans/patterns.py: evicting an
+    plan-identity caveat unreachable (plans/graph_queries.py: evicting an
     OLD session's cache entry whose canonical plan matches a LIVE
     session's twin would evict the live entry too, because Spark's
     CacheManager is shared across sessions of one SparkContext and

@@ -3,7 +3,8 @@ same code, so a parent/change capture diff shows only plan changes."""
 
 from __future__ import annotations
 
-from tests.capture_plans import normalize
+from big_data_analysis_of_airline_data_set_spark.plans import all_queries
+from tests.capture_plans import normalize, selected
 
 
 def test_session_counters_masked():
@@ -26,3 +27,8 @@ def test_call_site_and_ivf_index_dir_masked():
     b = "Location: InMemoryFileIndex [file:/tmp/ivf_index_q0p2zz7m/part]"
     assert normalize(a) == normalize(b)
     assert "/tmp/ivf_index_/part" in normalize(a)
+
+
+def test_no_names_selects_the_whole_registry_in_order():
+    assert selected([]) == list(all_queries())
+    assert selected(["graph_k_core", "tpch_q1_style"]) == ["graph_k_core", "tpch_q1_style"]

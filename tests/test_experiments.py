@@ -72,3 +72,20 @@ def test_power_sums_exact_past_the_int64_product(spark):
     ).fetchone()
     assert tuple(got) == want
     assert got[1] == float(sum(Decimal(x) ** 2 for x in vals if x))
+
+
+def test_spend_square_keeps_all_twelve_decimals(spark):
+    """Σv² over a DECIMAL(28,6) per-user sum is exact: squared as
+    DECIMAL(38,6) it would drop 0.000000323664 from 1234.567892²."""
+    v = Decimal("1234.567892")
+    df = spark.createDataFrame([(v,)], "v decimal(28,6)")
+    got = df.agg(*kit.spend_moments("n")).collect()[0]
+    con = duckdb.connect()
+    want = con.execute(
+        f"SELECT CAST({kit.widened_product_sql('v', 'v')} AS DOUBLE)"
+        " FROM (SELECT CAST(? AS DECIMAL(28,6)) AS v)",
+        [v],
+    ).fetchone()[0]
+    assert v * v == Decimal("1524157.879957323664")
+    assert got["svv"] == want == float(v * v)
+    assert got["svv"] != float(Decimal("1524157.879957"))

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from big_data_analysis_of_airline_data_set_spark.plans.graph_queries import (
+    part_supplier_edges,
+)
 from big_data_analysis_of_airline_data_set_spark.sketches.kmv import kmv_sketch
 from big_data_analysis_of_airline_data_set_spark.sources.readers import (
     read_testdata_table,
@@ -39,11 +42,7 @@ def test_loop_edge_build_single_exchange_and_identical(spark, sf_dir):
     in the executed plan — hashpartitioning(src) satisfies the distinct
     aggregate's clustering requirement) and produce exactly the rows of
     the old distinct-then-repartition chain."""
-    li = read_testdata_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
-    )
+    fwd = part_supplier_edges(read_testdata_table(spark, sf_dir, "lineitem"))
     edges = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

@@ -1,21 +1,30 @@
-"""The decimal-exact kit in plans/spec.py: each Spark Column and its
-DuckDB SQL twin, run on the same hand-built rows, give identical
-values — including the rows the seed-42 corpora never produce (NULLs,
-the DECIMAL(18,2) ceiling, pre-1970 and year-9999 instants)."""
+"""The decimal-exact and daily-series kit in plans/spec.py: each Spark
+Column or frame and its DuckDB SQL twin, run on the same hand-built
+rows, give identical values — including the rows the seed-42 corpora
+never produce (NULLs, the DECIMAL(18,2) ceiling, pre-1970 and
+year-9999 instants, days without events). No other plan module
+spells the spend quantization."""
 
 from __future__ import annotations
 
+import ast
 from datetime import datetime, timedelta, timezone
 from decimal import Decimal
 from itertools import product
+from pathlib import Path
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_analysis_of_airline_data_set_spark.plans import spec
 from big_data_analysis_of_airline_data_set_spark.plans.spec import (
+    DAILY_COUNTS_SQL,
+    DAILY_SPEND_SQL,
     DISCOUNTED_PRICE_SQL,
     US_DAY,
+    daily_counts,
+    daily_spend,
     day_bucket,
     day_bucket_sql,
     discounted_price,
@@ -97,3 +106,80 @@ def test_day_bucket_twins_agree(spark):
     last = df.filter(F.col("name") == "9999_12_31_last_microsecond")
     rounded = last.select((F.unix_micros("ts") / F.lit(US_DAY)).cast("long")).first()[0]
     assert rounded == 2932897
+
+
+# (user_id, event_type, instant, value): a gap day (2024-03-02), a day
+# whose only value is NULL, a NULL user, pre-1970 instants and values
+# that round at the 6th decimal.
+_EVENTS = [
+    (1, "click", datetime(2024, 3, 1, 10), 1.25),
+    (1, "click", datetime(2024, 3, 1, 23, 59, 59, 999999), 2.0000004),
+    (1, "buy", datetime(2024, 3, 3), 0.1234567),
+    (1, "buy", datetime(2024, 3, 3, 1), None),
+    (1, "buy", datetime(2024, 3, 4), None),
+    (2, "view", datetime(1969, 12, 31, 12), 5.5),
+    (2, "view", datetime(1969, 12, 31, 13), -7.25),
+    (2, "view", datetime(1969, 12, 29), 0.000001),
+    (None, "click", datetime(2024, 3, 1), 3.0),
+]
+
+
+def _events(spark):
+    rows = [(u, t, _micros(dt), v) for u, t, dt, v in _EVENTS]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_type string, us long, value double"
+    ).select("user_id", "event_type", F.expr("timestamp_micros(us)").alias("ts"), "value")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (user_id BIGINT, event_type VARCHAR, us BIGINT, value DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+    con.execute(
+        "CREATE VIEW events AS SELECT user_id, event_type, make_timestamp(us) AS ts, value FROM t"
+    )
+    return df, con
+
+
+def _rows(rows) -> list[tuple]:
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+def test_daily_series_twins_agree(spark):
+    df, con = _events(spark)
+    spend = _rows(daily_spend(df).collect())
+    assert spend == _rows(con.execute(DAILY_SPEND_SQL).fetchall())
+    counts = _rows(daily_counts(df).collect())
+    assert counts == _rows(con.execute(DAILY_COUNTS_SQL).fetchall())
+    by_day = {(u, d): v for u, d, v in spend}
+    march_1 = _micros(datetime(2024, 3, 1)) // US_DAY
+    assert by_day[(1, march_1)] == Decimal("3.25")
+    assert (1, march_1 + 1) not in by_day  # a gap is a missing row
+    assert by_day[(1, march_1 + 2)] == Decimal("0.123457")
+    assert by_day[(1, march_1 + 3)] is None  # only NULL values that day
+    assert by_day[(None, march_1)] == Decimal("3")
+    # truncation toward zero: both 1969-12-31 instants land in day 0
+    assert by_day[(2, 0)] == Decimal("-1.75")
+    assert by_day[(2, -3)] == Decimal("0.000001")  # 1969-12-29 midnight
+    assert ("buy", march_1 + 2, 2) in counts and ("view", 0, 2) in counts
+
+
+def test_spend_quantization_spelled_only_in_the_kit():
+    """A plan module that quantizes ``value`` itself has forked the
+    spend arithmetic every daily-series readout shares."""
+    kit_path = Path(spec.__file__)
+    offenders = []
+    for path in sorted(kit_path.parent.glob("*.py")):
+        if path == kit_path:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "round(value, 6)" in node.value
+            ) or (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "round"
+                and node.args
+                and isinstance(node.args[0], ast.Call)
+                and [getattr(a, "value", None) for a in node.args[0].args] == ["value"]
+            ):
+                offenders.append((path.name, node.lineno))
+    assert offenders == []
