@@ -1,20 +1,30 @@
-"""Bounded per-session caches.
+"""Session state: the package's three rules for holding it.
 
-Several catalog queries memoize expensive session-scoped artifacts so
-two views of the same result never recompute it (a tuned MLlib fit, a
-persisted IVF index, a landed streaming directory, a schema-drift
-verdict). In batch jobs the process exits and the dict dies with it;
-in a long-lived server session cycling many sf_dirs the round-3 advice
-stands: an unbounded dict keyed by (applicationId, sf_dir, ...) grows
-forever. Every such cache is a ``BoundedCache`` — true LRU (reads
-refresh recency), explicit ``clear()``, and an optional eviction
-callback for entries that own external resources (unpersist a
-DataFrame, remove a landed directory).
+The catalog serves one long-lived driver session, so some state
+outlives a query. Each kind is held one way:
+
+- A memo (a tuned fit, an IVF index, a landed events directory, a
+  persisted graph table, a footer schema) is a module-level
+  ``BoundedCache`` filled through ``get_or_build``, keyed by the
+  session's applicationId first. The bound keeps a server session
+  cycling many sf_dirs from growing it forever; reads refresh LRU
+  order. An entry that owns a resource names its release as the
+  cache's eviction hook, ``unpersist_quietly`` for a persisted frame
+  and ``remove_dir`` for a directory, and such a cache clears itself
+  at interpreter exit.
+- A directory that no result outlives (a sink round trip, a stream's
+  checkpoint or upsert state) is a ``tempfile.TemporaryDirectory``
+  around the call, which returns rows already collected or
+  checkpointed.
+- A persisted frame that must follow Spark's plan-identity cache keys
+  is a ``PlanPin``.
 """
 
 from __future__ import annotations
 
+import atexit
 import logging
+import shutil
 from collections import OrderedDict
 from collections.abc import Callable
 from typing import Generic, TypeVar
@@ -27,7 +37,8 @@ V = TypeVar("V")
 
 class BoundedCache(Generic[K, V]):
     """Insertion-bounded LRU mapping. Not thread-safe by design — all
-    users run on the Spark driver thread."""
+    users run on the Spark driver thread. A cache built with
+    ``on_evict`` runs it on every entry left at interpreter exit."""
 
     def __init__(
         self, max_entries: int, *, on_evict: Callable[[K, V], None] | None = None
@@ -37,6 +48,8 @@ class BoundedCache(Generic[K, V]):
         self.max_entries = max_entries
         self._on_evict = on_evict
         self._data: OrderedDict[K, V] = OrderedDict()
+        if on_evict is not None:
+            atexit.register(self.clear)
 
     def get(self, key: K) -> V | None:
         hit = self._data.get(key)
@@ -44,13 +57,22 @@ class BoundedCache(Generic[K, V]):
             self._data.move_to_end(key)
         return hit
 
+    def get_or_build(self, key: K, build: Callable[[], V]) -> V:
+        """The value under ``key``; on a miss, ``build()``'s value,
+        stored under ``key`` first."""
+        hit = self.get(key)
+        if hit is None:
+            hit = build()
+            self.put(key, hit)
+        return hit
+
     def put(self, key: K, value: V) -> None:
         # Re-putting an EXISTING key replaces the value WITHOUT firing
         # on_evict on the old one — deliberately. For persisted-
         # DataFrame values, unpersisting the old value here would evict
         # the Spark cache entry the (plan-identical) new value shares
-        # (CacheManager keys by canonical plan — see PlanPin). Every
-        # current caller follows get-miss-build-put, so a re-put means
+        # (CacheManager keys by canonical plan — see PlanPin). The
+        # package fills every cache through get_or_build, so a re-put means
         # a same-plan rebuild and the replaced frame leaks nothing the
         # shared entry doesn't still own; a caller that re-puts
         # genuinely DIFFERENT resources under one key must release the
@@ -79,6 +101,52 @@ class BoundedCache(Generic[K, V]):
 
     def __contains__(self, key: K) -> bool:
         return key in self._data
+
+
+def _session_stopped(frame) -> bool:
+    """True iff the frame's session is stopped (SparkContext.stop()
+    nulls ``_jsc``) or so torn down the probe itself fails."""
+    try:
+        return frame.sparkSession._sc._jsc is None
+    except Exception:
+        return True
+
+
+def _resource(value):
+    """The resource an entry owns: the value itself, or the first item
+    of a tuple value."""
+    return value[0] if isinstance(value, tuple) else value
+
+
+def unpersist_quietly(_key, value) -> None:
+    """Eviction hook for an entry that owns a persisted frame (the
+    value, or the first item of a tuple value). Entries outlive their
+    session (keys carry the applicationId because sessions cycle), so
+    a frame whose session is stopped is skipped, and a failed unpersist
+    is swallowed: eviction releases best-effort and never fails.
+
+    Plan-identity caveat (the PlanPin postmortem pattern): Spark's
+    CacheManager keys by canonical plan and is shared across sessions
+    of one SparkContext, so evicting an OLD session's entry whose plan
+    matches a LIVE session's freshly cached twin (same sf_dir, new
+    applicationId) would evict the live entry too. The consequence is
+    a recompute, never wrongness, and the one-session-per-process
+    discipline (session.get_session) makes the overlap unreachable in
+    practice; it would look like an inexplicable cache miss, not an
+    error."""
+    frame = _resource(value)
+    if _session_stopped(frame):
+        return
+    try:
+        frame.unpersist()
+    except Exception:
+        pass  # the JVM may already be gone at interpreter exit
+
+
+def remove_dir(_key, value) -> None:
+    """Eviction hook for an entry that owns a directory (the value, or
+    the first item of a tuple value)."""
+    shutil.rmtree(_resource(value), ignore_errors=True)
 
 
 class PlanPin:
@@ -113,19 +181,10 @@ class PlanPin:
     def __init__(self) -> None:
         self._pinned: list = []
 
-    @staticmethod
-    def _session_stopped(frame) -> bool:
-        """True iff the frame's session is stopped (SparkContext.stop()
-        nulls ``_jsc``) or so torn down the probe itself fails."""
-        try:
-            return frame.sparkSession._sc._jsc is None
-        except Exception:
-            return True
-
     def pin(self, frame):
         while self._pinned:
             prev = self._pinned[-1]
-            if not self._session_stopped(prev):
+            if not _session_stopped(prev):
                 try:
                     if prev.sparkSession is frame.sparkSession and prev.sameSemantics(
                         frame

@@ -44,20 +44,6 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     return shingles_from_tokens(tokens_col(text), n)
 
 
-def hashed_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-grams as 64-bit hashes (xxhash64 over the n token
-    slots) — no string concatenation, long arrays instead of string
-    arrays in shuffles. Set-Jaccard over hashed grams equals Jaccard
-    over the grams themselves up to 2^-64 collisions; use for
-    approximate paths (MinHash), keep string grams where an external
-    oracle must reproduce them."""
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    gram = lambda i: F.xxhash64(*[F.element_at(toks, i + j) for j in range(n)])  # noqa: E731
-    return F.when(
-        F.size(toks) >= n, F.array_distinct(F.transform(idx, gram))
-    ).otherwise(F.array().cast("array<long>"))
-
-
 def jaccard_pairs(
     df: DataFrame,
     *,

@@ -32,24 +32,6 @@ from ..functions.flight_exprs import (
 )
 from .transforms import drop_any_null, union_positional
 
-# The 40-column raw-feed drop list (Scripts/1_cs_777_cleaning_data.py:41-46).
-RAW_REMOVE_COLS = [
-    "FlightDate", "CRSDepTime", "DepDelayMinutes", "ArrDelayMinutes",
-    "CRSElapsedTime", "ActualElapsedTime", "Marketing_Airline_Network",
-    "Operated_or_Branded_Code_Share_Partners", "DOT_ID_Marketing_Airline",
-    "IATA_Code_Marketing_Airline", "Flight_Number_Marketing_Airline",
-    "Operating_Airline", "DOT_ID_Operating_Airline",
-    "IATA_Code_Operating_Airline", "Tail_Number",
-    "Flight_Number_Operating_Airline", "OriginAirportID",
-    "OriginAirportSeqID", "OriginCityMarketID", "OriginStateFips",
-    "OriginStateName", "OriginWac", "DestAirportID", "DestAirportSeqID",
-    "DestCityMarketID", "DestStateFips", "DestStateName", "DestWac",
-    "DepDel15", "DepartureDelayGroups", "DepTimeBlk", "TaxiOut",
-    "WheelsOff", "WheelsOn", "TaxiIn", "CRSArrTime", "ArrDel15",
-    "ArrivalDelayGroups", "ArrTimeBlk", "DistanceGroup",
-]
-
-
 def visualization_dataset(flights: DataFrame) -> DataFrame:
     """Cancelled rows (nulls intact) ∪ cleaned non-cancelled rows —
     the viz dataset of Scripts/1_cs_777_cleaning_data.py:50-58."""

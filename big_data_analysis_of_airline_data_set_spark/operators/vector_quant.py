@@ -16,7 +16,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MICRO = 1_000_000.0
-MICRO_SQ = 1e12  # scale of a squared micro-unit distance
 
 
 def quantize_micro(col: Column) -> Column:

@@ -20,11 +20,13 @@ clamped balance, drawdown).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caching import BoundedCache
+from ..caching import BoundedCache, remove_dir
 from ..operators.ranking import bucketed_global_rank, ntile_from_rank
 from ..operators.weighted_quantile import weighted_median
 from ..sources.readers import read_testdata_table
@@ -68,45 +70,28 @@ FROM events GROUP BY 1, 2
 
 
 # landed-events dirs per (session, sf_dir, variant): the stream queries
-# re-read them across driver calls without re-landing (same pattern as
-# the IVF index cache in plans/content.py). ONE BoundedCache owns the
-# eviction/cleanup for all three landing variants (normal, doubled,
-# flat) — evicting removes the dir, and atexit clears everything
-# (round-3 advice: bounded, no leaked copies; round-4 review: no
-# copy-pasted eviction loops).
-def _evict_landed(key: tuple, path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
+# re-read them across driver calls without re-landing. One cache owns
+# all three landing variants (normal, doubled, flat); evicting an entry
+# removes its dir.
+_LANDED_CACHE: BoundedCache[tuple, str] = BoundedCache(4, on_evict=remove_dir)
 
 
-_LANDED_CACHE: BoundedCache[tuple, str] = BoundedCache(4, on_evict=_evict_landed)
-_CLEANUP_REGISTERED = False
+def _landed_dir(key: tuple, prefix: str, build) -> str:
+    """The landed dir under ``key``; on a miss, ``build(out_dir)``
+    materializes the variant into a fresh dir."""
 
+    def land() -> str:
+        out = tempfile.mkdtemp(prefix=prefix)
+        build(out)
+        return out
 
-def _landed_dir(spark: SparkSession, key: tuple, prefix: str, build) -> str:
-    """Shared landing-cache access: ``build(out_dir)`` materializes the
-    variant on a miss."""
-    import atexit
-    import tempfile
-
-    global _CLEANUP_REGISTERED
-    hit = _LANDED_CACHE.get(key)
-    if hit is None:
-        if not _CLEANUP_REGISTERED:
-            atexit.register(_LANDED_CACHE.clear)
-            _CLEANUP_REGISTERED = True
-        hit = tempfile.mkdtemp(prefix=prefix)
-        build(hit)
-        _LANDED_CACHE.put(key, hit)
-    return hit
+    return _LANDED_CACHE.get_or_build(key, land)
 
 
 def _landed_events_dir(spark: SparkSession, sf_dir: str) -> str:
     from ..streaming.landing import land_events_batch
 
     return _landed_dir(
-        spark,
         (spark.sparkContext.applicationId, sf_dir),
         "landed_events_",
         lambda out: land_events_batch(spark, sf_dir, out),
@@ -131,7 +116,6 @@ def _landed_events_doubled_dir(spark: SparkSession, sf_dir: str) -> str:
         ev.repartition(3).write.mode("append").parquet(out)
 
     return _landed_dir(
-        spark,
         (spark.sparkContext.applicationId, sf_dir, "doubled"),
         "landed_events_x2_",
         build,
@@ -151,7 +135,6 @@ def _landed_events_flat_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) 
         ).write.mode("overwrite").parquet(out)
 
     return _landed_dir(
-        spark,
         (spark.sparkContext.applicationId, sf_dir, "flat", n_files),
         "landed_events_flat_",
         build,
@@ -1279,7 +1262,7 @@ def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_testdata_table(spark, sf_dir, "events")
     keyed = ev.select(
         "user_id",
-        F.expr(f"(unix_micros(ts) div {US_DAY}) div 7").alias("week"),
+        F.call_function("div", day_bucket("ts"), F.lit(7)).alias("week"),
         spend().alias("v"),
     )
     first = keyed.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
@@ -1318,7 +1301,7 @@ def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LTV_ORACLE = f"""
 WITH keyed AS (
   SELECT user_id,
-         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_DAY}) // 7 AS week,
+         ({day_bucket_sql('ts')}) // 7 AS week,
          {SPEND_SQL} AS v
   FROM events
 ), first AS (
@@ -2248,7 +2231,7 @@ def q_events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_testdata_table(spark, sf_dir, "events")
     slots = e.groupBy(
         "event_type",
-        F.expr(f"(unix_micros(ts) div {US_DAY} + 4) % 7").alias("dow"),
+        ((day_bucket("ts") + 4) % 7).alias("dow"),
         F.expr(f"(unix_micros(ts) div {US_HOUR}) % 24").alias("hour"),
     ).agg(F.count(F.lit(1)).alias("n"))
     w_pick = W.partitionBy("event_type").orderBy(
@@ -2279,7 +2262,7 @@ def q_events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEASONALITY_ORACLE = f"""
 WITH slots AS (
   SELECT event_type,
-         (epoch_us(CAST(ts AS TIMESTAMP)) // {US_DAY} + 4) % 7 AS dow,
+         ({day_bucket_sql('ts')} + 4) % 7 AS dow,
          (epoch_us(CAST(ts AS TIMESTAMP)) // {US_HOUR}) % 24 AS hour,
          count(*) AS n
   FROM events GROUP BY 1, 2, 3

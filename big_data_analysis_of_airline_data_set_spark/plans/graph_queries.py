@@ -15,7 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import BoundedCache
+from ..caching import BoundedCache, unpersist_quietly
 from ..operators.graph import (
     _PR_CHECK_EVERY,
     _PR_DP,
@@ -58,32 +58,11 @@ def co_supplier_sql(pct: float) -> str:
 ), thr AS (SELECT quantile_cont(c, {pct}) AS t FROM co),"""
 
 
-def _unpersist_quietly(_key, frame: DataFrame) -> None:
-    """BoundedCache eviction hook for persisted frames: an entry can
-    outlive its SparkSession (keys carry the applicationId precisely
-    because sessions cycle), and unpersisting against a stopped
-    session raises — eviction must release best-effort, never fail.
-
-    Plan-identity caveat (the caching.PlanPin postmortem pattern):
-    Spark's CacheManager keys by canonical plan and is shared across
-    sessions of one SparkContext, so evicting an OLD session's entry
-    whose plan matches a LIVE session's freshly-cached twin (same
-    sf_dir, new applicationId) would evict the live entry too. The
-    consequence is a recompute, never wrongness, and the repo's
-    one-session-per-process discipline (session.get_session) makes
-    the overlap unreachable in practice — noted here because the
-    failure would look like an inexplicable cache miss, not an error."""
-    try:
-        frame.unpersist()
-    except Exception:
-        pass
-
-
 # One persisted copy per (session, sf_dir, table) serves every call of
 # every query that reads it; eviction unpersists. Plans and results are
 # those of an uncached build.
 _GRAPH_TABLES: BoundedCache[tuple, DataFrame] = BoundedCache(
-    8, on_evict=_unpersist_quietly
+    8, on_evict=unpersist_quietly
 )
 
 
@@ -95,12 +74,10 @@ def _session_table(
 
     @functools.wraps(build)
     def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, build.__name__)
-        hit = _GRAPH_TABLES.get(key)
-        if hit is None:
-            hit = build(spark, sf_dir)
-            _GRAPH_TABLES.put(key, hit)
-        return hit
+        return _GRAPH_TABLES.get_or_build(
+            (spark.sparkContext.applicationId, sf_dir, build.__name__),
+            lambda: build(spark, sf_dir),
+        )
 
     return cached
 

@@ -86,12 +86,10 @@ _FIT_CACHE: BoundedCache[tuple, tuple] = BoundedCache(32)
 
 
 def _fitted(spark: SparkSession, sf_dir: str, family: str, tuner: str) -> tuple:
-    key = (spark.sparkContext.applicationId, sf_dir, family, tuner)
-    hit = _FIT_CACHE.get(key)
-    if hit is None:
-        df = _supervised_lineitem(spark, sf_dir)
-        hit = fit_family(
-            df,
+    return _FIT_CACHE.get_or_build(
+        (spark.sparkContext.applicationId, sf_dir, family, tuner),
+        lambda: fit_family(
+            _supervised_lineitem(spark, sf_dir),
             categorical_cols=_CATEGORICAL,
             numeric_cols=_NUMERIC,
             family=family,
@@ -99,9 +97,8 @@ def _fitted(spark: SparkSession, sf_dir: str, family: str, tuner: str) -> tuple:
             tuner=tuner,
             grid="quick",
             mlp_layers=_MLP_LAYERS if family == "mlp" else None,
-        )
-        _FIT_CACHE.put(key, hit)
-    return hit
+        ),
+    )
 
 
 def _invariants_query(family: str, tuner: str = "tvs"):
@@ -312,9 +309,7 @@ def q_ml_variant_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..stats.variance import variance_threshold_select
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _SWEEP_CACHE.get(key)
-    if rows is None:
+    def build() -> list:
         # The projected frame feeds two selector fits, the variance
         # selection, and three TVS fits. Persisting it was A/B-measured
         # (round 7, quiet host, fresh session each, sf0.1): with
@@ -353,10 +348,11 @@ def q_ml_variant_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                     int(clf.numFeatures), int(clf.numClasses),
                 )
             )
-        _SWEEP_CACHE.put(key, rows)
+        return rows
+
     return local_rows(
         spark,
-        rows,
+        _SWEEP_CACHE.get_or_build((spark.sparkContext.applicationId, sf_dir), build),
         "variant string, n_categorical long, n_numeric long, "
         "n_param_combos long, train_rows long, test_rows long, "
         "feature_dim long, n_classes long",
@@ -541,9 +537,7 @@ def q_ml_reference_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..stats.chisquare import chi_square_test
 
-    key = spark.sparkContext.applicationId
-    rows = _REF_BANDS_CACHE.get(key)
-    if rows is None:
+    def build() -> list:
         flights = reference_shaped_flights(spark).persist()
         try:
             n_rows = flights.count()
@@ -591,11 +585,15 @@ def q_ml_reference_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dt_auc >= 0.97,
                 dt_auc - lr_auc >= 0.2,
             ]
-            rows = list(zip(_REF_BAND_CHECKS, [bool(b) for b in results]))
-            _REF_BANDS_CACHE.put(key, rows)
+            return list(zip(_REF_BAND_CHECKS, [bool(b) for b in results]))
         finally:
             flights.unpersist()
-    return local_rows(spark, rows, "check_name string, within_band boolean")
+
+    return local_rows(
+        spark,
+        _REF_BANDS_CACHE.get_or_build(spark.sparkContext.applicationId, build),
+        "check_name string, within_band boolean",
+    )
 
 
 _REF_BANDS_ORACLE = " UNION ALL ".join(

@@ -10,6 +10,9 @@ TPC-H shapes live in ``tpch.py``, the graph queries in
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1100,33 +1103,8 @@ FROM wide CROSS JOIN exact
 
 # ------------------------- sink round-trips (S4/S5) -------------------------
 
-# temp sink dirs: bounded (oldest removed once >8 live — each round-trip
-# query consumes its own dir before returning control, so only the most
-# recent handful can still be referenced) and removed at interpreter
-# exit — the round-3 unbounded-session-cache lesson applied here too.
-_SINK_DIRS: list[str] = []
-_SINK_DIRS_MAX = 8
-_SINK_CLEANUP_REGISTERED = False
-
-
-def _sink_dir(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    global _SINK_CLEANUP_REGISTERED
-    if not _SINK_CLEANUP_REGISTERED:
-        def _cleanup() -> None:
-            while _SINK_DIRS:
-                shutil.rmtree(_SINK_DIRS.pop(), ignore_errors=True)
-
-        atexit.register(_cleanup)
-        _SINK_CLEANUP_REGISTERED = True
-    while len(_SINK_DIRS) >= _SINK_DIRS_MAX:
-        shutil.rmtree(_SINK_DIRS.pop(0), ignore_errors=True)
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SINK_DIRS.append(d)
-    return d
+# Each round trip writes into a TemporaryDirectory that is removed
+# before the call returns, so the call returns rows already collected.
 
 
 def q_sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,24 +1120,20 @@ def q_sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_testdata_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate")
     )
-    out = _sink_dir("sink_part_rt_")
-    write_parquet(li, out, partition_by=["ship_year"])
-    back = spark.read.parquet(out)
-    agg = (
-        back.groupBy(F.col("ship_year").cast("long").alias("ship_year"))
-        .agg(
+    with tempfile.TemporaryDirectory(
+        prefix="sink_part_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_parquet(li, out, partition_by=["ship_year"])
+        back = spark.read.parquet(out)
+        agg = back.groupBy(F.col("ship_year").cast("long").alias("ship_year")).agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
             .cast("double")
             .alias("sum_price"),
         )
-    )
-    # materialize NOW (a handful of per-year rows): the returned frame
-    # must not lazily read a temp dir that eviction/atexit may remove
-    # before a caller collects
-    return local_rows(
-        spark, agg.collect(), "ship_year long, n_rows long, sum_price double"
-    )
+        return local_rows(
+            spark, agg.collect(), "ship_year long, n_rows long, sum_price double"
+        )
 
 
 _SINK_PART_ORACLE = """
@@ -1186,13 +1160,13 @@ def q_sink_report_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_price"),
     )
-    out = _sink_dir("sink_csv_rt_")
-    write_report_csv(report, out)
     schema = "o_orderpriority string, n_orders long, total_price double"
-    back = spark.read.csv(out, header=True, schema=schema)
-    # materialize NOW — same temp-dir-lifetime reasoning as the
-    # partitioned round-trip above
-    return local_rows(spark, back.collect(), schema)
+    with tempfile.TemporaryDirectory(
+        prefix="sink_csv_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_report_csv(report, out)
+        back = spark.read.csv(out, header=True, schema=schema)
+        return local_rows(spark, back.collect(), schema)
 
 
 _SINK_CSV_ORACLE = """
@@ -1214,26 +1188,28 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import write_orc
 
     o = read_testdata_table(spark, sf_dir, "orders")
-    out = _sink_dir("sink_orc_rt_")
-    write_orc(o, out, partition_by=["o_orderstatus"])
-    back = spark.read.orc(out)
-    agg = back.groupBy(
-        F.col("o_orderstatus").cast("string").alias("o_orderstatus")
-    ).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
-        (F.unix_micros(F.max("o_orderdate")) / F.lit(US_DAY))
-        .cast("long")
-        .alias("max_orderdate_day"),
-    )
-    return local_rows(
-        spark,
-        agg.collect(),
-        "o_orderstatus string, n_orders long, total_price double,"
-        " max_orderdate_day long",
-    )
+    with tempfile.TemporaryDirectory(
+        prefix="sink_orc_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_orc(o, out, partition_by=["o_orderstatus"])
+        back = spark.read.orc(out)
+        agg = back.groupBy(
+            F.col("o_orderstatus").cast("string").alias("o_orderstatus")
+        ).agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_price"),
+            (F.unix_micros(F.max("o_orderdate")) / F.lit(US_DAY))
+            .cast("long")
+            .alias("max_orderdate_day"),
+        )
+        return local_rows(
+            spark,
+            agg.collect(),
+            "o_orderstatus string, n_orders long, total_price double,"
+            " max_orderdate_day long",
+        )
 
 
 _SINK_ORC_ORACLE = f"""
@@ -1257,22 +1233,24 @@ def q_sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import write_jsonl
 
     c = read_testdata_table(spark, sf_dir, "customer")
-    out = _sink_dir("sink_jsonl_rt_")
-    write_jsonl(c, out)
-    back = spark.read.schema(c.schema).json(out)
-    agg = back.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.round(F.col("c_acctbal"), 2).cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_acctbal"),
-        F.count_distinct("c_nationkey").alias("n_nations"),
-    )
-    return local_rows(
-        spark,
-        agg.collect(),
-        "c_mktsegment string, n_customers long, sum_acctbal double,"
-        " n_nations long",
-    )
+    with tempfile.TemporaryDirectory(
+        prefix="sink_jsonl_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_jsonl(c, out)
+        back = spark.read.schema(c.schema).json(out)
+        agg = back.groupBy("c_mktsegment").agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum(F.round(F.col("c_acctbal"), 2).cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sum_acctbal"),
+            F.count_distinct("c_nationkey").alias("n_nations"),
+        )
+        return local_rows(
+            spark,
+            agg.collect(),
+            "c_mktsegment string, n_customers long, sum_acctbal double,"
+            " n_nations long",
+        )
 
 
 _SINK_JSONL_ORACLE = """
@@ -1304,52 +1282,55 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_testdata_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
     )
-    for name, df in (("sg_bkt_orders", orders), ("sg_bkt_lineitem", li)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        write_bucketed_table(
-            df,
-            name,
-            bucket_by="o_orderkey",
-            num_buckets=8,
-            sort_by="o_orderkey",
-            path=_sink_dir(f"bkt_{name}_"),
-        )
+    tables = (("sg_bkt_orders", orders), ("sg_bkt_lineitem", li))
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        joined = bucketed_join(
-            spark, "sg_bkt_orders", "sg_bkt_lineitem", "o_orderkey"
-        )
-        jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-        plan = joined._jdf.queryExecution().explainString(jmode)
-        if "SortMergeJoin" not in plan or "Exchange" in plan:
-            raise AssertionError(
-                "bucketed join must plan as Exchange-free SortMergeJoin:\n"
-                + plan
+    with tempfile.TemporaryDirectory(prefix="bkt_", ignore_cleanup_errors=True) as tmp:
+        try:
+            for name, df in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
+                write_bucketed_table(
+                    df,
+                    name,
+                    bucket_by="o_orderkey",
+                    num_buckets=8,
+                    sort_by="o_orderkey",
+                    path=os.path.join(tmp, name),
+                )
+            spark.conf.set(key, "-1")
+            joined = bucketed_join(
+                spark, "sg_bkt_orders", "sg_bkt_lineitem", "o_orderkey"
             )
-        agg = joined.groupBy(
-            (F.col("o_orderkey") % 8).alias("key_mod")
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-        )
-        # materialize inside the conf window AND before the temp table
-        # dirs become evictable
-        return local_rows(
-            spark,
-            agg.collect(),
-            "key_mod long, n_rows long, sum_qty double, sum_price double",
-        )
-    finally:
-        spark.conf.set(key, saved)
+            jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "simple"
+            )
+            plan = joined._jdf.queryExecution().explainString(jmode)
+            if "SortMergeJoin" not in plan or "Exchange" in plan:
+                raise AssertionError(
+                    "bucketed join must plan as Exchange-free SortMergeJoin:\n"
+                    + plan
+                )
+            agg = joined.groupBy(
+                (F.col("o_orderkey") % 8).alias("key_mod")
+            ).agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.col("l_quantity").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("sum_qty"),
+                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("sum_price"),
+            )
+            # materialize inside the conf window, before the tables go
+            return local_rows(
+                spark,
+                agg.collect(),
+                "key_mod long, n_rows long, sum_qty double, sum_price double",
+            )
+        finally:
+            spark.conf.set(key, saved)
+            for name, _ in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 _BUCKETED_JOIN_ORACLE = """

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..caching import BoundedCache
 from ..operators.salting import salted_join
 from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
@@ -359,25 +360,19 @@ JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name
 # at sf0.1's 27k keys with a ~67% FP rate, review finding), so no
 # eviction hygiene is needed beyond the LRU.
 _BLOOM_K = 7
-_BLOOM_CACHE: "BoundedCache[tuple, tuple]" = None  # set below
+_BLOOM_CACHE: BoundedCache[tuple, tuple] = BoundedCache(8)
 
 
 def _bloom_words(spark: SparkSession, sf_dir: str) -> tuple:
-    global _BLOOM_CACHE
-    from ..caching import BoundedCache
     from ..operators.bloom_join import build_bloom_words
 
-    if _BLOOM_CACHE is None:
-        _BLOOM_CACHE = BoundedCache(8)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BLOOM_CACHE.get(key)
-    if hit is None:
+    def build() -> tuple:
         urgent = read_testdata_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         ).select(F.col("o_orderkey").alias("okey"))
-        hit = build_bloom_words(urgent, "okey", k=_BLOOM_K)
-        _BLOOM_CACHE.put(key, hit)
-    return hit
+        return build_bloom_words(urgent, "okey", k=_BLOOM_K)
+
+    return _BLOOM_CACHE.get_or_build((spark.sparkContext.applicationId, sf_dir), build)
 
 
 def q_join_bloom_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,25 +424,19 @@ GROUP BY o_orderpriority
 _HH_MIN_COUNT = 38
 _HH_DEPTH, _HH_WIDTH = 4, 1 << 16
 
-_HH_CMS_CACHE: "BoundedCache[tuple, list]" = None  # set below
+_HH_CMS_CACHE: BoundedCache[tuple, list] = BoundedCache(8)
 
 
 def _hh_counters(spark: SparkSession, sf_dir: str) -> list:
-    global _HH_CMS_CACHE
-    from ..caching import BoundedCache
     from ..operators.heavy_hitter_join import build_cms_counters
 
-    if _HH_CMS_CACHE is None:
-        _HH_CMS_CACHE = BoundedCache(8)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _HH_CMS_CACHE.get(key)
-    if hit is None:
+    def build() -> list:
         li = read_testdata_table(spark, sf_dir, "lineitem").select("l_partkey")
-        hit = build_cms_counters(
+        return build_cms_counters(
             li, term_col="l_partkey", depth=_HH_DEPTH, width=_HH_WIDTH
         )
-        _HH_CMS_CACHE.put(key, hit)
-    return hit
+
+    return _HH_CMS_CACHE.get_or_build((spark.sparkContext.applicationId, sf_dir), build)
 
 
 def q_join_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -102,12 +102,10 @@ def _on_disk_schema(spark: SparkSession, path: str) -> StructType:
     """The parquet footer's schema of ``path``, inferred once per
     (session, path). Inference is a Spark job, and files under a given
     path don't change type mid-session."""
-    key = (spark.sparkContext.applicationId, path)
-    schema = _ON_DISK_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = read_parquet_table(spark, path).schema
-        _ON_DISK_SCHEMA_CACHE.put(key, schema)
-    return schema
+    return _ON_DISK_SCHEMA_CACHE.get_or_build(
+        (spark.sparkContext.applicationId, path),
+        lambda: read_parquet_table(spark, path).schema,
+    )
 
 
 def _safe_cast_ok(actual: DataType, expected: DataType) -> bool:

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     FloatType,
@@ -167,16 +166,3 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
 }
 
 TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)
-
-# Multimodal asset table pattern: opaque binary payload + typed metadata.
-# (Beyond-reference; decode paths are stubbed — container has no codecs.)
-MULTIMODAL_ASSET_SCHEMA = _st(
-    ("asset_id", LongType(), False),
-    ("modality", StringType(), False),  # 'image' | 'audio' | 'video'
-    ("payload", BinaryType(), True),
-    ("mime_type", StringType(), True),
-    ("width", IntegerType(), True),
-    ("height", IntegerType(), True),
-    ("duration_ms", DoubleType(), True),
-    ("sample_rate", IntegerType(), True),
-)

@@ -206,11 +206,6 @@ def upsert_latest_state(existing: DataFrame | None, delta: DataFrame) -> DataFra
     )
 
 
-_UPSERT_DIRS: list[str] = []
-_UPSERT_DIRS_MAX = 8
-_UPSERT_CLEANUP_REGISTERED = False
-
-
 def run_upsert_sink_stream_available_now(
     spark: SparkSession,
     events_dir: str,
@@ -235,58 +230,41 @@ def run_upsert_sink_stream_available_now(
     join is state-sized per batch, and a real deployment would use a
     MERGE-capable table format instead of the generation swap.
 
-    Temp-dir hygiene (review finding, hardened after a second review):
-    the state base dirs are a bounded registry cleaned at interpreter
-    exit, with the OLDEST bases removed once the registry exceeds its
-    cap. The returned frame is an EAGER localCheckpoint of the final
-    state — materialized into Spark block storage, so it no longer
-    reads the parquet dir lazily and a later call evicting that dir
-    cannot give an earlier caller a file-not-found (the pre-hardening
-    failure mode: >8 calls in one process invalidated the oldest
-    unread result). Checkpoint blocks are freed by the ContextCleaner
-    when the frame is dropped; the stream checkpoint belongs to
-    ``drain``."""
-    import atexit
+    The state lives in a TemporaryDirectory removed before the call
+    returns, so the returned frame is an EAGER localCheckpoint of the
+    final state: materialized into Spark block storage, it never reads
+    the removed directory. Checkpoint blocks are freed by the
+    ContextCleaner when the frame is dropped; the stream checkpoint
+    belongs to ``drain``."""
     import shutil
 
-    global _UPSERT_CLEANUP_REGISTERED
-
-    if not _UPSERT_CLEANUP_REGISTERED:
-        def _cleanup() -> None:
-            while _UPSERT_DIRS:
-                shutil.rmtree(_UPSERT_DIRS.pop(), ignore_errors=True)
-
-        atexit.register(_cleanup)
-        _UPSERT_CLEANUP_REGISTERED = True
-    while len(_UPSERT_DIRS) >= _UPSERT_DIRS_MAX:
-        shutil.rmtree(_UPSERT_DIRS.pop(0), ignore_errors=True)
-    base = tempfile.mkdtemp(prefix=f"upsert-{query_name}-")
-    _UPSERT_DIRS.append(base)
     state: dict[str, str | None] = {"dir": None}
+    with tempfile.TemporaryDirectory(
+        prefix=f"upsert-{query_name}-", ignore_cleanup_errors=True
+    ) as base:
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        existing = (
-            spark.read.parquet(state["dir"]) if state["dir"] is not None else None
-        )
-        merged = upsert_latest_state(existing, batch_df)
-        new_dir = f"{base}/gen_{batch_id}"
-        merged.write.mode("overwrite").parquet(new_dir)
-        old = state["dir"]
-        state["dir"] = new_dir
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            existing = (
+                spark.read.parquet(state["dir"]) if state["dir"] is not None else None
+            )
+            merged = upsert_latest_state(existing, batch_df)
+            new_dir = f"{base}/gen_{batch_id}"
+            merged.write.mode("overwrite").parquet(new_dir)
+            old = state["dir"]
+            state["dir"] = new_dir
+            if old is not None:
+                shutil.rmtree(old, ignore_errors=True)
 
-    drain(
-        events_stream_reader(
-            spark, events_dir, max_files_per_trigger=max_files_per_trigger
-        ),
-        events_dir,
-        query_name=query_name,
-        foreach_batch=merge_batch,
-    )
-    if state["dir"] is None:  # empty source → empty state, right schema
-        return local_rows(
-            spark, [], "user_id long, ts timestamp, event_id long, value double"
+        drain(
+            events_stream_reader(
+                spark, events_dir, max_files_per_trigger=max_files_per_trigger
+            ),
+            events_dir,
+            query_name=query_name,
+            foreach_batch=merge_batch,
         )
-    # eager: the result must survive this base dir's later eviction
-    return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)
+        if state["dir"] is None:  # empty source → empty state, right schema
+            return local_rows(
+                spark, [], "user_id long, ts timestamp, event_id long, value double"
+            )
+        return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)

@@ -1,11 +1,22 @@
-"""Bounded session-cache behavior (big_data_analysis_of_airline_data_set_spark.caching) — round-3
-advice: per-session caches must not grow without bound in a long-lived
-server session cycling many sf_dirs."""
+"""Session state (big_data_analysis_of_airline_data_set_spark.caching):
+per-session caches must not grow without bound in a long-lived server
+session cycling many sf_dirs, every memo goes through
+``BoundedCache.get_or_build``, and a call-scoped directory is gone once
+its call returns."""
 
 from __future__ import annotations
 
+import ast
+import importlib
+import os
+import pkgutil
+import sys
+import tempfile
+from pathlib import Path
+
 import pytest
 
+import big_data_analysis_of_airline_data_set_spark as pkg
 from big_data_analysis_of_airline_data_set_spark.caching import BoundedCache
 
 
@@ -47,19 +58,120 @@ def test_rejects_nonpositive_bound():
         BoundedCache(0)
 
 
-def test_module_caches_are_bounded():
-    """Every module-level session cache is a BoundedCache (or carries
-    its own explicit bound), so cycling many sf_dirs cannot grow any of
-    them past its cap."""
-    from big_data_analysis_of_airline_data_set_spark.plans import content, events_queries, ml_queries
-    from big_data_analysis_of_airline_data_set_spark.sources import readers
+def test_get_or_build_builds_once_refuses_none_and_refreshes_order():
+    calls = []
 
-    assert isinstance(ml_queries._FIT_CACHE, BoundedCache)
-    assert isinstance(ml_queries._REF_BANDS_CACHE, BoundedCache)
-    assert isinstance(content._IVF_CACHE, BoundedCache)
-    assert isinstance(content._FREQ_CACHE, BoundedCache)
-    assert isinstance(readers._ON_DISK_SCHEMA_CACHE, BoundedCache)
-    assert isinstance(events_queries._LANDED_CACHE, BoundedCache)
+    def build(value):
+        def make():
+            calls.append(value)
+            return value
+
+        return make
+
+    c = BoundedCache(2)
+    assert c.get_or_build("a", build(1)) == 1
+    assert c.get_or_build("a", build(99)) == 1  # a hit never builds
+    assert calls == [1]
+    c.get_or_build("b", build(2))
+    c.get_or_build("a", build(99))  # the hit refreshes "a": "b" is oldest
+    c.get_or_build("c", build(3))
+    assert "a" in c and "c" in c and "b" not in c
+    with pytest.raises(ValueError, match="None"):
+        c.get_or_build("d", lambda: None)
+    assert "d" not in c
+
+
+def test_module_caches_are_bounded():
+    """Every session cache is a module-level BoundedCache, found by the
+    same module scan perfbench's ``module_caches()`` makes, so cycling
+    many sf_dirs cannot grow any of them past its cap and one scan
+    clears them all. The scan runs after every plan module is imported:
+    a cache built lazily on first use would be missing here."""
+    from big_data_analysis_of_airline_data_set_spark import plans
+
+    for info in pkgutil.iter_modules(plans.__path__, plans.__name__ + "."):
+        importlib.import_module(info.name)
+    found = {
+        f"{mod_name}.{attr}": value
+        for mod_name, mod in list(sys.modules.items())
+        if mod_name.startswith(pkg.__name__)
+        for attr, value in vars(mod).items()
+        if isinstance(value, BoundedCache)
+    }
+    assert {
+        f"{plans.__name__}.relational2._BLOOM_CACHE",
+        f"{plans.__name__}.relational2._HH_CMS_CACHE",
+        f"{plans.__name__}.ml_queries._FIT_CACHE",
+    } <= set(found)
+    assert all(c.max_entries <= 64 for c in found.values())
+
+
+def test_session_state_is_held_one_way():
+    """Source guard over the package: exit cleanup is registered only by
+    caching.py (BoundedCache.__init__), no module rebinds a module-level
+    name through ``global`` (lazy caches, cleanup flags), no module keeps
+    a module-level registry list, and no module reads or fills its own
+    caches by hand instead of through ``get_or_build``."""
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        caches = {
+            target.id
+            for node in tree.body
+            if isinstance(node, (ast.Assign, ast.AnnAssign))
+            and isinstance(node.value, ast.Call)
+            and getattr(node.value.func, "id", None) == "BoundedCache"
+            for target in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        }
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.Assign, ast.AnnAssign))
+                and isinstance(node.value, ast.List)
+                and not node.value.elts
+            ):
+                offenders.append((path.name, node.lineno, "module-level registry list"))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Global):
+                offenders.append((path.name, node.lineno, "global"))
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                receiver = getattr(node.func.value, "id", None)
+                if receiver == "atexit" and path != root / "caching.py":
+                    offenders.append((path.name, node.lineno, "atexit"))
+                if receiver in caches and node.func.attr in ("get", "put"):
+                    offenders.append((path.name, node.lineno, f"{receiver}.{node.func.attr}"))
+    assert offenders == []
+
+
+def test_hooked_cache_clears_itself_at_exit(monkeypatch):
+    import atexit
+
+    registered = []
+    monkeypatch.setattr(atexit, "register", registered.append)
+    BoundedCache(2)  # no hook: nothing to release at exit
+    hooked = BoundedCache(2, on_evict=lambda k, v: None)
+    assert registered == [hooked.clear]
+
+
+def test_eviction_hooks_release_the_entry_resource(tmp_path):
+    from big_data_analysis_of_airline_data_set_spark.caching import (
+        remove_dir,
+        unpersist_quietly,
+    )
+
+    d = tmp_path / "index"
+    d.mkdir()
+    remove_dir("k", (str(d), "centroids"))
+    assert not d.exists()
+    remove_dir("k", str(d))  # already gone: no error
+
+    class StoppedFrame:
+        sparkSession = None  # the stopped-session probe fails → skipped
+
+        def unpersist(self):
+            raise AssertionError("must not unpersist a stopped session's frame")
+
+    unpersist_quietly("k", (StoppedFrame(), 7))
 
 
 def test_schema_verdict_cache_bounded_across_many_dirs():
@@ -73,21 +185,32 @@ def test_schema_verdict_cache_bounded_across_many_dirs():
     assert len(_ON_DISK_SCHEMA_CACHE) <= cap
 
 
-def test_sink_dirs_bounded():
-    import os
+def test_call_scoped_dirs_are_gone_when_the_call_returns(spark, sf_dir, monkeypatch, tmp_path):
+    """The five sink round trips and the upsert stream write into
+    TemporaryDirectories: with ``tempfile`` pointed at ``tmp_path``
+    nothing is left there once they return, their rows still read, and
+    the bucketed join's catalog tables are dropped."""
+    from big_data_analysis_of_airline_data_set_spark.plans import all_queries
+    from big_data_analysis_of_airline_data_set_spark.plans.events_queries import (
+        ensure_events_landed,
+    )
 
-    from big_data_analysis_of_airline_data_set_spark.plans import patterns
-
-    made = [patterns._sink_dir("cache_test_sink_") for _ in range(20)]
-    assert len(patterns._SINK_DIRS) <= patterns._SINK_DIRS_MAX
-    # evicted dirs are actually gone; the newest survive
-    assert not os.path.isdir(made[0])
-    assert os.path.isdir(made[-1])
-    patterns._SINK_DIRS.clear()
-    for d in made:
-        import shutil
-
-        shutil.rmtree(d, ignore_errors=True)
+    ensure_events_landed(spark, sf_dir)  # a memo, not call-scoped: land it first
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    specs = all_queries()
+    for name in (
+        "sink_partitioned_roundtrip",
+        "sink_report_csv_roundtrip",
+        "sink_orc_roundtrip",
+        "sink_jsonl_roundtrip",
+        "join_bucketed_colocated",
+        "events_upsert_sink_stream",
+    ):
+        out = specs[name].fn(spark, sf_dir)
+        assert os.listdir(tmp_path) == [], name
+        assert out.count() > 0, name
+    assert not spark.catalog.tableExists("sg_bkt_orders")
+    assert not spark.catalog.tableExists("sg_bkt_lineitem")
 
 
 def test_rejects_none_values():
@@ -149,8 +272,8 @@ def test_plan_pin_release_of_unpinned_twin_is_noop(spark):
 
 
 def test_one_session_per_process_discipline(spark):
-    """Pins the discipline that makes _unpersist_quietly's
-    plan-identity caveat unreachable (plans/graph_queries.py: evicting an
+    """Pins the discipline that makes unpersist_quietly's
+    plan-identity caveat unreachable (caching.py: evicting an
     OLD session's cache entry whose canonical plan matches a LIVE
     session's twin would evict the live entry too, because Spark's
     CacheManager is shared across sessions of one SparkContext and

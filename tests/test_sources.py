@@ -225,20 +225,6 @@ def test_sorted_layout_yields_disjoint_file_ranges(spark, sf_dir, tmp_path):
     assert overlaps, "control layout unexpectedly sorted"
 
 
-def test_orc_roundtrip_parity(spark, sf_dir):
-    from big_data_analysis_of_airline_data_set_spark.plans import all_queries
-    from tests.oracle_harness import check_query
-
-    check_query(spark, all_queries()["sink_orc_roundtrip"], sf_dir)
-
-
-def test_jsonl_roundtrip_parity(spark, sf_dir):
-    from big_data_analysis_of_airline_data_set_spark.plans import all_queries
-    from tests.oracle_harness import check_query
-
-    check_query(spark, all_queries()["sink_jsonl_roundtrip"], sf_dir)
-
-
 def test_jsonl_doubles_bit_exact(spark, tmp_path):
     """JSON text round-trip must reproduce doubles exactly — the
     shortest-repr writer + exact parser contract the sink relies on."""

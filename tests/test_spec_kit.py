@@ -3,11 +3,12 @@ Column or frame and its DuckDB SQL twin, run on the same hand-built
 rows, give identical values — including the rows the seed-42 corpora
 never produce (NULLs, the DECIMAL(18,2) ceiling, pre-1970 and
 year-9999 instants, days without events). No other plan module
-spells the spend quantization."""
+spells the spend quantization or the epoch-day bucket."""
 
 from __future__ import annotations
 
 import ast
+import re
 from datetime import datetime, timedelta, timezone
 from decimal import Decimal
 from itertools import product
@@ -182,4 +183,20 @@ def test_spend_quantization_spelled_only_in_the_kit():
                 and [getattr(a, "value", None) for a in node.args[0].args] == ["value"]
             ):
                 offenders.append((path.name, node.lineno))
+    assert offenders == []
+
+
+def test_epoch_day_bucket_spelled_only_in_the_kit():
+    """A plan module that divides ``unix_micros(...)`` by ``US_DAY``
+    itself has forked ``day_bucket``, and the twin test above no longer
+    reaches it."""
+    kit_path = Path(spec.__file__)
+    inline = re.compile(r"unix_micros\([^)]*\)\s+div\s+(\{US_DAY\}|86400000000)")
+    offenders = [
+        (path.name, line)
+        for path in sorted(kit_path.parent.glob("*.py"))
+        if path != kit_path
+        for line in path.read_text().splitlines()
+        if inline.search(line)
+    ]
     assert offenders == []

@@ -179,21 +179,18 @@ def test_upsert_latest_state_merge_associative(spark):
     assert got[2] == (11, 2.0)
 
 
-def test_upsert_result_survives_state_dir_eviction(spark, events_dir):
-    """The returned state is an eager localCheckpoint: once more than
-    _UPSERT_DIRS_MAX drains run in one process the oldest base dir is
-    rmtree'd, and a caller still holding that drain's (previously lazy)
-    result must not get a file-not-found on first action. Simulated by
-    deleting the base dir outright after the drain returns."""
+def test_upsert_result_survives_state_dir_eviction(spark, events_dir, monkeypatch, tmp_path):
+    """The upsert state lives in a TemporaryDirectory: once the call
+    returns, the base directory is gone, and the returned result (an
+    eager localCheckpoint) still reads on its first action."""
     from big_data_analysis_of_airline_data_set_spark.streaming import jobs as sj
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     out = sj.run_upsert_sink_stream_available_now(
         spark, events_dir, query_name="evict_check", max_files_per_trigger=None
     )
+    assert os.listdir(tmp_path) == []
     n_users = spark.read.parquet(events_dir).select("user_id").distinct().count()
-    # evict the backing dir BEFORE the first read of the result
-    while sj._UPSERT_DIRS:
-        shutil.rmtree(sj._UPSERT_DIRS.pop(), ignore_errors=True)
     assert out.count() == n_users
 
 
